@@ -33,7 +33,6 @@ from healthcare_data_harmonization_dataflow_spark.operators import multimodal as
 from healthcare_data_harmonization_dataflow_spark.operators import similarity as S
 from healthcare_data_harmonization_dataflow_spark.operators.bundles import (
     assemble_bundles,
-    assemble_bundles_grouped,
     to_transaction_bundle,
 )
 from healthcare_data_harmonization_dataflow_spark.operators.joins import (
@@ -553,14 +552,6 @@ def q_bundle_assembly(spark, sf_dir):
     return assemble_bundles(_transcripts(spark, sf_dir))
 
 
-def q_bundle_assembly_grouped(spark, sf_dir):
-    # RETIRED from queries() in round 5 (VERDICT r4 #2): identical
-    # semantics to bundle_assembly (byte-equality pytest-guarded in
-    # test_operators.py), so registering both only diluted the driver's
-    # 50-query sample. The operator itself stays public API.
-    return assemble_bundles_grouped(_transcripts(spark, sf_dir))
-
-
 def q_tumbling_window(spark, sf_dir):
     aggs = [
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -693,37 +684,12 @@ def q_lsh_fp_rate(spark, sf_dir):
     pairs' word arrays (|A∩B|/(|A|+|B|-|A∩B|), one correctly-rounded
     division), never the corpus."""
     docs = _docs(spark, sf_dir)
-    pairs = D.minhash_lsh_pairs(docs)
-    words = F.expr(
-        "array_distinct(filter(split(lower(coalesce(text, '')), ' '), "
-        "w -> w != ''))"
-    )
-    dw = docs.select(F.col("doc_id"), words.alias("w"))
-    verified = (
-        pairs.join(
-            dw.select(F.col("doc_id").alias("doc1"), F.col("w").alias("w1")),
-            "doc1",
-        )
-        .join(
-            dw.select(F.col("doc_id").alias("doc2"), F.col("w").alias("w2")),
-            "doc2",
-        )
-        .withColumn("si", F.expr("size(array_intersect(w1, w2))"))
-        .withColumn(
-            # intersect computed ONCE per pair (a duplicated
-            # array_intersect inside the predicate is not reliably CSE'd
-            # through codegen and doubled the dominant cost)
-            "v",
-            F.expr(
-                "si / greatest(size(w1) + size(w2) - si, 1) >= 0.9"
-            ),
-        )
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_candidate_pairs"),
-            F.sum(F.when(F.col("v"), 1).otherwise(0))
-            .cast("long")
-            .alias("n_verified_pairs"),
-        )
+    verified = D.jaccard_verify(D.minhash_lsh_pairs(docs), docs, docs, 0.9).agg(
+        F.count(F.lit(1)).cast("long").alias("n_candidate_pairs"),
+        # a sum over zero candidate pairs is NULL; the oracle coalesces it to 0
+        F.coalesce(F.sum(F.col("verified").cast("long")), F.lit(0))
+        .cast("long")
+        .alias("n_verified_pairs"),
     )
     return verified.select(
         "n_candidate_pairs",
@@ -1395,14 +1361,13 @@ def q_dedup_incremental_verified(spark, sf_dir):
 
 
 def q_bpe_encode(spark, sf_dir):
-    """Full BPE train + encode (operators/tokenize.py): 20 merges learned
-    distributed (the loop iterates over the Zipf-bounded (word, cnt)
-    vocab — pair-count agg, bounded 1-row argmax collect, codegen
-    literal-replace merge — never re-touching the corpus), then the corpus
-    is tokenized in ONE zero-shuffle codegen projection with the merge
-    chain inlined as literals. The oracle learns its merges from the same
-    parquet via the shared pure-python trainer (ivf_oracle_centroids
-    pattern); pytest independently pins Spark-trained == python-trained."""
+    """Full BPE train + encode (operators/tokenize.py): one Spark
+    aggregation builds the Zipf-bounded (word, cnt) vocab, the Spark driver
+    learns 20 merges from it, then the corpus is tokenized in ONE
+    zero-shuffle codegen projection with the merge chain inlined as
+    literals. The oracle
+    learns its merges with the same trainer from a DuckDB-built vocab of the
+    same parquet (ivf_oracle_centroids pattern)."""
     merges = _tokenize.bpe_train(_docs(spark, sf_dir), n_merges=20)
     return _tokenize.bpe_encode(_docs(spark, sf_dir), merges)
 

@@ -5,15 +5,11 @@ The reference wraps each mapped resource in a FHIR transaction bundle
 assembles all turns of a conversation, **reordered by turn_idx regardless of
 arrival order**, into one harmonized bundle JSON.
 
-Two implementations with identical output:
-
-* :func:`assemble_bundles` — pure Catalyst: groupBy + sort_array(collect_list)
-  + to_json. One shuffle; codegen everywhere; the ordering is explicit
-  (sort_array on the struct's leading turn_idx field), never shuffle order
-  (SURVEY §7.4 risk 2).
-* :func:`assemble_bundles_grouped` — applyInPandas (Arrow batches), the batch
-  twin of the streaming stateful assembly (streaming/assembly.py), kept for
-  parity testing between batch and stream paths.
+:func:`assemble_bundles` is pure Catalyst: groupBy + sort_array(collect_list)
++ to_json. One shuffle; codegen everywhere; the ordering is explicit
+(sort_array on the struct's leading turn_idx field), never shuffle order
+(SURVEY §7.4 risk 2). The streaming stateful assembly
+(streaming/assembly.py) renders byte-identical bundles.
 
 At 10^12 turns the shuffle is keyed by conv_id — hot conversations are
 handled by AQE skew splitting for the batch path and by salted pre-grouping
@@ -22,9 +18,6 @@ for the streaming path.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -93,33 +86,6 @@ def assemble_bundles(
             F.sort_array(F.flatten(F.collect_list("_part"))).alias("_turns"),
         )
         .select(*out_keys, "n_turns", F.to_json(F.col("_turns")).alias("bundle"))
-    )
-
-
-def assemble_bundles_grouped(transcripts: DataFrame, conv_col: str = "conv_id") -> DataFrame:
-    """Same result via applyInPandas — exercises the Arrow grouped-map path
-    used by the streaming stateful assembly. Sorting is done inside the
-    group (deterministic), mirroring the state-handler logic."""
-    import json
-
-    schema = f"{conv_col} string, n_turns long, bundle string"
-
-    def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["turn_idx", "role", "text"], kind="mergesort")
-        turns = [
-            {"turn_idx": int(r.turn_idx), "role": r.role, "text": r.text}
-            for r in pdf.itertuples()
-        ]
-        return pd.DataFrame(
-            {
-                conv_col: [key[0]],
-                "n_turns": [len(turns)],
-                "bundle": [json.dumps(turns, ensure_ascii=False, separators=(",", ":"))],
-            }
-        )
-
-    return transcripts.select(conv_col, "turn_idx", "role", "text").groupBy(conv_col).applyInPandas(
-        assemble, schema
     )
 
 

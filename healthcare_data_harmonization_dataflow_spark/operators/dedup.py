@@ -290,6 +290,48 @@ def minhash_signature_oracle_sql() -> str:
     return f"SELECT doc_id,\n      {terms}\nFROM documents"
 
 
+def jaccard_verify(
+    pairs: DataFrame,
+    left: DataFrame,
+    right: DataFrame,
+    threshold: float,
+    keys: "tuple[str, str]" = ("doc1", "doc2"),
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """LSH candidate verification: ``pairs`` (keys[0], keys[1]) with a
+    ``verified`` flag, distinct-word Jaccard >= ``threshold`` between the
+    ``left`` doc keyed by keys[0] and the ``right`` doc keyed by keys[1]
+    (each side is an (id_col, text_col) table; NULL text is the empty set).
+
+    Only candidate pairs' ids and word arrays move, never the corpus. The
+    ratio is |A∩B| / (|A| + |B| - |A∩B|): arithmetic union size (the arrays
+    are distinct) over an int/int division, one correctly-rounded IEEE op,
+    bit-equal to the DuckDB oracles. The intersect is materialized ONCE per
+    pair: a duplicate inside the predicate is not reliably CSE'd through
+    codegen, and it is the dominant cost."""
+    # built directly (not by substring-replacing _SPARK_WORDS: a column
+    # named e.g. 'context' would be corrupted by a textual replace)
+    words = F.expr(
+        f"array_distinct(filter(split(lower(coalesce({text_col}, '')), ' '), "
+        "w -> w != ''))"
+    )
+    a, b = keys
+    return (
+        pairs.join(left.select(F.col(id_col).alias(a), words.alias("_wa")), a)
+        .join(right.select(F.col(id_col).alias(b), words.alias("_wb")), b)
+        .withColumn("_si", F.expr("size(array_intersect(_wa, _wb))"))
+        .select(
+            a,
+            b,
+            F.expr(
+                "_si / greatest(size(_wa) + size(_wb) - _si, 1) >= "
+                f"{float(threshold)!r}"
+            ).alias("verified"),
+        )
+    )
+
+
 def incremental_dedup(
     docs: DataFrame,
     history_pred: str = "doc_id % 2 = 0",
@@ -375,8 +417,7 @@ def incremental_dedup(
     if verify_threshold is None:
         return out.withColumn("near_dup", F.col("n_band_matches") > 0)
     # verification: candidate (fresh, hist) pairs via the shared band
-    # bucket, then distinct-word Jaccard — only candidate pairs' ids and
-    # word arrays move, never the corpus
+    # bucket, then distinct-word Jaccard
     hist_band_docs = (
         bands.join(
             history.select(F.col(id_col).alias("doc_id")), "doc_id"
@@ -390,33 +431,12 @@ def incremental_dedup(
         .select("doc_id", "_hist_id")
         .distinct()
     )
-    # built directly (not by substring-replacing _SPARK_WORDS: a column
-    # named e.g. 'context' would be corrupted by a textual replace)
-    words_of = F.expr(
-        f"array_distinct(filter(split(lower(coalesce({text_col}, '')), "
-        "' '), w -> w != ''))"
-    )
-    fresh_words = docs.select(
-        F.col(id_col).alias("doc_id"), words_of.alias("_fw")
-    )
-    hist_words = docs.select(
-        F.col(id_col).alias("_hist_id"), words_of.alias("_hw")
-    )
     verified = (
-        cand.join(fresh_words, "doc_id")
-        .join(hist_words, "_hist_id")
-        .withColumn("_si", F.expr("size(array_intersect(_fw, _hw))"))
-        .filter(
-            # |A∩B| / (|A| + |B| - |A∩B|): arithmetic union size (arrays
-            # are distinct) — the exact arithmetic shape the oracle uses,
-            # one correctly-rounded division each side; the intersect is
-            # materialized ONCE (a duplicate inside the predicate is not
-            # reliably CSE'd through codegen and it is the dominant cost)
-            F.expr(
-                "_si / greatest(size(_fw) + size(_hw) - _si, 1) >= "
-                f"{float(verify_threshold)!r}"
-            )
+        jaccard_verify(
+            cand, docs, docs, verify_threshold, ("doc_id", "_hist_id"),
+            id_col=id_col, text_col=text_col,
         )
+        .filter("verified")
         .select("doc_id")
         .distinct()
         .withColumn("_v", F.lit(True))

@@ -21,10 +21,9 @@ adjacent-symbol-pair frequency table — expressed Spark-first:
    corpus. Ties break count-desc then pair-asc — the same rule a
    single-node BPE trainer uses to stay reproducible.
 
-A full BPE training run is this pass iterated with the winning pair merged
-into the symbol table each round; the per-iteration data movement never
-exceeds the (word, count) table, which is the scale-safe property that
-matters at 100 TB.
+``bpe_train`` runs step 1 once on Spark, collects the (word, count) table
+and learns the full merge list from it on the Spark driver; after that one
+aggregation no merge round touches the corpus again.
 """
 
 from __future__ import annotations
@@ -44,18 +43,22 @@ _WORDS_DUCK = (
 )
 
 
+def _word_counts(docs: DataFrame, text_col: str) -> DataFrame:
+    """(word, cnt) over the normalized corpus: one map-side-combinable
+    groupBy that shuffles (word, partial_count) rows, never documents."""
+    words = docs.select(
+        F.explode(F.expr(_WORDS_SPARK.format(col=text_col))).alias("word")
+    )
+    return words.groupBy("word").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+
+
 def bpe_pair_counts(
     docs: DataFrame, text_col: str = "text", top_k: int = 50
 ) -> DataFrame:
     """Corpus-wide adjacent-character-pair frequencies (the first BPE merge
     iteration): ``pair`` ("x y"), ``pair_count``, and the deterministic
     ``rank`` (count desc, pair asc). Returns the top ``top_k`` pairs."""
-    words = docs.select(
-        F.explode(F.expr(_WORDS_SPARK.format(col=text_col))).alias("word")
-    )
-    wc = words.groupBy("word").agg(
-        F.count(F.lit(1)).cast("long").alias("cnt")
-    )
+    wc = _word_counts(docs, text_col)
     # Spark's sequence(1, 0) is DESCENDING ([1, 0]), not empty like
     # DuckDB's generate_series — single-char words must be excluded
     # explicitly (they contribute no pairs in either engine).
@@ -101,97 +104,42 @@ def _padded(join_expr: str) -> str:
 
 
 def _merge_pattern(lhs: str, rhs: str) -> tuple[str, str]:
+    # the pattern is spliced into SQL string literals by the encoders; the
+    # shared normalization strips every ASCII punctuation char, so a learned
+    # symbol never holds a quote or backslash, but a caller-supplied one may
+    if any(c in sym for sym in (lhs, rhs) for c in "'\\"):
+        raise ValueError(
+            f"BPE merge symbol holds a quote or backslash: {(lhs, rhs)!r}"
+        )
     return f" {lhs}  {rhs} ", f" {lhs}{rhs} "
 
 
 def bpe_train(
-    docs: DataFrame,
-    text_col: str = "text",
-    n_merges: int = 20,
-    checkpoint_every: int = 6,
+    docs: DataFrame, text_col: str = "text", n_merges: int = 20
 ) -> list[tuple[str, str, int]]:
-    """Full distributed BPE training (Sennrich et al. 2016 learn_bpe):
-    ``n_merges`` iterations of pair-count -> argmax -> merge over the
-    corpus-wide word-frequency table. Returns the learned merge list as
+    """BPE training (Sennrich et al. 2016 learn_bpe): ``n_merges``
+    iterations of pair-count -> argmax -> merge over the corpus-wide
+    word-frequency table. Returns the learned merge list as
     ``[(lhs, rhs, pair_count), ...]`` in training order.
 
-    Scale design — the loop never touches the corpus again after pass 1:
-
-    * One combinable groupBy builds the Zipf-bounded (word, cnt) vocab;
-      documents shuffle nothing but (word, partial-count) rows, once.
-    * Each iteration aggregates adjacent pairs over DISTINCT words
-      weighted by cnt (O(vocabulary) work), takes the alphabet^2-bounded
-      pair table's argmax via a 1-row ``limit(1).collect()`` (bounded,
-      like the IVF training collect), and rewrites the vocab with one
-      codegen literal-``replace`` projection — the same per-iteration
-      data movement a 100 TB run would have, because the vocab table is
-      corpus-size-independent.
-    * ``localCheckpoint`` every ``checkpoint_every`` rounds bounds plan
-      growth exactly as connected_components does.
-
-    Tie-break is count-desc then pair-asc — the reproducibility rule the
-    pure-python reference model (``bpe_train_reference``) shares; pytest
-    pins the two equal."""
-    words = docs.select(
-        F.explode(F.expr(_WORDS_SPARK.format(col=text_col))).alias("word")
-    )
-    vocab = (
-        words.groupBy("word")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .select(
-            F.expr(
-                "transform(sequence(1, char_length(word)), "
-                "i -> substring(word, i, 1))"
-            ).alias("syms"),
-            "cnt",
-        )
-        .localCheckpoint()
-    )
-    merges: list[tuple[str, str, int]] = []
-    for step in range(n_merges):
-        top = (
-            vocab.filter(F.expr("size(syms) >= 2"))
-            .select(
-                F.explode(
-                    F.expr(
-                        "transform(sequence(1, size(syms) - 1), "
-                        "i -> concat(element_at(syms, i), ' ', "
-                        "element_at(syms, i + 1)))"
-                    )
-                ).alias("pair"),
-                "cnt",
-            )
-            .groupBy("pair")
-            .agg(F.sum("cnt").alias("pair_count"))
-            .orderBy(F.col("pair_count").desc(), F.col("pair").asc())
-            .limit(1)
-            .collect()
-        )
-        if not top:
-            break
-        lhs, rhs = top[0]["pair"].split(" ")
-        merges.append((lhs, rhs, int(top[0]["pair_count"])))
-        pat, rep = _merge_pattern(lhs, rhs)
-        padded = _padded("array_join(syms, '  ')")
-        vocab = vocab.select(
-            F.expr(
-                f"split(trim(replace({padded}, '{pat}', '{rep}')), '  ')"
-            ).alias("syms"),
-            "cnt",
-        )
-        if (step + 1) % checkpoint_every == 0:
-            vocab = vocab.localCheckpoint()
-    return merges
+    One combinable Spark groupBy builds the Zipf-bounded (word, cnt) vocab
+    (documents shuffle nothing but (word, partial-count) rows, once); the
+    vocab is collected and ``bpe_train_reference`` learns the merges from it
+    on the Spark driver. Every merge round is O(vocabulary) work and no
+    Spark job; the driver holds the distinct-word table, which Zipf's law
+    keeps orders of magnitude smaller than the corpus."""
+    vocab = _word_counts(docs, text_col).collect()
+    return bpe_train_reference({r["word"]: r["cnt"] for r in vocab}, n_merges)
 
 
 def bpe_train_reference(
     word_counts: dict[str, int], n_merges: int = 20
 ) -> list[tuple[str, str, int]]:
-    """Pure-python reference BPE trainer with IDENTICAL semantics to
-    ``bpe_train`` (pair weighting, count-desc/pair-asc tie-break, and the
-    padded-string single-pass merge application). Used by the pytest
-    parity gate and by ``bpe_oracle_merges`` to hand the DuckDB oracle
-    the same merge literals the Spark query learns."""
+    """The BPE trainer over a (word -> count) table: pair counts weighted
+    by word count, count-desc/pair-asc tie-break, and the padded-string
+    single-pass merge application. ``bpe_train`` feeds it a Spark-built
+    vocab and ``bpe_oracle_merges`` a DuckDB-built one, so both engines
+    encode with the same merge literals."""
     vocab = {
         " " + "  ".join(w) + " ": int(c) for w, c in word_counts.items() if w
     }
@@ -199,7 +147,9 @@ def bpe_train_reference(
     for _ in range(n_merges):
         counts: dict[str, int] = {}
         for padded, cnt in vocab.items():
-            syms = padded.strip().split("  ")
+            # strip the padding spaces only: a word may hold a tab or
+            # newline (the split is on ' '), and that is a symbol too
+            syms = padded.strip(" ").split("  ")
             for i in range(len(syms) - 1):
                 p = syms[i] + " " + syms[i + 1]
                 counts[p] = counts.get(p, 0) + cnt

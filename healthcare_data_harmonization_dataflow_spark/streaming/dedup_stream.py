@@ -50,7 +50,12 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.dedup import MINHASH_BANDS, MINHASH_K, minhash_signature
+from ..operators.dedup import (
+    MINHASH_BANDS,
+    MINHASH_K,
+    jaccard_verify,
+    minhash_signature,
+)
 from .sink import ExactlyOnceParquetSink, FanOutSink
 
 _INDEX_SCHEMA = (
@@ -227,10 +232,17 @@ class StreamingDedupPipeline:
         Only candidate PAIRS (ids + their two texts) move, never the
         corpus: at scale the candidate set is the LSH output, already
         bounded by bucket sizes."""
-        spark = out.sparkSession
-        words = (
-            "array_distinct(filter(split(lower(coalesce({col}, '')), ' '),"
-            " w -> w != ''))"
+        if not self.docs_sink.committed_batches():
+            # no committed history yet (first batch): read_committed's
+            # no-history fallback has a placeholder schema; there is
+            # nothing to verify against
+            return out.withColumn("near_dup", F.lit(False))
+        hist_ids = index.select(F.col("doc_id").alias(self.id_col)).distinct()
+        # the index gates history exactly as it gates ``cand``: a retried
+        # epoch's own docs may already be committed to docs/ but not to
+        # index/, and must not reach the verification join
+        hist_docs = self.docs_sink.read_committed(out.sparkSession).join(
+            hist_ids, self.id_col, "left_semi"
         )
         cand = (
             probe.join(
@@ -245,35 +257,13 @@ class StreamingDedupPipeline:
             .select("doc_id", "_hist_id")
             .distinct()
         )
-        if not self.docs_sink.committed_batches():
-            # no committed history yet (first batch): read_committed's
-            # no-history fallback has a placeholder schema; there is
-            # nothing to verify against
-            hist_docs = spark.createDataFrame(
-                [], "_hist_id long, _hw array<string>"
-            )
-        else:
-            hist_docs = self.docs_sink.read_committed(spark).select(
-                F.col(self.id_col).alias("_hist_id"),
-                F.expr(words.format(col=self.text_col)).alias("_hw"),
-            )
-        fresh_words = out.select(
-            F.col(self.id_col).alias("doc_id"),
-            F.expr(words.format(col=self.text_col)).alias("_fw"),
-        )
         verified = (
-            cand.join(hist_docs, "_hist_id")
-            .join(fresh_words, "doc_id")
-            .withColumn("_si", F.expr("size(array_intersect(_fw, _hw))"))
-            .withColumn(
-                # one intersect per pair; arithmetic union (arrays are
-                # distinct) — same shape as the batch analogue
-                "_jac",
-                F.expr(
-                    "_si / greatest(size(_fw) + size(_hw) - _si, 1)"
-                ),
+            jaccard_verify(
+                cand, out, hist_docs, self.verify_threshold,
+                ("doc_id", "_hist_id"),
+                id_col=self.id_col, text_col=self.text_col,
             )
-            .filter(F.col("_jac") >= float(self.verify_threshold))
+            .filter("verified")
             .select("doc_id")
             .distinct()
             .withColumn("_verified", F.lit(True))

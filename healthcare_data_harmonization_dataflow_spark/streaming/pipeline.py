@@ -44,15 +44,14 @@ class HarmonizationPipeline:
     trigger: dict = field(default_factory=lambda: {"processingTime": "5 seconds"})
     error_shards: int = 10  # --errorLogShardNum default, Hl7v2ToFhirStreamingRunner.java:133-137
     max_files_per_trigger: int | None = None  # None = let availableNow take everything
-    # "auto" (resolves to state_v1 — see _resolve_assembly for why the
-    # faster window variant must stay an explicit opt-in) | "window"
-    # (built-in session_window agg, pure JVM — 16-27× faster on large
-    # backfill batches but inherits Spark's LAGGED late-row filtering,
-    # diverging from allowedLateness=ZERO near the watermark boundary) |
-    # "state_v1" (applyInPandasWithState — exact reference late-row
-    # semantics, measured scaling 0.949) | "tws" (transformWithState,
-    # protobuf-gated)
-    assembly: str = "auto"
+    # "state_v1" (applyInPandasWithState; drops rows behind the watermark
+    # exactly, the reference's allowedLateness=ZERO) | "window" (built-in
+    # session_window agg, pure JVM, 16-27x faster on large backfills). Keep
+    # "window" an explicit opt-in: it inherits Spark's lagged late-row filter
+    # (SPARK-24634: late input is checked against the PREVIOUS batch's
+    # watermark), so a row near the watermark is admitted where the reference
+    # drops it (test_late_rows_dropped fails under it).
+    assembly: str = "state_v1"
     max_turns_per_bundle: int | None = None  # bundle-size cap (hot-conv chunking)
     # the reference's --enablePerformanceMetrics: per-element transform
     # latency Distribution (forces the Arrow/pandas mapping backend)
@@ -70,6 +69,10 @@ class HarmonizationPipeline:
     commit_mode: str = "rename"
 
     def __post_init__(self):
+        if self.assembly not in ("state_v1", "window"):
+            raise ValueError(
+                f"assembly must be 'state_v1' or 'window', got {self.assembly!r}"
+            )
         self.bundles_sink = ExactlyOnceParquetSink(
             os.path.join(self.out_dir, "bundles"),
             "bundles",
@@ -94,32 +97,6 @@ class HarmonizationPipeline:
             # split pacing, the ListHL7v2Messages restriction-splitting analogue
             reader = reader.option("maxFilesPerTrigger", self.max_files_per_trigger)
         return reader.parquet(input_path)
-
-    def _resolve_assembly(self) -> str:
-        """Make the measured window-vs-state trade operational (VERDICT r4
-        #3) — and make the SEMANTIC boundary explicit. ``auto`` resolves
-        to ``state_v1`` in every regime:
-
-        The pure-JVM ``window`` variant is 16-27× faster in absolute
-        terms on large backfill batches (BENCH.md), but it inherits
-        Spark's two-watermark rule for built-in stateful operators
-        (SPARK-24634, Spark ≥3.4): late input is filtered against the
-        PREVIOUS micro-batch's watermark, while eviction uses the current
-        one. A row arriving within one batch of the watermark passing it
-        is therefore ADMITTED and merged — diverging from the reference's
-        allowedLateness=ZERO (Hl7v2ToFhirStreamingRunner.java:168-175),
-        which the stateful handler enforces exactly (assembly.py
-        ``_assemble`` drops rows behind the watermark itself;
-        tests/test_streaming.py::test_late_rows_dropped is the pinned
-        counterexample — it FAILS under window assembly). Auto-selecting
-        ``window`` would silently change output rows for the same input
-        stream + watermark, which the north rule forbids, so it stays an
-        explicit opt-in for backfills whose input is known on-time; its
-        big-batch scaling evidence lives in BENCH.md.
-        """
-        if self.assembly != "auto":
-            return self.assembly
-        return "state_v1"
 
     def _assembly_delay(self) -> "str | None":
         # dedup_turns already watermarked the source; a second withWatermark
@@ -157,8 +134,7 @@ class HarmonizationPipeline:
         ok = ok_rows(m).select(
             "conv_id", "turn_idx", "role", F.col("ok").alias("text"), "ts"
         )
-        assembly = self._resolve_assembly()
-        if assembly == "window":
+        if self.assembly == "window":
             from .assembly import assemble_sessions_window
 
             if self.max_turns_per_bundle:
@@ -167,17 +143,6 @@ class HarmonizationPipeline:
                     "assembly='state_v1' with max_turns_per_bundle"
                 )
             bundles = assemble_sessions_window(
-                ok, gap=self.session_gap, watermark_delay=self._assembly_delay()
-            )
-        elif assembly == "tws":
-            from .assembly_tws import assemble_sessions_tws, tws_available
-
-            if not tws_available():
-                raise RuntimeError(
-                    "assembly='tws' needs google.protobuf (transformWithState "
-                    "state protocol); use assembly='state_v1' here"
-                )
-            bundles = assemble_sessions_tws(
                 ok, gap=self.session_gap, watermark_delay=self._assembly_delay()
             )
         else:

@@ -357,10 +357,8 @@ class ExactlyOnceParquetSink:
         fs = self._fs()
         local = _is_local(self.base_dir)
         path = self._data_dir(batch_id)
-        t0 = time.time()
         out.write.mode("overwrite").parquet(path)
         total_rows = int(obs.get["rows"])
-        t1 = time.time()
         # per-partition lineage from ONE directory listing (names + byte
         # sizes come from the same listStatus). Per-file row counts are
         # added from parquet footers only on the local fast path — on a
@@ -393,28 +391,12 @@ class ExactlyOnceParquetSink:
             "committed_at": time.time(),
             "sink": self.name,
         }
-        t2 = time.time()
         fs.mkdirs(self._commits_dir)
         marker = json.dumps(commit)
         if self.commit_mode == "put":
             fs.write_text_put(self._commit_path(batch_id), marker)
         else:
             fs.write_text_atomic(self._commit_path(batch_id), marker)
-        prof = os.environ.get("SINK_PROFILE")
-        if prof:  # phase breakdown for scaling diagnosis (bench-only)
-            with open(prof, "a") as f:
-                f.write(
-                    json.dumps(
-                        {
-                            "batch": batch_id,
-                            "rows": total_rows,
-                            "write_s": round(t1 - t0, 3),
-                            "lineage_s": round(t2 - t1, 3),
-                            "commit_s": round(time.time() - t2, 3),
-                        }
-                    )
-                    + "\n"
-                )
 
     def foreach_batch(self):
         return lambda df, batch_id: self.write_batch(df, batch_id)

@@ -1048,25 +1048,6 @@ def test_gopher_signals_reference_model(spark):
     assert len(got) == 4  # every input doc yields a row
 
 
-def test_bundle_assembly_grouped_byte_equal_to_default(spark, sf_dir):
-    """assemble_bundles_grouped (the applyInPandas variant) must produce
-    byte-identical bundles to the pure-JVM assemble_bundles on real
-    transcripts — this equality is why bundle_assembly_grouped was
-    RETIRED from queries(): same semantics, one registry slot."""
-    from healthcare_data_harmonization_dataflow_spark.operators.bundles import (
-        assemble_bundles,
-        assemble_bundles_grouped,
-    )
-    import __spark_entry__ as entry
-
-    t = entry._transcripts(spark, sf_dir)
-    a = assemble_bundles(t)
-    b = assemble_bundles_grouped(t)
-    assert a.schema == b.schema
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
-
-
 def test_quality_classifier_reference_model(spark):
     """quality_classifier must equal a pure-python reimplementation of the
     linear model (same md5 bucket hash, same nonnegative-shifted integer
@@ -1246,6 +1227,37 @@ def test_null_text_oracle_parity_end_to_end(spark):
             key=repr,
         )
         assert spark_rows == duck_rows, name
+
+
+def test_lsh_fp_rate_zero_candidates_matches_oracle(spark):
+    """Mutually dissimilar docs share no LSH band, so there are zero
+    candidate pairs: the verified count and fp_ppm must be 0 (the
+    oracle's coalesced sum), not NULL."""
+    import duckdb
+    import pandas as pd
+
+    import __spark_entry__ as entry
+
+    pdf = pd.DataFrame(
+        {
+            "doc_id": [0, 1, 2],
+            "text": [
+                "alpha beta gamma delta epsilon",
+                "red green blue yellow purple",
+                "one two three four five",
+            ],
+        }
+    )
+    con = duckdb.connect()
+    con.register("documents", pdf)
+    sdf = spark.createDataFrame(pdf, "doc_id long, text string")
+
+    import unittest.mock as mock
+
+    with mock.patch.object(entry, "_docs", lambda s, d: sdf):
+        got = entry.queries()["lsh_fp_rate"](spark, "unused").collect()
+    oracle = con.sql(entry.oracle_sql()["lsh_fp_rate"]).fetchall()
+    assert [tuple(r) for r in got] == oracle == [(0, 0, 0)]
 
 
 def test_source_cap_two_level_equals_single_window(spark):
@@ -1793,10 +1805,10 @@ def _bpe_word_counts(texts):
 
 
 def test_bpe_train_matches_reference_model(spark):
-    """The distributed trainer (pair-count agg + bounded argmax collect +
-    codegen literal-replace merge per round) must learn the EXACT merge
-    sequence of the pure-python reference — including tie-breaks and the
-    single-pass left-to-right merge-application semantics."""
+    """The Spark-built vocab must equal the pure-python word counts, so
+    bpe_train learns the EXACT merge sequence of the reference trainer —
+    including tie-breaks and the single-pass left-to-right
+    merge-application semantics."""
     from healthcare_data_harmonization_dataflow_spark.operators.tokenize import (
         bpe_train,
         bpe_train_reference,
@@ -1812,7 +1824,7 @@ def test_bpe_train_matches_reference_model(spark):
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
-    got = bpe_train(docs, n_merges=12, checkpoint_every=4)
+    got = bpe_train(docs, n_merges=12)
     ref = bpe_train_reference(_bpe_word_counts(texts), n_merges=12)
     assert got == ref
     assert len(got) == 12
@@ -1830,6 +1842,30 @@ def test_bpe_train_single_pass_merge_semantics():
     # round 1: (a,a) count 3; round 2: the two 'aa' symbols pair up
     assert merges[0] == ("a", "a", 3)
     assert merges[1] == ("aa", "aa", 1)
+
+
+def test_bpe_train_counts_leading_whitespace_symbols():
+    """Words split on ' ' only, so a word can start with a tab; the tab is
+    a symbol and its pair counts like any other (only the padding spaces
+    are stripped)."""
+    from healthcare_data_harmonization_dataflow_spark.operators.tokenize import (
+        bpe_train_reference,
+    )
+
+    assert bpe_train_reference({"\tab": 1}, n_merges=1) == [("\t", "a", 1)]
+
+
+def test_bpe_encode_rejects_quote_and_backslash_symbols(spark):
+    """Merge symbols are spliced into SQL string literals; a quote or a
+    backslash must be refused before it reaches the plan."""
+    from healthcare_data_harmonization_dataflow_spark.operators.tokenize import (
+        bpe_encode,
+    )
+
+    docs = spark.createDataFrame([(1, "alpha")], "doc_id long, text string")
+    for merge in [("'", "a", 1), ("a", "\\", 1)]:
+        with pytest.raises(ValueError, match="quote or backslash"):
+            bpe_encode(docs, [merge])
 
 
 def test_bpe_encode_lossless_and_merged(spark):

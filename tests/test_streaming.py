@@ -189,42 +189,6 @@ def test_streaming_exactly_once_replay_commit_modes(spark, tmp_path, commit_mode
     assert pipe2.bundles(spark).count() == first
 
 
-def test_tws_assembly_matches_v1(spark, tmp_path):
-    """transformWithState assembly (ListState, O(new) appends) must produce
-    byte-identical bundles to the applyInPandasWithState reference path,
-    including session-gap splits."""
-    from healthcare_data_harmonization_dataflow_spark.streaming.assembly_tws import (
-        tws_available,
-    )
-
-    if not tws_available():
-        pytest.skip("google.protobuf not available in this environment "
-                    "(transformWithState state-server protocol dependency)")
-    tmp = str(tmp_path)
-    inp = os.path.join(tmp, "transcripts")
-    _write_input(spark, inp, total_turns=300)
-
-    outs = {}
-    for mode in ("state_v1", "tws"):
-        pipe = HarmonizationPipeline(
-            mapping_config=CFG,
-            out_dir=os.path.join(tmp, f"out_{mode}"),
-            session_gap="2 minutes",
-            watermark_delay="36 hours",
-            trigger={"availableNow": True},
-            max_files_per_trigger=4,
-            assembly=mode,
-        )
-        q = pipe.run_harmonization(spark, inp, os.path.join(tmp, f"ck_{mode}"))
-        q.awaitTermination(300)
-        outs[mode] = {
-            (r["conv_id"], r["n_turns"], r["bundle"])
-            for r in pipe.bundles(spark).filter(F.col("conv_id") != "conv-sentinel").collect()
-        }
-    assert outs["tws"] == outs["state_v1"]
-    assert len(outs["tws"]) > 0
-
-
 def test_checkpoint_resume_with_new_data(spark, tmp_path):
     """Kill/restart continuation: a restarted query processes ONLY data that
     arrived after the first run, and the union of outputs equals a single
@@ -847,125 +811,6 @@ def test_sink_lineage_has_bytes_and_observed_rows(spark, tmp_path):
     assert sum(p["rows"] for p in lin2["partitions"]) == 75
 
 
-def test_tws_handler_logic_with_mocked_state():
-    """Round-3 gated-path risk shrink: the transformWithState handler's
-    logic (append-only buffering, late-row drop, timer re-arm, watermark
-    drain, open-session retention) runs WITHOUT protobuf by driving the
-    StatefulProcessor directly against mocked state primitives."""
-    import pandas as pd
-
-    from healthcare_data_harmonization_dataflow_spark.streaming.assembly_tws import (
-        SessionAssembler,
-    )
-
-    class MockListState:
-        def __init__(self):
-            self.rows = []
-
-        def get(self):
-            return iter(self.rows)
-
-        def appendList(self, pdf):
-            self.rows.extend(tuple(t) for t in pdf.itertuples(index=False))
-
-        def clear(self):
-            self.rows = []
-
-    class MockValueState:
-        def __init__(self):
-            self.v = None
-
-        def exists(self):
-            return self.v is not None
-
-        def get(self):
-            return self.v
-
-        def update(self, v):
-            self.v = v
-
-        def clear(self):
-            self.v = None
-
-    class MockHandle:
-        def __init__(self):
-            self.states = {}
-            self.timers = []
-
-        def getListState(self, name, schema):
-            return self.states.setdefault(name, MockListState())
-
-        def getValueState(self, name, schema):
-            return self.states.setdefault(name, MockValueState())
-
-        def listTimers(self):
-            return list(self.timers)
-
-        def deleteTimer(self, t):
-            self.timers.remove(t)
-
-        def registerTimer(self, t):
-            self.timers.append(t)
-
-    class TV:
-        def __init__(self, wm_ms):
-            self.wm_ms = wm_ms
-
-        def getCurrentWatermarkInMs(self):
-            return self.wm_ms
-
-    def batch(turn_ts):  # [(turn_idx, role, text, ts_seconds)]
-        return iter(
-            [
-                pd.DataFrame(
-                    {
-                        "turn_idx": [t[0] for t in turn_ts],
-                        "role": [t[1] for t in turn_ts],
-                        "text": [t[2] for t in turn_ts],
-                        "ts": [pd.Timestamp(t[3], unit="s") for t in turn_ts],
-                    }
-                )
-            ]
-        )
-
-    gap = 300  # 5 minutes
-    proc = SessionAssembler(gap)
-    handle = MockHandle()
-    proc.init(handle)
-    key = ("conv-1",)
-
-    # batch 1: two sessions' worth of turns + one LATE row (ts < watermark)
-    out = list(
-        proc.handleInputRows(
-            key,
-            batch([(0, "user", "a", 1000), (1, "assistant", "b", 1010),
-                   (9, "user", "LATE", 10), (2, "user", "c", 2000)]),
-            TV(wm_ms=500 * 1000),
-        )
-    )
-    assert out == []  # nothing complete yet
-    assert len(handle.states["turns"].rows) == 3  # late row dropped
-    assert handle.states["max_ts"].v == (2000 * 1_000_000,)
-    # single event-time timer at last-turn + gap
-    assert handle.timers == [(2000 + gap) * 1000]
-
-    # timer fires with watermark past session-1's end+gap but NOT session-2's:
-    # session 1 (turns 0,1) emits, session 2 (turn 2) is retained + re-armed
-    out = list(proc.handleExpiredTimer(key, TV(wm_ms=(1010 + gap + 1) * 1000), None))
-    assert len(out) == 1
-    row = out[0].to_dict("records")[0]
-    assert row["conv_id"] == "conv-1" and row["n_turns"] == 2
-    assert "a" in row["bundle"] and "c" not in row["bundle"]
-    assert [t[0] for t in handle.states["turns"].rows] == [2]
-    assert handle.timers[-1] == (2000 + gap) * 1000
-
-    # watermark passes everything: session 2 emits, state fully cleared
-    out = list(proc.handleExpiredTimer(key, TV(wm_ms=(2000 + gap + 1) * 1000), None))
-    assert out[0].to_dict("records")[0]["n_turns"] == 1
-    assert handle.states["turns"].rows == []
-    assert handle.states["max_ts"].v is None
-
-
 def test_window_assembly_matches_v1(spark, tmp_path):
     """The pure-JVM session_window assembly must produce byte-identical
     bundles (and identical session bounds) to the stateful reference path,
@@ -1264,35 +1109,29 @@ def test_sink_scalar_json_marker_counts_as_uncommitted(spark, tmp_path):
     assert reader.read_committed(spark).count() == 10
 
 
-def test_assembly_auto_never_silently_picks_window(tmp_path):
-    """'auto' must resolve to state_v1 in EVERY trigger regime: the
-    pure-JVM window variant inherits Spark's lagged two-watermark
-    late-row filtering (late events checked against the PREVIOUS batch's
-    watermark), so a row arriving within one batch of the watermark
-    passing it is admitted — diverging from the reference's
-    allowedLateness=ZERO, which test_late_rows_dropped pins. Silent
-    selection would change output rows for the same input + watermark.
+def test_assembly_default_is_state_v1(tmp_path):
+    """The default must be state_v1: the pure-JVM window variant inherits
+    Spark's lagged two-watermark late-row filtering (late events checked
+    against the PREVIOUS batch's watermark), so a row arriving within one
+    batch of the watermark passing it is admitted, diverging from the
+    reference's allowedLateness=ZERO, which test_late_rows_dropped pins.
     An explicit choice always wins (the backfill opt-in)."""
-    from healthcare_data_harmonization_dataflow_spark.streaming.pipeline import (
-        HarmonizationPipeline,
+    pipe = HarmonizationPipeline(mapping_config=CFG, out_dir=str(tmp_path / "o"))
+    assert pipe.assembly == "state_v1"
+    window = HarmonizationPipeline(
+        mapping_config=CFG, out_dir=str(tmp_path / "w"), assembly="window"
     )
+    assert window.assembly == "window"
 
-    def pipe(**kw):
-        return HarmonizationPipeline(
-            mapping_config=CFG, out_dir=str(tmp_path / "o"), **kw
+
+@pytest.mark.parametrize("assembly", ["tws", "auto", "state-v1"])
+def test_unknown_assembly_rejected(tmp_path, assembly):
+    """An unknown backend name (a removed backend, a removed alias or a
+    typo) must fail at construction, not silently run state_v1."""
+    with pytest.raises(ValueError, match="assembly"):
+        HarmonizationPipeline(
+            mapping_config=CFG, out_dir=str(tmp_path / "o"), assembly=assembly
         )
-
-    assert pipe(trigger={"availableNow": True})._resolve_assembly() == "state_v1"
-    assert pipe(trigger={"once": True})._resolve_assembly() == "state_v1"
-    assert (
-        pipe(trigger={"processingTime": "5 seconds"})._resolve_assembly()
-        == "state_v1"
-    )
-    assert (
-        pipe(trigger={"availableNow": True}, assembly="window")
-        ._resolve_assembly()
-        == "window"
-    )
 
 
 def test_window_assembly_admits_boundary_late_row_documented(spark, tmp_path):

@@ -24,8 +24,7 @@ from healthcare_data_harmonization_dataflow_spark.streaming import assembly as A
 
 
 class MockState:
-    """The GroupState surface _assemble touches (mirrors the tws mock in
-    tests/test_streaming.py::test_tws_handler_logic_with_mocked_state)."""
+    """The GroupState surface _assemble touches."""
 
     def __init__(self):
         self._v = None

@@ -24,8 +24,8 @@ from healthcare_data_harmonization_dataflow_spark.plans.checks import (  # noqa:
 from healthcare_data_harmonization_dataflow_spark.session import build_session  # noqa: E402
 
 # Operators whose semantics REQUIRE a Python stage (Arrow-batched, never
-# per-row): custom decode hooks and the pandas-grouped assembly variant.
-PYTHON_ALLOWED = {"multimodal_features", "bundle_assembly_grouped"}
+# per-row): custom decode hooks.
+PYTHON_ALLOWED = {"multimodal_features"}
 
 # Hard ceilings on FileScan count for compositions that are REQUIRED to
 # reuse a materialized intermediate instead of re-deriving it per branch.

@@ -53,11 +53,10 @@ def main() -> None:
                          "duplicate (conv_id, turn_idx) within the watermark "
                          "before mapping (Pub/Sub semantics)")
     ap.add_argument("--assembly", default="state_v1",
-                    choices=["state_v1", "window", "tws"],
+                    choices=["state_v1", "window"],
                     help="session assembly: applyInPandasWithState (default;"
-                    " supports --max-turns-per-bundle), built-in"
-                    " session_window aggregation (pure JVM), or"
-                    " transformWithState (needs protobuf)")
+                    " supports --max-turns-per-bundle) or built-in"
+                    " session_window aggregation (pure JVM)")
     ap.add_argument("--max-turns-per-bundle", type=int, default=None,
                     help="chunk giant sessions into bundles of at most N"
                     " turns (state_v1 only)")
