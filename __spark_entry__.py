@@ -1605,6 +1605,19 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # are additionally pinned by pytest + the local sf0.01/sf0.1 gate
     # (tools/check_correctness.py runs ALL entries regardless of order).
     return {
+        # --- round-5 close-out: never driver-sampled yet ---
+        "lm_quality_filter": q_lm_quality_filter,
+        "span_dedup": q_span_dedup,
+        "dsir_sample": q_dsir_sample,
+        "c4_filters": q_c4_filters,
+        "text_normalize": q_text_normalize,
+        "corpus_stats": q_corpus_stats,
+        "bpe_pair_counts": q_bpe_pair_counts,
+        "bpe_encode": q_bpe_encode,
+        "dedup_incremental": q_dedup_incremental,
+        "dedup_incremental_verified": q_dedup_incremental_verified,
+        "dedup_cluster_sizes": q_dedup_cluster_sizes,
+        "lsh_fp_rate": q_lsh_fp_rate,
         # --- never driver-sampled before round 5: the LLM-curation suite ---
         "dedup_semantic": q_dedup_semantic,
         "contamination_ngram": q_contamination_ngram,
@@ -1672,20 +1685,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_langid": q_text_langid,
         "text_tokens": q_text_tokens,
         "text_fingerprint": q_text_fingerprint,
-        # --- added after the round-5 gate regeneration: appended at the
-        # --- tail so the driver's 50-entry prefix sample is unchanged
-        "lm_quality_filter": q_lm_quality_filter,
-        "span_dedup": q_span_dedup,
-        "dsir_sample": q_dsir_sample,
-        "c4_filters": q_c4_filters,
-        "text_normalize": q_text_normalize,
-        "corpus_stats": q_corpus_stats,
-        "bpe_pair_counts": q_bpe_pair_counts,
-        "bpe_encode": q_bpe_encode,
-        "dedup_incremental": q_dedup_incremental,
-        "dedup_incremental_verified": q_dedup_incremental_verified,
-        "dedup_cluster_sizes": q_dedup_cluster_sizes,
-        "lsh_fp_rate": q_lsh_fp_rate,
     }
 
 

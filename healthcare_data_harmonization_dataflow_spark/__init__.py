@@ -20,4 +20,11 @@ declarative DataFrame plans that Catalyst/Tungsten optimize (predicate
 pushdown, whole-stage codegen, AQE), with Python only at the edges.
 """
 
+from ._zipimport_guard import install as _install_zipimport_guard
+
 __version__ = "0.1.0"
+
+# Python workers re-read every zip on sys.path before each task unless the
+# zip directory cache is stat-guarded (see _zipimport_guard); importing the
+# package is the one hook every engine UDF passes through in a worker.
+_install_zipimport_guard()

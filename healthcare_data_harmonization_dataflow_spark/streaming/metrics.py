@@ -54,9 +54,18 @@ def observe_mapping(df: DataFrame, name: str = "mapping_metrics") -> DataFrame:
     return out.drop("_lat_us") if has_latency else out
 
 
+_STATE_FIELDS = (
+    "numRowsTotal",
+    "memoryUsedBytes",
+    "numRowsDroppedByWatermark",
+    "commitTimeMs",
+)
+
+
 class MetricsListener(StreamingQueryListener):
-    """Captures per-batch throughput, observed counters and watermark lag to
-    an in-memory list + optional JSONL file (the engine's metrics table)."""
+    """Captures per-batch throughput, observed counters, state-store size
+    and the watermark to an in-memory list + optional JSONL file (the
+    engine's metrics table)."""
 
     def __init__(self, path: str | None = None):
         self.progress: list[dict] = []
@@ -79,6 +88,13 @@ class MetricsListener(StreamingQueryListener):
             # commitOffsets / queryPlanning / triggerExecution, ms) — the
             # evidence for where per-batch fixed costs live
             "duration_ms": dict(p.durationMs or {}),
+            # state-store footprint of this batch, summed over the stateful
+            # operators: open sessions, their memory, rows the watermark
+            # dropped before they reached state, and the state commit time
+            "state_operators": {
+                k: sum(getattr(op, k) for op in p.stateOperators or [])
+                for k in _STATE_FIELDS
+            },
             "wallclock": time.time(),
         }
         with self._lock:

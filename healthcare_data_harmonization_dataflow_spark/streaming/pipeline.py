@@ -5,15 +5,20 @@ EP1), transcript-native:
 
     readStream(transcripts)                       # PubsubIO + HL7v2IO.getAll
       -> per-record mapping (VARIANT codegen)     # ParDo(MappingFn)
-      -> ok / err fan-out in one pass             # withOutputTags
+      -> ok / err split, one query per branch     # withOutputTags
       -> stateful session assembly (ok branch)    # north-star addition
       -> exactly-once sinks: bundles, dead-letter # FhirIO.executeBundles +
          (+ metrics)                              #   windowed TextIO errors
 
-One source, one stateful query; the fan-out happens inside a single
-``foreachBatch`` so bundles and dead-letter commit under the same batchId
-(multi-sink atomicity, SURVEY §7.4 risk 3). The dead-letter flush cadence is
-the trigger interval — default 5 s, the reference's error window size
+The ok / err fan-out runs as two streaming queries over the same input:
+``run_harmonization`` (ok rows -> stateful assembly -> bundle sink) and
+``run_deadletter`` (err rows -> dead-letter sink). Each query has its own
+source scan, its own mapping pass and its own checkpoint, so each sink is
+exactly-once on its own batchIds, but a bundle batch and a dead-letter batch
+do not commit together: one query can run ahead of, or restart apart from,
+the other. (Multi-sink commit under one batchId is ``FanOutSink``, which
+the ingest, DICOM and dedup pipelines use.) The dead-letter flush cadence
+is the trigger interval — default 5 s, the reference's error window size
 (Hl7v2ToFhirStreamingRunner.java:146).
 """
 

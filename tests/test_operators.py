@@ -1260,6 +1260,22 @@ def test_lsh_fp_rate_zero_candidates_matches_oracle(spark):
     assert [tuple(r) for r in got] == oracle == [(0, 0, 0)]
 
 
+def test_round5_closeout_queries_lead_the_registry():
+    """The cross-engine correctness gate samples a 50-entry prefix of
+    queries(): the round-5 close-out entries must sit inside it, each
+    with an oracle."""
+    import __spark_entry__ as entry
+
+    closeout = [
+        "lm_quality_filter", "span_dedup", "dsir_sample", "c4_filters",
+        "text_normalize", "corpus_stats", "bpe_pair_counts", "bpe_encode",
+        "dedup_incremental", "dedup_incremental_verified",
+        "dedup_cluster_sizes", "lsh_fp_rate",
+    ]
+    assert list(entry.queries())[: len(closeout)] == closeout
+    assert set(closeout) <= set(entry.oracle_sql())
+
+
 def test_source_cap_two_level_equals_single_window(spark):
     """source_cap's salted two-level top-K must select the IDENTICAL
     survivor set as the semantic definition (one ranked window per source),

@@ -699,6 +699,59 @@ def test_transform_latency_distribution_in_metrics(spark, tmp_path):
         assert m["lat_min_us"] <= m["lat_p50_us"] <= m["lat_p99_us"] <= m["lat_max_us"]
 
 
+def test_metrics_listener_reports_state_operators(spark, tmp_path):
+    """Every listener row carries the state store's footprint summed over
+    the stateful operators: open sessions count in numRowsTotal while the
+    stream is mid-flight, and the flush sentinel's watermark jump drains
+    every real one by the last batch."""
+    import time as _t
+
+    from healthcare_data_harmonization_dataflow_spark.streaming.metrics import (
+        MetricsListener,
+    )
+
+    tmp = str(tmp_path)
+    inp = os.path.join(tmp, "transcripts")
+    _write_input(spark, inp, total_turns=200)
+    listener = MetricsListener()
+    spark.streams.addListener(listener)
+    try:
+        pipe = HarmonizationPipeline(
+            mapping_config=CFG,
+            out_dir=os.path.join(tmp, "out"),
+            watermark_delay="36 hours",
+            trigger={"availableNow": True},
+            max_files_per_trigger=4,
+        )
+        q = pipe.run_harmonization(spark, inp, os.path.join(tmp, "ckpt"))
+        q.awaitTermination(300)
+        # listener events arrive asynchronously; wait for every batch's row
+        n_batches = len(q.recentProgress)
+        deadline = _t.time() + 60
+        while _t.time() < deadline and n_batches > sum(
+            r["query"] == "harmonization" for r in listener.progress
+        ):
+            _t.sleep(0.2)
+    finally:
+        spark.streams.removeListener(listener)
+
+    rows = sorted(
+        (r for r in listener.progress if r["query"] == "harmonization"),
+        key=lambda r: r["batch_id"],
+    )
+    assert len(rows) == n_batches >= 3
+    state = [r["state_operators"] for r in rows]
+    for s in state:
+        assert set(s) == {
+            "numRowsTotal", "memoryUsedBytes", "numRowsDroppedByWatermark", "commitTimeMs",
+        }
+        assert s["numRowsDroppedByWatermark"] == 0  # the watermark covers the disorder
+    assert any(s["numRowsTotal"] > 1 and s["memoryUsedBytes"] > 0 for s in state[:-1])
+    # drained: only the sentinel's own session is left, nothing later flushes it
+    assert state[-1]["numRowsTotal"] == 1
+    assert rows[-1]["watermark"] is not None
+
+
 def test_state_blob_version_tag():
     """Session-state blobs carry a version byte: a blob from a different
     format fails with an explicit incompatibility error, not inside
