@@ -1,37 +1,60 @@
 """Benchmark harness. Prints ONE JSON line:
 
   {"metric": ..., "value": <total sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": ..., "turns_per_sec": ...}
+   "queries": {name: sec, ...}, "sf": ..., "cpus": ..., "turns_per_sec": ...}
 
-Headline: the harmonization pipeline (generate 1M deterministic transcript
-turns -> VARIANT mapping -> per-conversation bundle assembly) measured in
-turns/sec, plus representative operator queries from __spark_entry__ at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1).
+The timed jobs are perfbench's seeded, output-checked workloads
+(``perfbench/workloads.py``), sized here: the streaming harmonization
+pipeline (``StreamHarmonize``), the batch harmonization job
+(``BatchHarmonize``) and the streaming ingest-dedup stage
+(``StreamDedup``). Each one warms up with one pass, takes the best of two
+timed passes, then runs the workload's own checks; a failed check exits 1
+and prints no result line. The full mode adds representative operator
+queries from __spark_entry__ over the test data at $SPARK_GRAFT_SF_DIR
+(default: its sf0.1 scale).
 
-Runs on local[$SPARK_GRAFT_CPUS] (default 32). Scaling evidence (N vs 4N
-cores) is produced by tools/bench_scaling.py, which re-invokes this file
-with BENCH_MODE=harmonize_only at two parallelism levels.
+Inputs: BENCH_MODE (full | harmonize_only | stream_only |
+dedup_stream_only), BENCH_TURNS (turns of the harmonize_only and
+stream_only job, default 1M), SPARK_GRAFT_CPUS (local[N], default 32) and
+SPARK_GRAFT_SF_DIR. Scaling evidence (N vs 4N cores) is produced by
+tools/bench_scaling.py, which re-invokes this file with
+BENCH_MODE=harmonize_only or stream_only at two parallelism levels.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
+from contextlib import contextmanager
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from healthcare_data_harmonization_dataflow_spark.model.errors import ok_rows
-from healthcare_data_harmonization_dataflow_spark.operators.bundles import assemble_bundles
-from healthcare_data_harmonization_dataflow_spark.operators.mapping_op import apply_mapping
-from healthcare_data_harmonization_dataflow_spark.session import build_session
-from healthcare_data_harmonization_dataflow_spark.sources.transcripts import (
-    generate_transcripts,
+from healthcare_data_harmonization_dataflow_spark.session import build_session  # noqa: E402
+from perfbench.harness import median  # noqa: E402
+from perfbench.workloads import (  # noqa: E402
+    BatchHarmonize,
+    StreamDedup,
+    StreamHarmonize,
+    seeded_transcripts,
 )
 
-HARMONIZE_TURNS = int(os.environ.get("BENCH_TURNS", 1_000_000))
-CFG = "out Output: Proj(root);\ndef Proj(input) { foo: input.bar; }"
+SEED = 1
+TIMED_PASSES = 2
+# the full mode's streaming figures: 200k turns over 8 files at 3 per
+# trigger, and 1M turns over 96 files at 8 per trigger. A single-row-group
+# parquet file is one scan split, so files per trigger is the scan and
+# mapping parallelism of a micro-batch; 8 keeps the 4N scaling level from
+# being scan-starved.
+STREAM_TURNS, STREAM_FILES, STREAM_FILES_PER_TRIGGER = 200_000, 8, 3
+STREAM_1M_TURNS, STREAM_1M_FILES, STREAM_1M_FILES_PER_TRIGGER = 1_000_000, 96, 8
+# per-partition state-store commit cost dominates locally: 32 state
+# partitions measured slower than 16 at local[8] (BENCH.md)
+STATE_PARTITIONS = 16
+DEDUP_DOCS, DEDUP_FILES, DEDUP_FILES_PER_TRIGGER = 50_000, 10, 2
 
 BENCH_QUERIES = [
     "mapping_transform",
@@ -93,358 +116,180 @@ BENCH_QUERIES = [
 ]
 
 
+class CheckFailed(RuntimeError):
+    """A timed workload's output failed one of its checks."""
+
+
+class BatchHarmonizeFiles(BatchHarmonize):
+    """perfbench's batch job over an input table of ``files`` parquet
+    files: one scan task per file, so the scan is not capped below the
+    core count."""
+
+    files = 4
+
+    def write_input(self, spark) -> None:
+        seeded_transcripts(spark, self.records, self.seed).repartition(
+            self.files
+        ).write.mode("overwrite").parquet(self.input_dir)
+
+
+def workload(cls, **sizes):
+    """A ``cls`` instance on a fresh scratch directory, sized by ``sizes``
+    (``records``, ``files``, ``files_per_trigger``)."""
+    wl = cls(tempfile.mkdtemp(prefix=f"bench_{cls.name}_"), SEED)
+    for k, v in sizes.items():
+        setattr(wl, k, v)
+    return wl
+
+
+def measure(spark, wl) -> dict:
+    """Write ``wl``'s input, warm up with one pass, time the best of
+    ``TIMED_PASSES`` passes and check their output. Raises ``CheckFailed``
+    instead of returning a figure for wrong output."""
+    try:
+        wl.write_input(spark)
+        wl.run_pass(spark)
+        passes = [wl.run_pass(spark) for _ in range(TIMED_PASSES)]
+        failed = [c for c in wl.checks(spark, passes) if not c.passed]
+        if failed:
+            raise CheckFailed(
+                f"{wl.name}: " + "; ".join(f"{c.name} ({c.detail})" for c in failed)
+            )
+        best = min(passes, key=lambda p: p.wall_s)
+        return {
+            "seconds": round(best.wall_s, 3),
+            "per_sec": round(wl.records / best.wall_s),
+            "batches": len(best.batch_s),
+            "batch_p50_s": round(median(best.batch_s), 3),
+        }
+    finally:
+        shutil.rmtree(wl.workdir, ignore_errors=True)
+
+
+@contextmanager
+def shuffle_partitions(spark, n: int):
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def measure_stream(spark, turns: int, files: int, files_per_trigger: int) -> dict:
+    wl = workload(
+        StreamHarmonize, records=turns, files=files, files_per_trigger=files_per_trigger
+    )
+    with shuffle_partitions(spark, STATE_PARTITIONS):
+        return measure(spark, wl)
+
+
 def run_noop(df) -> None:
     """Execute the full plan without driver-side collection."""
     df.write.format("noop").mode("overwrite").save()
 
 
-def bench_harmonize(spark, n_turns: int) -> float:
-    """The headline job: generate -> map -> assemble -> sink(noop).
-    Bundles are chunked at 10k turns (production bundle-size cap; without it
-    the hot conversation's single to_json render is an Amdahl tail)."""
-    t = generate_transcripts(spark, total_turns=n_turns, late_one_in=10**9)
-    mapped = apply_mapping(t, CFG, id_col="conv_id", data_col="text")
-    ok = ok_rows(mapped).select("conv_id", "turn_idx", "role", F_col_ok(), "ts")
-    # chunking alone de-skews (hot conv spreads over n/10k chunk groups), so
-    # the salt phase's second shuffle is pure overhead here: single shuffle
-    bundles = assemble_bundles(ok, salt_buckets=None, max_turns_per_bundle=10_000)
-    t0 = time.time()
-    run_noop(bundles)
-    return time.time() - t0
-
-
-def F_col_ok():
-    from pyspark.sql import functions as F
-
-    return F.col("ok").alias("text")
-
-
-def bench_streaming(spark, n_turns: int = 200_000, n_files: int = 8, max_files: int = 3):
-    """End-to-end streaming harmonization (the BASELINE.json headline):
-    parquet-file stream -> VARIANT mapping -> stateful session assembly ->
-    exactly-once sink, bounded by availableNow + a watermark-flushing
-    sentinel. Returns (elapsed_sec, turns_per_sec, avg_batch_sec,
-    n_batches) measured from the listener, i.e. including micro-batch
-    scheduling + state store + idempotent-commit overhead.
-
-    ``n_files``/``max_files`` control the micro-batch count (~n_files /
-    max_files): the large-scale figure uses 10+ batches so per-batch fixed
-    costs (state-store commit, file listing, epoch planning) are amortized
-    the way a long-running stream amortizes them."""
-    import shutil
-    import tempfile
-
-    from healthcare_data_harmonization_dataflow_spark.sources.transcripts import (
-        append_flush_sentinel,
-        generate_transcripts,
-        write_time_ordered_stream,
-    )
-    from healthcare_data_harmonization_dataflow_spark.streaming.metrics import (
-        MetricsListener,
-    )
-    from healthcare_data_harmonization_dataflow_spark.streaming.pipeline import (
-        HarmonizationPipeline,
-    )
-
-    root = tempfile.mkdtemp(prefix="bench_stream_")
-    try:
-        inp = os.path.join(root, "in")
-        # arrival follows event time (range-partitioned files, staggered
-        # mtimes) the way a real stream delivers; disorder WITHIN a file
-        # (jitter + rare 1h-late rows) still exercises reordering/late paths
-        # BENCH_HOT_FRAC: share of all turns held by ONE conversation
-        # (default 0.10 — the adversarial skew fixture; 0 = uniform control
-        # for the skew bench)
-        hot_frac = float(os.environ.get("BENCH_HOT_FRAC", "0.10"))
-        t = generate_transcripts(spark, total_turns=n_turns, hot_frac=hot_frac)
-        write_time_ordered_stream(t, inp, n_files=n_files)
-        append_flush_sentinel(spark, inp)
-        listener = MetricsListener(os.environ.get("BENCH_STREAM_PROFILE") or None)
-        spark.streams.addListener(listener)
-        # fewer state partitions locally: per-partition state-store commit
-        # overhead dominates at this scale (cluster runs size this to cores)
-        prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            os.environ.get("BENCH_STREAM_PARTITIONS", "16"),
-        )
-        try:
-            # BENCH_ASSEMBLY=window measures the pure-JVM session_window
-            # plan (no Python state, but also no bundle chunking — the hot
-            # conversation renders as one row)
-            assembly = os.environ.get("BENCH_ASSEMBLY", "state_v1")
-            pipe = HarmonizationPipeline(
-                mapping_config=CFG,
-                out_dir=os.path.join(root, "out"),
-                trigger={"availableNow": True},
-                assembly=assembly,
-                # BENCH_DEDUP=1: measure the at-least-once redelivery
-                # absorption (dropDuplicatesWithinWatermark) in the path
-                dedup_turns=os.environ.get("BENCH_DEDUP") == "1",
-                max_files_per_trigger=max_files,  # bounds rows per micro-batch
-                # the generator's conversations START anywhere in a 24h span
-                # (plus rare 1h-late rows), so the correctness watermark must
-                # cover that disorder — same setting the e2e tests use; rows
-                # dropped as late would silently shrink the measured work
-                watermark_delay="36 hours",
-                # production bundle-size cap: the hot conversation otherwise
-                # renders one giant JSON bundle in a single task (serial tail)
-                max_turns_per_bundle=None if assembly == "window" else 10_000,
-            )
-            t0 = time.time()
-            q = pipe.run_harmonization(spark, inp, os.path.join(root, "ckpt"))
-            q.awaitTermination()
-            elapsed = time.time() - t0
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-            spark.streams.removeListener(listener)
-        # deterministic numerator: the generated input size (the listener
-        # can drop events if the py4j callback channel hiccups at teardown)
-        batches = [p for p in listener.progress if p["num_input_rows"] > 0]
-        out_turns = (
-            pipe.bundles(spark).selectExpr("sum(n_turns)").first()[0] or 0
-        )
-        # end-to-end watermark lag (the BASELINE metric): wall-clock from a
-        # batch's completion to the watermark it established — i.e. how far
-        # behind the stream's own event-time frontier the engine runs. With
-        # the bounded replay the meaningful figure is the per-batch
-        # processing latency; the event-time watermark itself is asserted to
-        # ADVANCE monotonically across batches.
-        wms = [p["watermark"] for p in listener.progress if p.get("watermark")]
-        assert wms == sorted(wms), f"watermark regressed: {wms}"
-        return (
-            elapsed,
-            n_turns / elapsed,
-            elapsed / max(1, len(batches)),
-            len(batches),
-            int(out_turns),
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def bench_dedup_stream(spark, n_docs: int = 50_000, n_files: int = 10, max_files: int = 2):
-    """Throughput of the streaming ingest-dedup stage
-    (streaming/dedup_stream.py) on a deterministic synthetic corpus:
-    60% unique docs, 20% exact duplicates of an earlier doc, 20%
-    near-duplicates (same word set reordered — guaranteed all-band LSH
-    match). Returns (elapsed, docs_per_sec, n_admitted, n_flagged):
-    measured end-to-end over ~n_files/max_files micro-batches including
-    the growing index joins and the two-route exactly-once commit."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from healthcare_data_harmonization_dataflow_spark.streaming.dedup_stream import (
-        StreamingDedupPipeline,
-    )
-
-    root = tempfile.mkdtemp(prefix="bench_dedup_stream_")
-    try:
-        base = 3 * n_docs // 5
-        docs = spark.range(n_docs).select(
-            F.col("id").alias("doc_id"),
-            F.expr(
-                # template words from a stable per-doc seed; dup/near-dup
-                # classes pick an EARLIER base doc's seed so duplicates
-                # always land in the same or a later file
-                f"""concat_ws(' ', transform(sequence(0, 19), i -> concat(
-                  'w', conv(substring(md5(concat(
-                    cast(case
-                      when id < {base} then id
-                      when id % 2 = 0 then id % {base}
-                      else id % {base} end as string), '-', cast(
-                    case when id >= {base} and id % 2 = 1
-                         then 19 - i else i end as string))), 1, 8), 16, 10)
-                )))"""
-            ).alias("text"),
-        )
-        inp = os.path.join(root, "in")
-        docs.repartitionByRange(n_files, "doc_id").write.parquet(inp)
-        pipe = StreamingDedupPipeline(
-            out_dir=os.path.join(root, "out"),
-            max_files_per_trigger=max_files,
-        )
-        t0 = time.time()
-        pipe.run(spark, inp, os.path.join(root, "ckpt")).awaitTermination()
-        elapsed = time.time() - t0
-        admitted = pipe.documents(spark).count()
-        flagged = pipe.documents(spark).filter("near_dup").count()
-        return elapsed, n_docs / elapsed, admitted, flagged
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def main():
+def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     mode = os.environ.get("BENCH_MODE", "full")
-    n_turns = HARMONIZE_TURNS
+    n_turns = int(os.environ.get("BENCH_TURNS", 1_000_000))
 
     os.environ.setdefault("SPARK_DRIVER_MEMORY", "32g")
     spark = build_session(
-        app_name="bench",
-        master=f"local[{cpus}]",
-        shuffle_partitions=2 * int(cpus),
+        app_name="bench", master=f"local[{cpus}]", shuffle_partitions=2 * cpus
     )
+    try:
+        result = run(spark, mode, n_turns, cpus, sf_dir)
+    except CheckFailed as e:
+        print(f"bench: check failed, no result: {e}", file=sys.stderr)
+        return 1
+    finally:
+        spark.stop()
+    print(json.dumps(result))
+    return 0
 
+
+def run(spark, mode: str, n_turns: int, cpus: int, sf_dir: str) -> dict:
+    """The result line of ``mode``; raises ``CheckFailed`` on wrong output."""
     if mode == "dedup_stream_only":
-        # opt-in: throughput of the streaming ingest-dedup stage (not part
-        # of the default suite; recorded in BENCH.md)
-        bench_dedup_stream(spark, 10_000)  # JIT warmup
-        best = None
-        for _ in range(2):
-            run = bench_dedup_stream(spark, int(os.environ.get("BENCH_DEDUP_DOCS", 50_000)))
-            best = run if best is None or run[1] > best[1] else best
-        print(
-            json.dumps(
-                {
-                    "metric": "dedup_stream_docs_per_sec",
-                    "value": round(best[1]),
-                    "unit": "docs/sec",
-                    "queries": {"dedup_stream": round(best[0], 3)},
-                    "sf": "generated",
-                    "cpus": int(cpus),
-                    "admitted": best[2],
-                    "flagged_near_dup": best[3],
-                }
-            )
-        )
-        return
+        d = measure(spark, workload(
+            StreamDedup, records=DEDUP_DOCS, files=DEDUP_FILES,
+            files_per_trigger=DEDUP_FILES_PER_TRIGGER,
+        ))
+        return {
+            "metric": "dedup_stream_docs_per_sec",
+            "value": d["per_sec"],
+            "unit": "docs/sec",
+            "queries": {"dedup_stream": d["seconds"]},
+            "sf": "generated",
+            "cpus": cpus,
+            "dedup_docs": DEDUP_DOCS,
+        }
 
     if mode == "stream_only":
-        # scaling-evidence mode: the streaming pipeline alone, JIT-warmed,
-        # best-of-2, at whatever parallelism the env selects; 10+ batches at
-        # 1M turns so per-batch fixed costs don't dominate
-        # 8 single-row-group files per trigger, not 3: a parquet file with
-        # one row group is one scan split, so maxFilesPerTrigger bounds the
-        # scan+mapping stage's parallelism at BOTH scaling levels — 3 files
-        # capped the 8-core level at a 3-way scan and flattened measured
-        # efficiency to ~0.6 regardless of the engine. A real trigger over
-        # a 10^12-turn table pulls far more splits than cores; 8/trigger is
-        # the smallest layout where the 4N level is never scan-starved.
-        n_files = int(os.environ.get("BENCH_STREAM_FILES", 96))
-        max_files = int(os.environ.get("BENCH_STREAM_MAXFILES", 8))
-        bench_streaming(spark, 50_000)
-        best = None
-        for _ in range(2):
-            s_elapsed, s_tps, s_batch, s_nb, s_out = bench_streaming(
-                spark, n_turns, n_files=n_files, max_files=max_files
-            )
-            best = (s_elapsed, s_tps, s_batch, s_nb, s_out) if best is None or s_tps > best[1] else best
-        print(
-            json.dumps(
-                {
-                    "metric": "streaming_turns_per_sec",
-                    "value": round(best[1]),
-                    "unit": "turns/sec",
-                    "queries": {"streaming_harmonize": round(best[0], 3)},
-                    "sf": "generated",
-                    "cpus": int(cpus),
-                    "turns_per_sec": round(best[1]),
-                    "streaming_output_turns": best[4],
-                    "harmonize_turns": n_turns,
-                }
-            )
-        )
-        return
-
-    # JIT warmup: the same expression shapes at small scale (C2 compilation
-    # of generated code dominates first runs — measured 5x on cold paths)
-    bench_harmonize(spark, 200_000)
+        s = measure_stream(spark, n_turns, STREAM_1M_FILES, STREAM_1M_FILES_PER_TRIGGER)
+        return {
+            "metric": "streaming_turns_per_sec",
+            "value": s["per_sec"],
+            "unit": "turns/sec",
+            "queries": {"streaming_harmonize": s["seconds"]},
+            "sf": "generated",
+            "cpus": cpus,
+            "turns_per_sec": s["per_sec"],
+            "streaming_batch_p50_s": s["batch_p50_s"],
+            "harmonize_turns": n_turns,
+        }
 
     queries_sec: dict[str, float] = {}
-    stream_stats = None
+    out: dict = {}
     if mode == "full":
         # streaming first: the tier headline, measured on a fresh heap
-        # before the 1M-turn aggregations pressure the old generation.
-        # best-of-2 like the batch queries: one throttled window on the
-        # multi-tenant host must not define the round's headline number
-        best = None
-        for _ in range(2):
-            run = bench_streaming(spark)
-            best = run if best is None or run[1] > best[1] else best
-        s_elapsed, s_tps, s_batch, s_nbatches, s_out = best
-        queries_sec["streaming_harmonize_200k"] = round(s_elapsed, 3)
-        stream_stats = {
-            "streaming_turns_per_sec": round(s_tps),
-            "streaming_avg_batch_sec": round(s_batch, 3),
-            "streaming_batches": s_nbatches,
-            "streaming_output_turns": s_out,
-        }
-        # the at-scale figure: 1M turns over 12 micro-batches — per-batch
-        # fixed costs (state commit, epoch planning) amortized the way a
-        # long-running stream amortizes them; single run (it is 5x the
-        # 200k work, and the 200k best-of-2 already absorbed host noise).
-        # 96 files / 8 per trigger: same batch count, but each batch scans
-        # 8 splits instead of 3 (single-row-group files are unsplittable,
-        # so files/trigger IS the scan+mapping parallelism)
-        s1 = bench_streaming(spark, 1_000_000, n_files=96, max_files=8)
-        queries_sec["streaming_harmonize_1m"] = round(s1[0], 3)
-        stream_stats.update(
-            {
-                "streaming_1m_turns_per_sec": round(s1[1]),
-                "streaming_1m_avg_batch_sec": round(s1[2], 3),
-                "streaming_1m_batches": s1[3],
-                "streaming_1m_output_turns": s1[4],
-            }
+        s = measure_stream(spark, STREAM_TURNS, STREAM_FILES, STREAM_FILES_PER_TRIGGER)
+        s1 = measure_stream(
+            spark, STREAM_1M_TURNS, STREAM_1M_FILES, STREAM_1M_FILES_PER_TRIGGER
         )
-        # the pure-JVM session_window assembly at the same scale — the
-        # fastest correct configuration (no Python state in the hot path);
-        # the state_v1 figures above remain the headline because the
-        # north-star names the flatMapGroupsWithState-style mechanism
-        if os.environ.get("BENCH_ASSEMBLY", "state_v1") == "state_v1":
-            os.environ["BENCH_ASSEMBLY"] = "window"
-            try:
-                sw = bench_streaming(spark, 1_000_000, n_files=96, max_files=8)
-            finally:
-                del os.environ["BENCH_ASSEMBLY"]
-            stream_stats.update(
-                {
-                    "streaming_1m_window_turns_per_sec": round(sw[1]),
-                    "streaming_1m_window_output_turns": sw[4],
-                }
-            )
+        queries_sec["streaming_harmonize_200k"] = s["seconds"]
+        queries_sec["streaming_harmonize_1m"] = s1["seconds"]
+        out = {
+            "streaming_turns_per_sec": s["per_sec"],
+            "streaming_batch_p50_s": s["batch_p50_s"],
+            "streaming_batches": s["batches"],
+            "streaming_1m_turns_per_sec": s1["per_sec"],
+            "streaming_1m_batch_p50_s": s1["batch_p50_s"],
+            "streaming_1m_batches": s1["batches"],
+        }
 
-    h_sec = min(bench_harmonize(spark, n_turns) for _ in range(2))
-    queries_sec["harmonize_1m_turns"] = round(h_sec, 3)
-    turns_per_sec = n_turns / h_sec
+    h = measure(spark, workload(BatchHarmonizeFiles, records=n_turns, files=2 * cpus))
+    queries_sec["harmonize_1m_turns"] = h["seconds"]
 
     if mode == "full":
         import __spark_entry__ as entrymod
 
         qmap = entrymod.queries()
-        only = {s for s in os.environ.get("BENCH_ONLY", "").split(",") if s}
         for name in BENCH_QUERIES:
-            if only and name not in only:
-                continue
-            fn = qmap[name]
-            # best-of-2: the sandbox host is multi-tenant with minute-scale
-            # 10x CPU-delivery swings; a single sample can be pure noise
+            # best-of-2: on a shared host CPU delivery swings up to 10x
+            # within minutes; a single sample can be pure noise
             best = None
-            for _ in range(2):
+            for _ in range(TIMED_PASSES):
                 t0 = time.time()
-                run_noop(fn(spark, sf_dir))
+                run_noop(qmap[name](spark, sf_dir))
                 dt = time.time() - t0
                 best = dt if best is None else min(best, dt)
             queries_sec[name] = round(best, 3)
 
-    total = round(sum(queries_sec.values()), 3)
-    out = {
+    return {
         "metric": "bench_suite_seconds",
-        "value": total,
+        "value": round(sum(queries_sec.values()), 3),
         "unit": "sec",
         "queries": queries_sec,
         "sf": sf_dir,
-        "cpus": int(cpus),
-        "turns_per_sec": round(turns_per_sec),
+        "cpus": cpus,
+        "turns_per_sec": h["per_sec"],
         "harmonize_turns": n_turns,
+        **out,
     }
-    if stream_stats:
-        out.update(stream_stats)
-    print(json.dumps(out))
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

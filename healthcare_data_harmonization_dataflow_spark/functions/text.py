@@ -140,17 +140,6 @@ def fingerprint_oracle_sql() -> str:
     """
 
 
-def analyze_documents(docs: DataFrame) -> DataFrame:
-    """All text signals in ONE pass (one projection, no shuffle)."""
-    return docs.select(
-        "doc_id",
-        token_count_col().alias("n_tokens"),
-        *quality_cols(),
-        langid_col(),
-        fingerprint_col(),
-    )
-
-
 # ------------------------------------------------------------ normalization
 # Dedup-preprocessing canonical form (the normalization MinHash/suffix
 # pipelines apply before shingling — cf. Lee et al. 2022 section 4.1):

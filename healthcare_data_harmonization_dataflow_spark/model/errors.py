@@ -102,6 +102,28 @@ def error_entry(
     )
 
 
+def io_error(
+    element: Column,
+    message: Column | str,
+    status_code: Column | int,
+    stacktrace: Column | str | None = None,
+) -> Column:
+    """Build a HealthcareIOError struct column (``IO_ERROR_SCHEMA``),
+    observed at row creation time. ``message``, ``status_code`` and
+    ``stacktrace`` take a column or a literal (no stacktrace: NULL)."""
+
+    def col(v) -> Column:
+        return v if isinstance(v, Column) else F.lit(v)
+
+    return F.struct(
+        element.cast("string").alias("dataElement"),
+        F.current_timestamp().alias("observed_time"),
+        col(message).cast("string").alias("message"),
+        col(stacktrace).cast("string").alias("stacktrace"),
+        col(status_code).cast("int").alias("statusCode"),
+    )
+
+
 def ok_rows(df: DataFrame) -> DataFrame:
     """Success branch of a union-typed operator output."""
     return df.filter(F.col("err").isNull())

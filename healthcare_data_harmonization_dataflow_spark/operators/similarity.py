@@ -106,24 +106,6 @@ def _plane_weights(p: int, dim: int = LSH_DIM) -> list[int]:
     return out
 
 
-def _plane_dot(p: int, dim: int) -> str:
-    """Integer projection of a quantized vector onto plane p (Spark SQL).
-    floor(x*QUANT) quantization keeps everything in exact int64 math."""
-    ws = ", ".join(str(w) for w in _plane_weights(p, dim))
-    return (
-        f"aggregate(zip_with(embedding, array({ws}), "
-        f"(x, w) -> cast(floor(x * {QUANT}) as bigint) * w), 0L, (acc, v) -> acc + v)"
-    )
-
-
-def _plane_dot_duck(p: int, dim: int) -> str:
-    ws = ", ".join(str(w) for w in _plane_weights(p, dim))
-    return (
-        f"list_sum(list_transform(list_zip(embedding, [{ws}]), "
-        f"pr -> CAST(floor(pr[1] * {QUANT}) AS BIGINT) * pr[2]))"
-    )
-
-
 def lsh_bucket(embeddings: DataFrame, dim: int = LSH_DIM) -> DataFrame:
     """Assign each vector a 2^LSH_PLANES-way bucket by hyperplane signs.
     Exact integer math — reproducible on any engine, any partitioning.
@@ -146,14 +128,6 @@ def lsh_bucket(embeddings: DataFrame, dim: int = LSH_DIM) -> DataFrame:
         .withColumn("_qe", F.expr(_qe_expr(dim)))
         .withColumn("bucket", F.expr(bucket).cast("int"))
         .drop("_lshw", "_qe")
-    )
-
-
-def lsh_bucket_duck_expr(dim: int = LSH_DIM) -> str:
-    """The DuckDB expression computing the same bucket id."""
-    return " + ".join(
-        f"(CASE WHEN {_plane_dot_duck(p, dim)} >= 0 THEN {1 << p} ELSE 0 END)"
-        for p in range(LSH_PLANES)
     )
 
 
@@ -280,34 +254,6 @@ def lsh_topk(
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"), "qdot")
     )
-
-
-def cosine_topk(
-    embeddings: DataFrame, queries: DataFrame, k: int = 5, id_col: str = "vec_id"
-) -> DataFrame:
-    """Float cosine variant (production scoring; not oracle-exact because
-    float32 summation differs across engines — use rank-only comparisons)."""
-    dot = "aggregate(zip_with(a.embedding, b.embedding, (x,y) -> cast(x as double)*cast(y as double)), cast(0.0 as double), (acc,v) -> acc+v)"
-    nrm_expr = (
-        "sqrt(aggregate(transform(embedding, x -> cast(x as double)"
-        "*cast(x as double)), cast(0.0 as double), (acc,v) -> acc+v))"
-    )
-    # norms precomputed ONCE per side (inside the cross join they would
-    # re-evaluate Q*N times), and zero-norm vectors dropped on both sides:
-    # 0/0 = NaN, which Spark's descending sort ranks ABOVE every real
-    # cosine — a garbage vector would displace true top-k neighbors
-    qn = queries.withColumn("nrm", F.expr(nrm_expr)).where(F.col("nrm") > 0)
-    en = embeddings.withColumn("nrm", F.expr(nrm_expr)).where(F.col("nrm") > 0)
-    pairs = F.broadcast(qn.alias("a")).crossJoin(en.alias("b")).filter(
-        F.col(f"a.{id_col}") != F.col(f"b.{id_col}")
-    )
-    scored = pairs.select(
-        F.col(f"a.{id_col}").alias("query_id"),
-        F.col(f"b.{id_col}").alias("neighbor_id"),
-        (F.expr(dot) / (F.col("a.nrm") * F.col("b.nrm"))).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def _band_bucket_duck(band: int, rows: int, dim: int) -> str:

@@ -17,10 +17,6 @@ def physical_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def optimized_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
-
-
 def assert_no_python(df: DataFrame, msg: str = "") -> None:
     plan = physical_plan(df)
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, (
@@ -50,7 +46,3 @@ def assert_broadcast_join(df: DataFrame) -> None:
     assert "BroadcastHashJoin" in physical_plan(df), (
         f"expected BroadcastHashJoin:\n{physical_plan(df)}"
     )
-
-
-def count_shuffles(df: DataFrame) -> int:
-    return physical_plan(df).count("Exchange")

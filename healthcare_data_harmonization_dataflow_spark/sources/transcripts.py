@@ -109,13 +109,6 @@ def generate_transcripts(
     return out
 
 
-def write_transcripts(
-    spark: SparkSession, path: str, total_turns: int = 10_000, **kwargs
-) -> str:
-    generate_transcripts(spark, total_turns, **kwargs).write.mode("overwrite").parquet(path)
-    return path
-
-
 def write_time_ordered_stream(
     df: DataFrame, path: str, n_files: int = 8
 ) -> str:
@@ -183,38 +176,3 @@ def append_flush_sentinel(
     )
     if newest:
         os.utime(newest[-1], (future, future))
-
-
-# ---------------------------------------------------------------------------
-# events -> transcripts derivation (shared with the DuckDB oracle).
-#
-# The driver's correctness gate runs oracle SQL over the pre-registered
-# testdata views only, so transcript-shaped queries are defined over a
-# deterministic derivation of the `events` table. The SAME SQL text runs on
-# Spark and DuckDB (ANSI subset), guaranteeing both engines see identical
-# transcript inputs.
-# ---------------------------------------------------------------------------
-
-TRANSCRIPTS_FROM_EVENTS_SQL = """
-SELECT
-  concat('conv-', CAST(user_id AS VARCHAR))                                   AS conv_id,
-  CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) - 1
-       AS INT)                                                                AS turn_idx,
-  CASE
-    WHEN event_type IN ('click', 'signup') THEN 'user'
-    WHEN event_type IN ('view', 'purchase') THEN 'assistant'
-    ELSE 'tool'
-  END                                                                         AS role,
-  props                                                                       AS text,
-  CASE WHEN event_type = 'error' THEN 'tool-err' END                          AS tool,
-  ts                                                                          AS ts,
-  CAST(event_id AS VARCHAR)                                                   AS id
-FROM events
-"""
-
-
-def transcripts_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .tables import load_table
-
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(TRANSCRIPTS_FROM_EVENTS_SQL)

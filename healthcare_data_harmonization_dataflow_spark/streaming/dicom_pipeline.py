@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.reformat import create_mapping_fn_input, extract_webpath_from_pubsub
+from ..model.errors import io_error
 from ..operators.bundles import to_transaction_bundle
 from ..operators.mapping_op import apply_mapping
 from .sink import ExactlyOnceParquetSink, FanOutSink
@@ -59,26 +60,14 @@ def dicom_transform(
         # read branch: study fetch failed (DicomIO.readStudyMetadata err)
         F.when(
             F.col("metadata").isNull(),
-            F.named_struct(
-                F.lit("dataElement"), F.col("webpath"),
-                F.lit("observed_time"), F.current_timestamp(),
-                F.lit("message"), F.lit("study metadata not found"),
-                F.lit("stacktrace"), F.lit(None).cast("string"),
-                F.lit("statusCode"), F.lit(404),
-            ),
+            io_error(F.col("webpath"), "study metadata not found", 404),
         ).alias("read_err"),
         # mapping branch (ErrorEntry; only for fetched studies)
         F.when(F.col("metadata").isNotNull(), F.col("err")).alias("map_err"),
         # write branch: mapped ok but the bundle failed validation
         F.when(
             F.col("ok").isNotNull() & F.col("bundle").isNull(),
-            F.named_struct(
-                F.lit("dataElement"), F.col("ok"),
-                F.lit("observed_time"), F.current_timestamp(),
-                F.lit("message"), F.lit("invalid FHIR resource for bundle"),
-                F.lit("stacktrace"), F.lit(None).cast("string"),
-                F.lit("statusCode"), F.lit(400),
-            ),
+            io_error(F.col("ok"), "invalid FHIR resource for bundle", 400),
         ).alias("write_err"),
         F.when(F.col("err").isNull(), F.col("bundle")).alias("bundle"),
     )

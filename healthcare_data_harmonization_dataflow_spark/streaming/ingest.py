@@ -15,9 +15,9 @@ Arrow-batched ``mapInPandas`` (never per-row Python over the wire), timing
 each attempt and folding failures into the reference's
 ``HealthcareIOError`` shape (HealthcareIOErrorToTableRow.java:64-79).
 The attempt output is staged once (FanOutSink — no cache of the batch) and
-fans out to an exactly-once store sink (successes) and failed sink
-(HealthcareIOError rows) under one batchId; per-batch counters + the
-latency distribution land in a driver-side metrics ledger.
+fans out to an exactly-once store sink (successes), failed sink
+(HealthcareIOError rows) and metrics sink (per-batch counters + the
+latency distribution) under one batchId.
 
 The actual store RPC is injectable (``ingest_fn``); the default validates
 the message is parseable JSON — an honest local stand-in for the
@@ -33,9 +33,10 @@ import time
 from typing import Callable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..model.errors import io_error
 from .sink import ExactlyOnceParquetSink, FanOutSink
 
 
@@ -121,7 +122,6 @@ class IngestMessagesSink:
         base_dir: str,
         ingest_fn: Callable[[str], None] | None = None,
         data_col: str = "data",
-        metrics_path: str | None = None,
     ):
         self.ingest_fn = ingest_fn or _default_ingest
         self.data_col = data_col
@@ -142,8 +142,6 @@ class IngestMessagesSink:
             ],
             staging_dir=os.path.join(base_dir, "_staging"),
         )
-        self.metrics_path = metrics_path
-        self.metrics: list[dict] = []
 
     @staticmethod
     def _select_ok(df: DataFrame) -> DataFrame:
@@ -151,13 +149,13 @@ class IngestMessagesSink:
 
     def _select_failed(self, df: DataFrame) -> DataFrame:
         # HealthcareIOError shape (HealthcareIOErrorToTableRow.java:64-79)
-        return df.filter(~F.col("_ingest.ok")).select(
-            F.col(self.data_col).alias("dataElement"),
-            F.current_timestamp().alias("observed_time"),
-            F.col("_ingest.message").alias("message"),
-            F.col("_ingest.stacktrace").alias("stacktrace"),
-            F.col("_ingest.status_code").alias("statusCode"),
+        err = io_error(
+            F.col(self.data_col),
+            F.col("_ingest.message"),
+            F.col("_ingest.status_code"),
+            stacktrace=F.col("_ingest.stacktrace"),
         )
+        return df.filter(~F.col("_ingest.ok")).select(err.alias("e")).select("e.*")
 
     @staticmethod
     def _select_metrics(df: DataFrame) -> DataFrame:
@@ -186,40 +184,6 @@ class IngestMessagesSink:
         fan_fn = self._fan.foreach_batch()
 
         def fn(df: DataFrame, batch_id: int):
-            attempts = attempt_ingest(df, self.ingest_fn, self.data_col)
-            fan_fn(attempts, batch_id)
-            # recording keys off the LEDGER, not the sink commit: a crash
-            # between fan-out commit and ledger append would otherwise skip
-            # the row forever on replay (the aggregate sits committed in the
-            # metrics parquet, so recovery is a metadata-cheap read)
-            if not self._recorded(batch_id):
-                row = (
-                    df.sparkSession.read.parquet(
-                        self.metrics_sink._data_dir(batch_id)
-                    )
-                    .first()
-                    .asDict()
-                )
-                self._record(batch_id, row)
+            fan_fn(attempt_ingest(df, self.ingest_fn, self.data_col), batch_id)
 
         return fn
-
-    def _recorded(self, batch_id: int) -> bool:
-        if any(m["batch_id"] == batch_id for m in self.metrics):
-            return True
-        if self.metrics_path and os.path.exists(self.metrics_path):
-            with open(self.metrics_path) as f:
-                return any(
-                    json.loads(line)["batch_id"] == batch_id
-                    for line in f
-                    if line.strip()
-                )
-        return False
-
-    def _record(self, batch_id: int, agg: dict) -> None:
-        row = {"batch_id": batch_id, **agg, "recorded_at": time.time()}
-        self.metrics.append(row)
-        if self.metrics_path:
-            os.makedirs(os.path.dirname(self.metrics_path), exist_ok=True)
-            with open(self.metrics_path, "a") as f:
-                f.write(json.dumps(row) + "\n")

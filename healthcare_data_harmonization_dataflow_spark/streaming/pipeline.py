@@ -30,7 +30,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..model.errors import err_rows, ok_rows
+from ..model.errors import err_rows, io_error, ok_rows
 from ..operators.mapping_op import apply_mapping
 from .assembly import BUNDLE_SCHEMA, assemble_sessions_stateful
 from .metrics import observe_mapping
@@ -224,26 +224,19 @@ def hl7v2_transform(
     mapped = apply_mapping(fetched, mapping_config, id_col="msg_name", data_col="data")
     bundled = to_transaction_bundle(mapped, "ok", url="Observation")
     rejected = write_reject if write_reject is not None else F.lit(False)
-    err_struct = lambda element, msg, code: F.named_struct(  # noqa: E731
-        F.lit("dataElement"), element,
-        F.lit("observed_time"), F.current_timestamp(),
-        F.lit("message"), F.lit(msg),
-        F.lit("stacktrace"), F.lit(None).cast("string"),
-        F.lit("statusCode"), F.lit(code),
-    )
     return bundled.select(
         "msg_name",
         # read branch: HL7v2IO.getAll failed (message not in the store)
         F.when(
             F.col("data").isNull(),
-            err_struct(F.col("msg_name"), "hl7v2 message not found", 404),
+            io_error(F.col("msg_name"), "hl7v2 message not found", 404),
         ).alias("read_err"),
         # mapping branch (ErrorEntry; only for fetched messages)
         F.when(F.col("data").isNotNull(), F.col("err")).alias("map_err"),
         # write branch: executeBundles rejected the bundle after retries
         F.when(
             F.col("bundle").isNotNull() & rejected,
-            err_struct(F.col("bundle"), "bundle rejected by FHIR store", 500),
+            io_error(F.col("bundle"), "bundle rejected by FHIR store", 500),
         ).alias("write_err"),
         F.when(F.col("bundle").isNotNull() & ~rejected, F.col("bundle")).alias(
             "bundle"

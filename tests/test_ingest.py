@@ -2,9 +2,8 @@
 (HL7v2IO.java:856-1066): failed inserts surface as HealthcareIOError rows,
 successes land in the store, and the three dedicated metrics
 (message-ingest-latency distribution + success/failure counters) are
-recorded per batch. Exactly-once under replay."""
-
-import os
+committed per batch to their own exactly-once route. Exactly-once under
+replay."""
 
 from healthcare_data_harmonization_dataflow_spark.streaming.ingest import (
     IngestMessagesSink,
@@ -20,9 +19,7 @@ def _messages(spark):
 
 
 def test_ingest_routes_and_metrics(spark, tmp_path):
-    sink = IngestMessagesSink(
-        str(tmp_path / "ingest"), metrics_path=str(tmp_path / "m" / "ingest.jsonl")
-    )
+    sink = IngestMessagesSink(str(tmp_path / "ingest"))
     fn = sink.foreach_batch()
     fn(_messages(spark), 0)
 
@@ -45,12 +42,12 @@ def test_ingest_routes_and_metrics(spark, tmp_path):
     assert all("Failed to ingest message Error" in r["message"] for r in rows)
     assert {r["dataElement"] for r in rows} == {"not json", "{"}
 
-    assert len(sink.metrics) == 1
-    m = sink.metrics[0]
+    metrics = sink.metrics_sink.read_committed(spark).collect()
+    assert len(metrics) == 1
+    m = metrics[0]
     assert m["successful_hl7v2_message_writes"] == 40
     assert m["failed_hl7v2_message_writes"] == 2
     assert 0 <= m["lat_min_us"] <= m["lat_p50_us"] <= m["lat_max_us"]
-    assert os.path.exists(str(tmp_path / "m" / "ingest.jsonl"))
 
 
 def test_ingest_exactly_once_replay(spark, tmp_path):
@@ -61,7 +58,9 @@ def test_ingest_exactly_once_replay(spark, tmp_path):
     fn(df, 0)  # replayed epoch: no duplicates, no duplicate metrics
     assert sink.store_sink.read_committed(spark).count() == 40
     assert sink.failed_sink.read_committed(spark).count() == 2
-    assert len(sink.metrics) == 1
+    metrics = sink.metrics_sink.read_committed(spark).collect()
+    assert len(metrics) == 1
+    assert metrics[0]["successful_hl7v2_message_writes"] == 40
 
 
 def test_ingest_custom_fn_failure_mode(spark, tmp_path):

@@ -11,13 +11,25 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from healthcare_data_harmonization_dataflow_spark.model.errors import err_rows, ok_rows
+from healthcare_data_harmonization_dataflow_spark.model.errors import (
+    IO_ERROR_SCHEMA,
+    err_rows,
+    ok_rows,
+)
 from healthcare_data_harmonization_dataflow_spark.sources.query_options import (
     custom_to_fhir,
     validate_query_options,
 )
 from healthcare_data_harmonization_dataflow_spark.streaming.dicom_pipeline import (
     DicomHarmonizationPipeline,
+    dicom_transform,
+)
+from healthcare_data_harmonization_dataflow_spark.streaming.ingest import (
+    IngestMessagesSink,
+    attempt_ingest,
+)
+from healthcare_data_harmonization_dataflow_spark.streaming.pipeline import (
+    hl7v2_transform,
 )
 
 # DICOM mapping: study array in, identity-ish projection out
@@ -111,3 +123,32 @@ def test_query_options_validation():
         validate_query_options({})
     with pytest.raises(ValueError):
         validate_query_options({"t": "  "})
+
+
+def _io_error_structs(producer, spark, tmp_path):
+    """The HealthcareIOError-shaped struct types one producer emits."""
+    if producer == "dicom_transform":
+        inp, meta = _inputs(spark, tmp_path)
+        out = dicom_transform(spark.read.parquet(inp), meta, DICOM_CFG)
+        return [out.schema["read_err"].dataType, out.schema["write_err"].dataType]
+    if producer == "hl7v2_transform":
+        notes = spark.createDataFrame([(bytearray(b"m1"),)], "payload binary")
+        store = spark.createDataFrame(
+            [("m1", '{"study":[{"id":"s"}]}')], "msg_name string, data string"
+        )
+        out = hl7v2_transform(notes, store, DICOM_CFG, write_reject=F.lit(True))
+        return [out.schema["read_err"].dataType, out.schema["write_err"].dataType]
+    sink = IngestMessagesSink(str(tmp_path / "ingest"))
+    msgs = spark.createDataFrame([("{",)], "data string")
+    return [sink._select_failed(attempt_ingest(msgs, sink.ingest_fn)).schema]
+
+
+@pytest.mark.parametrize(
+    "producer", ["dicom_transform", "hl7v2_transform", "IngestMessagesSink"]
+)
+def test_io_error_producers_match_schema(spark, tmp_path, producer):
+    """Every HealthcareIOError producer builds its struct through
+    ``io_error``: field names, order and types are ``IO_ERROR_SCHEMA``'s."""
+    want = [(f.name, f.dataType) for f in IO_ERROR_SCHEMA.fields]
+    for struct in _io_error_structs(producer, spark, tmp_path):
+        assert [(f.name, f.dataType) for f in struct.fields] == want
