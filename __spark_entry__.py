@@ -1339,14 +1339,15 @@ def q_bpe_pair_counts(spark, sf_dir):
 
 
 def q_dedup_incremental(spark, sf_dir):
-    """Batch analogue of the streaming ingest-dedup stage
-    (streaming/dedup_stream.py, pytest e2e): even doc_ids are the
+    """The streaming ingest-dedup stage's decision
+    (operators/dedup.py dedup_against_index, run by
+    streaming/dedup_stream.py) as one batch: even doc_ids are the
     committed corpus, odd doc_ids are one arriving batch. Survivors =
     within-batch exact collapse + anti-join on 16-byte md5 vs history;
     near_dup counts MinHash-LSH bands shared with history (the
     minhash_lsh_pairs decision rule). Text never shuffles; the history
-    probe joins on (band, sig-slice) exactly as the index join does in
-    the streaming stage."""
+    probe joins the index of history on (band, band_hash), the xxhash64
+    of the band's signature slice, as the streaming stage does."""
     return D.incremental_dedup(_docs(spark, sf_dir))
 
 

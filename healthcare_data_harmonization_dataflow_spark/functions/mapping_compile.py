@@ -1716,6 +1716,22 @@ def _num_out(f):
     return _MISSING
 
 
+# Spark's upper/lower (probed on Spark 4.1, ICU4J 77) follow Unicode 16;
+# Python 3.11's str.upper/lower follow Unicode 14 and leave the case pairs
+# added since unchanged. These are all single code points that Python's
+# mapping never produces, so translating after str.upper/lower completes
+# the mirror (and is a no-op once the interpreter's database has them).
+_UC16_CASE_PAIRS = [
+    (0xA7DC, 0x019B),
+    (0xA7CB, 0x0264),
+    (0x1C89, 0x1C8A),
+    (0xA7CC, 0xA7CD),
+    (0xA7DA, 0xA7DB),
+] + [(0x10D50 + i, 0x10D70 + i) for i in range(0x16)]  # Garay
+_SPARK_UPPER_EXTRA = {lo: up for up, lo in _UC16_CASE_PAIRS}
+_SPARK_LOWER_EXTRA = {up: lo for up, lo in _UC16_CASE_PAIRS}
+
+
 # python backend: AST -> closure
 
 
@@ -2398,9 +2414,9 @@ def _compile_python(cfg: MappingConfig) -> Callable[[Any], dict]:
             if any(f is _MISSING for f in forms):
                 return _MISSING  # column concat/upper null-propagate
             if expr.name == "$ToUpper":
-                return forms[0].upper()
+                return forms[0].upper().translate(_SPARK_UPPER_EXTRA)
             if expr.name == "$ToLower":
-                return forms[0].lower()
+                return forms[0].lower().translate(_SPARK_LOWER_EXTRA)
             if expr.name == "$StrCat":
                 return "".join(forms)
             raise MappingConfigError(f"cannot evaluate {expr!r}")

@@ -332,6 +332,133 @@ def jaccard_verify(
     )
 
 
+def document_index_rows(
+    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
+) -> DataFrame:
+    """(doc_id, content_hash, band, band_hash) rows for the dedup index:
+    one band=-1 anchor row per doc (carries the exact-dedup hash even for
+    docs with no tokens) plus one row per MinHash band. band_hash is
+    xxhash64 over the band's signature slice — fixed-seed, deterministic
+    across runs, 8 bytes on the wire."""
+    rows_per_band = MINHASH_K // MINHASH_BANDS
+    sig = minhash_signature(docs, text_col=text_col, id_col=id_col)
+    bands = [
+        F.struct(
+            F.lit(b).alias("band"),
+            F.xxhash64(
+                F.lit(b),
+                *[
+                    F.col(f"mh{b * rows_per_band + r}")
+                    for r in range(rows_per_band)
+                ],
+            ).alias("band_hash"),
+        )
+        for b in range(MINHASH_BANDS)
+    ]
+    hashed = docs.select(
+        F.col(id_col).alias("doc_id"),
+        F.md5(F.coalesce(F.col(text_col), F.lit(""))).alias("content_hash"),
+    )
+    anchor = hashed.select(
+        "doc_id",
+        "content_hash",
+        F.lit(-1).cast("int").alias("band"),
+        F.lit(0).cast("bigint").alias("band_hash"),
+    )
+    banded = (
+        hashed.join(
+            sig.withColumnRenamed(id_col, "_sig_id"),
+            hashed.doc_id == F.col("_sig_id"),
+        )
+        .filter(F.col("mh0").isNotNull())
+        .select(
+            "doc_id",
+            "content_hash",
+            F.explode(F.array(*bands)).alias("bh"),
+        )
+        .select(
+            "doc_id", "content_hash", "bh.band", "bh.band_hash"
+        )
+    )
+    return anchor.unionByName(banded)
+
+
+def dedup_against_index(
+    batch: DataFrame,
+    index: DataFrame,
+    history_docs: "DataFrame | None" = None,
+    verify_threshold: "float | None" = None,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """The ingest-dedup decision: an arriving ``batch`` against the
+    ``index`` of history (:func:`document_index_rows` rows). Returns the
+    batch's SURVIVORS with ``content_hash``, every batch column,
+    ``n_band_matches`` and ``near_dup``:
+
+    * exact duplicates WITHIN the batch collapse to the min-id canonical
+      (one hash-keyed shuffle, bounded by the batch);
+    * exact duplicates of history are dropped via a left-anti join on the
+      16-byte md5 key — text never moves;
+    * ``n_band_matches`` counts the MinHash LSH bands shared with ANY
+      history doc, probed on (band, band_hash) (the
+      ``dedup_minhash_lsh_pairs`` decision rule up to a 64-bit xxhash
+      collision between distinct band slices); ``near_dup`` flags >=1;
+    * with ``verify_threshold``, a band match is only a CANDIDATE:
+      ``near_dup`` additionally requires distinct-word Jaccard >= the
+      threshold against a band-matched doc of ``history_docs`` (an
+      (id_col, text_col) table). Only candidate PAIRS (ids + their two
+      texts) move, never the corpus. ``history_docs=None`` means there is
+      no history to verify against, so nothing is flagged.
+
+    Deterministic: the same batch and index give the same rows. Docs with
+    no tokens have null signatures and never band-match."""
+    w = Window.partitionBy("content_hash").orderBy(F.col(id_col).asc())
+    hashed = (
+        batch.withColumn("content_hash", F.md5(F.coalesce(F.col(text_col), F.lit(""))))
+        .withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+    fresh = hashed.join(
+        index.select("content_hash").distinct(), "content_hash", "left_anti"
+    )
+    probe = document_index_rows(fresh, text_col, id_col).filter("band >= 0")
+    hist_bands = index.filter("band >= 0")
+    matches = (
+        probe.join(
+            hist_bands.select("band", "band_hash").distinct(),
+            ["band", "band_hash"],
+        )
+        .groupBy("doc_id")
+        .agg(F.countDistinct("band").cast("int").alias("n_band_matches"))
+    )
+    out = fresh.join(matches, fresh[id_col] == matches.doc_id, "left").select(
+        fresh["*"],
+        F.coalesce(matches.n_band_matches, F.lit(0)).alias("n_band_matches"),
+    )
+    if verify_threshold is None:
+        return out.withColumn("near_dup", F.col("n_band_matches") > 0)
+    if history_docs is None:
+        return out.withColumn("near_dup", F.lit(False))
+    cand = (
+        probe.join(
+            hist_bands.select("band", "band_hash", F.col("doc_id").alias("_hist_id")),
+            ["band", "band_hash"],
+        )
+        .select("doc_id", "_hist_id")
+        .distinct()
+    )
+    verified = jaccard_verify(
+        cand, out, history_docs, verify_threshold, ("doc_id", "_hist_id"),
+        id_col=id_col, text_col=text_col,
+    ).groupBy("doc_id").agg(F.max("verified").alias("_verified"))
+    return out.join(verified, out[id_col] == verified.doc_id, "left").select(
+        *[out[c] for c in out.columns],
+        F.coalesce(verified._verified, F.lit(False)).alias("near_dup"),
+    )
+
+
 def incremental_dedup(
     docs: DataFrame,
     history_pred: str = "doc_id % 2 = 0",
@@ -339,113 +466,19 @@ def incremental_dedup(
     id_col: str = "doc_id",
     verify_threshold: "float | None" = None,
 ) -> DataFrame:
-    """Batch analogue of the streaming ingest-dedup stage
+    """Batch form of the streaming ingest-dedup stage
     (streaming/dedup_stream.py): rows matching ``history_pred`` are the
-    committed corpus, the rest are one arriving batch. Returns the
-    batch's SURVIVORS as ``(doc_id, n_band_matches, near_dup)``:
-
-    * exact duplicates WITHIN the batch collapse to the min-id canonical
-      (one hash-keyed shuffle, bounded by the batch);
-    * exact duplicates of history are dropped via a left-anti join on the
-      16-byte md5 key — text never moves;
-    * ``n_band_matches`` counts the MinHash LSH bands shared with ANY
-      history doc (the ``dedup_minhash_lsh_pairs`` decision rule), and
-      ``near_dup`` flags >=1 — the same semantics the streaming stage
-      commits, here on the DuckDB hard signal.
-    * With ``verify_threshold``, ``near_dup`` additionally requires
-      distinct-word Jaccard >= the threshold against a band-matched
-      history doc (the streaming stage's ``verify_threshold``; LSH false
-      positives keep their candidate count but lose the flag). The
-      Jaccard is an int/int division — one correctly-rounded IEEE op,
-      bit-equal cross-engine.
-
-    Docs with no tokens have null signatures and never band-match, in
-    both engines."""
+    committed corpus, the rest are one arriving batch. Runs the stage's
+    own decision, :func:`dedup_against_index`, against the index of the
+    history rows and returns the batch's SURVIVORS as
+    ``(doc_id, n_band_matches, near_dup)``."""
     history = docs.filter(F.expr(history_pred))
-    incoming = docs.filter(~F.expr(history_pred))
-    inc = incoming.select(
-        F.col(id_col).alias("doc_id"),
-        F.md5(F.coalesce(F.col(text_col), F.lit(""))).alias("ch"),
+    out = dedup_against_index(
+        docs.filter(~F.expr(history_pred)),
+        document_index_rows(history, text_col, id_col),
+        history, verify_threshold, text_col=text_col, id_col=id_col,
     )
-    w = Window.partitionBy("ch").orderBy(F.col("doc_id").asc())
-    keep = (
-        inc.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    hist_hashes = history.select(
-        F.md5(F.coalesce(F.col(text_col), F.lit(""))).alias("ch")
-    ).distinct()
-    fresh = keep.join(hist_hashes, "ch", "left_anti").select("doc_id")
-    rows_per_band = MINHASH_K // MINHASH_BANDS
-    sig = minhash_signature(docs, text_col=text_col, id_col=id_col)
-    bands = sig.filter(F.col("mh0").isNotNull()).select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        *[
-                            F.col(f"mh{b * rows_per_band + r}").alias(f"v{r}")
-                            for r in range(rows_per_band)
-                        ],
-                    )
-                    for b in range(MINHASH_BANDS)
-                ]
-            )
-        ).alias("bh"),
-    ).select("doc_id", "bh.*")
-    val_cols = ["band"] + [f"v{r}" for r in range(rows_per_band)]
-    hist_bands = (
-        bands.join(
-            history.select(F.col(id_col).alias("doc_id")), "doc_id"
-        )
-        .select(*val_cols)
-        .distinct()
-    )
-    matches = (
-        bands.join(fresh, "doc_id")
-        .join(hist_bands, val_cols, "inner")
-        .groupBy("doc_id")
-        .agg(F.countDistinct("band").cast("int").alias("n_band_matches"))
-    )
-    out = fresh.join(matches, "doc_id", "left").select(
-        "doc_id",
-        F.coalesce("n_band_matches", F.lit(0)).alias("n_band_matches"),
-    )
-    if verify_threshold is None:
-        return out.withColumn("near_dup", F.col("n_band_matches") > 0)
-    # verification: candidate (fresh, hist) pairs via the shared band
-    # bucket, then distinct-word Jaccard
-    hist_band_docs = (
-        bands.join(
-            history.select(F.col(id_col).alias("doc_id")), "doc_id"
-        )
-        .select(F.col("doc_id").alias("_hist_id"), *val_cols)
-        .distinct()
-    )
-    cand = (
-        bands.join(fresh.select("doc_id"), "doc_id")
-        .join(hist_band_docs, val_cols, "inner")
-        .select("doc_id", "_hist_id")
-        .distinct()
-    )
-    verified = (
-        jaccard_verify(
-            cand, docs, docs, verify_threshold, ("doc_id", "_hist_id"),
-            id_col=id_col, text_col=text_col,
-        )
-        .filter("verified")
-        .select("doc_id")
-        .distinct()
-        .withColumn("_v", F.lit(True))
-    )
-    return out.join(verified, "doc_id", "left").select(
-        "doc_id",
-        "n_band_matches",
-        F.coalesce("_v", F.lit(False)).alias("near_dup"),
-    )
+    return out.select(F.col(id_col).alias("doc_id"), "n_band_matches", "near_dup")
 
 
 def incremental_dedup_oracle_sql(
@@ -744,6 +777,12 @@ def ngram_jaccard_pairs(
     """
     if not 0 < threshold <= 1:
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
+    if salt_buckets < 1 or hot_df < 1:
+        # pmod(x, 0) is NULL: a zero bucket count would silently drop every
+        # hot-token candidate pair instead of erroring
+        raise ValueError(
+            f"salt_buckets/hot_df must be >= 1, got {salt_buckets}/{hot_df}"
+        )
     if strategy == "auto":
         wordsets = docs.select(F.col(id_col), F.expr(_SPARK_WORDS).alias("ws")).filter(
             F.size("ws") > 0
@@ -757,7 +796,9 @@ def ngram_jaccard_pairs(
         ).first()["p"]
         strategy = "profile" if p_est <= profile_cap else "prefix"
     if strategy == "profile":
-        return _ngram_jaccard_profile(docs, threshold, id_col, profile_cap)
+        return _ngram_jaccard_profile(
+            docs, threshold, id_col, profile_cap, salt_buckets, hot_df
+        )
     if strategy != "prefix":
         raise ValueError(f"unknown ngram-jaccard strategy {strategy!r}")
     return _ngram_jaccard_prefix(
@@ -766,7 +807,12 @@ def ngram_jaccard_pairs(
 
 
 def _ngram_jaccard_profile(
-    docs: DataFrame, threshold: float, id_col: str, profile_cap: int | None = None
+    docs: DataFrame,
+    threshold: float,
+    id_col: str,
+    profile_cap: int | None,
+    salt_buckets: int,
+    hot_df: int,
 ) -> DataFrame:
     """Profile-collapsed exact Jaccard pairs.
 
@@ -848,7 +894,10 @@ def _ngram_jaccard_profile(
                 stacklevel=2,
             )
             profiles.unpersist()
-            return _ngram_jaccard_prefix(docs, threshold, id_col)
+            return _ngram_jaccard_prefix(
+                docs, threshold, id_col, salt_buckets=salt_buckets,
+                hot_df=hot_df,
+            )
     # broadcast the SLIM profile table only: members arrays collectively
     # hold every doc id (O(corpus), not O(profile_cap)) and must never
     # ride a broadcast; the few qualifying profile PAIRS join members
@@ -944,12 +993,6 @@ def _ngram_jaccard_prefix(
     nothing when concurrent hot keys >= cores. The salt is insurance for
     the few-ultra-hot-tokens regime, not a default rewrite of the join.
     """
-    if salt_buckets < 1 or hot_df < 1:
-        # pmod(x, 0) is NULL: a zero bucket count would silently drop every
-        # hot-token candidate pair instead of erroring
-        raise ValueError(
-            f"salt_buckets/hot_df must be >= 1, got {salt_buckets}/{hot_df}"
-        )
     threshold_ppm = round(threshold * 1_000_000)
     wordsets = docs.select(F.col(id_col), F.expr(_SPARK_WORDS).alias("ws"))
     toks = wordsets.select(id_col, F.size("ws").alias("sz"), F.explode("ws").alias("tok"))

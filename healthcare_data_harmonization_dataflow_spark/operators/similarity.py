@@ -79,7 +79,6 @@ def brute_force_topk_oracle_sql(k: int = 5, n_queries: int = 10) -> str:
 
 
 # ------------------------------------------------------- LSH-bucketed ANN
-LSH_PLANES = 4  # 2^4 buckets; single-table variant (kept for diagnostics)
 LSH_DIM = 64  # embedding dimensionality of the documents/embeddings tables
 
 # Banded multi-table LSH (the scale path): LSH_BANDS independent hash
@@ -104,31 +103,6 @@ def _plane_weights(p: int, dim: int = LSH_DIM) -> list[int]:
         state = (state * 1103515245 + 12345) & 0x7FFFFFFF
         out.append(state % 2001 - 1000)
     return out
-
-
-def lsh_bucket(embeddings: DataFrame, dim: int = LSH_DIM) -> DataFrame:
-    """Assign each vector a 2^LSH_PLANES-way bucket by hyperplane signs.
-    Exact integer math — reproducible on any engine, any partitioning.
-
-    The plane weights ride in as a broadcast ONE-ROW table instead of
-    LSH_PLANES*dim inline literals: the literal form generated hundreds of
-    constants into whole-stage codegen and was observed to compile 10-50x
-    slower under JIT code-cache pressure late in a long session."""
-    spark = embeddings.sparkSession
-    weights = [_plane_weights(p, dim) for p in range(LSH_PLANES)]
-    wdf = spark.createDataFrame([(weights,)], "_lshw array<array<bigint>>")
-    bucket = " + ".join(
-        f"(case when aggregate(zip_with(_qe, _lshw[{p}], "
-        f"(x, w) -> x * w), 0L, "
-        f"(acc, v) -> acc + v) >= 0 then {1 << p} else 0 end)"
-        for p in range(LSH_PLANES)
-    )
-    return (
-        embeddings.crossJoin(F.broadcast(wdf))
-        .withColumn("_qe", F.expr(_qe_expr(dim)))
-        .withColumn("bucket", F.expr(bucket).cast("int"))
-        .drop("_lshw", "_qe")
-    )
 
 
 def _qe_expr(dim: int) -> str:
@@ -164,8 +138,10 @@ def lsh_band_keys(
     Each of ``bands`` hash tables buckets a vector by the sign pattern of
     ``rows`` hyperplanes (2^rows buckets per band). Only the id + two small
     ints leave this operator — vectors never ride through the band join.
-    Plane weights arrive as ONE broadcast row (array<array<array<bigint>>>),
-    not inline literals (codegen pressure; see lsh_bucket docstring)."""
+    Plane weights arrive as ONE broadcast row (array<array<bigint>>), not
+    bands*rows*dim inline literals: the literal form generated hundreds of
+    constants into whole-stage codegen and was observed to compile 10-50x
+    slower under JIT code-cache pressure late in a long session."""
     spark = embeddings.sparkSession
     weights = [_plane_weights(p, dim) for p in range(bands * rows)]
     wdf = spark.createDataFrame([(weights,)], "_lshw array<array<bigint>>")

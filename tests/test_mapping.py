@@ -9,6 +9,8 @@ Both execution backends (Catalyst VARIANT columns, pandas/Arrow closure)
 must produce byte-identical output.
 """
 
+import json
+
 import pytest
 
 from healthcare_data_harmonization_dataflow_spark.functions.mapping_compile import (
@@ -286,6 +288,24 @@ def test_nested_targets_builtins_arrays_golden(spark, backend):
         '"c75cb66ae28d8ebc6eded002c28a8ba0d06d3a78c6b5cbf9b2ade051f0775ac4"},'
         '"pair":[69,"x",null],"tag":"click-suffix","lower":"click"}]}'
     )
+
+
+@pytest.mark.parametrize("backend", ["columns", "pandas"])
+def test_case_mapping_covers_unicode16_pairs(spark, backend):
+    """$ToUpper/$ToLower map the case pairs Unicode 16 added (Garay,
+    U+A7CB/U+0264, U+1C89/U+1C8A) the way Spark does on both backends,
+    although Python's own str.upper/lower leave them unchanged."""
+    cfg = "out O: P(root);\ndef P(i) { up: $ToUpper(i.s); lo: $ToLower(i.s); }"
+    s = "\U00010d70\U00010d50ɤꟋᲊᲉa"
+    df = spark.createDataFrame(
+        [("a", json.dumps({"s": s}))], "id string, data string"
+    )
+    res = ok_rows(apply_mapping(df, cfg, backend=backend, clock=CLOCK))
+    out = json.loads(res.collect()[0]["ok"])["O"][0]
+    assert out == {
+        "up": "\U00010d50\U00010d50ꟋꟋᲉᲉA",
+        "lo": "\U00010d70\U00010d70ɤɤᲊᲊa",
+    }
 
 
 @pytest.mark.parametrize("backend", ["columns", "pandas"])

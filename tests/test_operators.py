@@ -322,8 +322,6 @@ def test_lsh_rejects_wrong_dimension(spark):
     with pytest.raises(Exception) as ei:
         S.lsh_band_keys(bad).collect()
     assert "dimension" in str(ei.value)
-    with pytest.raises(Exception):
-        S.lsh_bucket(bad).collect()
 
 
 def test_ngram_jaccard_auto_selects_by_collapse(spark, sf_dir):
@@ -1258,6 +1256,88 @@ def test_lsh_fp_rate_zero_candidates_matches_oracle(spark):
         got = entry.queries()["lsh_fp_rate"](spark, "unused").collect()
     oracle = con.sql(entry.oracle_sql()["lsh_fp_rate"]).fetchall()
     assert [tuple(r) for r in got] == oracle == [(0, 0, 0)]
+
+
+# Even doc_ids are history, odd doc_ids the arriving batch (the
+# dedup_incremental queries' default history_pred). Each fixture pins the
+# survivors (doc_id, n_band_matches, near_dup), the same with and without
+# verification.
+_INCREMENTAL_DEGENERATE = {
+    "empty_history": (
+        [(1, "alpha beta gamma"), (3, "alpha beta gamma"), (5, "red green")],
+        [(1, 0, False), (5, 0, False)],
+    ),
+    "null_or_empty_batch": (
+        [(0, "alpha beta"), (2, "gamma delta"), (1, None), (3, ""),
+         (5, None), (7, "   ")],
+        [(1, 0, False), (7, 0, False)],
+    ),
+    "exact_dup_of_history": (
+        [(0, "alpha beta gamma delta"), (2, "one two three"),
+         (1, "alpha beta gamma delta"), (3, "delta gamma beta alpha"),
+         (5, "fresh words only here")],
+        [(3, 4, True), (5, 0, False)],
+    ),
+    "zero_band_matches": (
+        [(0, "alpha beta gamma delta epsilon"),
+         (2, "red green blue yellow purple"),
+         (1, "one two three four five"), (3, "six seven eight nine ten")],
+        [(1, 0, False), (3, 0, False)],
+    ),
+}
+
+
+@pytest.mark.parametrize("query", ["dedup_incremental", "dedup_incremental_verified"])
+@pytest.mark.parametrize("fixture", sorted(_INCREMENTAL_DEGENERATE))
+def test_dedup_incremental_degenerate_inputs_match_oracle(spark, fixture, query):
+    """The ingest-dedup decision (operators/dedup.py dedup_against_index,
+    shared with the streaming stage) against the raw-value DuckDB oracle
+    on degenerate batches: no history, only NULL/empty texts (NULL and ''
+    collapse to one survivor), an exact duplicate of history, and no
+    band match at all."""
+    import unittest.mock as mock
+
+    import duckdb
+    import pandas as pd
+
+    import __spark_entry__ as entry
+
+    rows, want = _INCREMENTAL_DEGENERATE[fixture]
+    pdf = pd.DataFrame(rows, columns=["doc_id", "text"])
+    con = duckdb.connect()
+    con.register("documents", pdf)
+    sdf = spark.createDataFrame(rows, "doc_id long, text string")
+
+    with mock.patch.object(entry, "_docs", lambda s, d: sdf):
+        got = entry.queries()[query](spark, "unused").collect()
+    oracle = con.sql(entry.oracle_sql()[query]).fetchall()
+    assert sorted(tuple(r) for r in got) == sorted(oracle) == want
+
+
+def test_ngram_jaccard_profile_fallback_keeps_caller_settings(spark):
+    """Falling back from the profile to the prefix strategy (more profiles
+    than profile_cap) must keep the caller's salt_buckets/hot_df, and
+    invalid values fail up front whichever strategy runs."""
+    import unittest.mock as mock
+
+    docs = spark.createDataFrame(
+        [(1, "alpha beta"), (2, "gamma delta"), (3, "alpha beta")],
+        "doc_id long, text string",
+    )
+    with pytest.raises(ValueError, match="salt_buckets/hot_df"):
+        D.ngram_jaccard_pairs(docs, strategy="profile", profile_cap=1, hot_df=0)
+    with pytest.raises(ValueError, match="salt_buckets/hot_df"):
+        D.ngram_jaccard_pairs(docs, strategy="prefix", salt_buckets=0)
+
+    with mock.patch.object(
+        D, "_ngram_jaccard_prefix", wraps=D._ngram_jaccard_prefix
+    ) as prefix, pytest.warns(UserWarning, match="profile_cap=1"):
+        got = D.ngram_jaccard_pairs(
+            docs, 0.5, strategy="profile", profile_cap=1, salt_buckets=4,
+            hot_df=10,
+        ).collect()
+    assert prefix.call_args.kwargs == {"salt_buckets": 4, "hot_df": 10}
+    assert [tuple(r) for r in got] == [(1, 3, 1_000_000)]
 
 
 def test_round5_closeout_queries_lead_the_registry():
