@@ -7,7 +7,8 @@ the session times out (no turn for ``gap``, measured in event time against
 the watermark).
 
 Implementation: ``applyInPandasWithState`` keyed by ``conv_id`` —
-* state = (accumulated turns array, max event-time seen);
+* state = (buffered turns as one version-tagged pickled blob, max event-time
+  seen) — see ``STATE_SCHEMA``;
 * every micro-batch appends the new turns (Arrow-batched, no per-row
   Python over the wire) and re-arms an event-time timeout at
   ``max_ts + gap``;
@@ -32,6 +33,7 @@ State size for a never-gapping conversation is bounded by the opt-in
 
 from __future__ import annotations
 
+import gc
 import json
 from typing import Any, Iterator, Tuple
 
@@ -148,6 +150,23 @@ def _chunks(session: list, max_turns: int | None) -> list[list]:
         return [session]
     ordered = sorted(session, key=lambda t: (t[0], t[1], t[2]))
     return [ordered[i : i + max_turns] for i in range(0, len(ordered), max_turns)]
+
+
+_worker_heap_frozen = False
+
+
+def _freeze_worker_heap() -> None:
+    """Move the Python worker's heap into the permanent generation, once
+    per process. PySpark's daemon runs a full ``gc.collect()`` after every
+    task, which otherwise re-walks every object pandas, pyarrow and pyspark
+    imported into the worker. Objects made later are collected as usual.
+    The flag lives in this module's globals because the handler closure is
+    pickled by value, so a flag in its own globals would reset every task."""
+    global _worker_heap_frozen
+    if not _worker_heap_frozen:
+        _worker_heap_frozen = True
+        gc.collect()  # garbage already in the heap is not frozen for good
+        gc.freeze()
 
 
 def _assemble(
@@ -274,6 +293,8 @@ def assemble_sessions_stateful(
     gap_seconds = _parse_seconds(gap)
 
     def fn(key, pdfs, state):
+        # runs only in Python workers; _assemble is also driven in-process
+        _freeze_worker_heap()
         return _assemble(
             key, pdfs, state, gap_seconds, max_turns_per_bundle, max_open_turns
         )

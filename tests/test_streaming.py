@@ -189,10 +189,23 @@ def test_streaming_exactly_once_replay_commit_modes(spark, tmp_path, commit_mode
     assert pipe2.bundles(spark).count() == first
 
 
-def test_checkpoint_resume_with_new_data(spark, tmp_path):
-    """Kill/restart continuation: a restarted query processes ONLY data that
-    arrived after the first run, and the union of outputs equals a single
-    uninterrupted run (checkpoint-resumable, no dupes, no loss)."""
+_CHECKPOINTING = "org.apache.spark.sql.execution.streaming.checkpointing"
+_CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+def _checkpoint_file_manager(spark, path):
+    """The CheckpointFileManager a stream started now would use for ``path``."""
+    jvm = spark._jvm
+    return jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(path),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+
+
+def _resume_with_new_data(spark, tmp_path, first_run_manager=None):
+    """Run, stop, append conversation B, restart on the same checkpoint.
+    ``first_run_manager`` names the CheckpointFileManager class the first
+    run commits through; the restart always runs on the session's own."""
     import time as _t
 
     tmp = str(tmp_path)
@@ -212,8 +225,15 @@ def test_checkpoint_resume_with_new_data(spark, tmp_path):
         trigger={"availableNow": True},
     )
     ck = os.path.join(tmp, "ckpt_h")
-    q = pipe.run_harmonization(spark, inp, ck)
-    q.awaitTermination(300)
+    session_manager = spark.conf.get(_CHECKPOINT_MANAGER_CONF)
+    first_run_manager = first_run_manager or session_manager
+    spark.conf.set(_CHECKPOINT_MANAGER_CONF, first_run_manager)
+    try:
+        assert _checkpoint_file_manager(spark, ck).getClass().getName() == first_run_manager
+        q = pipe.run_harmonization(spark, inp, ck)
+        q.awaitTermination(300)
+    finally:
+        spark.conf.set(_CHECKPOINT_MANAGER_CONF, session_manager)
     assert pipe.bundles(spark).filter(F.col("conv_id") == "A").count() == 1
 
     # stop/"crash", then new conversation B arrives; restart from checkpoint
@@ -227,8 +247,47 @@ def test_checkpoint_resume_with_new_data(spark, tmp_path):
     q2.awaitTermination(300)
 
     bundles = pipe.bundles(spark).filter(F.col("conv_id").isin("A", "B"))
-    got = {(r["conv_id"], r["n_turns"]) for r in bundles.collect()}
-    assert got == {("A", 3), ("B", 2)}  # A not duplicated, B picked up
+    got = sorted((r["conv_id"], r["n_turns"]) for r in bundles.collect())
+    assert got == [("A", 3), ("B", 2)]  # A not duplicated, B picked up
+
+
+def test_checkpoint_resume_with_new_data(spark, tmp_path):
+    """Kill/restart continuation: a restarted query processes ONLY data that
+    arrived after the first run, and the union of outputs equals a single
+    uninterrupted run (checkpoint-resumable, no dupes, no loss)."""
+    _resume_with_new_data(spark, tmp_path)
+
+
+def test_checkpoint_resume_from_file_context_checkpoint(spark, tmp_path):
+    """A checkpoint written through Spark's default FileContext manager
+    (offsets, commits, source log and state-store delta files) resumes on
+    the engine's FileSystem manager exactly once: the buffered sentinel
+    session comes back from the first run's state files."""
+    _resume_with_new_data(
+        spark, tmp_path, f"{_CHECKPOINTING}.FileContextBasedCheckpointFileManager"
+    )
+
+
+def test_engine_session_commits_checkpoints_through_filesystem_api(spark, tmp_path):
+    """Engine sessions commit checkpoint files through Hadoop's FileSystem
+    API (no readlink/stat forks per rename without libhadoop), and an
+    atomic create onto an existing checkpoint file still fails and keeps
+    the first writer's bytes."""
+    from py4j.protocol import Py4JJavaError
+
+    mgr = _checkpoint_file_manager(spark, str(tmp_path))
+    assert mgr.getClass().getName() == f"{_CHECKPOINTING}.FileSystemBasedCheckpointFileManager"
+
+    path = spark._jvm.org.apache.hadoop.fs.Path(str(tmp_path / "0"))
+    first = mgr.createAtomic(path, False)
+    first.write(bytearray(b"first writer"))
+    first.close()
+    second = mgr.createAtomic(path, False)
+    second.write(bytearray(b"second writer"))
+    with pytest.raises(Py4JJavaError) as err:
+        second.close()
+    assert "FileAlreadyExistsException" in err.value.java_exception.getClass().getName()
+    assert (tmp_path / "0").read_bytes() == b"first writer"
 
 
 def test_sink_lineage(spark, tmp_path):
@@ -769,6 +828,58 @@ def test_state_blob_version_tag():
         _unpack_turns(pickle.dumps(turns))  # un-versioned legacy blob
     with pytest.raises(ValueError, match="incompatible"):
         _unpack_turns(b"")
+
+
+def test_state_handler_freezes_worker_heap_once(spark, tmp_path):
+    """The state_v1 handler freezes its Python worker's heap once, so
+    pyspark's per-task gc.collect() skips the imported modules: every
+    worker that ran the handler has a non-empty permanent generation, no
+    other worker has one, and the driver's is untouched."""
+    import gc
+
+    import pandas as pd
+
+    from healthcare_data_harmonization_dataflow_spark.streaming import assembly
+
+    driver_frozen = gc.get_freeze_count()
+    tmp = str(tmp_path)
+    inp = os.path.join(tmp, "transcripts")
+    _write_input(spark, inp, total_turns=200)
+    pipe = HarmonizationPipeline(
+        mapping_config=CFG, out_dir=os.path.join(tmp, "out"),
+        watermark_delay="36 hours", trigger={"availableNow": True},
+    )
+    pipe.run_harmonization(spark, inp, os.path.join(tmp, "ckpt")).awaitTermination(300)
+    assert pipe.bundles(spark).count() > 0
+
+    name = assembly.__name__
+
+    def probe(batches):
+        import gc as g
+        import sys as s
+
+        mod = s.modules.get(name)
+        for _ in batches:
+            pass
+        yield pd.DataFrame(
+            {
+                "ran_handler": [bool(mod is not None and mod._worker_heap_frozen)],
+                "frozen": [g.get_freeze_count()],
+            }
+        )
+
+    # idle workers are handed out oldest first, so enough sequential waves
+    # of tasks reach the ones the stream just released
+    rows = (
+        spark.range(32, numPartitions=32)
+        .mapInPandas(probe, "ran_handler boolean, frozen long")
+        .collect()
+    )
+    assert any(r["ran_handler"] for r in rows), rows
+    for r in rows:
+        assert (r["frozen"] > 0) == r["ran_handler"], r
+    assert gc.get_freeze_count() == driver_frozen
+    assert not assembly._worker_heap_frozen
 
 
 def test_fanout_partial_failure_reuses_staged_batch(spark, tmp_path):

@@ -9,7 +9,11 @@ dead-letter queries together): one warm-up pass, then ``--passes``
 measured ones. For every pass it prints the wall time and the CPU the
 Python worker processes used, read from ``/proc`` as utime + stime of every
 Python process under the driver plus the reaped children of each (a
-Python worker that exits is reaped by its daemon).
+Python worker that exits is reaped by its daemon). It also prints the CPU
+of the processes the JVM forked and reaped during the pass (cutime +
+cstime of the JVM): without the Hadoop native library, Hadoop runs some
+file-system calls as subprocesses (``chmod`` on file create, and
+``readlink`` on every rename through ``FileContext``).
 
 The session starts its Python daemon from this file through
 ``spark.python.daemon.module``: PySpark's own daemon, except that it times
@@ -87,20 +91,25 @@ def _daemon(out_dir: str, use_cprofile: bool) -> None:
     daemon.manager()
 
 
-def _python_cpu_s(tree_pids) -> float:
-    """utime + stime (+ reaped children's) of every Python process below
-    this one, in seconds."""
-    ticks = 0
+def _tree_cpu_s(tree_pids) -> tuple[float, float]:
+    """CPU seconds below this process: utime + stime (+ reaped children's)
+    of every Python process, and the reaped children's cutime + cstime of
+    the JVM, which are the short-lived processes it forks (a Python
+    daemon that runs for the whole session is not among them)."""
+    python = jvm = 0
     for pid in tree_pids(os.getpid()):
         try:
-            if not os.path.basename(os.readlink(f"/proc/{pid}/exe")).startswith("python"):
-                continue
+            exe = os.path.basename(os.readlink(f"/proc/{pid}/exe"))
             with open(f"/proc/{pid}/stat") as f:
                 fields = f.read().rsplit(")", 1)[1].split()
         except (OSError, IndexError):
             continue
-        ticks += sum(int(x) for x in fields[11:15])  # utime stime cutime cstime
-    return ticks / os.sysconf("SC_CLK_TCK")
+        if exe.startswith("python"):
+            python += sum(int(x) for x in fields[11:15])  # utime stime cutime cstime
+        elif exe == "java":
+            jvm += sum(int(x) for x in fields[13:15])  # cutime cstime
+    tck = os.sysconf("SC_CLK_TCK")
+    return python / tck, jvm / tck
 
 
 def _short(path: str) -> str:
@@ -186,12 +195,13 @@ def main() -> None:
         for f in os.listdir(out_dir):
             os.remove(os.path.join(out_dir, f))
         for i in range(args.passes):
-            c0 = _python_cpu_s(tree_pids)
+            py0, jvm0 = _tree_cpu_s(tree_pids)
             p = wl.run_pass(spark)
-            cpu = _python_cpu_s(tree_pids) - c0
+            py1, jvm1 = _tree_cpu_s(tree_pids)
             print(
                 f"pass {i + 1}: wall {p.wall_s:.2f} s, {wl.records / p.wall_s:.0f} turns/s,"
-                f" Python worker CPU {cpu:.2f} s"
+                f" Python worker CPU {py1 - py0:.2f} s,"
+                f" JVM child-process CPU {jvm1 - jvm0:.2f} s"
             )
         time.sleep(1.0)
         _report(out_dir, args.passes, args.top)
