@@ -72,14 +72,6 @@ def parse_dicom_webpath(webpath_col: Column | str) -> Column:
     return F.named_struct(*fields)
 
 
-def ndjson_read(spark, path: str) -> DataFrame:
-    """Bulk-export read: NDJSON lines -> rows — the HL7v2IO.Export analogue
-    (HL7v2IO.java:616-639). `spark.read.json` subsumes the reference's
-    schedule/poll/parse/cleanup machinery; schema inference or explicit
-    schema both push column pruning into the scan."""
-    return spark.read.json(path)
-
-
 def ndjson_parse_messages(df: DataFrame, line_col: str = "value") -> DataFrame:
     """Parse NDJSON lines already loaded as strings, with the reference's
     valid/invalid split (ParseMessageFn counters invalidMessages /

@@ -132,9 +132,3 @@ def ok_rows(df: DataFrame) -> DataFrame:
 def err_rows(df: DataFrame) -> DataFrame:
     """Dead-letter branch of a union-typed operator output."""
     return df.filter(F.col("err").isNotNull())
-
-
-def errors_as_tablerow_json(df: DataFrame) -> DataFrame:
-    """Serialize the dead-letter branch one-JSON-string-per-line, the
-    reference's TextIO format (Hl7v2ToFhirStreamingRunner.java:162-167)."""
-    return err_rows(df).select(F.to_json(F.col("err")).alias("value"))

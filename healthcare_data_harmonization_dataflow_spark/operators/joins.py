@@ -107,18 +107,6 @@ def asof_join(
     )
 
 
-def salted_repartition(df: DataFrame, key: str, salt_buckets: int = 16) -> DataFrame:
-    """Skew-spreading repartition: hot keys (one conversation with 10% of all
-    turns) are split across ``salt_buckets`` partitions. The salt column is
-    internal — downstream stateful keys must NOT include it (BASELINE
-    north_rule). Use before per-partition work that doesn't need key
-    co-location; for keyed aggregation prefer two-phase salted_agg below.
-    """
-    return df.repartition(
-        F.col(key), (F.abs(F.xxhash64(F.monotonically_increasing_id())) % salt_buckets)
-    )
-
-
 def salted_count(df: DataFrame, key: str, salt_buckets: int = 16) -> DataFrame:
     """Two-phase skew-safe count by key: partial count on (key, salt), final
     merge on key — the classic salting pattern; the hot key's first-stage

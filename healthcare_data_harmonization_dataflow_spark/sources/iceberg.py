@@ -1,18 +1,18 @@
-"""Iceberg source/sink wiring (gated: the runtime needs
+"""Iceberg source wiring (gated: the runtime needs
 iceberg-spark-runtime on the classpath; this sandbox does not ship it, so
 everything here is import-safe and availability-checked).
 
 The north-star input is "an Iceberg table of multi-turn transcripts"; the
 engine consumes it through the SAME downstream plan as the parquet file
-source — only the reader/writer factories differ:
+source — only the reader factory differs:
 
 * streaming read: ``spark.readStream.format("iceberg")`` consumes table
   snapshots in COMMIT ORDER — the property the file source emulates with
   mtime-ordered range files (sources/transcripts.write_time_ordered_stream).
-* exactly-once write: Iceberg appends are atomic snapshot commits; the
-  foreachBatch body in streaming/sink.py collapses to a single
-  ``df.writeTo(table).append()`` guarded by the same batchId ledger (kept:
-  Iceberg dedupes concurrent writers, not replayed batches).
+* exactly-once write: Iceberg appends are atomic snapshot commits, so on
+  a cluster the foreachBatch body in streaming/sink.py would collapse to
+  ``df.writeTo(table).append()`` guarded by the same batchId ledger
+  (Iceberg dedupes concurrent writers, not replayed batches).
 
 Reference parity: the HL7v2 store + Pub/Sub notification pair
 (HL7v2IO.java:636-700) becomes table + incremental snapshot scan.
@@ -89,10 +89,3 @@ def read_transcripts_stream(
             "streaming-max-files-per-micro-batch", str(max_files_per_micro_batch)
         )
     return reader.load(table)
-
-
-def append_batch(df: DataFrame, table: str) -> None:
-    """Atomic snapshot append — the foreachBatch body for an Iceberg sink
-    (wrap with ExactlyOnceParquetSink's batchId ledger for replay dedupe)."""
-    _require(df.sparkSession)
-    df.writeTo(table).append()

@@ -16,10 +16,13 @@ and documents, with the pieces the repo already trusts:
   ``FanOutSink`` (streaming/sink.py) under one staged batch + batchId
   guard — a replayed epoch re-admits nothing, and a crash between the
   two route commits is healed by the staged-copy retry.
-* **Determinism under replay**: every route derives from the staged
-  batch plus ``read_committed()`` views of the index. A retried epoch
-  sees the index WITHOUT its own uncommitted contribution (markers are
-  the source of truth), so both routes recompute byte-identical output.
+* **Determinism under replay**: the decision runs ONCE per batch, against
+  ``read_committed()`` views of the index (markers are the source of
+  truth, so an epoch never sees its own uncommitted contribution), and
+  ``FanOutSink`` stages its output. Both routes read that one staged
+  decision — docs are the staged rows, the index is their hash + band
+  rows — and a retry reuses the complete staged copy, so the routes
+  agree by construction.
 * **Scale**: the batch never shuffles text. Exact dedup moves 16-byte
   md5 keys; the history probe is an equi-join against the index on
   (band, band_hash) / content_hash — on a cluster the index is a
@@ -81,18 +84,15 @@ class StreamingDedupPipeline:
     #: unflagged; ``n_band_matches`` still reports the raw candidates.
     verify_threshold: "float | None" = None
     max_files_per_trigger: "int | None" = None
-    commit_mode: str = "rename"
 
     def __post_init__(self):
+        # both routes commit through the sink's one marker step on any
+        # filesystem out_dir names; there is no commit option to set
         self.docs_sink = ExactlyOnceParquetSink(
-            os.path.join(self.out_dir, "docs"),
-            name="docs",
-            commit_mode=self.commit_mode,
+            os.path.join(self.out_dir, "docs"), name="docs"
         )
         self.index_sink = ExactlyOnceParquetSink(
-            os.path.join(self.out_dir, "index"),
-            name="index",
-            commit_mode=self.commit_mode,
+            os.path.join(self.out_dir, "index"), name="index"
         )
 
     # ------------------------------------------------------------ history
@@ -104,13 +104,12 @@ class StreamingDedupPipeline:
             return spark.createDataFrame([], _INDEX_SCHEMA)
         return self.index_sink.read_committed(spark)
 
-    # ---------------------------------------------------------- selectors
-    def _survivors(self, staged: DataFrame) -> DataFrame:
-        """operators/dedup.py:dedup_against_index over the staged batch and
-        the committed index. Deterministic: same staged bytes + same
-        committed markers -> same rows, so both FanOutSink routes (which
-        each call this) and any epoch retry agree."""
-        spark = staged.sparkSession
+    # ----------------------------------------------------------- decision
+    def _survivors(self, batch: DataFrame) -> DataFrame:
+        """operators/dedup.py:dedup_against_index over the arriving batch
+        and the committed index. Run once per batch: FanOutSink stages the
+        result and both routes read the staged rows."""
+        spark = batch.sparkSession
         index = self._index(spark)
         history = None  # no committed docs yet: nothing to verify against
         if (
@@ -128,18 +127,16 @@ class StreamingDedupPipeline:
                 hist_ids, self.id_col, "left_semi"
             )
         out = dedup_against_index(
-            staged, index, history, self.verify_threshold,
+            batch, index, history, self.verify_threshold,
             text_col=self.text_col, id_col=self.id_col,
         )
         if self.drop_near:
             out = out.filter(~F.col("near_dup"))
         return out
 
-    def _index_rows(self, staged: DataFrame) -> DataFrame:
-        surv = self._survivors(staged)
+    def _index_rows(self, decided: DataFrame) -> DataFrame:
         return document_index_rows(
-            surv.select(staged.columns), text_col=self.text_col,
-            id_col=self.id_col,
+            decided, text_col=self.text_col, id_col=self.id_col
         )
 
     # ---------------------------------------------------------------- run
@@ -151,15 +148,19 @@ class StreamingDedupPipeline:
                 "maxFilesPerTrigger", self.max_files_per_trigger
             )
         stream = reader.parquet(input_path)
-        fan = FanOutSink(
+        fan_fn = FanOutSink(
             routes=[
-                (self.docs_sink, self._survivors),
+                (self.docs_sink, lambda decided: decided),
                 (self.index_sink, self._index_rows),
             ],
             staging_dir=os.path.join(self.out_dir, "_staging"),
-        )
+        ).foreach_batch()
+
+        def fn(df: DataFrame, batch_id: int):
+            fan_fn(self._survivors(df), batch_id)
+
         return (
-            stream.writeStream.foreachBatch(fan.foreach_batch())
+            stream.writeStream.foreachBatch(fn)
             .option("checkpointLocation", checkpoint)
             .trigger(availableNow=True)
             .start()

@@ -67,27 +67,21 @@ class HarmonizationPipeline:
     # (dropDuplicatesWithinWatermark: state bounded by the delay) before
     # mapping, so redelivery cannot double-count in bundles OR dead letters
     dedup_turns: bool = False
-    # commit-marker strategy for BOTH sinks: "rename" (atomic on HDFS,
-    # emulated on object stores) | "put" (one direct object write +
-    # read-back verify — the S3/GCS-safe mode, no rename anywhere in the
-    # commit path). See ExactlyOnceParquetSink.
-    commit_mode: str = "rename"
 
     def __post_init__(self):
         if self.assembly not in ("state_v1", "window"):
             raise ValueError(
                 f"assembly must be 'state_v1' or 'window', got {self.assembly!r}"
             )
+        # both sinks commit through the sink's one marker step on any
+        # filesystem out_dir names; there is no commit option to set
         self.bundles_sink = ExactlyOnceParquetSink(
-            os.path.join(self.out_dir, "bundles"),
-            "bundles",
-            commit_mode=self.commit_mode,
+            os.path.join(self.out_dir, "bundles"), "bundles"
         )
         self.deadletter_sink = ExactlyOnceParquetSink(
             os.path.join(self.out_dir, "deadletter"),
             "deadletter",
             num_shards=self.error_shards,
-            commit_mode=self.commit_mode,
         )
 
     # ------------------------------------------------------------ source

@@ -9,39 +9,41 @@ same ``foreachBatch`` body would be a single Iceberg MERGE/append which
 carries the batchId in snapshot properties).
 
 Protocol per micro-batch:
-1. if ``_commits/<batchId>.json`` exists -> **skip** (replay after restart);
+1. if ``_commits/<batchId>.json`` holds a valid marker -> **skip** (replay
+   after restart);
 2. write batch data to ``data/batch=<batchId>/`` (overwrite: a partial
    write from a crashed attempt is harmlessly clobbered);
-3. write per-partition lineage + row count into the commit file, atomically
-   (tmp + rename) and LAST — readers only trust committed batches.
+3. write the commit marker LAST, as ONE direct write of the whole file:
+   made durable (``fsync`` of the file and of its directory on POSIX; a
+   completed create on a Hadoop FileSystem, which on S3/GCS is one
+   all-or-nothing PUT), then read back and compared. A mismatch raises,
+   so ``foreachBatch`` fails, the checkpoint does not advance and the
+   batch replays.
+
+Why one direct write is safe on every filesystem: readers accept a marker
+only if it parses as a JSON object carrying the matching batch_id
+(``_parse_marker``). A JSON object is not valid until its closing brace,
+the marker's last byte, is written, so a marker torn by a crash mid-write
+counts as uncommitted; the replay overwrites the data directory and
+rewrites the marker — no loss, no duplication. No rename is involved, so
+the same step runs on stores that have no rename or only emulate it
+(copy + delete).
 
 ``read_committed`` reconstructs the table from committed batches only, so a
 crash between (2) and (3) loses nothing and duplicates nothing: the rerun
 batch rewrites the same directory and then commits.
 
+Lineage: each marker records the batch's exact ``rows`` (an Observation
+riding the write job — no second pass), its ``schema`` (the shape of an
+empty ``read_committed``) and, per data file, ``partition_id``, ``bytes``
+and ``file`` from ONE directory listing — no per-file open on any
+filesystem.
+
 Filesystems: ``base_dir`` may be a plain local path OR any URI the
 cluster's Hadoop configuration speaks (``hdfs://``, ``s3a://``, ``gs://``,
 ``dbfs:/...`` via its Hadoop adapter). All listing/commit I/O goes through
 a small FS facade — local ``os`` calls for POSIX paths, the Hadoop
-FileSystem API (driver-side, via the session JVM) otherwise, with parquet
-row counts read from footers in both cases (metadata-only; never a second
-pass over the batch).
-
-Commit modes (``commit_mode=``):
-
-* ``"rename"`` (default) — tmp + rename marker. Atomic on POSIX and HDFS;
-  object stores only EMULATE rename (copy+delete), where a lying rename
-  can leave a torn or missing marker.
-* ``"put"`` — object-store-safe: the marker is written as ONE direct
-  object write (a single PUT is all-or-nothing on S3/GCS — readers never
-  see a partial object) and then READ BACK and byte-compared; a mismatch
-  raises, so the checkpoint does not advance and the batch replays.
-
-Both modes are torn-marker-proof on the READ side: ``is_committed`` /
-``committed_batches`` accept a marker only if it parses as JSON with the
-matching batch_id — a torn marker counts as uncommitted, the replay
-overwrites the data directory, and the marker is rewritten (self-healing,
-no loss, no duplication).
+FileSystem API (driver-side, via the session JVM) otherwise.
 """
 
 from __future__ import annotations
@@ -51,8 +53,6 @@ import os
 import re
 import time
 from urllib.parse import urlparse
-
-import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -94,31 +94,18 @@ class _LocalFs:
         with open(path, encoding="utf-8") as f:
             return f.read()
 
-    def write_text_atomic(self, path: str, text: str) -> None:
-        tmp = path + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as f:
+    def write_text(self, path: str, text: str) -> None:
+        with open(path, "w", encoding="utf-8") as f:
             f.write(text)
             f.flush()
             os.fsync(f.fileno())  # marker must survive power loss: the
             # checkpoint advances after we return, so a lost marker means
             # a batch that never replays and silently disappears
-        os.replace(tmp, path)  # atomic: the commit point
         dfd = os.open(os.path.dirname(path) or ".", os.O_RDONLY)
         try:
-            os.fsync(dfd)  # persist the rename itself
+            os.fsync(dfd)  # persist a new file's directory entry too
         finally:
             os.close(dfd)
-
-    def write_text_put(self, path: str, text: str) -> None:
-        """Direct single-object write (the object-store-safe mode): no tmp,
-        no rename. fsync'd, then read back and byte-compared — a torn or
-        lost write raises, failing the batch so it replays."""
-        with open(path, "w", encoding="utf-8") as f:
-            f.write(text)
-            f.flush()
-            os.fsync(f.fileno())
-        if self.read_text(path) != text:
-            raise IOError(f"commit marker verify failed: {path}")
 
     def delete(self, path: str) -> None:
         import shutil
@@ -129,9 +116,6 @@ class _LocalFs:
         if os.path.exists(path):
             shutil.rmtree(path)
 
-    def parquet_rows(self, path: str) -> int:
-        return pq.ParquetFile(path).metadata.num_rows
-
 
 class _HadoopFs:
     """Any-scheme operations through the Hadoop FileSystem API (driver-side
@@ -139,8 +123,9 @@ class _HadoopFs:
 
     def __init__(self, spark: SparkSession, base_uri: str):
         self._jvm = spark._jvm
-        self._conf = spark._jsc.hadoopConfiguration()
-        self._fs = self._path(base_uri).getFileSystem(self._conf)
+        self._fs = self._path(base_uri).getFileSystem(
+            spark._jsc.hadoopConfiguration()
+        )
 
     def _path(self, uri: str):
         return self._jvm.org.apache.hadoop.fs.Path(uri)
@@ -184,50 +169,17 @@ class _HadoopFs:
         finally:
             stream.close()
 
-    def write_text_atomic(self, path: str, text: str) -> None:
-        tmp = self._path(path + ".tmp")
-        out = self._fs.create(tmp, True)
-        try:
-            out.write(bytearray(text.encode("utf-8")))
-        finally:
-            out.close()
-        dst = self._path(path)
-        if self._fs.exists(dst) and not self._fs.delete(dst, False):
-            raise IOError(f"delete of stale commit target failed: {path}")
-        # atomic on HDFS; emulated on object stores. rename reports failure
-        # by returning false — raising makes foreachBatch fail so the
-        # checkpoint does NOT advance and the batch replays (the alternative
-        # is silent data loss: read_committed would never see this batch)
-        if not self._fs.rename(tmp, dst):
-            raise IOError(f"atomic commit rename failed: {tmp} -> {path}")
-
-    def write_text_put(self, path: str, text: str) -> None:
-        """Direct single-object create (object-store-safe): one PUT is
-        all-or-nothing on S3/GCS — visible only after a complete upload —
-        and the read-back compare catches a lost or torn write, raising so
-        the checkpoint does not advance and the batch replays."""
+    def write_text(self, path: str, text: str) -> None:
         out = self._fs.create(self._path(path), True)
         try:
             out.write(bytearray(text.encode("utf-8")))
         finally:
-            out.close()
-        if self.read_text(path) != text:
-            raise IOError(f"commit marker verify failed: {path}")
+            out.close()  # on S3/GCS the single PUT completes here
 
     def delete(self, path: str) -> None:
         p = self._path(path)
         if not self._fs.delete(p, True) and self._fs.exists(p):
             raise IOError(f"recursive delete failed: {path}")
-
-    def parquet_rows(self, path: str) -> int:
-        hif = self._jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            self._path(path), self._conf
-        )
-        reader = self._jvm.org.apache.parquet.hadoop.ParquetFileReader.open(hif)
-        try:
-            return reader.getRecordCount()
-        finally:
-            reader.close()
 
 
 def _is_local(path: str) -> bool:
@@ -244,16 +196,10 @@ class ExactlyOnceParquetSink:
         name: str = "sink",
         num_shards: int | None = None,
         spark: SparkSession | None = None,
-        commit_mode: str = "rename",
     ):
-        if commit_mode not in ("rename", "put"):
-            raise ValueError(
-                f"commit_mode must be 'rename' or 'put', got {commit_mode!r}"
-            )
         self.base_dir = base_dir
         self.name = name
         self.num_shards = num_shards  # reference's --errorLogShardNum analogue
-        self.commit_mode = commit_mode
         self._spark = spark
         self._fs_cache = None
         if _is_local(self.base_dir):
@@ -327,9 +273,9 @@ class ExactlyOnceParquetSink:
 
     def is_committed(self, batch_id: int) -> bool:
         """A marker counts only if it PARSES with the matching batch_id: a
-        torn marker (non-atomic rename emulation interrupted mid-copy) is
-        treated as uncommitted, so the replay self-heals it — the data
-        directory is overwrite-idempotent and the marker is rewritten."""
+        torn marker (a crash mid-write) is treated as uncommitted, so the
+        replay self-heals it — the data directory is overwrite-idempotent
+        and the marker is rewritten."""
         return self._parse_marker(batch_id) is not None
 
     def _data_dir(self, batch_id: int) -> str:
@@ -355,17 +301,11 @@ class ExactlyOnceParquetSink:
         obs = Observation()
         out = out.observe(obs, F.count(F.lit(1)).alias("rows"))
         fs = self._fs()
-        local = _is_local(self.base_dir)
         path = self._data_dir(batch_id)
         out.write.mode("overwrite").parquet(path)
         total_rows = int(obs.get["rows"])
-        # per-partition lineage from ONE directory listing (names + byte
-        # sizes come from the same listStatus). Per-file row counts are
-        # added from parquet footers only on the local fast path — on a
-        # remote FS a footer read is an open+seek+read round trip per file,
-        # which at 10k-file batches serializes the driver; bytes + the
-        # observed exact total carry the same lineage information there.
-        lineage = []
+        # per-partition lineage from ONE directory listing: names and byte
+        # sizes come from the same listStatus, never a per-file open
         data_files = [
             (fname, size)
             for fname, size in fs.list_files(path)
@@ -374,15 +314,10 @@ class ExactlyOnceParquetSink:
         # fallback index counts DATA files only: enumerating the raw listing
         # (with _SUCCESS / hidden entries) would shift fallback ids and let
         # them collide with parsed ones
-        for i, (fname, size) in enumerate(data_files):
-            part = {
-                "partition_id": _partition_id(fname, i),
-                "bytes": size,
-                "file": fname,
-            }
-            if local:
-                part["rows"] = fs.parquet_rows(os.path.join(path, fname))
-            lineage.append(part)
+        lineage = [
+            {"partition_id": _partition_id(fname, i), "bytes": size, "file": fname}
+            for i, (fname, size) in enumerate(data_files)
+        ]
         commit = {
             "batch_id": batch_id,
             "rows": total_rows,
@@ -393,10 +328,12 @@ class ExactlyOnceParquetSink:
         }
         fs.mkdirs(self._commits_dir)
         marker = json.dumps(commit)
-        if self.commit_mode == "put":
-            fs.write_text_put(self._commit_path(batch_id), marker)
-        else:
-            fs.write_text_atomic(self._commit_path(batch_id), marker)
+        marker_path = self._commit_path(batch_id)
+        fs.write_text(marker_path, marker)
+        # read-back: a lost or torn write raises here, so the checkpoint
+        # does not advance and the batch replays
+        if fs.read_text(marker_path) != marker:
+            raise IOError(f"commit marker verify failed: {marker_path}")
 
     def foreach_batch(self):
         return lambda df, batch_id: self.write_batch(df, batch_id)
@@ -455,8 +392,7 @@ class FanOutSink:
     The batch is STAGED to parquet once and every route reads the staged
     copy: the source plan executes exactly once per batch without
     ``df.cache()`` (which at production batch sizes evicts or spills the
-    executors' storage memory — the same reason the single-sink path reads
-    lineage from footers instead of caching). Staging lives beside the
+    executors' storage memory). Staging lives beside the
     sinks and is deleted after all routes commit; a replayed epoch whose
     routes are all committed skips the staging write entirely.
     """

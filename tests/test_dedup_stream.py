@@ -95,6 +95,32 @@ def test_streaming_dedup_e2e(spark, tmp_path):
     assert idx.count() == 5 * 5
 
 
+def test_streaming_dedup_decides_once_per_batch(spark, tmp_path, monkeypatch):
+    """One execution feeds every route: the docs and index routes both
+    read the batch's one staged decision, so the history probe
+    (dedup_against_index) runs once per batch, not once per route."""
+    from healthcare_data_harmonization_dataflow_spark.streaming import (
+        dedup_stream,
+    )
+
+    calls = []
+    real = dedup_stream.dedup_against_index
+
+    def counting(batch, *a, **k):
+        calls.append(1)
+        return real(batch, *a, **k)
+
+    monkeypatch.setattr(dedup_stream, "dedup_against_index", counting)
+    inp = _write_batches(spark, str(tmp_path))
+    pipe = StreamingDedupPipeline(
+        out_dir=str(tmp_path / "out"), max_files_per_trigger=1
+    )
+    _run(pipe, spark, inp, str(tmp_path / "ckpt"))
+    assert pipe.docs_sink.committed_batches() == [0, 1]
+    assert pipe.index_sink.committed_batches() == [0, 1]
+    assert len(calls) == 2
+
+
 def test_streaming_dedup_replay_is_exactly_once(spark, tmp_path):
     inp = _write_batches(spark, str(tmp_path))
     out = str(tmp_path / "out")

@@ -127,58 +127,35 @@ def pipe_schema():
     return BUNDLE_SCHEMA
 
 
-@pytest.mark.parametrize("commit_mode", ["rename", "put"])
-def test_streaming_exactly_once_replay_commit_modes(spark, tmp_path, commit_mode):
-    """The FULL streaming replay contract under BOTH marker strategies —
-    and for put-mode, against a simulated object store whose rename is
-    UNAVAILABLE (write_text_atomic raises): the run can only succeed if
-    the commit path genuinely never renames. Restart from the same
-    checkpoint and a replayed epoch must both be no-ops either way."""
-    from healthcare_data_harmonization_dataflow_spark.streaming.sink import (
-        _LocalFs,
-    )
+def test_streaming_exactly_once_replay_never_renames_markers(
+    spark, tmp_path, monkeypatch
+):
+    """The FULL streaming replay contract against a store without rename:
+    os.replace / os.rename raise for any path under ``_commits/``, so the
+    run can only succeed if the commit path never renames. Restart from
+    the same checkpoint and a replayed epoch must both be no-ops."""
+    def no_commit_rename(real):
+        def guarded(src, dst, *a, **k):
+            if "_commits" in os.fspath(src) or "_commits" in os.fspath(dst):
+                raise IOError("rename is not available on this store")
+            return real(src, dst, *a, **k)
+
+        return guarded
+
+    monkeypatch.setattr(os, "replace", no_commit_rename(os.replace))
+    monkeypatch.setattr(os, "rename", no_commit_rename(os.rename))
 
     tmp = str(tmp_path)
     inp = os.path.join(tmp, "transcripts")
     _write_input(spark, inp, total_turns=200)
-
-    class _NoRenameFs(_LocalFs):
-        """Object-store facade: single-object PUTs only; the atomic-rename
-        commit primitive does not exist."""
-
-        def write_text_atomic(self, path, text):
-            raise IOError("rename is not available on this store")
-
-    def build():
-        pipe = HarmonizationPipeline(
-            mapping_config=CFG,
-            out_dir=os.path.join(tmp, "out"),
-            session_gap="2 minutes",
-            watermark_delay="36 hours",
-            trigger={"availableNow": True},
-            max_files_per_trigger=4,
-            commit_mode=commit_mode,
-        )
-        if commit_mode == "put":
-            pipe.bundles_sink._fs_cache = _NoRenameFs()
-            pipe.deadletter_sink._fs_cache = _NoRenameFs()
-        return pipe
-
-    pipe = build()
-    q1 = pipe.run_harmonization(spark, inp, os.path.join(tmp, "ckpt_h"))
-    q2 = pipe.run_deadletter(spark, inp, os.path.join(tmp, "ckpt_d"))
-    q1.awaitTermination(300)
-    q2.awaitTermination(300)
+    pipe = _run_pipeline(spark, tmp, inp)
     first = pipe.bundles(spark).count()
     first_batches = pipe.bundles_sink.committed_batches()
     assert first > 0
+    assert pipe.deadletter_sink.committed_batches()
 
     # restart from the SAME checkpoint: no new data -> no new commits
-    pipe2 = build()
-    rq1 = pipe2.run_harmonization(spark, inp, os.path.join(tmp, "ckpt_h"))
-    rq2 = pipe2.run_deadletter(spark, inp, os.path.join(tmp, "ckpt_d"))
-    rq1.awaitTermination(300)
-    rq2.awaitTermination(300)
+    pipe2 = _run_pipeline(spark, tmp, inp)
     assert pipe2.bundles(spark).count() == first
     assert pipe2.bundles_sink.committed_batches() == first_batches
 
@@ -290,14 +267,39 @@ def test_engine_session_commits_checkpoints_through_filesystem_api(spark, tmp_pa
     assert (tmp_path / "0").read_bytes() == b"first writer"
 
 
+def _data_file_bytes(sink_dir, batch_id):
+    """On-disk size of a committed batch's parquet data files."""
+    d = os.path.join(sink_dir, "data", f"batch={batch_id}")
+    return sum(
+        os.path.getsize(os.path.join(d, f))
+        for f in os.listdir(d)
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    )
+
+
+def _sink_at(spark, tmp_path, uri):
+    """(sink, directory on disk): a POSIX path, or the same directory as a
+    file:// URI, which runs the Hadoop FileSystem facade."""
+    disk = str(tmp_path / "s")
+    return ExactlyOnceParquetSink(
+        "file://" + disk if uri else disk, "t", spark=spark
+    ), disk
+
+
+def _conv_ids(spark, lo, hi):
+    return spark.range(lo, hi).select(F.col("id").cast("string").alias("conv_id"))
+
+
 def test_sink_lineage(spark, tmp_path):
     sink = ExactlyOnceParquetSink(str(tmp_path / "s"), "t")
     df = spark.range(100).select(F.col("id").cast("string").alias("conv_id"))
     sink.write_batch(df.repartition(4), 0)
     lin = sink.lineage()
     assert len(lin) == 1 and lin[0]["rows"] == 100
-    assert sum(p["rows"] for p in lin[0]["partitions"]) == 100
     assert len(lin[0]["partitions"]) == 4
+    assert sum(p["bytes"] for p in lin[0]["partitions"]) == _data_file_bytes(
+        str(tmp_path / "s"), 0
+    )
 
 
 def test_session_gap_splits_conversation(spark, tmp_path):
@@ -575,42 +577,38 @@ def test_sink_crash_between_write_and_commit(spark, tmp_path):
     assert sink.read_committed(spark).count() == 90
 
 
-def test_sink_torn_marker_under_lying_rename(spark, tmp_path):
-    """Object-store hazard: rename is emulated (copy+delete), so a crash
-    mid-copy can leave a TORN commit marker while the checkpoint never
-    advanced. A torn marker must count as UNCOMMITTED everywhere — no
+@pytest.mark.parametrize("uri", [False, True], ids=["posix", "file_uri"])
+def test_sink_torn_marker_from_crash_mid_write(spark, tmp_path, uri):
+    """A crash part-way through the one direct marker write leaves a
+    TRUNCATED marker and the write raises, so the checkpoint never
+    advances. The torn marker must count as UNCOMMITTED everywhere — no
     crash on read, no phantom batch — and the replay must self-heal it
     with no loss and no duplication."""
-    import os as _os
+    sink, disk = _sink_at(spark, tmp_path, uri)
+    sink.write_batch(_conv_ids(spark, 0, 50), 0)
 
-    base = str(tmp_path / "s")
-    sink = ExactlyOnceParquetSink(base, "t")
-    df = spark.range(50).select(F.col("id").cast("string").alias("conv_id"))
-    sink.write_batch(df, 0)
+    fs = sink._fs()
+    write = fs.write_text
 
-    class _LyingRenameFs(type(sink._fs())):
-        """rename 'succeeds' but lands only a truncated marker — the
-        non-atomic copy+delete emulation interrupted mid-copy."""
+    def crash_mid_write(path, text):
+        write(path, text[: len(text) // 2])
+        raise IOError("process died mid-write")
 
-        def write_text_atomic(self, path, text):
-            with open(path, "w", encoding="utf-8") as f:
-                f.write(text[: len(text) // 2])  # torn
-
-    lying = _LyingRenameFs()
-    sink._fs_cache = lying
-    b1 = spark.range(50, 90).select(F.col("id").cast("string").alias("conv_id"))
-    sink.write_batch(b1, 1)  # data lands, marker is torn
-    assert _os.path.exists(_os.path.join(base, "_commits", "1.json"))
+    fs.write_text = crash_mid_write
+    b1 = _conv_ids(spark, 50, 90)
+    with pytest.raises(IOError, match="mid-write"):
+        sink.write_batch(b1, 1)  # data lands, marker is torn
+    del fs.write_text
+    assert os.path.getsize(os.path.join(disk, "_commits", "1.json")) > 0
 
     # fresh reader: the torn marker is invisible, not a crash
-    reader = ExactlyOnceParquetSink(base, "t")
+    reader, _ = _sink_at(spark, tmp_path, uri)
     assert reader.committed_batches() == [0]
     assert reader.is_committed(1) is False
     assert reader.read_committed(spark).count() == 50
     assert len(reader.lineage()) == 1
 
-    # replay with an honest FS self-heals: exactly one copy of every row
-    sink._fs_cache = None
+    # the replayed epoch self-heals: exactly one copy of every row
     sink.write_batch(b1, 1)
     got = reader.read_committed(spark)
     assert got.count() == 90
@@ -618,46 +616,89 @@ def test_sink_torn_marker_under_lying_rename(spark, tmp_path):
     assert reader.committed_batches() == [0, 1]
 
 
-def test_sink_put_commit_mode(spark, tmp_path):
-    """commit_mode='put': the marker is ONE direct object write with a
-    read-back verify — no rename anywhere in the commit path — and a
-    failed verify raises so the batch replays instead of silently
-    vanishing."""
-    base = str(tmp_path / "s")
-    sink = ExactlyOnceParquetSink(base, "t", commit_mode="put")
-    df = spark.range(40).select(F.col("id").cast("string").alias("conv_id"))
+@pytest.mark.parametrize("uri", [False, True], ids=["posix", "file_uri"])
+def test_sink_marker_read_back_mismatch_raises(spark, tmp_path, uri):
+    """The marker is read back after its write: a write that reports
+    success but lands short (an upload lost mid-flight) raises, so the
+    batch replays instead of silently vanishing."""
+    sink, _ = _sink_at(spark, tmp_path, uri)
+    df = _conv_ids(spark, 0, 40)
     sink.write_batch(df, 0)
     assert sink.committed_batches() == [0]
+    sink.write_batch(df.limit(1), 0)  # replay guard
     assert sink.read_committed(spark).count() == 40
-    sink.write_batch(df.limit(1), 0)  # replay guard still holds
-    assert sink.read_committed(spark).count() == 40
 
-    class _LostPutFs(type(sink._fs())):
-        def write_text_put(self, path, text):
-            with open(path, "w", encoding="utf-8") as f:
-                f.write(text[:10])  # upload lost mid-flight
-            if self.read_text(path) != text:
-                raise IOError(f"commit marker verify failed: {path}")
-
-    sink._fs_cache = _LostPutFs()
-    b1 = spark.range(40, 60).select(F.col("id").cast("string").alias("conv_id"))
-    import pytest as _pytest
-
-    with _pytest.raises(IOError, match="verify failed"):
+    fs = sink._fs()
+    write = fs.write_text
+    fs.write_text = lambda path, text: write(path, text[:10])
+    b1 = _conv_ids(spark, 40, 60)
+    with pytest.raises(IOError, match="verify failed"):
         sink.write_batch(b1, 1)  # raises -> checkpoint would NOT advance
-    sink._fs_cache = None
-    assert sink.is_committed(1) is False  # torn marker = uncommitted
+    del fs.write_text
+    assert sink.is_committed(1) is False  # short marker = uncommitted
     sink.write_batch(b1, 1)  # replay succeeds
     got = sink.read_committed(spark)
     assert got.count() == 60
     assert got.select("conv_id").distinct().count() == 60
 
 
+def test_sink_marker_write_fsyncs_file_and_directory(spark, tmp_path, monkeypatch):
+    """The local marker write is durable before the checkpoint advances:
+    the marker file AND the ``_commits`` directory (which holds a new
+    file's name) are fsync'd, in that order."""
+    import stat
+
+    synced = []
+    real_fsync = os.fsync
+
+    def counting_fsync(fd):
+        st = os.fstat(fd)
+        synced.append(("dir" if stat.S_ISDIR(st.st_mode) else "file", st.st_ino))
+        real_fsync(fd)
+
+    sink = ExactlyOnceParquetSink(str(tmp_path / "s"), "t")
+    monkeypatch.setattr(os, "fsync", counting_fsync)
+    sink.write_batch(_conv_ids(spark, 0, 10), 0)
+    commits = tmp_path / "s" / "_commits"
+    assert synced == [
+        ("file", (commits / "0.json").stat().st_ino),
+        ("dir", commits.stat().st_ino),
+    ]
+
+
+@pytest.mark.parametrize("uri", [False, True], ids=["posix", "file_uri"])
+def test_sink_stream_restart_adds_no_commit(spark, tmp_path, uri):
+    """A stream restarted from the same checkpoint commits nothing new:
+    the batch's marker stays byte-identical and no row is duplicated."""
+    inp = str(tmp_path / "in")
+    _conv_ids(spark, 0, 30).write.parquet(inp)
+
+    def run():
+        sink, disk = _sink_at(spark, tmp_path, uri)
+        (
+            spark.readStream.schema("conv_id string").parquet(inp)
+            .writeStream.foreachBatch(sink.foreach_batch())
+            .option("checkpointLocation", str(tmp_path / "ck"))
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+        with open(os.path.join(disk, "_commits", "0.json"), encoding="utf-8") as f:
+            return sink, f.read()
+
+    sink, marker = run()
+    assert sink.committed_batches() == [0]
+    sink2, marker2 = run()
+    assert sink2.committed_batches() == [0]
+    assert marker2 == marker
+    assert sink2.read_committed(spark).count() == 30
+
+
 def test_sink_on_hadoop_filesystem_uri(spark, tmp_path):
     """The sink must work when out_dir is a Hadoop FileSystem URI, not a
     POSIX path (production: hdfs/s3a/gs). file:// drives the exact same
-    FileSystem-API code path: listing, footer row counts, atomic commit
-    rename, replay guard."""
+    FileSystem-API code path: listing, the marker write + read-back,
+    replay guard."""
     from healthcare_data_harmonization_dataflow_spark.streaming.sink import (
         ExactlyOnceParquetSink,
     )
@@ -938,41 +979,21 @@ def test_fanout_partial_failure_reuses_staged_batch(spark, tmp_path):
 
 
 def test_sink_lineage_has_bytes_and_observed_rows(spark, tmp_path):
-    """Round-3 lineage: the exact row count comes from an Observation riding
-    the write job (no second pass), per-partition entries carry byte sizes
-    from ONE directory listing; on the Hadoop-FS path no per-file footer
-    reads happen at all."""
-    from healthcare_data_harmonization_dataflow_spark.streaming import sink as sink_mod
-    from healthcare_data_harmonization_dataflow_spark.streaming.sink import (
-        ExactlyOnceParquetSink,
-    )
-
-    base = "file://" + str(tmp_path / "hsink")
-    s = ExactlyOnceParquetSink(base, "t", spark=spark)
+    """Lineage has one shape on every filesystem: the exact row count comes
+    from an Observation riding the write job (no second pass), and
+    per-partition entries carry byte sizes from ONE directory listing that
+    sum to the data files on disk — on a POSIX path and on a file:// URI
+    (the Hadoop FileSystem facade)."""
     df = spark.range(75).selectExpr("cast(id as string) conv_id", "id n")
-    calls = {"n": 0}
-    orig = sink_mod._HadoopFs.parquet_rows
-
-    def counting(self, path):
-        calls["n"] += 1
-        return orig(self, path)
-
-    sink_mod._HadoopFs.parquet_rows = counting
-    try:
+    for uri in (False, True):
+        s, disk = _sink_at(spark, tmp_path / str(uri), uri)
         s.write_batch(df.repartition(3), 0)
-    finally:
-        sink_mod._HadoopFs.parquet_rows = orig
-    assert calls["n"] == 0  # zero footer round-trips on the remote path
-    lin = s.lineage()[0]
-    assert lin["rows"] == 75  # exact, from the Observation
-    assert len(lin["partitions"]) == 3
-    assert all(p["bytes"] > 0 for p in lin["partitions"])
-    # local path still enriches lineage with per-file row counts
-    s2 = ExactlyOnceParquetSink(str(tmp_path / "lsink"), "t2")
-    s2.write_batch(df.repartition(3), 0)
-    lin2 = s2.lineage()[0]
-    assert lin2["rows"] == 75
-    assert sum(p["rows"] for p in lin2["partitions"]) == 75
+        lin = s.lineage()[0]
+        assert lin["rows"] == 75  # exact, from the Observation
+        parts = lin["partitions"]
+        assert len(parts) == 3
+        assert all(set(p) == {"partition_id", "bytes", "file"} for p in parts)
+        assert sum(p["bytes"] for p in parts) == _data_file_bytes(disk, 0)
 
 
 def test_window_assembly_matches_v1(spark, tmp_path):
