@@ -127,23 +127,30 @@ def pipe_schema():
     return BUNDLE_SCHEMA
 
 
-def test_streaming_exactly_once_replay_never_renames_markers(
-    spark, tmp_path, monkeypatch
+@pytest.mark.parametrize("store", ["rename", "put"])
+def test_streaming_exactly_once_replay_commit_modes(
+    spark, tmp_path, monkeypatch, store
 ):
-    """The FULL streaming replay contract against a store without rename:
-    os.replace / os.rename raise for any path under ``_commits/``, so the
-    run can only succeed if the commit path never renames. Restart from
-    the same checkpoint and a replayed epoch must both be no-ops."""
-    def no_commit_rename(real):
+    """The FULL streaming replay contract on a store that offers rename
+    (``rename``: os.replace / os.rename work and are recorded) and on one
+    that offers only single-object PUTs (``put``: they raise for any path
+    under ``_commits/``). On both, the commit path must never rename a
+    marker, and restart from the same checkpoint and a replayed epoch must
+    both be no-ops."""
+    commit_renames = []
+
+    def commit_rename_guard(real):
         def guarded(src, dst, *a, **k):
             if "_commits" in os.fspath(src) or "_commits" in os.fspath(dst):
-                raise IOError("rename is not available on this store")
+                commit_renames.append((os.fspath(src), os.fspath(dst)))
+                if store == "put":
+                    raise IOError("rename is not available on this store")
             return real(src, dst, *a, **k)
 
         return guarded
 
-    monkeypatch.setattr(os, "replace", no_commit_rename(os.replace))
-    monkeypatch.setattr(os, "rename", no_commit_rename(os.rename))
+    monkeypatch.setattr(os, "replace", commit_rename_guard(os.replace))
+    monkeypatch.setattr(os, "rename", commit_rename_guard(os.rename))
 
     tmp = str(tmp_path)
     inp = os.path.join(tmp, "transcripts")
@@ -164,6 +171,7 @@ def test_streaming_exactly_once_replay_never_renames_markers(
     dummy = spark.createDataFrame([("x", 1, "b", None, None)], pipe_schema())
     sink.write_batch(dummy, first_batches[-1])
     assert pipe2.bundles(spark).count() == first
+    assert commit_renames == []
 
 
 _CHECKPOINTING = "org.apache.spark.sql.execution.streaming.checkpointing"
