@@ -5,20 +5,23 @@ The reference wraps each mapped resource in a FHIR transaction bundle
 assembles all turns of a conversation, **reordered by turn_idx regardless of
 arrival order**, into one harmonized bundle JSON.
 
-:func:`assemble_bundles` is pure Catalyst: groupBy + sort_array(collect_list)
-+ to_json. One shuffle; codegen everywhere; the ordering is explicit
-(sort_array on the struct's leading turn_idx field), never shuffle order
-(SURVEY §7.4 risk 2). The streaming stateful assembly
-(streaming/assembly.py) renders byte-identical bundles.
+:func:`bundle_json` is the one bundle renderer: the batch plans here and
+both streaming assemblies (streaming/assembly.py: the ``session_window``
+aggregation and the ``state_v1`` handler, which only buffers turns) render
+through it, so their bundles are byte-identical by construction. The
+ordering is explicit (sort_array on the struct's leading turn_idx field),
+never shuffle order (SURVEY §7.4 risk 2).
 
-At 10^12 turns the shuffle is keyed by conv_id — hot conversations are
-handled by AQE skew splitting for the batch path and by salted pre-grouping
-for the streaming path.
+:func:`assemble_bundles` is pure Catalyst: groupBy + collect_list +
+bundle_json. One shuffle; codegen everywhere. At 10^12 turns the shuffle is
+keyed by conv_id — hot conversations are handled by salted two-phase
+collection (and AQE skew splitting) on the batch path; the streaming state
+keys stay unsalted (streaming/assembly.py).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 BUNDLE_TYPE = "transaction"
@@ -34,6 +37,13 @@ def turns_struct():
     )
 
 
+def bundle_json(turns: "Column | str") -> Column:
+    """``turns`` (array<struct<turn_idx,role,text>>) sorted and rendered as
+    compact JSON. NULL fields render as ``null`` rather than being dropped,
+    and control characters escape as Jackson writes them (``\\u001B``)."""
+    return F.to_json(F.sort_array(turns), {"ignoreNullFields": "false"})
+
+
 def assemble_bundles(
     transcripts: DataFrame,
     conv_col: str = "conv_id",
@@ -46,7 +56,7 @@ def assemble_bundles(
     phase 1 collects per-(conv, salt) partial arrays — a hot conversation's
     row traffic and list-building spread over ``salt_buckets`` tasks — and
     phase 2 merges the few pre-built arrays per conversation (flatten +
-    sort + to_json). Output is identical to the single-phase plan; measured
+    bundle_json). Output is identical to the single-phase plan; measured
     ~4x faster end-to-end on a 2M-turn input whose hottest conversation
     holds 10% of all turns (the single collect_list task was the whole
     pipeline's critical path). Salt never leaks into the output key.
@@ -69,9 +79,9 @@ def assemble_bundles(
             transcripts.groupBy(*group_keys)
             .agg(
                 F.count(F.lit(1)).cast("long").alias("n_turns"),
-                F.sort_array(F.collect_list(turns_struct())).alias("_turns"),
+                F.collect_list(turns_struct()).alias("_turns"),
             )
-            .select(*out_keys, "n_turns", F.to_json(F.col("_turns")).alias("bundle"))
+            .select(*out_keys, "n_turns", bundle_json("_turns").alias("bundle"))
         )
     salt = F.pmod(F.xxhash64(F.col("turn_idx")), F.lit(salt_buckets)).alias("_salt")
     partial = transcripts.groupBy(*group_keys, salt).agg(
@@ -83,9 +93,9 @@ def assemble_bundles(
         partial.groupBy(*merge_keys)
         .agg(
             F.sum("_n").alias("n_turns"),
-            F.sort_array(F.flatten(F.collect_list("_part"))).alias("_turns"),
+            F.flatten(F.collect_list("_part")).alias("_turns"),
         )
-        .select(*out_keys, "n_turns", F.to_json(F.col("_turns")).alias("bundle"))
+        .select(*out_keys, "n_turns", bundle_json("_turns").alias("bundle"))
     )
 
 

@@ -322,12 +322,10 @@ def avi_hex_sql(d: str = "doc_id") -> str:
     )
 
 
-def media_content_sql(dialect: str, d: str = "doc_id", text: str = "text") -> str:
+def media_content_sql(dialect: str, d: str = "doc_id") -> str:
     """Per-row content: id%3=0 -> PPM image, 1 -> WAV audio, 2 -> AVI video
     — all REAL container bytes the decoders actually parse. Only the
-    string->binary encode differs between dialects. ``text`` is kept for
-    signature stability (no longer used: the stub path is exercised by unit
-    tests on payloads the parsers reject)."""
+    string->binary encode differs between dialects."""
     enc = (
         (lambda e: f"encode({e}, 'utf-8')")
         if dialect == "spark"

@@ -22,6 +22,21 @@ import os
 
 from pyspark.sql import SparkSession
 
+# The engine's SQL confs, set by build_session and tools/submit_harmonization.py
+# alike. Output depends on them: timestamps render in the session zone with a
+# literal 'Z' (model/errors.py, the time builtins), so it is UTC, as in pandas.
+ENGINE_SQL_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+    "spark.sql.session.timeZone": "UTC",
+    # streaming: bounded state, RocksDB would be the cluster choice; the
+    # provider is config-switchable so tests run on the default HDFS store
+    "spark.sql.streaming.stateStore.stateSchemaCheck": "true",
+}
+
 
 def build_session(
     app_name: str = "healthcare-data-harmonization-spark",
@@ -47,19 +62,11 @@ def build_session(
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)
+        .config(map=ENGINE_SQL_CONF)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
-        # streaming: bounded state, RocksDB would be the cluster choice; the
-        # provider is config-switchable so tests run on the default HDFS store
-        .config("spark.sql.streaming.stateStore.stateSchemaCheck", "true")
         .config(
             "spark.sql.streaming.checkpointFileManagerClass",
             "org.apache.spark.sql.execution.streaming.checkpointing."

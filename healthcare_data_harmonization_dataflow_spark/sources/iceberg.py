@@ -22,10 +22,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-TRANSCRIPT_SCHEMA = (
-    "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
-)
-
 _RUNTIME_CLASS = "org.apache.iceberg.spark.SparkCatalog"
 
 

@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-SCHEMA = "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+TRANSCRIPT_SCHEMA = "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
 
 EPOCH = "2024-01-01 00:00:00"
 

@@ -12,9 +12,12 @@ Implementation: ``applyInPandasWithState`` keyed by ``conv_id`` —
 * every micro-batch appends the new turns (Arrow-batched, no per-row
   Python over the wire) and re-arms an event-time timeout at
   ``max_ts + gap``;
-* on timeout the state is drained: turns sorted by (turn_idx, role, text) —
-  NEVER by arrival/shuffle order (SURVEY §7.4 risk 2) — and one bundle row
-  is emitted, byte-compatible with the batch ``assemble_bundles`` operator.
+* a session is released once the watermark passes its last turn + gap (on
+  timeout, every buffered session is); the handler emits its turns as an
+  array and writes no JSON. The operator renders each bundle with
+  ``operators/bundles.py:bundle_json``, the renderer of the batch
+  ``assemble_bundles`` operator, which orders turns by (turn_idx, role,
+  text) — NEVER by arrival/shuffle order (SURVEY §7.4 risk 2).
 
 Skew: the shuffle into the stateful operator is keyed by conv_id only (state
 keys must stay unsalted — BASELINE north_rule). A hot conversation
@@ -27,14 +30,12 @@ invocations, timeout bookkeeping) dominates per-turn cost. A salted
 pre-combine before the state exchange is therefore measurably unnecessary;
 if a future profile disagrees, it belongs UPSTREAM of this operator (state
 keys stay unsalted regardless — test_state_keys_are_unsalted_under_skew).
-State size for a never-gapping conversation is bounded by the opt-in
-``max_open_turns`` frozen-prefix flush.
 """
 
 from __future__ import annotations
 
 import gc
-import json
+import math
 from typing import Any, Iterator, Tuple
 
 import pandas as pd
@@ -43,15 +44,15 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 import pickle
 
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
-    IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
     TimestampType,
 )
+
+from ..operators.bundles import bundle_json, turns_struct
 
 BUNDLE_SCHEMA = StructType(
     [
@@ -63,13 +64,12 @@ BUNDLE_SCHEMA = StructType(
     ]
 )
 
-_TURN = StructType(
-    [
-        StructField("turn_idx", IntegerType()),
-        StructField("role", StringType()),
-        StructField("text", StringType()),
-        StructField("ts_us", LongType()),  # event time, microseconds
-    ]
+# what the state handler emits: BUNDLE_SCHEMA with the session's turns in
+# place of the rendered bundle
+_SESSION_SCHEMA = (
+    "conv_id string, n_turns long, "
+    "turns array<struct<turn_idx:int,role:string,text:string>>, "
+    "session_start timestamp, session_end timestamp"
 )
 
 STATE_SCHEMA = StructType(
@@ -106,15 +106,6 @@ def _unpack_turns(blob: bytes) -> list:
     return pickle.loads(blob[1:])
 
 
-def _render_bundle(turns: list) -> str:
-    turns = sorted(turns, key=lambda t: (t[0], t[1], t[2]))
-    return json.dumps(
-        [{"turn_idx": int(t[0]), "role": t[1], "text": t[2]} for t in turns],
-        ensure_ascii=False,
-        separators=(",", ":"),
-    )
-
-
 def _split_sessions(turns: list, gap_us: int) -> list[list]:
     """Event-time session split: sort by (ts, turn_idx) and break where the
     inter-turn gap reaches ``gap`` — the same semantics as
@@ -131,12 +122,13 @@ def _split_sessions(turns: list, gap_us: int) -> list[list]:
     return sessions
 
 
-def _bundle_row(key, session: list, gap_seconds: int) -> dict:
+def _session_row(key, session: list, gap_seconds: int) -> dict:
     ts = [t[3] for t in session]
     return {
         "conv_id": key[0],
         "n_turns": len(session),
-        "bundle": _render_bundle(session),
+        # (turn_idx, role, text): bundle_json sorts them in the JVM
+        "turns": [t[:3] for t in session],
         "session_start": pd.Timestamp(min(ts), unit="us"),
         "session_end": pd.Timestamp(max(ts) + gap_seconds * 1_000_000, unit="us"),
     }
@@ -145,7 +137,7 @@ def _bundle_row(key, session: list, gap_seconds: int) -> dict:
 def _chunks(session: list, max_turns: int | None) -> list[list]:
     """Bundle-size cap (production knob, mirrors the batch operator's
     max_turns_per_bundle): a giant session emits several bundles instead of
-    one enormous JSON render in a single task."""
+    one enormous bundle in a single task."""
     if not max_turns or len(session) <= max_turns:
         return [session]
     ordered = sorted(session, key=lambda t: (t[0], t[1], t[2]))
@@ -175,23 +167,13 @@ def _assemble(
     state: GroupState,
     gap_seconds: int,
     max_turns_per_bundle: int | None = None,
-    max_open_turns: int | None = None,
 ) -> Iterator[pd.DataFrame]:
     gap_us = gap_seconds * 1_000_000
-
-    if state.hasTimedOut:
-        (blob, _) = state.get
-        turns = _unpack_turns(blob)
-        rows = [
-            _bundle_row(key, c, gap_seconds)
-            for s in _split_sessions(turns, gap_us)
-            for c in _chunks(s, max_turns_per_bundle)
-        ]
-        state.remove()
-        yield pd.DataFrame(rows)
-        return
-
-    wm_us = state.getCurrentWatermarkMs() * 1000
+    # a timed-out call brings no rows and fires only once the watermark has
+    # passed every buffered session's end: all of them are complete
+    wm_us = (
+        math.inf if state.hasTimedOut else state.getCurrentWatermarkMs() * 1000
+    )
 
     turns: list[Any] = []
     if state.exists:
@@ -228,29 +210,6 @@ def _assemble(
     complete = [s for s in sessions if s[-1][3] + gap_us <= wm_us]
     open_sessions = [s for s in sessions if s[-1][3] + gap_us > wm_us]
 
-    # State-size guard: incremental emission bounds state EXCEPT for one
-    # never-gapping conversation, whose open session grows without limit
-    # (and whose blob is re-pickled O(buffered) every batch). When an open
-    # session exceeds ``max_open_turns``, its FROZEN prefix is flushed
-    # early: turns with ts < watermark can never be preceded, interleaved,
-    # or re-split by a future on-time arrival (late rows are dropped), so
-    # flushing them loses nothing — the trade is session FRAGMENTATION
-    # (several bundles for one logical session, fragment session_start/
-    # session_end local to each fragment), which is why the guard is
-    # opt-in. Turns at/after the watermark always stay buffered.
-    if max_open_turns:
-        kept = []
-        for s in open_sessions:
-            if len(s) > max_open_turns:
-                n_frozen = sum(1 for t in s if t[3] < wm_us)  # ts-sorted prefix
-                n_flush = min(n_frozen, len(s) - max_open_turns // 2)
-                if n_flush > 0:
-                    complete.append(s[:n_flush])
-                    s = s[n_flush:]
-            if s:
-                kept.append(s)
-        open_sessions = kept
-
     if open_sessions:
         remaining = [t for s in open_sessions for t in s]
         max_ts_us = max(t[3] for t in remaining)
@@ -266,7 +225,7 @@ def _assemble(
     if complete:
         yield pd.DataFrame(
             [
-                _bundle_row(key, c, gap_seconds)
+                _session_row(key, c, gap_seconds)
                 for s in complete
                 for c in _chunks(s, max_turns_per_bundle)
             ]
@@ -278,26 +237,20 @@ def assemble_sessions_stateful(
     gap: str = "5 minutes",
     watermark_delay: str | None = "10 minutes",
     max_turns_per_bundle: int | None = None,
-    max_open_turns: int | None = None,
 ) -> DataFrame:
     """Streaming session assembly. ``transcripts`` must contain
     conv_id/turn_idx/role/text/ts. Watermark on ts bounds state size and
     drives the event-time session timeout. ``max_turns_per_bundle`` caps
-    bundle size (chunked emission for hot conversations);
-    ``max_open_turns`` caps OPEN-session state per key (frozen-prefix
-    early flush — see _assemble; trades session fragmentation for bounded
-    state on a never-gapping conversation).
-    ``watermark_delay=None`` means the input stream ALREADY carries a
-    watermark on ts (e.g. an upstream dropDuplicatesWithinWatermark) —
+    bundle size (chunked emission for hot conversations). Returns
+    ``BUNDLE_SCHEMA`` rows. ``watermark_delay=None`` means the input stream
+    ALREADY carries a watermark on ts (e.g. an upstream dropDuplicatesWithinWatermark) —
     re-defining one is disallowed by Spark."""
     gap_seconds = _parse_seconds(gap)
 
     def fn(key, pdfs, state):
         # runs only in Python workers; _assemble is also driven in-process
         _freeze_worker_heap()
-        return _assemble(
-            key, pdfs, state, gap_seconds, max_turns_per_bundle, max_open_turns
-        )
+        return _assemble(key, pdfs, state, gap_seconds, max_turns_per_bundle)
 
     t = transcripts.select("conv_id", "turn_idx", "role", "text", "ts")
     if watermark_delay is not None:
@@ -307,18 +260,33 @@ def assemble_sessions_stateful(
         .groupBy("conv_id")
         .applyInPandasWithState(
             fn,
-            outputStructType=BUNDLE_SCHEMA,
+            outputStructType=_SESSION_SCHEMA,
             stateStructType=STATE_SCHEMA,
             outputMode="append",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
+        .select(
+            "conv_id",
+            "n_turns",
+            bundle_json("turns").alias("bundle"),
+            "session_start",
+            "session_end",
+        )
     )
 
 
+_UNIT_SECONDS = {"second": 1, "minute": 60, "hour": 3600, "day": 86400}
+
+
 def _parse_seconds(s: str) -> int:
-    n, unit = s.split()
-    mult = {"second": 1, "seconds": 1, "minute": 60, "minutes": 60, "hour": 3600, "hours": 3600}
-    return int(n) * mult[unit]
+    parts = s.lower().split()
+    unit = parts[1].removesuffix("s") if len(parts) == 2 else ""
+    if unit in _UNIT_SECONDS and parts[0].isdigit():
+        return int(parts[0]) * _UNIT_SECONDS[unit]
+    raise ValueError(
+        f"session gap {s!r}: expected '<integer> <unit>' with unit "
+        "second(s), minute(s), hour(s) or day(s), e.g. '5 minutes'"
+    )
 
 
 def assemble_sessions_window(
@@ -334,12 +302,10 @@ def assemble_sessions_window(
     feature set (tests assert byte equality): session split where the
     inter-turn gap reaches ``gap`` (session_window merges windows that
     overlap, i.e. diff < gap), ``session_end`` = last ts + gap (the merged
-    window's end), bundle = compact JSON of turns sorted by
-    (turn_idx, role, text) — ``to_json`` with ``ignoreNullFields=false``
-    renders byte-identically to the state handler's ``json.dumps``.
-    Emission when the watermark passes the session end (append mode), the
-    same completion rule as the stateful drain; rows behind the watermark
-    are dropped (allowedLateness=ZERO).
+    window's end), bundle = ``bundle_json`` of the session's turns, the
+    renderer the stateful operator uses. Emission when the watermark passes
+    the session end (append mode), the same completion rule as the stateful
+    drain; rows behind the watermark are dropped (allowedLateness=ZERO).
 
     Reach for the STATEFUL operator only when its extras are needed:
     ``max_turns_per_bundle`` chunking of giant sessions, or custom per-drain
@@ -355,16 +321,12 @@ def assemble_sessions_window(
         t.groupBy("conv_id", F.session_window("ts", gap).alias("_w"))
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_turns"),
-            F.sort_array(
-                F.collect_list(F.struct("turn_idx", "role", "text"))
-            ).alias("_turns"),
+            F.collect_list(turns_struct()).alias("_turns"),
         )
         .select(
             "conv_id",
             "n_turns",
-            F.to_json(F.col("_turns"), {"ignoreNullFields": "false"}).alias(
-                "bundle"
-            ),
+            bundle_json("_turns").alias("bundle"),
             F.col("_w.start").alias("session_start"),
             F.col("_w.end").alias("session_end"),
         )

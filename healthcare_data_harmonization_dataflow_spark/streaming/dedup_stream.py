@@ -99,10 +99,11 @@ class StreamingDedupPipeline:
     def _index(self, spark: SparkSession) -> DataFrame:
         """Committed index rows only — an uncommitted (crashed / in-flight)
         batch's contribution is invisible, which is what makes the retry
-        recompute the same survivors."""
-        if not self.index_sink.committed_batches():
+        recompute the same survivors. Each marker is read once a batch."""
+        index = self.index_sink._read_history(spark)
+        if index is None:
             return spark.createDataFrame([], _INDEX_SCHEMA)
-        return self.index_sink.read_committed(spark)
+        return index
 
     # ----------------------------------------------------------- decision
     def _survivors(self, batch: DataFrame) -> DataFrame:
@@ -111,11 +112,10 @@ class StreamingDedupPipeline:
         result and both routes read the staged rows."""
         spark = batch.sparkSession
         index = self._index(spark)
-        history = None  # no committed docs yet: nothing to verify against
-        if (
-            self.verify_threshold is not None
-            and self.docs_sink.committed_batches()
-        ):
+        history = None  # None = no committed docs: nothing to verify against
+        if self.verify_threshold is not None:
+            history = self.docs_sink._read_history(spark)
+        if history is not None:
             # the index gates history exactly as it gates the band
             # candidates: a retried epoch's own docs may already be
             # committed to docs/ but not to index/, and must not reach the
@@ -123,9 +123,7 @@ class StreamingDedupPipeline:
             hist_ids = index.select(
                 F.col("doc_id").alias(self.id_col)
             ).distinct()
-            history = self.docs_sink.read_committed(spark).join(
-                hist_ids, self.id_col, "left_semi"
-            )
+            history = history.join(hist_ids, self.id_col, "left_semi")
         out = dedup_against_index(
             batch, index, history, self.verify_threshold,
             text_col=self.text_col, id_col=self.id_col,

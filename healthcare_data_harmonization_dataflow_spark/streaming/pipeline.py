@@ -32,7 +32,8 @@ from pyspark.sql import functions as F
 
 from ..model.errors import err_rows, io_error, ok_rows
 from ..operators.mapping_op import apply_mapping
-from .assembly import BUNDLE_SCHEMA, assemble_sessions_stateful
+from ..sources.transcripts import TRANSCRIPT_SCHEMA
+from .assembly import assemble_sessions_stateful
 from .metrics import observe_mapping
 from .sink import ExactlyOnceParquetSink
 
@@ -89,9 +90,7 @@ class HarmonizationPipeline:
         """Streaming source over a transcript table directory (parquet file
         source locally; spark.readStream.format('iceberg') on a cluster —
         same downstream plan either way)."""
-        reader = spark.readStream.schema(
-            "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
-        )
+        reader = spark.readStream.schema(TRANSCRIPT_SCHEMA)
         if self.max_files_per_trigger:
             # split pacing, the ListHL7v2Messages restriction-splitting analogue
             reader = reader.option("maxFilesPerTrigger", self.max_files_per_trigger)

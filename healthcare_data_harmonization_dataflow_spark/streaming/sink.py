@@ -364,6 +364,14 @@ class ExactlyOnceParquetSink:
         return [doc for _, doc in self._committed_markers()]
 
     def read_committed(self, spark: SparkSession) -> DataFrame:
+        got = self._read_history(spark)
+        if got is None:
+            return spark.createDataFrame([], "conv_id string")  # no history
+        return got
+
+    def _read_history(self, spark: SparkSession) -> "DataFrame | None":
+        """read_committed from one marker pass, or None when no commit
+        records a schema (nothing was ever committed)."""
         if self._spark is None:
             self._spark = spark
         fs = self._fs()
@@ -380,7 +388,7 @@ class ExactlyOnceParquetSink:
                     return spark.createDataFrame(
                         [], StructType.fromJson(json.loads(c["schema"]))
                     )
-            return spark.createDataFrame([], "conv_id string")  # no history
+            return None
         return spark.read.parquet(*[self._data_dir(b) for b in paths])
 
 

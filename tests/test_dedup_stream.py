@@ -121,6 +121,52 @@ def test_streaming_dedup_decides_once_per_batch(spark, tmp_path, monkeypatch):
     assert len(calls) == 2
 
 
+def test_streaming_dedup_reads_each_marker_once_per_batch(
+    spark, tmp_path, monkeypatch
+):
+    """Batch b's decision reads each sink's b committed markers once: the
+    index and (with verify_threshold) the docs history each come from one
+    marker pass, not a committed_batches() probe plus read_committed()."""
+    from healthcare_data_harmonization_dataflow_spark.streaming import sink
+
+    reads = []
+    real_read = sink._LocalFs.read_text
+
+    def counting_read(self, path):
+        if f"{os.sep}_commits{os.sep}" in path:
+            reads.append(path)
+        return real_read(self, path)
+
+    monkeypatch.setattr(sink._LocalFs, "read_text", counting_read)
+    per_batch = []
+    real_survivors = StreamingDedupPipeline._survivors
+
+    def counting_survivors(self, batch):
+        before = len(reads)
+        out = real_survivors(self, batch)
+        per_batch.append(
+            [
+                sum(f"{os.sep}{route}{os.sep}" in p for p in reads[before:])
+                for route in ("index", "docs")
+            ]
+        )
+        return out
+
+    monkeypatch.setattr(
+        StreamingDedupPipeline, "_survivors", counting_survivors
+    )
+    inp = _write_batches(spark, str(tmp_path))
+    pipe = StreamingDedupPipeline(
+        out_dir=str(tmp_path / "out"),
+        max_files_per_trigger=1,
+        verify_threshold=0.9,
+    )
+    _run(pipe, spark, inp, str(tmp_path / "ckpt"))
+    assert pipe.index_sink.committed_batches() == [0, 1]
+    # batch 0 has no history; batch 1 reads marker 0 of each sink once
+    assert per_batch == [[0, 0], [1, 1]]
+
+
 def test_streaming_dedup_replay_is_exactly_once(spark, tmp_path):
     inp = _write_batches(spark, str(tmp_path))
     out = str(tmp_path / "out")

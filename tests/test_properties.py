@@ -4,7 +4,7 @@ can't sweep:
 * the two mapping backends (Catalyst VARIANT vs Arrow/pandas closure) agree
   on ARBITRARY inputs, valid JSON or garbage (SURVEY §5: the engine's
   correctness story is backend-independent semantics);
-* the streaming session logic (_split_sessions/_render_bundle/_chunks) is
+* the streaming session logic (_split_sessions/_session_row/_chunks) is
   invariant under arrival permutation — the reordering guarantee the
   north-star demands ("stable turn ordering" for bit-exact bundles).
 """
@@ -21,7 +21,7 @@ from hypothesis import strategies as st
 from healthcare_data_harmonization_dataflow_spark.operators.mapping_op import apply_mapping
 from healthcare_data_harmonization_dataflow_spark.streaming.assembly import (
     _chunks,
-    _render_bundle,
+    _session_row,
     _split_sessions,
 )
 
@@ -98,12 +98,23 @@ def test_session_split_and_render_arrival_invariant(turns, rnd):
     shuffled = list(turns)
     rnd.shuffle(shuffled)
 
-    def bundle_set(ts):
+    def session_set(ts):
+        # the turns each emitted session carries, in the order bundle_json
+        # renders them, plus its bounds
+        rows = [
+            _session_row(("c",), s, 1) for s in _split_sessions(list(ts), gap_us)
+        ]
         return sorted(
-            _render_bundle(s) for s in _split_sessions(list(ts), gap_us)
+            (
+                sorted(r["turns"]),
+                r["n_turns"],
+                r["session_start"],
+                r["session_end"],
+            )
+            for r in rows
         )
 
-    assert bundle_set(turns) == bundle_set(shuffled)
+    assert session_set(turns) == session_set(shuffled)
 
 
 @settings(max_examples=200, deadline=None)

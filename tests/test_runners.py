@@ -152,3 +152,39 @@ def test_io_error_producers_match_schema(spark, tmp_path, producer):
     want = [(f.name, f.dataType) for f in IO_ERROR_SCHEMA.fields]
     for struct in _io_error_structs(producer, spark, tmp_path):
         assert [(f.name, f.dataType) for f in struct.fields] == want
+
+
+def test_submit_session_renders_utc_on_non_utc_cluster(spark):
+    """tools/submit_harmonization.py attaches to spark-submit's session and
+    sets the engine's SQL confs on it, so a cluster whose default time zone
+    is not UTC still renders error timestamps ('...Z') in UTC, as the
+    pandas mapping backend and the tests do."""
+    import importlib.util
+
+    from healthcare_data_harmonization_dataflow_spark.model.errors import ISO_FMT
+    from healthcare_data_harmonization_dataflow_spark.session import (
+        ENGINE_SQL_CONF,
+    )
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "submit_harmonization",
+        os.path.join(root, "tools", "submit_harmonization.py"),
+    )
+    submit = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(submit)
+
+    def epoch_rendered():
+        return spark.range(1).select(
+            F.date_format(F.timestamp_seconds(F.lit(0)), ISO_FMT).alias("t")
+        ).first()["t"]
+
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        assert epoch_rendered().startswith("1969-12-31T16:00:00")
+        assert submit.attach_session() is spark
+        for k, v in ENGINE_SQL_CONF.items():
+            assert spark.conf.get(k) == v, k
+        assert epoch_rendered().startswith("1970-01-01T00:00:00")
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")

@@ -1183,98 +1183,106 @@ def test_fanout_cleans_orphaned_staging_on_replay(spark, tmp_path):
     assert not os.path.exists(os.path.join(staging, "batch=5"))
 
 
-def test_state_guard_flushes_frozen_prefix_of_never_gapping_session():
-    """max_open_turns: a conversation that never gaps would otherwise grow
-    state without bound. Driving the _assemble handler directly with a
-    mocked GroupState: once the open session exceeds the cap, its FROZEN
-    prefix (ts < watermark) flushes early as normal bundle rows; turns at
-    or after the watermark stay buffered; nothing is lost or duplicated."""
-    import json as _json
+def test_all_assembly_paths_render_identical_bundles(spark, tmp_path):
+    """Streaming state_v1, the session_window assembly and both batch
+    plans (salted and unsalted) render bundles through one expression, so
+    control characters in role or text and a NULL text come out
+    byte-identical on all four: ESC as Jackson's \\u001B, a NULL field
+    as null."""
+    import time
 
-    import pandas as pd
-
+    from healthcare_data_harmonization_dataflow_spark.sources.transcripts import (
+        TRANSCRIPT_SCHEMA,
+    )
     from healthcare_data_harmonization_dataflow_spark.streaming.assembly import (
-        _assemble,
-        _unpack_turns,
+        assemble_sessions_stateful,
+        assemble_sessions_window,
     )
 
-    class MockGroupState:
-        def __init__(self):
-            self.v = None
-            self.wm_ms = 0
-            self.hasTimedOut = False
-            self.timeout = None
+    rows = [
+        ("c1", 2, "user", None, None, "2024-01-01 00:00:20"),
+        ("c1", 0, "user", "\x1b[0m", None, "2024-01-01 00:00:00"),
+        ("c1", 1, "assist\x0bant", "a\x0bb", None, "2024-01-01 00:00:10"),
+        ("c2", 1, "\x1b", "plain", None, "2024-01-01 00:01:05"),
+        ("c2", 0, "user", "\x0b\x1b", None, "2024-01-01 00:01:00"),
+    ]
+    df = _turns_df(spark, rows)
+    inp = os.path.join(str(tmp_path), "in")
+    _append_one_file(df, inp, time.time() - 100)
+    append_flush_sentinel(spark, inp)
 
-        @property
-        def exists(self):
-            return self.v is not None
-
-        @property
-        def get(self):
-            return self.v
-
-        def update(self, v):
-            self.v = v
-
-        def remove(self):
-            self.v = None
-
-        def getCurrentWatermarkMs(self):
-            return self.wm_ms
-
-        def setTimeoutTimestamp(self, ts):
-            self.timeout = ts
-
-    def batch(idxs, ts_seconds):
-        return iter(
-            [
-                pd.DataFrame(
-                    {
-                        "turn_idx": pd.array(idxs, dtype="int64"),
-                        "role": ["user"] * len(idxs),
-                        "text": [f"t{i}" for i in idxs],
-                        "ts": pd.to_datetime(ts_seconds, unit="s"),
-                    }
-                )
-            ]
+    outs = {}
+    for name, assemble in (
+        ("state_v1", assemble_sessions_stateful),
+        ("window", assemble_sessions_window),
+    ):
+        src = (
+            spark.readStream.schema(TRANSCRIPT_SCHEMA)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(inp)
         )
+        q = (
+            assemble(src, gap="2 minutes", watermark_delay="1 hour")
+            .writeStream.format("memory")
+            .queryName(f"paths_{name}")
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .option("checkpointLocation", str(tmp_path / f"ck_{name}"))
+            .start()
+        )
+        q.awaitTermination(300)
+        outs[name] = {
+            r["conv_id"]: r["bundle"]
+            for r in spark.table(f"paths_{name}").collect()
+            if r["conv_id"] != "conv-sentinel"
+        }
+    batch = df.select("conv_id", "turn_idx", "role", "text")
+    for salt in (None, 16):
+        outs[f"batch_salt_{salt}"] = {
+            r["conv_id"]: r["bundle"]
+            for r in assemble_bundles(batch, salt_buckets=salt).collect()
+        }
 
-    state = MockGroupState()
-    gap = 60  # never exceeded: consecutive turns 10s apart
-    emitted = []
-
-    def drive(idxs, ts_seconds, wm_s):
-        state.wm_ms = wm_s * 1000
-        for pdf in _assemble(
-            ("conv-hot",), batch(idxs, ts_seconds), state, gap,
-            max_turns_per_bundle=None, max_open_turns=10,
-        ):
-            emitted.extend(pdf.to_dict("records"))
-
-    # batch 1: 8 turns, under the cap -> all buffered, nothing emitted
-    drive(list(range(8)), [i * 10 for i in range(8)], wm_s=0)
-    assert emitted == [] and state.exists
-    # batch 2: 8 more ON-TIME turns (ts 80..150 >= wm 80; 16 total > cap
-    # 10); the watermark at t=80 freezes the first 8 turns (ts 0..70);
-    # flush = min(frozen=8, 16 - 10//2 = 11) = 8
-    drive(list(range(8, 16)), [i * 10 for i in range(8, 16)], wm_s=80)
-    assert len(emitted) == 1
-    frag = emitted[0]
-    assert frag["conv_id"] == "conv-hot" and frag["n_turns"] == 8
-    assert [t["turn_idx"] for t in _json.loads(frag["bundle"])] == list(range(8))
-    buffered = _unpack_turns(state.v[0])
-    assert len(buffered) == 8  # 16 - 8 flushed
-    assert min(t[0] for t in buffered) == 8  # only the tail remains
-    # batch 3: timeout drains the remainder; total coverage exact
-    state.hasTimedOut = True
-    for pdf in _assemble(("conv-hot",), iter([]), state, gap,
-                         max_turns_per_bundle=None, max_open_turns=10):
-        emitted.extend(pdf.to_dict("records"))
-    all_idx = sorted(
-        t["turn_idx"] for r in emitted for t in _json.loads(r["bundle"])
+    want = outs["batch_salt_None"]
+    assert want["c1"] == (
+        '[{"turn_idx":0,"role":"user","text":"\\u001B[0m"},'
+        '{"turn_idx":1,"role":"assist\\u000Bant","text":"a\\u000Bb"},'
+        '{"turn_idx":2,"role":"user","text":null}]'
     )
-    assert all_idx == list(range(16))  # every turn exactly once
-    assert not state.exists
+    for name, got in outs.items():
+        assert got == want, name
+
+
+@pytest.mark.parametrize(
+    "gap, seconds",
+    [
+        ("30 seconds", 30),
+        ("1 second", 1),
+        ("5 minutes", 300),
+        ("2 hours", 7200),
+        ("1 day", 86400),
+        ("3 days", 259200),
+        ("1 minute 30 seconds", None),
+        ("1.5 minutes", None),
+        ("-1 minutes", None),
+        ("5 fortnights", None),
+        ("5", None),
+        ("", None),
+    ],
+)
+def test_session_gap_parsing(gap, seconds):
+    """The state_v1 session gap is '<integer> <unit>' with unit second(s),
+    minute(s), hour(s) or day(s); anything else is a ValueError that names
+    the accepted form."""
+    from healthcare_data_harmonization_dataflow_spark.streaming.assembly import (
+        _parse_seconds,
+    )
+
+    if seconds is None:
+        with pytest.raises(ValueError, match="expected '<integer> <unit>'"):
+            _parse_seconds(gap)
+    else:
+        assert _parse_seconds(gap) == seconds
 
 
 def test_sink_scalar_json_marker_counts_as_uncommitted(spark, tmp_path):

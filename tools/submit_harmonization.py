@@ -27,6 +27,24 @@ from __future__ import annotations
 import argparse
 
 
+def attach_session():
+    """spark-submit's session (it owns master, sizing and the checkpoint
+    manager) with the engine's SQL confs, UTC timestamps among them."""
+    from pyspark.sql import SparkSession
+
+    from healthcare_data_harmonization_dataflow_spark.session import (
+        ENGINE_SQL_CONF,
+    )
+
+    spark = (
+        SparkSession.builder.appName("transcript-harmonization")
+        .config(map=ENGINE_SQL_CONF)
+        .getOrCreate()
+    )
+    spark.sparkContext.setLogLevel("WARN")
+    return spark
+
+
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--input", required=True, help="transcript stream path/table")
@@ -63,8 +81,6 @@ def main() -> None:
     args = ap.parse_args()
 
     # imports deferred so --help works without a JVM
-    from pyspark.sql import SparkSession
-
     from healthcare_data_harmonization_dataflow_spark.streaming.metrics import (
         MetricsListener,
     )
@@ -72,9 +88,7 @@ def main() -> None:
         HarmonizationPipeline,
     )
 
-    # spark-submit owns master/deploy-mode/executor sizing; just attach
-    spark = SparkSession.builder.appName("transcript-harmonization").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = attach_session()
 
     from healthcare_data_harmonization_dataflow_spark.provider.mapping import (
         load_mapping_config,
