@@ -1190,14 +1190,8 @@ def q_budget_select(spark, sf_dir):
 # CCNet trains the LM on a clean reference corpus; the md5-prefix gate on
 # doc_id is the reproducible sandbox stand-in (same gate idiom as
 # stratified_sample: idempotent, engine-exact).
-_LM_TRAIN_SPARK = (
-    "cast(conv(substring(md5(cast(doc_id as string)), 1, 15), 16, 10) "
-    "as bigint) % 10 < 3"
-)
-_LM_TRAIN_DUCK = (
-    "CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) "
-    "AS BIGINT) % 10 < 3"
-)
+_LM_TRAIN_SPARK = T.md5_int_spark(15).format(e="cast(doc_id as string)") + " % 10 < 3"
+_LM_TRAIN_DUCK = T.md5_int_duck(15).format(e="CAST(doc_id AS VARCHAR)") + " % 10 < 3"
 # Bucket thresholds sized to the synthetic corpus's score distribution
 # (26k-43k ppm over its ~40-word vocab); all three buckets non-empty at
 # sf0.001/sf0.01/sf0.1 (verified, not guessed).
@@ -1532,7 +1526,7 @@ def _corpus_curate_v2_oracle() -> str:
         sampled AS (
           SELECT s.doc_id, s.text FROM scrubbed s
           JOIN rates r USING (lang)
-          WHERE CAST(concat('0x', substr(md5(CAST(s.doc_id AS VARCHAR)), 1, 13)) AS BIGINT) % 1000
+          WHERE {T.md5_int_duck(13).format(e="CAST(s.doc_id AS VARCHAR)")} % 1000
                 < r.keep_permille),
         t AS (
           SELECT doc_id,

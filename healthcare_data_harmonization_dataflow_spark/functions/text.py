@@ -29,6 +29,20 @@ FP_P = 2147483647  # fingerprint modulus (2^31-1)
 FP_MULT = 31
 
 
+# ------------------------------------------------------ cross-engine hash
+def md5_int_spark(width: int) -> str:
+    """Spark SQL template for the cross-engine hash: ``.format(e=<string
+    expr>)`` gives the first ``width`` hex digits of md5(e) as an int64 —
+    15 (60 bits) for tokens, 13 (52 bits) for id gates. ``md5_int_duck``
+    is the same value in DuckDB."""
+    return f"cast(conv(substring(md5({{e}}), 1, {width}), 16, 10) as bigint)"
+
+
+def md5_int_duck(width: int) -> str:
+    """DuckDB spelling of ``md5_int_spark(width)``."""
+    return f"CAST(concat('0x', substr(md5({{e}}), 1, {width})) AS BIGINT)"
+
+
 def _in_list(var: str, words: tuple[str, ...]) -> str:
     return "(" + " OR ".join(f"{var} = '{w}'" for w in words) + ")"
 
@@ -121,14 +135,14 @@ def fingerprint_col() -> Column:
     """Order-sensitive rolling document fingerprint:
     fold over words of (acc*31 + md5_int(word) mod P) mod P.
     Deterministic, sequence-aware (unlike a bag-of-words hash)."""
-    wh = "cast(conv(substring(md5(w),1,15),16,10) as bigint)"
+    wh = md5_int_spark(15).format(e="w")
     return F.expr(
         f"aggregate({_SPARK_WORDS}, 0L, (acc, w) -> (acc * {FP_MULT} + ({wh} % {FP_P})) % {FP_P})"
     ).alias("fingerprint")
 
 
 def fingerprint_oracle_sql() -> str:
-    wh = "CAST(concat('0x', substr(md5(w),1,15)) AS BIGINT)"
+    wh = md5_int_duck(15).format(e="w")
     return f"""
     SELECT doc_id,
            list_reduce(

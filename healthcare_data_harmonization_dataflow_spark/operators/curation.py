@@ -29,6 +29,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from healthcare_data_harmonization_dataflow_spark.functions.text import (
+    md5_int_duck,
+    md5_int_spark,
+)
+
 # Shared Java/RE2-compatible PII patterns (both dialects: no lookaround, no
 # backrefs, ASCII \b). Replacement order matters: emails first (their local
 # part may contain digit runs), then SSNs (the more specific dashed-digit
@@ -151,12 +156,7 @@ def stratified_sample(
     standard language/quality-rebalancing pass of a training-data pipeline.
     Strata absent from ``rates`` are DROPPED (permille 0).
     """
-    gate = (
-        F.conv(
-            F.substring(F.md5(F.col(id_col).cast("string")), 1, 13), 16, 10
-        ).cast("long")
-        % 1000
-    )
+    gate = F.expr(md5_int_spark(13).format(e=f"cast(`{id_col}` as string)")) % 1000
     # hygiene: only the two relevant columns join in (extra rates columns
     # must not leak into the corpus), and duplicate stratum rows would
     # duplicate corpus rows via join fan-out
@@ -185,7 +185,7 @@ def stratified_sample_oracle_sql(
         WITH rates({stratum_col}, keep_permille) AS (VALUES {vals})
         SELECT d.* FROM documents d
         JOIN rates r USING ({stratum_col})
-        WHERE CAST(concat('0x', substr(md5(CAST(d.{id_col} AS VARCHAR)), 1, 13)) AS BIGINT) % 1000
+        WHERE {md5_int_duck(13).format(e=f"CAST(d.{id_col} AS VARCHAR)")} % 1000
               < r.keep_permille
     """
 
@@ -642,12 +642,7 @@ def mixture_sample(
             f") * 1E6) as bigint)"
         ).alias("keep_ppm"),
     )
-    gate = (
-        F.conv(
-            F.substring(F.md5(F.col(id_col).cast("string")), 1, 13), 16, 10
-        ).cast("long")
-        % 1_000_000
-    )
+    gate = F.expr(md5_int_spark(13).format(e=f"cast(`{id_col}` as string)")) % 1_000_000
     return (
         docs.join(F.broadcast(rates), "source", "inner")
         .where(gate < F.col("keep_ppm"))
@@ -690,7 +685,7 @@ def mixture_sample_oracle_sql(
     )
     SELECT d.doc_id, d.source, d.lang, d.n_chars, r.keep_ppm
     FROM {table} d JOIN r USING (source)
-    WHERE CAST(concat('0x', substr(md5(CAST(d.{id_col} AS VARCHAR)), 1, 13)) AS BIGINT) % 1000000
+    WHERE {md5_int_duck(13).format(e=f"CAST(d.{id_col} AS VARCHAR)")} % 1000000
           < r.keep_ppm
     """
 
@@ -766,7 +761,7 @@ def quality_classifier(
         sw.update(shape_weights)
     ws = _WS_SPARK_T.format(col=text_col)
     arr = "array(" + ", ".join(f"{w + QC_TOKEN_SHIFT}L" for w in bw) + ")"
-    bucket = f"cast(conv(substring(md5(w), 1, 15), 16, 10) as bigint) % {QC_N_BUCKETS}"
+    bucket = f"{md5_int_spark(15).format(e='w')} % {QC_N_BUCKETS}"
     tok_sum = f"aggregate({ws}, 0L, (acc, w) -> acc + element_at({arr}, cast({bucket} as int) + 1))"
     n_words = f"size({ws})"
     n_stop = f"size(filter({ws}, w -> {_stop_pred('w')}))"
@@ -795,7 +790,7 @@ def quality_classifier_oracle_sql(
     bw = _qc_default_bucket_weights()
     sw = QC_DEFAULT_SHAPE_WEIGHTS
     arr = "[" + ", ".join(str(w + QC_TOKEN_SHIFT) for w in bw) + "]"
-    bucket = f"CAST(concat('0x', substr(md5(w), 1, 15)) AS BIGINT) % {QC_N_BUCKETS}"
+    bucket = f"{md5_int_duck(15).format(e='w')} % {QC_N_BUCKETS}"
     tok_sum = (
         f"coalesce(list_sum(list_transform({_WS_DUCK}, "
         f"w -> list_extract({arr}, CAST({bucket} AS INT) + 1))), 0)"
@@ -1049,9 +1044,6 @@ LM_ALPHA_PPM = 400_000  # Stupid-Backoff discount (0.4) quantized to ppm
 LM_HEAD_PPM = 260_000  # lm_bucket thresholds on the integer-ppm score
 LM_MIDDLE_PPM = 130_000
 
-_H64_SPARK_T = "cast(conv(substring(md5({e}), 1, 15), 16, 10) as bigint)"
-_H64_DUCK_T = "CAST(concat('0x', substr(md5({e}), 1, 15)) AS BIGINT)"
-
 # sequence(2, n) DESCENDS for n < 2 in Spark (sequence(2,1) = [2,1]) — the
 # guard is load-bearing, not defensive.
 _BIGRAMS_SPARK_T = (
@@ -1089,7 +1081,7 @@ def lm_quality(
     (id_col, lm_score_ppm, lm_bucket) — one row per input document.
     """
     ws = _WS_SPARK_T.format(col=text_col)
-    h = _H64_SPARK_T.format
+    h = md5_int_spark(15).format
     tr = (train_docs if train_docs is not None else docs).select(
         F.expr(ws).alias("ws")
     )
@@ -1181,7 +1173,7 @@ def lm_quality_oracle_sql(
     64-bit hashes, same count-desc/hash-asc prune, same integer-ppm
     Stupid-Backoff, same floored-mean document score. ``train_pred`` is
     the SQL predicate selecting the training slice of ``table``."""
-    hd = _H64_DUCK_T.format
+    hd = md5_int_duck(15).format
     bigr = "list_transform(generate_series(2, len(ws)), i -> ws[i-1] || ' ' || ws[i])"
     return f"""
     WITH train AS (SELECT {_WS_DUCK} AS ws FROM {table} WHERE {train_pred}),
@@ -1283,11 +1275,11 @@ def dsir_log_ratios(
 
 
 def _dsir_bucket_spark(tok: str, n_buckets: int) -> str:
-    return f"cast({_H64_SPARK_T.format(e=tok)} % {n_buckets} as int)"
+    return f"cast({md5_int_spark(15).format(e=tok)} % {n_buckets} as int)"
 
 
 def _dsir_bucket_duck(tok: str, n_buckets: int) -> str:
-    return f"CAST({_H64_DUCK_T.format(e=tok)} % {n_buckets} AS INT)"
+    return f"CAST({md5_int_duck(15).format(e=tok)} % {n_buckets} AS INT)"
 
 
 def dsir_fit(

@@ -21,9 +21,8 @@ Scale design notes (the part that matters at 100 TB):
   brute force. The DuckDB oracles verify this.
 
 Cross-engine determinism: token hash = first 15 hex digits of md5 as int64
-(identical in Spark ``conv(substr(md5(w),1,15),16,10)`` and DuckDB
-``CAST('0x'||substr(md5(w),1,15) AS BIGINT)``), so every signature matches
-the oracle bit-for-bit.
+(``functions.text.md5_int_spark(15)``, identical to DuckDB's
+``md5_int_duck(15)``), so every signature matches the oracle bit-for-bit.
 """
 
 from __future__ import annotations
@@ -31,6 +30,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from healthcare_data_harmonization_dataflow_spark.functions.text import (
+    md5_int_duck,
+    md5_int_spark,
+)
 
 # MinHash parameters (shared with the oracle SQL generators)
 MINHASH_P = 2147483647  # 2^31 - 1, Mersenne prime
@@ -42,14 +46,6 @@ _RNG_B = [12345, 67891, 24680, 13579, 11111, 22222, 33333, 44444]
 SIMHASH_BITS = 32
 SIMHASH_HAM = 3  # pairs within this Hamming distance are near-dups
 SIMHASH_CHUNKS = SIMHASH_HAM + 1  # pigeonhole: exact candidate generation
-
-
-def _spark_wordhash(w: str = "w") -> str:
-    return f"cast(conv(substring(md5({w}),1,15),16,10) as bigint)"
-
-
-def _duck_wordhash(w: str = "w") -> str:
-    return f"CAST(concat('0x', substr(md5({w}),1,15)) AS BIGINT)"
 
 
 _SPARK_WORDS = "array_distinct(filter(split(lower(text), ' '), w -> w != ''))"
@@ -83,7 +79,7 @@ def minhash_signature(docs: DataFrame, text_col: str = "text", id_col: str = "do
     Token hashes (md5 -> int64) are materialized ONCE into an array column;
     the K permutations are then cheap integer transforms over it — K times
     less hashing than recomputing md5 per hash function."""
-    wh = _spark_wordhash("w")
+    wh = md5_int_spark(15).format(e="w")
     with_hashes = docs.select(
         F.col(id_col),
         F.expr(f"transform({_SPARK_WORDS}, w -> {wh} % {MINHASH_P})").alias("_hs"),
@@ -281,7 +277,7 @@ def minhash_lsh_cluster_edges_oracle_sql() -> str:
 
 
 def minhash_signature_oracle_sql() -> str:
-    wh = _duck_wordhash("w")
+    wh = md5_int_duck(15).format(e="w")
     terms = ",\n      ".join(
         f"list_min(list_transform({_DUCK_WORDS}, "
         f"w -> ({_RNG_A[i]} * ({wh} % {MINHASH_P}) + {_RNG_B[i]}) % {MINHASH_P})) AS mh{i}"
@@ -608,7 +604,7 @@ def incremental_dedup_oracle_sql(
 def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Per-doc 32-bit SimHash, per-row (no shuffle). Bit j is set when more
     than half the distinct tokens have bit j set in their hash."""
-    wh = _spark_wordhash("w")
+    wh = md5_int_spark(15).format(e="w")
     bit_terms = " + ".join(
         f"(case when 2 * size(filter(_hs, h -> (h >> {j}) & 1 = 1)) > size(_hs) "
         f"then cast({1 << j} as bigint) else 0L end)"
@@ -691,7 +687,7 @@ def simhash_pairs(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
 
 def simhash_oracle_sql() -> str:
-    wh = _duck_wordhash("w")
+    wh = md5_int_duck(15).format(e="w")
     bit_terms = " + ".join(
         f"(CASE WHEN 2 * len(list_filter(_hs, h -> (h >> {j}) & 1 = 1)) > len(_hs) "
         f"THEN CAST({1 << j} AS BIGINT) ELSE 0 END)"

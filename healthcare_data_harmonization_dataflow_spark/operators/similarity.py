@@ -13,8 +13,20 @@ bucketed variant as the scale path. Scale notes:
   ~2^R-fold, then exact re-ranking inside the bucket.
 
 Determinism: scores are computed on floor-quantized int64 components
-(``floor(x*1000)``), making ranking reproducible across engines (float32
-summation order would not be) — the DuckDB oracle matches bit-for-bit.
+(``floor(double(x) * 1000)``), making ranking reproducible across engines
+(float32 summation order would not be) — the DuckDB oracle matches
+bit-for-bit. The float32 component is widened to double BEFORE the
+multiply: a 24-bit mantissa times 1000 is exact in double, whereas a
+float32 product rounds (DuckDB computes FLOAT * INTEGER in float32) and
+flips the floor of values such as 0.1f * 1000.
+
+Each cross-engine decision is spelled once per dialect and shared by every
+operator (Spark) or every oracle (DuckDB): the quantized vector
+(``_qe_expr`` / ``_QZ_DUCK``), the exact top-k re-rank (``_rescore`` +
+``_topk`` / ``_topk_duck``), the quantized cosine (``_normed`` +
+``_cosine_ppm`` / ``_NORMS_DUCK`` + ``_cosine_ppm_duck``) and the IVF cell
+assignment (``_ivf_cells`` / ``_cells_duck``). The oracles share fragments
+only with each other, never with the Spark side.
 """
 
 from __future__ import annotations
@@ -25,11 +37,74 @@ from pyspark.sql.window import Window
 
 QUANT = 1000  # fixed-point quantization for cross-engine-exact scores
 
-_SPARK_QDOT = (
-    "aggregate(zip_with(a.embedding, b.embedding, "
-    f"(x, y) -> cast(floor(x * {QUANT}) as bigint) * cast(floor(y * {QUANT}) as bigint)), "
-    "0L, (acc, v) -> acc + v)"
-)
+
+def _qe_expr(dim: int | None) -> str:
+    """Quantized-int64 copy of the embedding, guarded by a dim assertion
+    (``dim=None``: no fixed dimension).
+
+    The assert rides INSIDE the expression (not a dropped side column, which
+    Catalyst would prune away): a vector of the wrong dimensionality fails
+    the job loudly instead of null-padding every plane dot and silently
+    landing in bucket 0."""
+    qe = f"transform(embedding, x -> cast(floor(cast(x as double) * {QUANT}) as bigint))"
+    if dim is None:
+        return qe
+    return (
+        f"case when assert_true(size(embedding) = {dim}, "
+        f"'embedding dimension != {dim}') is null then {qe} end"
+    )
+
+
+_QDOT_QE = "aggregate(zip_with(_qa, _qb, (x, y) -> x * y), 0L, (acc, v) -> acc + v)"
+
+
+def _quantized(embeddings: DataFrame, id_col: str, dim: int | None, *keep) -> DataFrame:
+    """(id, *keep, _qe): the id, any ``keep`` columns and the quantized vector."""
+    return embeddings.select(F.col(id_col), *keep, F.expr(_qe_expr(dim)).alias("_qe"))
+
+
+def _side(q: DataFrame, id_col: str, id_as: str, s: str) -> DataFrame:
+    """One side of a scored pair: ``id_col`` as ``id_as`` and ``_qe``/``qn``
+    as ``_q{s}``/``qn{s}`` (``s`` is ``a`` or ``b``, as ``_QDOT_QE`` reads)."""
+    return q.withColumnsRenamed({id_col: id_as, "_qe": f"_q{s}", "qn": f"qn{s}"})
+
+
+def _maybe_broadcast(df: DataFrame, small: bool) -> DataFrame:
+    """Broadcast-hint the query side only when the caller vouches it is
+    small; an all-pairs caller (queries ~ corpus) passes small=False and
+    gets ordinary shuffle joins instead of an executor-OOM-sized hint."""
+    return F.broadcast(df) if small else df
+
+
+def _rescore(
+    cand: DataFrame,
+    embeddings: DataFrame,
+    queries: DataFrame,
+    id_col: str,
+    dim: int,
+    small_queries: bool,
+) -> DataFrame:
+    """Exact quantized score of each distinct candidate (query_id,
+    neighbor_id) pair: vectors are fetched only for pairs that survived
+    candidate generation, so each pair scores exactly once."""
+    qa = _side(_quantized(queries, id_col, dim), id_col, "query_id", "a")
+    qb = _side(_quantized(embeddings, id_col, dim), id_col, "neighbor_id", "b")
+    return (
+        cand.join(_maybe_broadcast(qa, small_queries), "query_id")
+        .join(qb, "neighbor_id")
+        .select("query_id", "neighbor_id", F.expr(_QDOT_QE).alias("qdot"))
+    )
+
+
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """Exact top-k per query: rank by (qdot DESC, neighbor_id ASC), keep
+    rank <= k — the tie-break makes the cut engine-independent."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("qdot"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"), "qdot")
+    )
 
 
 def brute_force_topk(
@@ -41,33 +116,45 @@ def brute_force_topk(
     """Exact top-k neighbors for each query vector (excluding itself).
 
     ``queries`` is expected small (it is broadcast); the corpus side streams
-    through the nested-loop join without shuffling.
-    """
-    pairs = F.broadcast(queries.alias("a")).crossJoin(embeddings.alias("b")).filter(
-        F.col(f"a.{id_col}") != F.col(f"b.{id_col}")
+    through the nested-loop join without shuffling. There is no fixed
+    dimension: a corpus vector whose dimension differs from the query's
+    fails the job instead of scoring a null-padded ``zip_with``."""
+    qa = _side(_quantized(queries, id_col, None), id_col, "query_id", "a")
+    qb = _side(_quantized(embeddings, id_col, None), id_col, "neighbor_id", "b")
+    same_dim = (
+        "assert_true(size(_qa) = size(_qb), "
+        "'embedding dimension != query dimension') is null"
     )
-    scored = pairs.select(
-        F.col(f"a.{id_col}").alias("query_id"),
-        F.col(f"b.{id_col}").alias("neighbor_id"),
-        F.expr(_SPARK_QDOT).alias("qdot"),
+    scored = (
+        F.broadcast(qa)
+        .crossJoin(qb)
+        .filter((F.col("query_id") != F.col("neighbor_id")) & F.expr(same_dim))
+        .select("query_id", "neighbor_id", F.expr(_QDOT_QE).alias("qdot"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("qdot"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"), "qdot")
-    )
+    return _topk(scored, k)
 
 
-def brute_force_topk_oracle_sql(k: int = 5, n_queries: int = 10) -> str:
+# ------------------------------------------------------ DuckDB oracle parts
+_QZ_DUCK = f"""qz AS (SELECT vec_id,
+                  list_transform(embedding,
+                                 x -> CAST(floor(CAST(x AS DOUBLE) * {QUANT}) AS BIGINT))
+                    AS qe
+           FROM embeddings)"""
+
+
+def _qdot_duck(a: str, b: str) -> str:
+    return f"list_sum(list_transform(list_zip({a}, {b}), p -> p[1] * p[2]))"
+
+
+def _topk_duck(k: int) -> str:
+    """Oracle tail shared by the three top-k oracles: exact quantized score
+    of every (query_id, neighbor_id) pair in CTE ``cand``, ranked by
+    (qdot DESC, neighbor_id ASC), rank <= k."""
     return f"""
-    WITH q AS (SELECT * FROM embeddings WHERE vec_id < {n_queries}),
     scored AS (
-      SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-             list_sum(list_transform(list_zip(a.embedding, b.embedding),
-                      p -> CAST(floor(p[1] * {QUANT}) AS BIGINT)
-                         * CAST(floor(p[2] * {QUANT}) AS BIGINT))) AS qdot
-      FROM q a JOIN embeddings b ON a.vec_id != b.vec_id
+      SELECT c.query_id, c.neighbor_id, {_qdot_duck("qa.qe", "qb.qe")} AS qdot
+      FROM cand c JOIN qz qa ON qa.vec_id = c.query_id
+                  JOIN qz qb ON qb.vec_id = c.neighbor_id
     )
     SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank,
            CAST(qdot AS BIGINT) AS qdot FROM (
@@ -76,6 +163,17 @@ def brute_force_topk_oracle_sql(k: int = 5, n_queries: int = 10) -> str:
       FROM scored
     ) WHERE rank <= {k}
     """
+
+
+def brute_force_topk_oracle_sql(k: int = 5, n_queries: int = 10) -> str:
+    return f"""
+    WITH {_QZ_DUCK},
+    cand AS (
+      SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id
+      FROM qz a JOIN qz b ON a.vec_id != b.vec_id
+      WHERE a.vec_id < {n_queries}
+    ),
+    {_topk_duck(k)}"""
 
 
 # ------------------------------------------------------- LSH-bucketed ANN
@@ -103,27 +201,6 @@ def _plane_weights(p: int, dim: int = LSH_DIM) -> list[int]:
         state = (state * 1103515245 + 12345) & 0x7FFFFFFF
         out.append(state % 2001 - 1000)
     return out
-
-
-def _qe_expr(dim: int) -> str:
-    """Quantized-int64 copy of the embedding, guarded by a dim assertion.
-
-    The assert rides INSIDE the expression (not a dropped side column, which
-    Catalyst would prune away): a vector of the wrong dimensionality fails
-    the job loudly instead of null-padding every plane dot and silently
-    landing in bucket 0."""
-    return (
-        f"case when assert_true(size(embedding) = {dim}, "
-        f"'lsh: embedding dimension != {dim}') is null "
-        f"then transform(embedding, x -> cast(floor(x * {QUANT}) as bigint)) end"
-    )
-
-
-_QDOT_QE = "aggregate(zip_with(_qa, _qb, (x, y) -> x * y), 0L, (acc, v) -> acc + v)"
-
-
-def _quantized(embeddings: DataFrame, id_col: str, dim: int) -> DataFrame:
-    return embeddings.select(F.col(id_col), F.expr(_qe_expr(dim)).alias("_qe"))
 
 
 def lsh_band_keys(
@@ -173,13 +250,6 @@ def lsh_band_keys(
     )
 
 
-def _maybe_broadcast(df: DataFrame, small: bool) -> DataFrame:
-    """Broadcast-hint the query side only when the caller vouches it is
-    small; an all-pairs caller (queries ~ corpus) passes small=False and
-    gets ordinary shuffle joins instead of an executor-OOM-sized hint."""
-    return F.broadcast(df) if small else df
-
-
 def lsh_topk(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -210,26 +280,7 @@ def lsh_topk(
         .select("query_id", F.col(id_col).alias("neighbor_id"))
         .distinct()
     )
-    qa = _maybe_broadcast(
-        _quantized(queries, id_col, dim)
-        .withColumnRenamed(id_col, "query_id")
-        .withColumnRenamed("_qe", "_qa"),
-        small_queries,
-    )
-    qb = _quantized(embeddings, id_col, dim).withColumnRenamed(
-        id_col, "neighbor_id"
-    ).withColumnRenamed("_qe", "_qb")
-    scored = (
-        cand.join(qa, "query_id")
-        .join(qb, "neighbor_id")
-        .select("query_id", "neighbor_id", F.expr(_QDOT_QE).alias("qdot"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("qdot"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"), "qdot")
-    )
+    return _topk(_rescore(cand, embeddings, queries, id_col, dim, small_queries), k)
 
 
 def _band_bucket_duck(band: int, rows: int, dim: int) -> str:
@@ -250,10 +301,7 @@ def _banded_cte_duck(bands: int, rows: int, dim: int) -> str:
         f"{_band_bucket_duck(b, rows, dim)} AS band{b}" for b in range(bands)
     )
     return f"""
-    qz AS (SELECT vec_id,
-                  list_transform(embedding, x -> CAST(floor(x * {QUANT}) AS BIGINT))
-                    AS qe
-           FROM embeddings),
+    {_QZ_DUCK},
     bucketed AS (SELECT vec_id, qe, {band_cols} FROM qz)"""
 
 
@@ -275,23 +323,43 @@ def lsh_topk_oracle_sql(
       SELECT DISTINCT a.vec_id AS query_id, b.vec_id AS neighbor_id
       FROM q a JOIN bucketed b ON a.vec_id != b.vec_id AND ({any_band})
     ),
-    scored AS (
-      SELECT c.query_id, c.neighbor_id,
-             list_sum(list_transform(list_zip(qa.qe, qb.qe),
-                      p -> p[1] * p[2])) AS qdot
-      FROM cand c JOIN qz qa ON qa.vec_id = c.query_id
-                  JOIN qz qb ON qb.vec_id = c.neighbor_id
-    )
-    SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank,
-           CAST(qdot AS BIGINT) AS qdot FROM (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY qdot DESC, neighbor_id ASC) AS rank
-      FROM scored
-    ) WHERE rank <= {k}
-    """
+    {_topk_duck(k)}"""
 
 
 # ------------------------------------------------- embedding near-dup pairs
+_QNORM = "aggregate(transform(_qe, x -> x * x), 0L, (acc, v) -> acc + v)"
+
+
+def _normed(embeddings: DataFrame, id_col: str, dim: int, *keep) -> DataFrame:
+    """(id, *keep, _qe, qn): the quantized vector and its squared norm.
+
+    ``dim`` is bounded at 2048: the int64 norm product qna*qnb can reach
+    (dim * QUANT^2)^2 and overflows past that bound — where Spark's
+    non-ANSI multiply would silently WRAP (garbage cosines) while the
+    DuckDB oracle errors. Fail loudly instead."""
+    if dim > 2048:
+        raise ValueError(
+            f"dim={dim} exceeds 2048 — the int64 norm product would overflow "
+            "(Spark wraps silently; the oracle errors); reduce QUANT or split "
+            "the dimensions"
+        )
+    return _quantized(embeddings, id_col, dim, *keep).withColumn("qn", F.expr(_QNORM))
+
+
+def _cosine_ppm(pairs: DataFrame) -> DataFrame:
+    """``pairs`` (two ``_normed`` sides, see ``_side``) with the exact
+    quantized cosine in ppm, ``floor(qdot * 1e6 / sqrt(qna * qnb))``.
+
+    Cross-engine exactness: dot and squared norms are integer; the only
+    float steps are one product, one IEEE-correctly-rounded sqrt, one
+    division and one floor — all exactly rounded, hence bit-identical on
+    any IEEE-754 engine. Zero-norm vectors never pair."""
+    nprod = (F.col("qna") * F.col("qnb")).cast("double")
+    return pairs.filter((F.col("qna") > 0) & (F.col("qnb") > 0)).withColumn(
+        "cosine_ppm", F.floor(F.expr(_QDOT_QE) * 1000000.0 / F.sqrt(nprod)).cast("long")
+    )
+
+
 def embedding_cosine_pairs(
     embeddings: DataFrame,
     threshold_ppm: int = 900_000,
@@ -308,23 +376,10 @@ def embedding_cosine_pairs(
     work per band is ~N^2/2^rows, so ``rows`` scales the bucket space with
     the corpus while ``bands`` buys recall. Candidate id-pairs are
     distinct'ed BEFORE vectors are fetched, so multi-band collisions score
-    once. Cross-engine exactness of the score: components quantize to int64
-    (floor(x*QUANT)); dot and squared norms are integer; the only float
-    steps are one product, one IEEE-correctly-rounded sqrt, one division
-    and one floor — all exactly rounded, hence bit-identical on any
-    IEEE-754 engine. Zero-norm vectors never pair.
-
-    ``dim`` is bounded at 2048: the int64 norm product qn1*qn2 can reach
-    (dim * QUANT^2)^2 and overflows past that bound — where Spark's
-    non-ANSI multiply would silently WRAP (garbage cosines) while the
-    DuckDB oracle errors. Fail loudly instead.
+    once. The score is the exact quantized cosine (``_cosine_ppm``);
+    ``dim`` is bounded at 2048 (``_normed``).
     """
-    if dim > 2048:
-        raise ValueError(
-            f"embedding_cosine_pairs: dim={dim} exceeds 2048 — the int64 "
-            "norm product would overflow (Spark wraps silently; the oracle "
-            "errors); reduce QUANT or split the dimensions"
-        )
+    qz = _normed(embeddings, id_col, dim)
     keys = lsh_band_keys(embeddings, bands, rows, dim, id_col)
     a, b = keys.alias("a"), keys.alias("b")
     cand = (
@@ -339,42 +394,28 @@ def embedding_cosine_pairs(
         )
         .distinct()
     )
-    qz = _quantized(embeddings, id_col, dim).withColumn(
-        "qn", F.expr("aggregate(transform(_qe, x -> x * x), 0L, (acc, v) -> acc + v)")
-    )
-    scored = (
-        cand.join(
-            qz.select(
-                F.col(id_col).alias("vec1"),
-                F.col("_qe").alias("_qa"),
-                F.col("qn").alias("qn1"),
-            ),
-            "vec1",
+    scored = _cosine_ppm(
+        cand.join(_side(qz, id_col, "vec1", "a"), "vec1").join(
+            _side(qz, id_col, "vec2", "b"), "vec2"
         )
-        .join(
-            qz.select(
-                F.col(id_col).alias("vec2"),
-                F.col("_qe").alias("_qb"),
-                F.col("qn").alias("qn2"),
-            ),
-            "vec2",
-        )
-        .filter((F.col("qn1") > 0) & (F.col("qn2") > 0))
-        .select(
-            "vec1",
-            "vec2",
-            F.expr(_QDOT_QE).alias("qdot"),
-            (F.col("qn1") * F.col("qn2")).alias("nprod"),
-        )
-    )
-    scored = scored.withColumn(
-        "cosine_ppm",
-        F.floor(F.col("qdot") * 1000000.0 / F.sqrt(F.col("nprod").cast("double"))).cast(
-            "long"
-        ),
     )
     return scored.filter(F.col("cosine_ppm") >= threshold_ppm).select(
         "vec1", "vec2", "cosine_ppm"
+    )
+
+
+_NORMS_DUCK = """norms AS (
+      SELECT vec_id, qe, list_sum(list_transform(qe, x -> x * x)) AS qn
+      FROM qz
+    )"""
+
+
+def _cosine_ppm_duck(a: str, b: str) -> str:
+    """Exact quantized cosine (ppm) of ``norms`` rows ``a`` and ``b``; the
+    caller keeps ``a.qn > 0 AND b.qn > 0``."""
+    return (
+        f"floor({_qdot_duck(f'{a}.qe', f'{b}.qe')} * 1000000.0"
+        f" / sqrt(CAST({a}.qn * {b}.qn AS DOUBLE)))"
     )
 
 
@@ -387,56 +428,25 @@ def embedding_cosine_pairs_oracle_sql(
     any_band = " OR ".join(f"a.band{b} = b.band{b}" for b in range(bands))
     return f"""
     WITH {_banded_cte_duck(bands, rows, dim)},
+    {_NORMS_DUCK},
     cand AS (
       SELECT DISTINCT a.vec_id AS vec1, b.vec_id AS vec2
       FROM bucketed a JOIN bucketed b
         ON a.vec_id < b.vec_id AND ({any_band})
     ),
-    norms AS (
-      SELECT vec_id, qe,
-             list_sum(list_transform(qe, x -> x * x)) AS qn
-      FROM qz
-    ),
     pairs AS (
-      SELECT c.vec1, c.vec2,
-             list_sum(list_transform(list_zip(na.qe, nb.qe),
-                      p -> p[1] * p[2])) AS qdot,
-             na.qn * nb.qn AS nprod
+      SELECT c.vec1, c.vec2, {_cosine_ppm_duck("na", "nb")} AS cosine_ppm
       FROM cand c JOIN norms na ON na.vec_id = c.vec1
                   JOIN norms nb ON nb.vec_id = c.vec2
       WHERE na.qn > 0 AND nb.qn > 0
     )
-    SELECT vec1, vec2,
-           CAST(floor(qdot * 1000000.0 / sqrt(CAST(nprod AS DOUBLE))) AS BIGINT)
-             AS cosine_ppm
-    FROM pairs
-    WHERE floor(qdot * 1000000.0 / sqrt(CAST(nprod AS DOUBLE))) >= {threshold_ppm}
+    SELECT vec1, vec2, CAST(cosine_ppm AS BIGINT) AS cosine_ppm
+    FROM pairs WHERE cosine_ppm >= {threshold_ppm}
     """
 
 
 # -------------------------------------------------------------- IVF ANN
 IVF_PROBE = 4
-
-
-def _ivf_assign_expr(cents: list[list[int]], n_out: int) -> str:
-    """Expression assigning a vector to its ``n_out`` nearest centroids
-    (exact int64 squared-L2 over quantized components), returned as an
-    array of centroid ids ordered by (distance, id) — deterministic.
-    Uses the let-binding idiom (see lsh_band_keys) so the quantized vector
-    and the distance array are computed once per row."""
-    k = len(cents)
-    dists = (
-        "transform(_ivfc, cw -> aggregate(zip_with(qe, cw, "
-        "(x, c) -> (x - c) * (x - c)), 0L, (acc, v) -> acc + v))"
-    )
-    ranked = (
-        f"transform(array({dists}), ds -> "
-        f"transform(slice(array_sort(zip_with(ds, sequence(0, {k - 1}), "
-        f"(d, i) -> struct(d as d, i as i))), 1, {n_out}), s -> s.i))[0]"
-    )
-    return ranked
-
-
 IVF_TRAIN_SAMPLE = 1024  # driver-side training sample size (bounded collect)
 IVF_TRAIN_ITERS = 8  # fixed Lloyd's iterations — determinism over convergence
 
@@ -484,31 +494,56 @@ def train_centroids(
     return [[int(v) for v in c] for c in cents]
 
 
-def _ivf_centroids(
+def _ivf_cells(
     embeddings: DataFrame,
-    n_centroids: int,
+    n_centroids: int | None,
     id_col: str,
     dim: int,
-    train_sample: int = IVF_TRAIN_SAMPLE,
-    train_iters: int = IVF_TRAIN_ITERS,
+    train_sample: int,
+    train_iters: int,
 ):
-    """Trained centroids from a deterministic sample: the quantized vectors
-    of the ``train_sample`` lowest-id rows (SQL-reproducible selection),
-    refined by integer k-means. Constant-size driver collect (like the
-    dedup top-64 table); at 100 TB raise ``train_sample`` — the collect is
-    train_sample x dim int64s regardless of corpus size."""
+    """Train the IVF cells once and return ``nearest(df, n_out)``: ``df``
+    plus ``_cells``, the ids of its ``n_out`` nearest centroids ordered by
+    (exact int64 squared-L2 distance, id) — deterministic.
+
+    ``n_centroids=None`` scales K with the corpus (~sqrt(N), one count()
+    job). Training runs on the quantized vectors of the ``train_sample``
+    lowest-id rows (SQL-reproducible selection), refined by integer
+    k-means: a constant-size driver collect (like the dedup top-64 table);
+    at 100 TB raise ``train_sample`` — the collect is train_sample x dim
+    int64s regardless of corpus size. The K centroids reach the executors
+    as ONE broadcast row, and the assignment uses the let-binding idiom
+    (see lsh_band_keys) so the quantized vector and the distance array are
+    computed once per row."""
+    if n_centroids is None:
+        n_centroids = scaled_centroid_count(embeddings.count())
     # the sample must dominate K: with K >= sample size every sample row
     # becomes its own centroid, Lloyd's iterations are a no-op, and the
-    # "trained" index degenerates to the lowest-id selection this function
+    # "trained" index degenerates to the lowest-id selection training
     # exists to replace. 8 samples per centroid keeps the mean meaningful.
     train_sample = max(train_sample, 8 * n_centroids)
-    rows = (
-        embeddings.select(F.col(id_col), F.expr(_qe_expr(dim)).alias("qe"))
-        .orderBy(id_col)
-        .limit(train_sample)
-        .collect()
+    sample = (
+        _quantized(embeddings, id_col, dim).orderBy(id_col).limit(train_sample).collect()
     )
-    return train_centroids([list(r["qe"]) for r in rows], n_centroids, train_iters)
+    cents = train_centroids([list(r["_qe"]) for r in sample], n_centroids, train_iters)
+    cdf = F.broadcast(
+        embeddings.sparkSession.createDataFrame([(cents,)], "_ivfc array<array<bigint>>")
+    )
+    dists = (
+        "transform(_ivfc, cw -> aggregate(zip_with(qe, cw, "
+        "(x, c) -> (x - c) * (x - c)), 0L, (acc, v) -> acc + v))"
+    )
+
+    def nearest(df: DataFrame, n_out: int) -> DataFrame:
+        ranked = (
+            f"transform(array({dists}), ds -> "
+            f"transform(slice(array_sort(zip_with(ds, sequence(0, {len(cents) - 1}), "
+            f"(d, i) -> struct(d as d, i as i))), 1, {n_out}), s -> s.i))[0]"
+        )
+        cells = f"transform(array({_qe_expr(dim)}), qe -> {ranked})[0]"
+        return df.crossJoin(cdf).withColumn("_cells", F.expr(cells))
+
+    return nearest
 
 
 def ivf_oracle_centroids(
@@ -530,14 +565,14 @@ def ivf_oracle_centroids(
             f"SELECT count(*) FROM read_parquet('{parquet_path}')"
         ).fetchone()[0]
         n_centroids = scaled_centroid_count(n)
-    # same K-scaled sample rule as _ivf_centroids — the two passes must
+    # same K-scaled sample rule as _ivf_cells — the two passes must
     # select identical samples or the centroid literals diverge
     train_sample = max(train_sample, 8 * n_centroids)
     sample = [
         list(r[0])
         for r in con.execute(
-            f"SELECT list_transform(embedding, x -> CAST(floor(x * {QUANT}) AS BIGINT))"
-            f" FROM read_parquet('{parquet_path}') ORDER BY vec_id LIMIT {train_sample}"
+            f"WITH embeddings AS (SELECT * FROM read_parquet('{parquet_path}')), "
+            f"{_QZ_DUCK} SELECT qe FROM qz ORDER BY vec_id LIMIT {train_sample}"
         ).fetchall()
     ]
     return train_centroids(sample, n_centroids, train_iters)
@@ -567,22 +602,12 @@ def ivf_topk(
     (id, centroid) probe pairs. Candidate fraction ~ n_probe/n_centroids
     of the corpus — K grows with N, n_probe with recall needs. All math is
     quantized-int64, reproduced bit-for-bit by the DuckDB oracle."""
-    spark = embeddings.sparkSession
-    if n_centroids is None:
-        n_centroids = scaled_centroid_count(embeddings.count())
-    cents = _ivf_centroids(embeddings, n_centroids, id_col, dim, train_sample, train_iters)
-    cdf = F.broadcast(spark.createDataFrame([(cents,)], "_ivfc array<array<bigint>>"))
-    assign = (
-        f"transform(array({_qe_expr(dim)}), qe -> {_ivf_assign_expr(cents, 1)})[0][0]"
+    nearest = _ivf_cells(embeddings, n_centroids, id_col, dim, train_sample, train_iters)
+    corpus = nearest(embeddings, 1).select(
+        F.col(id_col).alias("neighbor_id"), F.col("_cells")[0].alias("centroid")
     )
-    probes = (
-        f"transform(array({_qe_expr(dim)}), qe -> {_ivf_assign_expr(cents, n_probe)})[0]"
-    )
-    corpus = embeddings.crossJoin(cdf).select(
-        F.col(id_col).alias("neighbor_id"), F.expr(assign).alias("centroid")
-    )
-    qprobe = queries.crossJoin(cdf).select(
-        F.col(id_col).alias("query_id"), F.explode(F.expr(probes)).alias("centroid")
+    qprobe = nearest(queries, n_probe).select(
+        F.col(id_col).alias("query_id"), F.explode("_cells").alias("centroid")
     )
     cand = (
         _maybe_broadcast(qprobe, small_queries)
@@ -591,26 +616,32 @@ def ivf_topk(
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    qa = _maybe_broadcast(
-        _quantized(queries, id_col, dim)
-        .withColumnRenamed(id_col, "query_id")
-        .withColumnRenamed("_qe", "_qa"),
-        small_queries,
-    )
-    qb = _quantized(embeddings, id_col, dim).withColumnRenamed(
-        id_col, "neighbor_id"
-    ).withColumnRenamed("_qe", "_qb")
-    scored = (
-        cand.join(qa, "query_id")
-        .join(qb, "neighbor_id")
-        .select("query_id", "neighbor_id", F.expr(_QDOT_QE).alias("qdot"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("qdot"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"), "qdot")
-    )
+    return _topk(_rescore(cand, embeddings, queries, id_col, dim, small_queries), k)
+
+
+def _cells_duck(centroids: list[list[int]]) -> str:
+    """Oracle CTEs shared by the IVF and SemDeDup oracles: the trained
+    centroid literals (``cents``; an empty typed relation when there are
+    none) and every qz vector's centroids ranked by (d, cid) in ``cells``
+    (rn = 1 is the vector's own cell)."""
+    if centroids:
+        rows = ", ".join(f"({cid}, {list(qe)}::BIGINT[])" for cid, qe in enumerate(centroids))
+        cents = f"SELECT * FROM (VALUES {rows}) AS t(cid, qe)"
+    else:
+        cents = "SELECT CAST(NULL AS INTEGER) AS cid, CAST(NULL AS BIGINT[]) AS qe WHERE false"
+    return f"""
+    cents AS ({cents}),
+    dists AS (
+      SELECT v.vec_id, c.cid,
+             CAST(list_sum(list_transform(list_zip(v.qe, c.qe),
+                  p -> (p[1] - p[2]) * (p[1] - p[2]))) AS BIGINT) AS d
+      FROM qz v CROSS JOIN cents c
+    ),
+    cells AS (
+      SELECT vec_id, cid,
+             row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
+      FROM dists
+    )"""
 
 
 def ivf_topk_oracle_sql(
@@ -624,52 +655,16 @@ def ivf_topk_oracle_sql(
     the same deterministic training the Spark plan ran — like the LSH
     plane weights, no arithmetic is re-derived in SQL), same quantization,
     same (distance, id) probe ordering, same scores."""
-    cent_rows = ", ".join(
-        f"({cid}, {list(qe)}::BIGINT[])" for cid, qe in enumerate(centroids)
-    )
     return f"""
-    WITH qz AS (SELECT vec_id,
-                       list_transform(embedding,
-                                      x -> CAST(floor(x * {QUANT}) AS BIGINT)) AS qe
-                FROM embeddings),
-    cents AS (SELECT * FROM (VALUES {cent_rows}) AS t(cid, qe)),
-    dists AS (
-      SELECT v.vec_id, c.cid,
-             CAST(list_sum(list_transform(list_zip(v.qe, c.qe),
-                  p -> (p[1] - p[2]) * (p[1] - p[2]))) AS BIGINT) AS d
-      FROM qz v CROSS JOIN cents c
-    ),
-    assigned AS (
-      SELECT vec_id AS neighbor_id, cid AS centroid FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-        FROM dists
-      ) WHERE rn = 1
-    ),
-    probes AS (
-      SELECT vec_id AS query_id, cid AS centroid FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-        FROM dists WHERE vec_id < {n_queries}
-      ) WHERE rn <= {n_probe}
-    ),
+    WITH {_QZ_DUCK},
+    {_cells_duck(centroids)},
     cand AS (
-      SELECT DISTINCT p.query_id, a.neighbor_id
-      FROM probes p JOIN assigned a ON p.centroid = a.centroid
-      WHERE p.query_id != a.neighbor_id
+      SELECT DISTINCT p.vec_id AS query_id, a.vec_id AS neighbor_id
+      FROM cells p JOIN cells a ON p.cid = a.cid
+      WHERE p.vec_id < {n_queries} AND p.rn <= {n_probe} AND a.rn = 1
+        AND p.vec_id != a.vec_id
     ),
-    scored AS (
-      SELECT c.query_id, c.neighbor_id,
-             list_sum(list_transform(list_zip(qa.qe, qb.qe),
-                      p -> p[1] * p[2])) AS qdot
-      FROM cand c JOIN qz qa ON qa.vec_id = c.query_id
-                  JOIN qz qb ON qb.vec_id = c.neighbor_id
-    )
-    SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank,
-           CAST(qdot AS BIGINT) AS qdot FROM (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY qdot DESC, neighbor_id ASC) AS rank
-      FROM scored
-    ) WHERE rank <= {k}
-    """
+    {_topk_duck(k)}"""
 
 
 # ------------------------------------------------------- semantic dedup
@@ -708,60 +703,21 @@ def semantic_dedup(
 
     Cross-engine exactness: identical centroid literals feed both engines
     (parity-by-construction, like ivf_topk), and the cosine is the same
-    int64-quantized / single-sqrt formula as embedding_cosine_pairs —
-    bit-identical on any IEEE-754 engine. The dim <= 2048 overflow guard
-    applies for the same reason.
+    quantized one as embedding_cosine_pairs (``_cosine_ppm``), under the
+    same dim <= 2048 overflow guard.
     """
-    if dim > 2048:
-        raise ValueError(
-            f"semantic_dedup: dim={dim} exceeds 2048 — the int64 norm "
-            "product would overflow (Spark wraps silently; the oracle "
-            "errors); reduce QUANT or split the dimensions"
-        )
-    spark = embeddings.sparkSession
-    if n_centroids is None:
-        n_centroids = scaled_centroid_count(embeddings.count())
-    cents = _ivf_centroids(
-        embeddings, n_centroids, id_col, dim, train_sample, train_iters
-    )
-    cdf = F.broadcast(spark.createDataFrame([(cents,)], "_ivfc array<array<bigint>>"))
-    assign = (
-        f"transform(array({_qe_expr(dim)}), qe -> {_ivf_assign_expr(cents, 1)})[0][0]"
-    )
-    qn = "aggregate(transform(_qe, x -> x * x), 0L, (acc, v) -> acc + v)"
-    assigned = (
-        embeddings.crossJoin(cdf)
-        .select(
-            F.col(id_col),
-            F.expr(assign).cast("int").alias("cell"),
-            F.expr(_qe_expr(dim)).alias("_qe"),
-        )
-        .withColumn("qn", F.expr(qn))
-    )
-    a = assigned.select(
-        F.col(id_col).alias("id1"), "cell", F.col("_qe").alias("_qa"),
-        F.col("qn").alias("qn1"),
-    )
-    b = assigned.select(
-        F.col(id_col).alias("id2"), "cell", F.col("_qe").alias("_qb"),
-        F.col("qn").alias("qn2"),
+    normed = _normed(embeddings, id_col, dim, "embedding")  # guards dim before training
+    nearest = _ivf_cells(embeddings, n_centroids, id_col, dim, train_sample, train_iters)
+    assigned = nearest(normed, 1).select(
+        id_col, F.col("_cells")[0].cast("int").alias("cell"), "_qe", "qn"
     )
     dropped = (
-        a.join(b, "cell")
-        .filter(
-            (F.col("id1") < F.col("id2")) & (F.col("qn1") > 0) & (F.col("qn2") > 0)
+        _cosine_ppm(
+            _side(assigned, id_col, "id1", "a")
+            .join(_side(assigned, id_col, "id2", "b"), "cell")
+            .filter(F.col("id1") < F.col("id2"))
         )
-        .select(
-            "id2",
-            F.expr(_QDOT_QE).alias("qdot"),
-            (F.col("qn1") * F.col("qn2")).alias("nprod"),
-        )
-        .filter(
-            F.floor(
-                F.col("qdot") * 1000000.0 / F.sqrt(F.col("nprod").cast("double"))
-            )
-            >= threshold_ppm
-        )
+        .filter(F.col("cosine_ppm") >= threshold_ppm)
         .select(F.col("id2").alias(id_col))
         .distinct()
     )
@@ -776,40 +732,20 @@ def semantic_dedup_oracle_sql(
     centroid literals arrive from ivf_oracle_centroids (the same training
     the Spark plan ran), assignment is the same (distance, id) argmin,
     the cosine the same quantized formula as the near-dup oracle."""
-    cent_rows = ", ".join(
-        f"({cid}, {list(qe)}::BIGINT[])" for cid, qe in enumerate(centroids)
-    )
     return f"""
-    WITH qz AS (SELECT vec_id,
-                       list_transform(embedding,
-                                      x -> CAST(floor(x * {QUANT}) AS BIGINT)) AS qe
-                FROM embeddings),
-    cents AS (SELECT * FROM (VALUES {cent_rows}) AS t(cid, qe)),
-    dists AS (
-      SELECT v.vec_id, c.cid,
-             CAST(list_sum(list_transform(list_zip(v.qe, c.qe),
-                  p -> (p[1] - p[2]) * (p[1] - p[2]))) AS BIGINT) AS d
-      FROM qz v CROSS JOIN cents c
-    ),
+    WITH {_QZ_DUCK},
+    {_cells_duck(centroids)},
+    {_NORMS_DUCK},
     assigned AS (
-      SELECT vec_id, cid AS cell FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-        FROM dists
-      ) WHERE rn = 1
-    ),
-    norms AS (
-      SELECT a.vec_id, a.cell, z.qe,
-             list_sum(list_transform(z.qe, x -> x * x)) AS qn
-      FROM assigned a JOIN qz z USING (vec_id)
+      SELECT n.*, c.cid AS cell FROM norms n JOIN cells c USING (vec_id)
+      WHERE c.rn = 1
     ),
     dropped AS (
       SELECT DISTINCT nb.vec_id
-      FROM norms na JOIN norms nb
+      FROM assigned na JOIN assigned nb
         ON na.cell = nb.cell AND na.vec_id < nb.vec_id
       WHERE na.qn > 0 AND nb.qn > 0
-        AND floor(list_sum(list_transform(list_zip(na.qe, nb.qe),
-                  p -> p[1] * p[2])) * 1000000.0
-                  / sqrt(CAST(na.qn * nb.qn AS DOUBLE))) >= {threshold_ppm}
+        AND {_cosine_ppm_duck("na", "nb")} >= {threshold_ppm}
     )
     SELECT a.vec_id, CAST(a.cell AS INT) AS cell
     FROM assigned a ANTI JOIN dropped d ON a.vec_id = d.vec_id

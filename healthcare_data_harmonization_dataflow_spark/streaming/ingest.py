@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..model.errors import io_error
+from .metrics import latency_distribution
 from .sink import ExactlyOnceParquetSink, FanOutSink
 
 
@@ -172,12 +173,7 @@ class IngestMessagesSink:
             F.sum(F.when(F.col("ok"), 0).otherwise(1))
             .cast("long")
             .alias("failed_hl7v2_message_writes"),
-            F.min("lat_us").alias("lat_min_us"),
-            F.avg("lat_us").alias("lat_avg_us"),
-            F.max("lat_us").alias("lat_max_us"),
-            F.percentile_approx("lat_us", 0.5).alias("lat_p50_us"),
-            F.percentile_approx("lat_us", 0.95).alias("lat_p95_us"),
-            F.percentile_approx("lat_us", 0.99).alias("lat_p99_us"),
+            *latency_distribution("lat_us"),
         )
 
     def foreach_batch(self):

@@ -7,8 +7,8 @@ Reference metrics reproduced (SURVEY §2.7):
 * failed-message-reads / failed-bundles Counters -> error-row counts
   observed in the same single pass;
 * ExecuteBundles/latency (write-finish − source create time,
-  FhirIOWithMetrics.java:313-315) -> watermark lag + per-batch
-  ``now - max(ts)`` recorded by the listener.
+  FhirIOWithMetrics.java:313-315) -> not measured yet: the listener
+  records each batch's event-time watermark, not ``now - max(ts)``.
 
 Everything is observation-only: no extra pass over the data.
 """
@@ -20,9 +20,22 @@ import os
 import threading
 import time
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.listener import StreamingQueryListener
+
+
+def latency_distribution(col: str) -> list[Column]:
+    """Per-batch Distribution of a per-element latency column (µs): min,
+    avg, max and p50/p95/p99 as ``lat_{min,avg,max,p50,p95,p99}_us``."""
+    return [
+        F.min(col).alias("lat_min_us"),
+        F.avg(col).alias("lat_avg_us"),
+        F.max(col).alias("lat_max_us"),
+        F.percentile_approx(col, 0.5).alias("lat_p50_us"),
+        F.percentile_approx(col, 0.95).alias("lat_p95_us"),
+        F.percentile_approx(col, 0.99).alias("lat_p99_us"),
+    ]
 
 
 def observe_mapping(df: DataFrame, name: str = "mapping_metrics") -> DataFrame:
@@ -42,14 +55,7 @@ def observe_mapping(df: DataFrame, name: str = "mapping_metrics") -> DataFrame:
     ]
     has_latency = "_lat_us" in df.columns
     if has_latency:
-        aggs += [
-            F.min("_lat_us").alias("lat_min_us"),
-            F.avg("_lat_us").alias("lat_avg_us"),
-            F.max("_lat_us").alias("lat_max_us"),
-            F.percentile_approx("_lat_us", 0.5).alias("lat_p50_us"),
-            F.percentile_approx("_lat_us", 0.95).alias("lat_p95_us"),
-            F.percentile_approx("_lat_us", 0.99).alias("lat_p99_us"),
-        ]
+        aggs += latency_distribution("_lat_us")
     out = df.observe(name, *aggs)
     return out.drop("_lat_us") if has_latency else out
 

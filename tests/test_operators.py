@@ -322,6 +322,14 @@ def test_lsh_rejects_wrong_dimension(spark):
     with pytest.raises(Exception) as ei:
         S.lsh_band_keys(bad).collect()
     assert "dimension" in str(ei.value)
+    # brute force has no fixed dimension: a corpus vector must match the
+    # query's instead of scoring a null-padded zip_with
+    mixed = spark.createDataFrame(
+        [(1, [0.5] * 16), (2, [0.25] * 8)], "vec_id long, embedding array<float>"
+    )
+    with pytest.raises(Exception) as ei:
+        S.brute_force_topk(mixed, mixed).collect()
+    assert "dimension" in str(ei.value)
 
 
 def test_ngram_jaccard_auto_selects_by_collapse(spark, sf_dir):
@@ -2073,3 +2081,74 @@ def test_bucketed_join_and_agg_have_no_exchange(spark, tmp_path):
         assert hplan.count("Exchange hashpartitioning") == 1, hplan
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+
+# 0-, 1- and 2-row embedding tables: the second vector is a scaled,
+# slightly perturbed copy of the first, so the 2-row table has one
+# near-duplicate pair (and each vector is the other's only neighbour).
+_EMB_DEGENERATE = {
+    n: [
+        (i, [((j * 37 + 11) % 19 - 9) / 10.0 * (1.0 - 0.1 * i) + 0.01 * i * (j % 3)
+             for j in range(64)])
+        for i in range(n)
+    ]
+    for n in (0, 1, 2)
+}
+
+
+@pytest.mark.parametrize("n_rows", sorted(_EMB_DEGENERATE))
+def test_embedding_operators_degenerate_corpora_match_oracle(spark, tmp_path, n_rows):
+    """Every embedding operator against its DuckDB oracle on a corpus with
+    no vector, one vector (no neighbour, no LSH candidate, one IVF cell)
+    and two near-duplicate vectors: same rows in both engines, and every
+    oracle parses (an empty corpus trains an empty centroid list)."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from healthcare_data_harmonization_dataflow_spark.operators import similarity as S
+
+    rows = _EMB_DEGENERATE[n_rows]
+    path = str(tmp_path / "embeddings.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array([r[0] for r in rows], pa.int64()),
+                "embedding": pa.array([r[1] for r in rows], pa.list_(pa.float32())),
+            }
+        ),
+        path,
+    )
+    emb = spark.read.parquet(path)
+    queries = emb.filter(F.col("vec_id") < 10)
+    cents = S.ivf_oracle_centroids(path)
+    cases = {
+        "brute": (S.brute_force_topk(emb, queries, k=5), S.brute_force_topk_oracle_sql(k=5)),
+        "lsh": (S.lsh_topk(emb, queries, k=5), S.lsh_topk_oracle_sql(k=5)),
+        "ivf": (S.ivf_topk(emb, queries, k=5), S.ivf_topk_oracle_sql(cents, k=5)),
+        "cosine": (
+            S.embedding_cosine_pairs(emb, threshold_ppm=300_000),
+            S.embedding_cosine_pairs_oracle_sql(300_000),
+        ),
+        "semantic": (
+            S.semantic_dedup(emb, threshold_ppm=400_000),
+            S.semantic_dedup_oracle_sql(cents, threshold_ppm=400_000),
+        ),
+    }
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{path}')")
+    got = {}
+    for name, (df, sql) in cases.items():
+        cols = df.columns
+        engine = sorted(tuple(r) for r in df.collect())
+        oracle = sorted(con.sql(f"SELECT {', '.join(cols)} FROM ({sql})").fetchall())
+        assert engine == oracle, name
+        got[name] = len(engine)
+    # the two vectors are each other's neighbour and a near-duplicate pair;
+    # fewer rows leave nothing to pair. SemDeDup trains min(K, N) cells, so
+    # each vector is alone in its cell and survives.
+    pairs = 2 if n_rows == 2 else 0
+    assert got == {
+        "brute": pairs, "lsh": pairs, "ivf": pairs,
+        "cosine": pairs // 2, "semantic": n_rows,
+    }

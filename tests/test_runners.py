@@ -188,3 +188,39 @@ def test_submit_session_renders_utc_on_non_utc_cluster(spark):
         assert epoch_rendered().startswith("1970-01-01T00:00:00")
     finally:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
+@pytest.mark.parametrize("tool", ["check_correctness.py", "plan_audit.py"])
+def test_tools_import_the_checkout_they_run_from(tmp_path, tool):
+    """A tool copied into another checkout (e.g. a copy of the parent for an
+    A/B run) must import THAT checkout's ``__spark_entry__``, not a fixed
+    path's: run the tool's import header from a copy and see where
+    ``__spark_entry__`` resolved."""
+    import shutil
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    (tmp_path / "tools").mkdir()
+    copy = tmp_path / "tools" / tool
+    shutil.copy(os.path.join(root, "tools", tool), copy)
+    shutil.copy(os.path.join(root, "__spark_entry__.py"), tmp_path)
+    src = copy.read_text()
+    header = src[: src.index("\ndef ")]
+    probe = (
+        "import sys\n"
+        f"exec(compile({header!r}, {str(copy)!r}, 'exec'), {{'__file__': {str(copy)!r}}})\n"
+        "print(sys.modules['__spark_entry__'].__file__)\n"
+    )
+    # the package itself still comes from this checkout (PYTHONPATH), after
+    # whatever the header puts first on sys.path
+    (tmp_path / "cwd").mkdir()
+    out = subprocess.run(
+        [sys.executable, "-c", probe],
+        cwd=tmp_path / "cwd",
+        env={**os.environ, "PYTHONPATH": root},
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout.strip()
+    assert os.path.realpath(out) == os.path.realpath(tmp_path / "__spark_entry__.py")

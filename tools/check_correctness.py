@@ -11,12 +11,13 @@ from __future__ import annotations
 
 import datetime
 import math
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from healthcare_data_harmonization_dataflow_spark.session import build_session  # noqa: E402
