@@ -1017,31 +1017,31 @@ def q_text_fingerprint(spark, sf_dir):
 # deterministic PII injection so the scrubber is EXERCISED on every row
 # (the synthetic corpus contains no natural emails/SSNs/phones); both
 # engines build the identical augmented text
-def _pii_augmented(docs):
+def _pii_augmented(docs, *cols, phone=True):
     four = F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0")
-    return docs.select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.lit(" contact user"),
-            F.col("doc_id").cast("string"),
-            F.lit("@mail.example.com ssn 123-45-"),
-            four,
-            F.lit(" call (555) 867-"),
-            four,
-        ).alias("text"),
-    )
+    parts = [
+        F.col("text"),
+        F.lit(" contact user"),
+        F.col("doc_id").cast("string"),
+        F.lit("@mail.example.com ssn 123-45-"),
+        four,
+    ]
+    if phone:
+        parts += [F.lit(" call (555) 867-"), four]
+    return docs.select("doc_id", *cols, F.concat(*parts).alias("text"))
 
 
-_PII_AUG_SQL = """
-    SELECT doc_id,
-           concat(text, ' contact user', doc_id,
-                  '@mail.example.com ssn 123-45-',
-                  lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0'),
-                  ' call (555) 867-',
-                  lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')) AS text
-    FROM documents
-"""
+def _pii_augmented_duck(*cols, phone=True) -> str:
+    """DuckDB mirror of ``_pii_augmented``. The CASE mirrors Spark's
+    NULL-propagating concat (DuckDB's concat skips NULL arguments)."""
+    four = "lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')"
+    parts = f"text, ' contact user', doc_id, '@mail.example.com ssn 123-45-', {four}"
+    if phone:
+        parts += f", ' call (555) 867-', {four}"
+    return f"""
+    SELECT {", ".join(("doc_id",) + cols)},
+           CASE WHEN text IS NULL THEN NULL ELSE concat({parts}) END AS text
+    FROM documents"""
 
 
 def _pii_scrub_oracle_sql() -> str:
@@ -1051,7 +1051,7 @@ def _pii_scrub_oracle_sql() -> str:
 
     e = pii_oracle_exprs()
     return f"""
-        WITH aug AS ({_PII_AUG_SQL})
+        WITH aug AS ({_pii_augmented_duck()})
         SELECT doc_id,
                {e["n_email"]} AS n_email,
                {e["n_ssn"]} AS n_ssn,
@@ -1476,19 +1476,7 @@ def q_corpus_curate_v2(spark, sf_dir):
         stratified_sample,
     )
 
-    docs = _docs(spark, sf_dir)
-    four = F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0")
-    aug = docs.select(
-        "doc_id",
-        "lang",
-        F.concat(
-            F.col("text"),
-            F.lit(" contact user"),
-            F.col("doc_id").cast("string"),
-            F.lit("@mail.example.com ssn 123-45-"),
-            four,
-        ).alias("text"),
-    )
+    aug = _pii_augmented(_docs(spark, sf_dir), "lang", phone=False)
     scrubbed = scrub_pii(aug).select(
         "doc_id", "lang", F.col("clean_text").alias("text")
     )
@@ -1509,16 +1497,7 @@ def _corpus_curate_v2_oracle() -> str:
 
     clean = pii_oracle_exprs()["clean_text"]
     return f"""
-        WITH aug AS (
-          -- CASE mirrors Spark's NULL-propagating concat; scrub_pii's
-          -- NULL-safe _txt then turns it into '' on both engines
-          SELECT doc_id, lang,
-                 CASE WHEN text IS NULL THEN NULL ELSE
-                 concat(text, ' contact user', doc_id,
-                        '@mail.example.com ssn 123-45-',
-                        lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0'))
-                 END AS text
-          FROM documents),
+        WITH aug AS ({_pii_augmented_duck("lang", phone=False)}),
         scrubbed AS (
           SELECT doc_id, lang, {clean} AS text FROM aug),
         rates(lang, keep_permille) AS (
@@ -1527,33 +1506,15 @@ def _corpus_curate_v2_oracle() -> str:
           SELECT s.doc_id, s.text FROM scrubbed s
           JOIN rates r USING (lang)
           WHERE {T.md5_int_duck(13).format(e="CAST(s.doc_id AS VARCHAR)")} % 1000
-                < r.keep_permille),
-        t AS (
-          SELECT doc_id,
-                 list_filter(string_split(text, ' '), w -> w != '') AS toks
-          FROM sampled),
-        st AS (
-          SELECT doc_id, toks, len(toks) AS n,
-                 unnest(generate_series(0, greatest(len(toks) - 1, 0), 24)) AS start
-          FROM t),
-        chunks AS (
-          SELECT doc_id,
-                 CAST(start // 24 AS BIGINT) AS chunk_idx,
-                 CAST(least(32, greatest(n - start, 0)) AS BIGINT) AS n_tokens
-          FROM st),
-        packed AS (
-          SELECT CAST(doc_id // 100 AS BIGINT) AS grp, doc_id, chunk_idx, n_tokens,
-                 SUM(n_tokens) OVER (PARTITION BY doc_id // 100
-                                     ORDER BY doc_id, chunk_idx
-                                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   AS cum
-          FROM chunks)
-        SELECT grp,
-               CAST((cum - n_tokens) // 64 AS BIGINT) AS seq_id,
-               doc_id, chunk_idx, n_tokens,
-               CAST((cum - n_tokens) % 64 AS BIGINT) AS seq_offset
-        FROM packed
+                < r.keep_permille)
+        SELECT * FROM ({_packed_chunks_oracle("sampled")})
     """
+
+
+def _packed_chunks_oracle(table: str) -> str:
+    """The oracle of chunk_documents(32, 8) -> pack_sequences(64, 100)."""
+    chunks = _curation.chunk_documents_oracle_sql(32, 8, table=table)
+    return _curation.pack_sequences_oracle_sql(chunks, seq_len=64, group_size=100)
 
 
 def _stratified_sample_oracle() -> str:
@@ -2163,75 +2124,15 @@ def oracle_sql() -> dict[str, str]:
         "text_fingerprint": T.fingerprint_oracle_sql(),
         "text_pii_scrub": _pii_scrub_oracle_sql(),
         "stratified_sample": _stratified_sample_oracle(),
-        "contamination_ngram": """
-            WITH t AS (
-              SELECT doc_id,
-                     list_filter(string_split(regexp_replace(lower(coalesce(text, '')),
-                                                             '[[:punct:]]', ' ', 'g'), ' '),
-                                 w -> w != '') AS toks
-              FROM documents),
-            idx AS (
-              SELECT doc_id, toks,
-                     unnest(generate_series(1, greatest(len(toks) - 12, 0))) AS i
-              FROM t),
-            grams AS (
-              SELECT DISTINCT doc_id,
-                     md5(array_to_string(list_slice(toks, i, i + 12), ' ')) AS g
-              FROM idx),
-            blocklist AS (
-              SELECT DISTINCT g FROM grams WHERE doc_id % 101 = 0),
-            hits AS (
-              SELECT g2.doc_id, CAST(count(*) AS BIGINT) AS n
-              FROM grams g2 JOIN blocklist b ON g2.g = b.g
-              GROUP BY g2.doc_id)
-            SELECT d.doc_id,
-                   CAST(coalesce(h.n, 0) AS BIGINT) AS n_gram_hits,
-                   coalesce(h.n, 0) > 0 AS contaminated
-            FROM documents d LEFT JOIN hits h USING (doc_id)
-        """,
+        "contamination_ngram": _curation.ngram_contamination_oracle_sql(
+            _curation.ngram_hashes_oracle_sql(
+                13, table="(SELECT * FROM documents WHERE doc_id % 101 = 0)"
+            ),
+            n=13,
+        ),
         "corpus_curate_v2": _corpus_curate_v2_oracle(),
-        "pack_sequences": """
-            WITH t AS (
-              SELECT doc_id,
-                     list_filter(string_split(coalesce(text, ''), ' '), w -> w != '') AS toks
-              FROM documents),
-            s AS (
-              SELECT doc_id, toks, len(toks) AS n,
-                     unnest(generate_series(0, greatest(len(toks) - 1, 0), 24)) AS start
-              FROM t),
-            chunks AS (
-              SELECT doc_id,
-                     CAST(start // 24 AS BIGINT) AS chunk_idx,
-                     CAST(least(32, greatest(n - start, 0)) AS BIGINT) AS n_tokens
-              FROM s),
-            packed AS (
-              SELECT CAST(doc_id // 100 AS BIGINT) AS grp, doc_id, chunk_idx, n_tokens,
-                     SUM(n_tokens) OVER (PARTITION BY doc_id // 100
-                                         ORDER BY doc_id, chunk_idx
-                                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                       AS cum
-              FROM chunks)
-            SELECT grp,
-                   CAST((cum - n_tokens) // 64 AS BIGINT) AS seq_id,
-                   doc_id, chunk_idx, n_tokens,
-                   CAST((cum - n_tokens) % 64 AS BIGINT) AS seq_offset
-            FROM packed
-        """,
-        "doc_chunks": """
-            WITH t AS (
-              SELECT doc_id,
-                     list_filter(string_split(coalesce(text, ''), ' '), w -> w != '') AS toks
-              FROM documents),
-            s AS (
-              SELECT doc_id, toks, len(toks) AS n,
-                     unnest(generate_series(0, greatest(len(toks) - 1, 0), 24)) AS start
-              FROM t)
-            SELECT doc_id,
-                   CAST(start // 24 AS BIGINT) AS chunk_idx,
-                   coalesce(array_to_string(list_slice(toks, start + 1, start + 32), ' '), '') AS chunk_text,  -- empty slice is NULL in DuckDB, '' in Spark's concat_ws
-                   CAST(least(32, greatest(n - start, 0)) AS BIGINT) AS n_tokens
-            FROM s
-        """,
+        "pack_sequences": _packed_chunks_oracle("documents"),
+        "doc_chunks": _curation.chunk_documents_oracle_sql(32, 8),
         "dedup_lines": """
             WITH aug AS (
               -- CASE mirrors Spark's NULL-propagating concat (DuckDB's
@@ -2309,26 +2210,10 @@ def oracle_sql() -> dict[str, str]:
             verify_threshold=0.9
         ),
         "lsh_fp_rate": f"""
-            WITH pairs AS ({D.minhash_lsh_pairs_oracle_sql()}),
-            dwords AS (
-              SELECT doc_id,
-                     list_distinct(list_filter(string_split(lower(
-                       coalesce(text, '')), ' '), w -> w != '')) AS w
-              FROM documents
-            ),
-            j0 AS (
-              SELECT len(list_intersect(a.w, b.w)) AS si,
-                     len(a.w) AS s1, len(b.w) AS s2
-              FROM pairs p
-              JOIN dwords a ON a.doc_id = p.doc1
-              JOIN dwords b ON b.doc_id = p.doc2
-            ),
-            j AS (
-              SELECT (si / greatest(s1 + s2 - si, 1) >= 0.9) AS v FROM j0
-            ),
+            WITH j AS ({D.jaccard_verify_oracle_sql(D.minhash_lsh_pairs_oracle_sql(), 0.9)}),
             agg AS (
               SELECT CAST(count(*) AS BIGINT) AS n_candidate_pairs,
-                     CAST(coalesce(sum(CASE WHEN v THEN 1 ELSE 0 END), 0)
+                     CAST(coalesce(sum(CASE WHEN verified THEN 1 ELSE 0 END), 0)
                           AS BIGINT) AS n_verified_pairs
               FROM j
             )

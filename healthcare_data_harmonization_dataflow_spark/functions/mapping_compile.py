@@ -82,20 +82,14 @@ class CompiledMapping:
 
     def output_column(self, data_col: Column | str, clock: str | None = None) -> Column:
         """Compile to a single Column: data JSON string -> output JSON string.
+        ``clock`` is the injected processing-time instant $CurrentTime
+        renders (ISO-8601 string); None = Spark's query-constant now.
 
         Raises MappingConfigError if the config is outside the projective
         subset (caller falls back to the pandas backend).
         """
         data_col = F.col(data_col) if isinstance(data_col, str) else data_col
-        return self.output_column_from_variant(F.try_parse_json(data_col), clock)
-
-    def output_column_from_variant(self, root: Column, clock: str | None = None) -> Column:
-        """Same, over an already-parsed VARIANT root — callers that also need
-        the parse result for error detection parse ONCE and share it (JSON
-        parsing is the dominant per-row cost; see operators/mapping_op.py).
-        ``clock`` is the injected processing-time instant $CurrentTime
-        renders (ISO-8601 string); None = Spark's query-constant now."""
-        return self.output_with_required_from_variant(root, clock)[0]
+        return self.output_with_required_from_variant(F.try_parse_json(data_col), clock)[0]
 
     def output_with_required_from_variant(
         self, root: Column, clock: str | None = None

@@ -32,6 +32,17 @@ from pyspark.sql import functions as F
 from healthcare_data_harmonization_dataflow_spark.functions.text import (
     md5_int_duck,
     md5_int_spark,
+    norm_words_duck,
+    norm_words_spark,
+    ppm_duck,
+    ppm_spark,
+    safe_words_duck,
+    safe_words_spark,
+    window_hashes_duck,
+    window_hashes_spark,
+    word_in,
+    words_duck,
+    words_spark,
 )
 
 # Shared Java/RE2-compatible PII patterns (both dialects: no lookaround, no
@@ -46,17 +57,6 @@ SSN_RE = r"\b\d{3}-\d{2}-\d{4}\b"
 PHONE_RE = r"(?:\(\d{3}\)|\b\d{3})[ -]\d{3}-\d{4}\b"
 
 _KINDS = (("email", EMAIL_RE), ("ssn", SSN_RE), ("phone", PHONE_RE))
-
-# Decontamination text normalization (GPT-3 appendix C / PaLM style):
-# lowercase + strip ASCII punctuation before n-gramming, so a
-# capitalization or punctuation variant of a benchmark sentence still
-# collides. Java's \p{Punct} and RE2's [[:punct:]] are the same 32 ASCII
-# chars, so the Spark expression and the DuckDB oracle agree byte-for-byte.
-NGRAM_NORM_SPARK_RE = r"\p{Punct}"
-NGRAM_NORM_DUCK = (
-    "list_filter(string_split(regexp_replace(lower(coalesce(text, '')), "
-    "'[[:punct:]]', ' ', 'g'), ' '), w -> w != '')"
-)
 
 
 def _txt(text_col: str) -> Column:
@@ -267,7 +267,7 @@ def chunk_documents(
     if not 0 <= overlap < chunk_tokens:
         raise ValueError("need 0 <= overlap < chunk_tokens")
     stride = chunk_tokens - overlap
-    toks = F.filter(F.split(_txt(text_col), " "), lambda w: w != "")
+    toks = F.expr(words_spark(f"coalesce({text_col}, '')"))
     starts = F.sequence(
         F.lit(0), F.greatest(F.size(toks) - 1, F.lit(0)), F.lit(stride)
     )
@@ -292,6 +292,32 @@ def chunk_documents(
         F.col("c.chunk_text").alias("chunk_text"),
         F.col("c.n_tokens").alias("n_tokens"),
     )
+
+
+def chunk_documents_oracle_sql(
+    chunk_tokens: int = 128,
+    overlap: int = 16,
+    table: str = "documents",
+    text_col: str = "text",
+) -> str:
+    """DuckDB SQL reproducing chunk_documents exactly (same split, same
+    uniform stride, one empty chunk for an empty document)."""
+    stride = chunk_tokens - overlap
+    return f"""
+    WITH t AS (
+      SELECT doc_id, {words_duck(f"coalesce({text_col}, '')")} AS toks FROM {table}),
+    s AS (
+      SELECT doc_id, toks, len(toks) AS n,
+             unnest(generate_series(0, greatest(len(toks) - 1, 0), {stride})) AS start
+      FROM t)
+    SELECT doc_id,
+           CAST(start // {stride} AS BIGINT) AS chunk_idx,
+           -- an empty slice joins to NULL in DuckDB, '' in Spark's concat_ws
+           coalesce(array_to_string(
+             list_slice(toks, start + 1, start + {chunk_tokens}), ' '), '') AS chunk_text,
+           CAST(least({chunk_tokens}, greatest(n - start, 0)) AS BIGINT) AS n_tokens
+    FROM s
+    """
 
 
 def pack_sequences(
@@ -341,6 +367,27 @@ def pack_sequences(
     )
 
 
+def pack_sequences_oracle_sql(
+    chunks: str, seq_len: int = 512, group_size: int = 1024
+) -> str:
+    """DuckDB SQL reproducing pack_sequences exactly over the ``chunks``
+    query (doc_id, chunk_idx, n_tokens)."""
+    return f"""
+    WITH packed AS (
+      SELECT CAST(doc_id // {group_size} AS BIGINT) AS grp, doc_id, chunk_idx, n_tokens,
+             SUM(n_tokens) OVER (PARTITION BY doc_id // {group_size}
+                                 ORDER BY doc_id, chunk_idx
+                                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+               AS cum
+      FROM ({chunks}))
+    SELECT grp,
+           CAST((cum - n_tokens) // {seq_len} AS BIGINT) AS seq_id,
+           doc_id, chunk_idx, n_tokens,
+           CAST((cum - n_tokens) % {seq_len} AS BIGINT) AS seq_offset
+    FROM packed
+    """
+
+
 def ngram_hashes(
     docs: DataFrame, n: int = 13, text_col: str = "text"
 ) -> DataFrame:
@@ -350,24 +397,23 @@ def ngram_hashes(
     so a case or punctuation variant of a benchmark sentence still
     collides with the blocklist. Returns (doc_id, gram) — 16-byte hashes
     only, never text."""
-    norm = F.regexp_replace(
-        F.lower(_txt(text_col)), NGRAM_NORM_SPARK_RE, " "
-    )
-    toks = F.filter(F.split(norm, " "), lambda w: w != "")
-    # sequence(1, ub) DESCENDS when ub < 1 (Spark default step -1), so a
-    # short document must yield an empty window list, not [1, 0]
-    ub = F.size(toks) - (n - 1)
-    starts = F.when(ub >= 1, F.sequence(F.lit(1), ub)).otherwise(
-        F.array().cast("array<int>")
-    )
-    grams = F.transform(
-        starts,
-        lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i, F.lit(n)))),
-    )
+    toks = docs.select("doc_id", F.expr(norm_words_spark(text_col)).alias("ws"))
     return (
-        docs.select("doc_id", F.explode(grams).alias("gram"))
+        toks.select("doc_id", F.explode(F.expr(window_hashes_spark("ws", n))).alias("g"))
+        .select("doc_id", F.col("g.h").alias("gram"))
         .distinct()
     )
+
+
+def ngram_hashes_oracle_sql(
+    n: int = 13, table: str = "documents", text_col: str = "text"
+) -> str:
+    """DuckDB SQL reproducing ngram_hashes exactly."""
+    return f"""
+    SELECT DISTINCT doc_id, g.h AS gram
+    FROM (SELECT doc_id, {norm_words_duck(text_col)} AS ws FROM {table}),
+         unnest({window_hashes_duck('ws', n)}) u(g)
+    """
 
 
 def ngram_contamination(
@@ -402,6 +448,24 @@ def ngram_contamination(
     )
 
 
+def ngram_contamination_oracle_sql(
+    blocklist: str, n: int = 13, table: str = "documents"
+) -> str:
+    """DuckDB SQL reproducing ngram_contamination exactly against the
+    ``blocklist`` query (gram)."""
+    return f"""
+    WITH hits AS (
+      SELECT g.doc_id, CAST(count(*) AS BIGINT) AS n
+      FROM ({ngram_hashes_oracle_sql(n, table)}) g
+      JOIN (SELECT DISTINCT gram FROM ({blocklist})) USING (gram)
+      GROUP BY g.doc_id)
+    SELECT d.doc_id,
+           CAST(coalesce(h.n, 0) AS BIGINT) AS n_gram_hits,
+           coalesce(h.n, 0) > 0 AS contaminated
+    FROM {table} d LEFT JOIN hits h USING (doc_id)
+    """
+
+
 # --------------------------------------------------------------------------
 # Gopher-style quality gates (repetition + shape signals)
 # --------------------------------------------------------------------------
@@ -425,18 +489,6 @@ GOPHER_MAX_TRIGRAM_FRAC_PPM = 180_000  # top 3-gram <= 18% of chars
 # able to pass it.
 _GOPHER_STOPS = ("the", "a", "be", "to", "of", "and", "that", "have", "with")
 
-# {col} is an explicit placeholder (str.format), not a bare 'text' to be
-# str.replace'd — a second literal 'text' anywhere in the template (or a
-# function name containing it) must never be rewritten by accident
-_WS_SPARK_T = "filter(split(lower(coalesce({col}, '')), ' '), w -> w != '')"
-_WS_DUCK = (
-    "list_filter(string_split(lower(coalesce(text, '')), ' '), w -> w != '')"
-)
-
-
-def _stop_pred(var: str) -> str:
-    return "(" + " OR ".join(f"{var} = '{w}'" for w in _GOPHER_STOPS) + ")"
-
 
 def gopher_signals(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Gopher-style quality signals + keep flag, per document.
@@ -459,9 +511,7 @@ def gopher_signals(docs: DataFrame, text_col: str = "text") -> DataFrame:
     (``gopher_oracle_sql``) matches bit-for-bit. Returns one row per input
     document; empty/NULL text yields zeros and keep=false.
     """
-    ws = docs.select(
-        "doc_id", F.expr(_WS_SPARK_T.format(col=text_col)).alias("ws")
-    )
+    ws = docs.select("doc_id", F.expr(safe_words_spark(text_col)).alias("ws"))
     sig = ws.select(
         "doc_id",
         F.expr("cast(size(ws) as bigint)").alias("n_words"),
@@ -472,28 +522,20 @@ def gopher_signals(docs: DataFrame, text_col: str = "text") -> DataFrame:
             "n_alpha_words"
         ),
         F.expr(
-            f"cast(size(array_distinct(filter(ws, w -> {_stop_pred('w')}))) as bigint)"
+            f"cast(size(array_distinct(filter(ws, w -> {word_in('w', _GOPHER_STOPS)}))) as bigint)"
         ).alias("n_stop_distinct"),
     )
-    # tagged 2-/3-gram stream; the filter-over-sequence guard avoids
-    # sequence(1, 0) (which Spark renders as a DESCENDING [1, 0]) on docs
-    # shorter than the gram
+    # tagged 2-/3-gram stream: (s, h, n, chars) per window
+    chars = "aggregate(slice(ws, i, n), 0L, (a, w) -> a + length(w))"
     grams = ws.select(
         "doc_id",
         F.expr(
             "inline(flatten(transform(array(2, 3), n -> "
-            "transform("
-            "  filter(sequence(1, greatest(size(ws) - n + 1, 1)),"
-            "         i -> i <= size(ws) - n + 1),"
-            "  i -> named_struct("
-            "    'n', n,"
-            "    'gh', md5(concat_ws(' ', slice(ws, i, n))),"
-            "    'chars', cast(length(replace(concat_ws(' ', slice(ws, i, n)), ' ', '')) as bigint))"
-            "))))"
+            f"{window_hashes_spark('ws', 'n', n='n', chars=chars)})))"
         ),
     )
     tops = (
-        grams.groupBy("doc_id", "n", "gh", "chars")
+        grams.groupBy("doc_id", "n", "h", "chars")
         .agg(F.count(F.lit(1)).alias("c"))
         .groupBy("doc_id", "n")
         .agg(F.max(F.struct("c", "chars")).alias("top"))
@@ -541,22 +583,21 @@ def gopher_oracle_sql() -> str:
     """DuckDB SQL reproducing gopher_signals bit-for-bit (same integer
     ppm math, same md5-collapsed gram counting, same struct-max
     tie-break)."""
+    chars = "CAST(list_sum(list_transform(ws[i:i + n - 1], x -> length(x))) AS BIGINT)"
     return f"""
     WITH w AS (
-      SELECT doc_id, {_WS_DUCK} AS ws FROM documents
+      SELECT doc_id, {safe_words_duck('text')} AS ws FROM documents
     ), sig AS (
       SELECT doc_id,
         CAST(len(ws) AS BIGINT) AS n_words,
         CAST(coalesce(list_sum(list_transform(ws, x -> length(x))), 0) AS BIGINT) AS word_chars,
         CAST(len(list_filter(ws, x -> regexp_matches(x, '[a-z]'))) AS BIGINT) AS n_alpha_words,
-        CAST(len(list_distinct(list_filter(ws, x -> {_stop_pred('x')}))) AS BIGINT) AS n_stop_distinct
+        CAST(len(list_distinct(list_filter(ws, x -> {word_in('x', _GOPHER_STOPS)}))) AS BIGINT) AS n_stop_distinct
       FROM w
     ), g AS (
-      SELECT doc_id, n, md5(gram) AS gh,
-             CAST(length(replace(gram, ' ', '')) AS BIGINT) AS chars
+      SELECT doc_id, n, (g).h AS gh, (g).chars AS chars
       FROM w, (VALUES (2), (3)) t(n),
-           UNNEST(list_transform(range(greatest(len(ws) - n + 1, 0)),
-                                 i -> array_to_string(ws[i + 1 : i + n], ' '))) u(gram)
+           UNNEST({window_hashes_duck('ws', 'n', chars=chars)}) u(g)
     ), cnt AS (
       SELECT doc_id, n, gh, chars, count(*) AS c FROM g GROUP BY ALL
     ), top AS (
@@ -759,19 +800,19 @@ def quality_classifier(
     sw = dict(QC_DEFAULT_SHAPE_WEIGHTS)
     if shape_weights:
         sw.update(shape_weights)
-    ws = _WS_SPARK_T.format(col=text_col)
+    ws = safe_words_spark(text_col)
     arr = "array(" + ", ".join(f"{w + QC_TOKEN_SHIFT}L" for w in bw) + ")"
     bucket = f"{md5_int_spark(15).format(e='w')} % {QC_N_BUCKETS}"
     tok_sum = f"aggregate({ws}, 0L, (acc, w) -> acc + element_at({arr}, cast({bucket} as int) + 1))"
     n_words = f"size({ws})"
-    n_stop = f"size(filter({ws}, w -> {_stop_pred('w')}))"
+    n_stop = f"size(filter({ws}, w -> {word_in('w', _GOPHER_STOPS)}))"
     n_punct = f"length(regexp_replace(coalesce({text_col}, ''), '[^.,;:!?]', ''))"
     n_chars = f"length(coalesce({text_col}, ''))"
     logit = (
         f"{sw['bias']}L"
         f" + (({tok_sum}) div greatest({n_words}, 1) - {QC_TOKEN_SHIFT})"
-        f" + {sw['stopword_ratio_ppm']}L * cast(floor({n_stop} * 1000000.0 / greatest({n_words}, 1)) as bigint)"
-        f" + {sw['punct_ratio_ppm']}L * cast(floor({n_punct} * 1000000.0 / greatest({n_chars}, 1)) as bigint)"
+        f" + {sw['stopword_ratio_ppm']}L * {ppm_spark(n_stop, n_words)}"
+        f" + {sw['punct_ratio_ppm']}L * {ppm_spark(n_punct, n_chars)}"
         f" + {sw['n_words_capped']}L * least(cast({n_words} as bigint), {QC_WORDS_CAP})"
     )
     return docs.select(
@@ -791,19 +832,20 @@ def quality_classifier_oracle_sql(
     sw = QC_DEFAULT_SHAPE_WEIGHTS
     arr = "[" + ", ".join(str(w + QC_TOKEN_SHIFT) for w in bw) + "]"
     bucket = f"{md5_int_duck(15).format(e='w')} % {QC_N_BUCKETS}"
+    ws = safe_words_duck("text")
     tok_sum = (
-        f"coalesce(list_sum(list_transform({_WS_DUCK}, "
+        f"coalesce(list_sum(list_transform({ws}, "
         f"w -> list_extract({arr}, CAST({bucket} AS INT) + 1))), 0)"
     )
-    n_words = f"len({_WS_DUCK})"
-    n_stop = f"len(list_filter({_WS_DUCK}, w -> {_stop_pred('w')}))"
+    n_words = f"len({ws})"
+    n_stop = f"len(list_filter({ws}, w -> {word_in('w', _GOPHER_STOPS)}))"
     n_punct = "length(regexp_replace(coalesce(text, ''), '[^.,;:!?]', '', 'g'))"
     n_chars = "length(coalesce(text, ''))"
     logit = (
         f"{sw['bias']}"
         f" + (CAST(({tok_sum}) AS BIGINT) // greatest({n_words}, 1) - {QC_TOKEN_SHIFT})"
-        f" + {sw['stopword_ratio_ppm']} * CAST(floor({n_stop} * 1000000.0 / greatest({n_words}, 1)) AS BIGINT)"
-        f" + {sw['punct_ratio_ppm']} * CAST(floor({n_punct} * 1000000.0 / greatest({n_chars}, 1)) AS BIGINT)"
+        f" + {sw['stopword_ratio_ppm']} * {ppm_duck(n_stop, n_words)}"
+        f" + {sw['punct_ratio_ppm']} * {ppm_duck(n_punct, n_chars)}"
         f" + {sw['n_words_capped']} * least(CAST({n_words} AS BIGINT), {QC_WORDS_CAP})"
     )
     return f"""
@@ -907,8 +949,10 @@ def budget_select(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Select the highest-quality documents that fit a training-token
-    budget: rank documents by an integer quality score (stopword-ratio ppm
-    — the same fixed-point signal as functions/text.quality_cols), keep
+    budget: rank documents by an integer quality score (the ppm of Gopher
+    stop-list words among the NULL-safe words — not the
+    functions/text.quality_cols ratio, which counts ``LANG_PROFILES['en']``
+    words and keeps NULL text NULL), keep
     whole score buckets from the top down while their cumulative token
     count fits ``token_budget``, then fill the remainder from the single
     boundary bucket in deterministic ``(md5(id), id)`` order until the next
@@ -934,10 +978,10 @@ def budget_select(
       score, sub-bucketing that one class by md5 prefix is the documented
       fallback (same two-level trick as source_cap).
     """
-    ws = _WS_SPARK_T.format(col="text")
+    ws = safe_words_spark("text")
     n_words = f"size({ws})"
-    n_stop = f"size(filter({ws}, w -> {_stop_pred('w')}))"
-    score = f"cast(floor({n_stop} * 1000000.0 / greatest({n_words}, 1)) as bigint)"
+    n_stop = f"size(filter({ws}, w -> {word_in('w', _GOPHER_STOPS)}))"
+    score = ppm_spark(n_stop, n_words)
     base = docs.select(
         F.col(id_col),
         F.col("lang"),
@@ -985,9 +1029,10 @@ def budget_select_oracle_sql(
 ) -> str:
     """DuckDB SQL reproducing budget_select exactly (same integer score,
     same bucket cumulative sum, same hash-ordered boundary fill)."""
-    n_words = f"len({_WS_DUCK})"
-    n_stop = f"len(list_filter({_WS_DUCK}, w -> {_stop_pred('w')}))"
-    score = f"CAST(floor({n_stop} * 1000000.0 / greatest({n_words}, 1)) AS BIGINT)"
+    ws = safe_words_duck("text")
+    n_words = f"len({ws})"
+    n_stop = f"len(list_filter({ws}, w -> {word_in('w', _GOPHER_STOPS)}))"
+    score = ppm_duck(n_stop, n_words)
     return f"""
     WITH base AS (
       SELECT {id_col}, lang, source,
@@ -1080,7 +1125,7 @@ def lm_quality(
     over its n_words - 1 positions; docs under 2 words score 0. Returns
     (id_col, lm_score_ppm, lm_bucket) — one row per input document.
     """
-    ws = _WS_SPARK_T.format(col=text_col)
+    ws = safe_words_spark(text_col)
     h = md5_int_spark(15).format
     tr = (train_docs if train_docs is not None else docs).select(
         F.expr(ws).alias("ws")
@@ -1176,7 +1221,7 @@ def lm_quality_oracle_sql(
     hd = md5_int_duck(15).format
     bigr = "list_transform(generate_series(2, len(ws)), i -> ws[i-1] || ' ' || ws[i])"
     return f"""
-    WITH train AS (SELECT {_WS_DUCK} AS ws FROM {table} WHERE {train_pred}),
+    WITH train AS (SELECT {safe_words_duck('text')} AS ws FROM {table} WHERE {train_pred}),
     uni AS (
       SELECT h, count(*) AS c1 FROM (
         SELECT {hd(e='w')} AS h FROM (SELECT unnest(ws) AS w FROM train)
@@ -1188,7 +1233,7 @@ def lm_quality_oracle_sql(
         SELECT {hd(e='bg')} AS hb FROM (SELECT unnest({bigr}) AS bg FROM train)
       ) GROUP BY hb ORDER BY c2 DESC, hb ASC LIMIT {max_bigrams}
     ),
-    toks AS (SELECT {id_col}, {_WS_DUCK} AS ws FROM {table}),
+    toks AS (SELECT {id_col}, {safe_words_duck('text')} AS ws FROM {table}),
     pairs AS (
       SELECT {id_col},
              unnest(list_transform(generate_series(2, len(ws)), i -> ws[i-1])) AS wp,
@@ -1211,7 +1256,7 @@ def lm_quality_oracle_sql(
       SELECT b.{id_col},
              CAST(CASE WHEN b.nw >= 2 THEN coalesce(s, 0) // (b.nw - 1)
                        ELSE 0 END AS BIGINT) AS lm_score_ppm
-      FROM (SELECT {id_col}, CAST(len({_WS_DUCK}) AS BIGINT) AS nw
+      FROM (SELECT {id_col}, CAST(len({safe_words_duck('text')}) AS BIGINT) AS nw
             FROM {table}) b
       LEFT JOIN sums USING ({id_col})
     )
@@ -1292,7 +1337,7 @@ def dsir_fit(
     """Fit the weight table distributively: two hashed-unigram bucket
     counts (partial aggs; only (bucket, count) pairs move), one bounded
     collect of <= 2 x n_buckets rows, then dsir_log_ratios."""
-    ws = _WS_SPARK_T.format(col=text_col)
+    ws = safe_words_spark(text_col)
     b = _dsir_bucket_spark("w", n_buckets)
 
     def counts(df: DataFrame) -> "dict[int, int]":
@@ -1321,7 +1366,7 @@ def dsir_oracle_weights(
     import duckdb
 
     con = duckdb.connect()
-    ws = _WS_DUCK
+    ws = safe_words_duck("text")
     b = _dsir_bucket_duck("w", n_buckets)
 
     def counts(pred: str) -> "dict[int, int]":
@@ -1356,7 +1401,7 @@ def dsir_select(
     partial agg over (long, long), one broadcast of a single stats row.
     The corpus never shuffles."""
     n_buckets = len(weights)
-    ws = _WS_SPARK_T.format(col=text_col)
+    ws = safe_words_spark(text_col)
     b = _dsir_bucket_spark("t", n_buckets)
     score = (
         f"coalesce(aggregate(transform({ws}, "
@@ -1393,7 +1438,7 @@ def dsir_select_oracle_sql(
     scored AS (
       SELECT {id_col},
              CAST(coalesce(list_aggregate(
-               list_transform({_WS_DUCK}, t -> wt.w[{b} + 1]),
+               list_transform({safe_words_duck('text')}, t -> wt.w[{b} + 1]),
                'sum'), 0) AS BIGINT) AS dsir_score_milli
       FROM {table}, wt
     ),
@@ -1437,7 +1482,7 @@ def c4_filters(
 
     Everything is whole-stage-codegen expressions over one pruned scan —
     a 100 TB pass is embarrassingly parallel with no shuffle."""
-    ws = _WS_SPARK_T.format(col="l")
+    ws = safe_words_spark("l")
     raw = f"coalesce({text_col}, '')"
     kept = (
         f"filter(split({raw}, '\\n'), l -> "
@@ -1472,8 +1517,7 @@ def c4_filters_oracle_sql(
     kept = (
         f"list_filter(string_split({raw}, chr(10)), l -> "
         f"regexp_matches(l, '{_C4_TERMINAL_RE}') "
-        f"AND len(list_filter(string_split(lower(l), ' '), w -> w != '')) "
-        f">= {int(min_line_words)} "
+        f"AND len({safe_words_duck('l')}) >= {int(min_line_words)} "
         f"AND NOT contains(lower(l), 'javascript'))"
     )
     return f"""
@@ -1500,7 +1544,7 @@ def corpus_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Per-(lang, source) document/token/char totals and token-count
     min/max. Token = whitespace word, NULL text = 0 tokens (doc still
     counted)."""
-    ws = _WS_SPARK_T.format(col=text_col)
+    ws = safe_words_spark(text_col)
     toks = F.expr(f"cast(size({ws}) as bigint)")
     return (
         docs.select(
@@ -1523,10 +1567,7 @@ def corpus_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
 def corpus_stats_oracle_sql(
     table: str = "documents", text_col: str = "text"
 ) -> str:
-    duck_ws = (
-        f"list_filter(string_split(lower(coalesce({text_col}, '')), ' '), "
-        "w -> w != '')"
-    )
+    duck_ws = safe_words_duck(text_col)
     return f"""
     SELECT lang, source,
            CAST(count(*) AS BIGINT) AS n_docs,

@@ -34,6 +34,12 @@ from pyspark.sql.window import Window
 from healthcare_data_harmonization_dataflow_spark.functions.text import (
     md5_int_duck,
     md5_int_spark,
+    safe_words_duck,
+    safe_words_spark,
+    window_hashes_duck,
+    window_hashes_spark,
+    words_duck,
+    words_spark,
 )
 
 # MinHash parameters (shared with the oracle SQL generators)
@@ -48,8 +54,9 @@ SIMHASH_HAM = 3  # pairs within this Hamming distance are near-dups
 SIMHASH_CHUNKS = SIMHASH_HAM + 1  # pigeonhole: exact candidate generation
 
 
-_SPARK_WORDS = "array_distinct(filter(split(lower(text), ' '), w -> w != ''))"
-_DUCK_WORDS = "list_distinct(list_filter(string_split(lower(text), ' '), w -> w != ''))"
+# the distinct word set every signature hashes (NULL text -> NULL)
+_WORDSET_SPARK = f"array_distinct({words_spark('lower(text)')})"
+_WORDSET_DUCK = f"list_distinct({words_duck('lower(text)')})"
 
 
 # ------------------------------------------------------------------ exact
@@ -82,7 +89,7 @@ def minhash_signature(docs: DataFrame, text_col: str = "text", id_col: str = "do
     wh = md5_int_spark(15).format(e="w")
     with_hashes = docs.select(
         F.col(id_col),
-        F.expr(f"transform({_SPARK_WORDS}, w -> {wh} % {MINHASH_P})").alias("_hs"),
+        F.expr(f"transform({_WORDSET_SPARK}, w -> {wh} % {MINHASH_P})").alias("_hs"),
     )
     cols = [F.col(id_col)]
     for i in range(MINHASH_K):
@@ -203,21 +210,23 @@ def minhash_lsh_pairs(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     return cross.unionByName(intra)
 
 
-def minhash_lsh_pairs_oracle_sql() -> str:
+def _band_rows_duck(src: str, id_col: str, where: str = "") -> str:
+    """One (id_col, band, v0..) row per MinHash band of each ``src`` row."""
     rows_per_band = MINHASH_K // MINHASH_BANDS
-    band_rows = " UNION ALL ".join(
-        "SELECT doc_id, {b} AS band, {vals} FROM sig".format(
-            b=b,
-            vals=", ".join(
-                f"mh{b * rows_per_band + r} AS v{r}" for r in range(rows_per_band)
-            ),
-        )
+    return " UNION ALL ".join(
+        f"SELECT {id_col}, {b} AS band, "
+        + ", ".join(f"mh{b * rows_per_band + r} AS v{r}" for r in range(rows_per_band))
+        + f" FROM {src}{where}"
         for b in range(MINHASH_BANDS)
     )
+
+
+def minhash_lsh_pairs_oracle_sql() -> str:
+    rows_per_band = MINHASH_K // MINHASH_BANDS
     val_eq = " AND ".join(f"a.v{r} = b.v{r}" for r in range(rows_per_band))
     return f"""
     WITH sig AS ({minhash_signature_oracle_sql()}),
-    bands AS ({band_rows})
+    bands AS ({_band_rows_duck("sig", "doc_id")})
     SELECT DISTINCT a.doc_id AS doc1, b.doc_id AS doc2
     FROM bands a JOIN bands b
       ON a.band = b.band AND {val_eq} AND a.doc_id < b.doc_id
@@ -235,15 +244,6 @@ def minhash_lsh_cluster_edges_oracle_sql() -> str:
     explodes), while the star subgraph closes in seconds."""
     rows_per_band = MINHASH_K // MINHASH_BANDS
     mh_cols = ", ".join(f"mh{i}" for i in range(MINHASH_K))
-    band_rows = " UNION ALL ".join(
-        "SELECT gid, {b} AS band, {vals} FROM grp".format(
-            b=b,
-            vals=", ".join(
-                f"mh{b * rows_per_band + r} AS v{r}" for r in range(rows_per_band)
-            ),
-        )
-        for b in range(MINHASH_BANDS)
-    )
     val_keys = ", ".join(f"v{r}" for r in range(rows_per_band))
     return f"""
     WITH sig AS ({minhash_signature_oracle_sql()}),
@@ -252,7 +252,7 @@ def minhash_lsh_cluster_edges_oracle_sql() -> str:
       FROM sig WHERE mh0 IS NOT NULL
       GROUP BY {mh_cols}
     ),
-    bandrows AS ({band_rows}),
+    bandrows AS ({_band_rows_duck("grp", "gid")}),
     hubs AS (
       SELECT band, {val_keys}, min(gid) AS hub
       FROM bandrows GROUP BY band, {val_keys}
@@ -279,7 +279,7 @@ def minhash_lsh_cluster_edges_oracle_sql() -> str:
 def minhash_signature_oracle_sql() -> str:
     wh = md5_int_duck(15).format(e="w")
     terms = ",\n      ".join(
-        f"list_min(list_transform({_DUCK_WORDS}, "
+        f"list_min(list_transform({_WORDSET_DUCK}, "
         f"w -> ({_RNG_A[i]} * ({wh} % {MINHASH_P}) + {_RNG_B[i]}) % {MINHASH_P})) AS mh{i}"
         for i in range(MINHASH_K)
     )
@@ -306,12 +306,7 @@ def jaccard_verify(
     bit-equal to the DuckDB oracles. The intersect is materialized ONCE per
     pair: a duplicate inside the predicate is not reliably CSE'd through
     codegen, and it is the dominant cost."""
-    # built directly (not by substring-replacing _SPARK_WORDS: a column
-    # named e.g. 'context' would be corrupted by a textual replace)
-    words = F.expr(
-        f"array_distinct(filter(split(lower(coalesce({text_col}, '')), ' '), "
-        "w -> w != ''))"
-    )
+    words = F.expr(f"array_distinct({safe_words_spark(text_col)})")
     a, b = keys
     return (
         pairs.join(left.select(F.col(id_col).alias(a), words.alias("_wa")), a)
@@ -482,23 +477,8 @@ def incremental_dedup_oracle_sql(
     verify_threshold: "float | None" = None,
 ) -> str:
     rows_per_band = MINHASH_K // MINHASH_BANDS
-    band_rows = " UNION ALL ".join(
-        "SELECT doc_id, {b} AS band, {vals} FROM sig WHERE mh0 IS NOT NULL".format(
-            b=b,
-            vals=", ".join(
-                f"mh{b * rows_per_band + r} AS v{r}"
-                for r in range(rows_per_band)
-            ),
-        )
-        for b in range(MINHASH_BANDS)
-    )
     val_keys = ", ".join(["band"] + [f"v{r}" for r in range(rows_per_band)])
-    if verify_threshold is not None:
-        dw = (
-            "list_distinct(list_filter(string_split(lower("
-            "coalesce(text, '')), ' '), w -> w != ''))"
-        )
-        return f"""
+    ctes = f"""
     WITH sig AS ({minhash_signature_oracle_sql()}),
     inc AS (
       SELECT doc_id, md5(coalesce(text, '')) AS ch
@@ -518,7 +498,7 @@ def incremental_dedup_oracle_sql(
     fresh AS (
       SELECT doc_id FROM keep WHERE ch NOT IN (SELECT ch FROM hist)
     ),
-    bands AS ({band_rows}),
+    bands AS ({_band_rows_duck("sig", "doc_id", " WHERE mh0 IS NOT NULL")}),
     histbd AS (
       SELECT doc_id AS hist_id, {val_keys}
       FROM bands JOIN (
@@ -532,71 +512,53 @@ def incremental_dedup_oracle_sql(
       JOIN fresh f USING (doc_id)
       JOIN (SELECT DISTINCT {val_keys} FROM histbd) hb USING ({val_keys})
       GROUP BY b.doc_id
-    ),
+    )"""
+    near_dup = "coalesce(m.n_band_matches, 0) > 0"
+    if verify_threshold is not None:
+        ctes += f""",
     cand AS (
       SELECT DISTINCT b.doc_id, h.hist_id
       FROM bands b
       JOIN fresh f USING (doc_id)
       JOIN histbd h USING ({val_keys})
     ),
-    dwords AS (SELECT doc_id, {dw} AS w FROM documents),
-    ver0 AS (
-      SELECT c.doc_id, len(list_intersect(a.w, b2.w)) AS si,
-             len(a.w) AS s1, len(b2.w) AS s2
-      FROM cand c
-      JOIN dwords a ON a.doc_id = c.doc_id
-      JOIN dwords b2 ON b2.doc_id = c.hist_id
-    ),
     ver AS (
-      SELECT DISTINCT doc_id FROM ver0
-      WHERE si / greatest(s1 + s2 - si, 1) >= {float(verify_threshold)!r}
-    )
+      SELECT DISTINCT doc_id FROM ({jaccard_verify_oracle_sql(
+          "SELECT * FROM cand", verify_threshold, ("doc_id", "hist_id"))})
+      WHERE verified
+    )"""
+        near_dup = "f.doc_id IN (SELECT doc_id FROM ver)"
+    return ctes + f"""
     SELECT f.doc_id,
            coalesce(m.n_band_matches, 0) AS n_band_matches,
-           (v.doc_id IS NOT NULL) AS near_dup
-    FROM fresh f
-    LEFT JOIN m USING (doc_id)
-    LEFT JOIN ver v ON v.doc_id = f.doc_id
-    """
-    return f"""
-    WITH sig AS ({minhash_signature_oracle_sql()}),
-    inc AS (
-      SELECT doc_id, md5(coalesce(text, '')) AS ch
-      FROM documents WHERE NOT ({history_pred})
-    ),
-    keep AS (
-      SELECT doc_id, ch FROM (
-        SELECT doc_id, ch,
-               row_number() OVER (PARTITION BY ch ORDER BY doc_id) AS rn
-        FROM inc
-      ) WHERE rn = 1
-    ),
-    hist AS (
-      SELECT DISTINCT md5(coalesce(text, '')) AS ch
-      FROM documents WHERE {history_pred}
-    ),
-    fresh AS (
-      SELECT doc_id FROM keep WHERE ch NOT IN (SELECT ch FROM hist)
-    ),
-    bands AS ({band_rows}),
-    histb AS (
-      SELECT DISTINCT {val_keys}
-      FROM bands JOIN (
-        SELECT doc_id FROM documents WHERE {history_pred}
-      ) h USING (doc_id)
-    ),
-    m AS (
-      SELECT b.doc_id,
-             CAST(count(DISTINCT b.band) AS INT) AS n_band_matches
-      FROM bands b
-      JOIN fresh f USING (doc_id)
-      JOIN histb USING ({val_keys})
-      GROUP BY b.doc_id
-    )
-    SELECT f.doc_id,
-           coalesce(m.n_band_matches, 0) AS n_band_matches,
-           coalesce(m.n_band_matches, 0) > 0 AS near_dup
+           {near_dup} AS near_dup
     FROM fresh f LEFT JOIN m USING (doc_id)
+    """
+
+
+def jaccard_verify_oracle_sql(
+    pairs: str,
+    threshold: float,
+    keys: "tuple[str, str]" = ("doc1", "doc2"),
+    table: str = "documents",
+) -> str:
+    """DuckDB mirror of :func:`jaccard_verify`: every row of the ``pairs``
+    query (keys[0], keys[1]) with its ``verified`` flag, both ids looked
+    up in ``table``."""
+    a, b = keys
+    return f"""
+    WITH dwords AS (
+      SELECT doc_id, list_distinct({safe_words_duck('text')}) AS w FROM {table}
+    ),
+    sizes AS (
+      SELECT p.{a}, p.{b}, len(list_intersect(x.w, y.w)) AS si,
+             len(x.w) AS s1, len(y.w) AS s2
+      FROM ({pairs}) p
+      JOIN dwords x ON x.doc_id = p.{a}
+      JOIN dwords y ON y.doc_id = p.{b}
+    )
+    SELECT {a}, {b}, si / greatest(s1 + s2 - si, 1) >= {float(threshold)!r} AS verified
+    FROM sizes
     """
 
 
@@ -611,7 +573,7 @@ def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
         for j in range(SIMHASH_BITS)
     )
     with_hashes = docs.select(
-        F.col(id_col), F.expr(f"transform({_SPARK_WORDS}, w -> {wh})").alias("_hs")
+        F.col(id_col), F.expr(f"transform({_WORDSET_SPARK}, w -> {wh})").alias("_hs")
     )
     return with_hashes.select(
         F.col(id_col),
@@ -696,7 +658,7 @@ def simhash_oracle_sql() -> str:
     return f"""
     SELECT doc_id,
            CASE WHEN len(_hs) = 0 THEN 0 ELSE ({bit_terms}) END AS simhash
-    FROM (SELECT doc_id, list_transform({_DUCK_WORDS}, w -> {wh}) AS _hs FROM documents)
+    FROM (SELECT doc_id, list_transform({_WORDSET_DUCK}, w -> {wh}) AS _hs FROM documents)
     """
 
 
@@ -780,7 +742,7 @@ def ngram_jaccard_pairs(
             f"salt_buckets/hot_df must be >= 1, got {salt_buckets}/{hot_df}"
         )
     if strategy == "auto":
-        wordsets = docs.select(F.col(id_col), F.expr(_SPARK_WORDS).alias("ws")).filter(
+        wordsets = docs.select(F.col(id_col), F.expr(_WORDSET_SPARK).alias("ws")).filter(
             F.size("ws") > 0
         )
         # sort before hashing: the profile identity is the token SET (mask +
@@ -832,7 +794,7 @@ def _ngram_jaccard_profile(
     where profiles stay huge AND diverse, use ``strategy="prefix"``.
     """
     threshold_ppm = round(threshold * 1_000_000)
-    wordsets = docs.select(F.col(id_col), F.expr(_SPARK_WORDS).alias("ws")).filter(
+    wordsets = docs.select(F.col(id_col), F.expr(_WORDSET_SPARK).alias("ws")).filter(
         F.size("ws") > 0
     )
     top = (
@@ -990,7 +952,7 @@ def _ngram_jaccard_prefix(
     the few-ultra-hot-tokens regime, not a default rewrite of the join.
     """
     threshold_ppm = round(threshold * 1_000_000)
-    wordsets = docs.select(F.col(id_col), F.expr(_SPARK_WORDS).alias("ws"))
+    wordsets = docs.select(F.col(id_col), F.expr(_WORDSET_SPARK).alias("ws"))
     toks = wordsets.select(id_col, F.size("ws").alias("sz"), F.explode("ws").alias("tok"))
     dfreq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     w = Window.partitionBy(id_col).orderBy("df", "tok")
@@ -1066,7 +1028,7 @@ def ngram_jaccard_oracle_sql(threshold: float = 0.5) -> str:
     threshold_ppm = round(threshold * 1_000_000)
     return f"""
     WITH toks AS (
-      SELECT doc_id, unnest({_DUCK_WORDS}) AS tok FROM documents
+      SELECT doc_id, unnest({_WORDSET_DUCK}) AS tok FROM documents
     ),
     sizes AS (SELECT doc_id, count(*) AS sz FROM toks GROUP BY doc_id),
     common AS (
@@ -1097,11 +1059,6 @@ def ngram_jaccard_oracle_sql(threshold: float = 0.5) -> str:
 #      the per-doc shuffle carries only hit positions, never text.
 SPAN_K = 20
 
-_SEQ_WORDS_SPARK = "filter(split(lower(coalesce({col}, '')), ' '), w -> w != '')"
-_SEQ_WORDS_DUCK = (
-    "list_filter(string_split(lower(coalesce({col}, '')), ' '), w -> w != '')"
-)
-
 
 def span_dedup(
     docs: DataFrame,
@@ -1120,22 +1077,8 @@ def span_dedup(
     Hash = md5 of the space-joined k-token window (hex string, identical
     in DuckDB), so the oracle reproduces every stage bit-for-bit.
     """
-    toks = docs.select(
-        F.col(id_col), F.expr(_SEQ_WORDS_SPARK.format(col=text_col)).alias("ws")
-    )
-    # sequence(1, ub) DESCENDS when ub < 1 (default step -1): short docs
-    # must produce an empty window list, not [1, 0]
-    ub = F.size(F.col("ws")) - (k - 1)
-    starts = F.when(ub >= 1, F.sequence(F.lit(1), ub)).otherwise(
-        F.array().cast("array<int>")
-    )
-    grams = F.transform(
-        starts,
-        lambda i: F.struct(
-            i.cast("int").alias("s"),
-            F.md5(F.concat_ws(" ", F.slice(F.col("ws"), i, F.lit(k)))).alias("h"),
-        ),
-    )
+    toks = docs.select(F.col(id_col), F.expr(safe_words_spark(text_col)).alias("ws"))
+    grams = F.expr(window_hashes_spark("ws", k))
     occ = toks.select(F.col(id_col), F.explode(grams).alias("g")).select(
         id_col, F.col("g.s").alias("s"), F.col("g.h").alias("h")
     )
@@ -1193,16 +1136,11 @@ def span_dedup_oracle_sql(
 ) -> str:
     """DuckDB SQL reproducing span_dedup exactly: same md5 window hashes,
     same >=2 total-occurrence rule, same island merge, same floored ppm."""
-    ws = _SEQ_WORDS_DUCK.format(col="text")
     return f"""
-    WITH toks AS (SELECT {id_col}, {ws} AS ws FROM {table}),
+    WITH toks AS (SELECT {id_col}, {safe_words_duck('text')} AS ws FROM {table}),
     occ AS (
-      SELECT {id_col},
-             unnest(generate_series(1, len(ws) - {k - 1})) AS s,
-             unnest(list_transform(
-               generate_series(1, len(ws) - {k - 1}),
-               i -> md5(array_to_string(ws[i:i + {k - 1}], ' ')))) AS h
-      FROM toks WHERE len(ws) >= {k}
+      SELECT {id_col}, g.s, g.h
+      FROM toks, unnest({window_hashes_duck('ws', k)}) u(g)
     ),
     dup AS (SELECT h FROM occ GROUP BY h HAVING count(*) >= 2),
     hits AS (

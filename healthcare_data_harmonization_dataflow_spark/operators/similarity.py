@@ -452,12 +452,13 @@ IVF_TRAIN_ITERS = 8  # fixed Lloyd's iterations — determinism over convergence
 
 
 def scaled_centroid_count(n_rows: int) -> int:
-    """K ~ sqrt(N), clamped — the classic IVF sizing: candidate work per
-    query is ~ n_probe * N / K, so K ~ sqrt(N) balances inverted-list
-    length against probe count as the corpus grows."""
+    """K ~ sqrt(N), clamped to [1, 4096] — the classic IVF sizing:
+    candidate work per query is ~ n_probe * N / K, so K ~ sqrt(N) balances
+    inverted-list length against probe count as the corpus grows. A tiny
+    corpus gets as few as one cell, so its near-duplicates can share one."""
     import math
 
-    return max(4, min(4096, math.isqrt(max(n_rows, 1))))
+    return max(1, min(4096, math.isqrt(max(n_rows, 1))))
 
 
 def train_centroids(

@@ -31,15 +31,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# Shared normalization: lowercase, ASCII punctuation -> space (same 32-char
-# class in Java regex and RE2), whitespace split, drop empties.
-_WORDS_SPARK = (
-    "filter(split(regexp_replace(lower(coalesce({col}, '')), "
-    "'\\\\p{{Punct}}', ' '), ' '), w -> w != '')"
-)
-_WORDS_DUCK = (
-    "list_filter(string_split(regexp_replace(lower(coalesce({col}, '')), "
-    "'[[:punct:]]', ' ', 'g'), ' '), w -> w != '')"
+from healthcare_data_harmonization_dataflow_spark.functions.text import (
+    norm_words_duck,
+    norm_words_spark,
+    words_duck,
+    words_spark,
 )
 
 
@@ -47,7 +43,7 @@ def _word_counts(docs: DataFrame, text_col: str) -> DataFrame:
     """(word, cnt) over the normalized corpus: one map-side-combinable
     groupBy that shuffles (word, partial_count) rows, never documents."""
     words = docs.select(
-        F.explode(F.expr(_WORDS_SPARK.format(col=text_col))).alias("word")
+        F.explode(F.expr(norm_words_spark(text_col))).alias("word")
     )
     return words.groupBy("word").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
 
@@ -167,7 +163,7 @@ def bpe_oracle_merges(
     parquet_path: str, text_col: str = "text", n_merges: int = 20
 ) -> list[tuple[str, str, int]]:
     """Merge list for the DuckDB oracle: word counts via DuckDB (the same
-    ``_WORDS_DUCK`` normalization the oracle SQL uses), then the shared
+    ``norm_words_duck`` split the oracle SQL uses), then the shared
     pure-python trainer — the ivf_oracle_centroids pattern (similarity.py):
     both engines consume identical data-derived literals, so the encode
     query is hash-exact by construction while the TRAINING algorithm is
@@ -178,7 +174,7 @@ def bpe_oracle_merges(
         f"""
         SELECT word, CAST(count(*) AS BIGINT) AS cnt
         FROM (
-          SELECT unnest({_WORDS_DUCK.format(col=text_col)}) AS word
+          SELECT unnest({norm_words_duck(text_col)}) AS word
           FROM read_parquet('{parquet_path}')
         ) GROUP BY word
         """
@@ -222,7 +218,7 @@ def bpe_encode(
         "i -> substring({w}, i, 1))",
         join2="array_join({inner}, '  ')",
     )
-    words = _WORDS_SPARK.format(col=text_col)
+    words = norm_words_spark(text_col)
     return docs.select(
         id_col,
         F.expr(f"array_join(transform({words}, w -> {enc}), ' ')").alias(
@@ -230,9 +226,7 @@ def bpe_encode(
         ),
     ).select(
         id_col,
-        F.expr(
-            "cast(size(filter(split(tokens, ' '), t -> t != '')) as int)"
-        ).alias("n_tokens"),
+        F.expr(f"cast(size({words_spark('tokens')}) as int)").alias("n_tokens"),
         "tokens",
     )
 
@@ -252,18 +246,16 @@ def bpe_encode_oracle_sql(
         "i -> substr({w}, i, 1))",
         join2="array_to_string({inner}, '  ')",
     )
-    words = _WORDS_DUCK.format(col=text_col)
+    words = norm_words_duck(text_col)
+    # a document with no word joins to NULL in DuckDB, '' in Spark
     return f"""
     WITH enc AS (
       SELECT {id_col},
-             array_to_string(list_transform({words}, w -> {enc}), ' ')
+             coalesce(array_to_string(list_transform({words}, w -> {enc}), ' '), '')
                AS tokens
       FROM {table}
     )
-    SELECT {id_col},
-           CAST(len(list_filter(string_split(tokens, ' '), t -> t != ''))
-                AS INT) AS n_tokens,
-           tokens
+    SELECT {id_col}, CAST(len({words_duck('tokens')}) AS INT) AS n_tokens, tokens
     FROM enc
     """
 
@@ -275,7 +267,7 @@ def bpe_pair_counts_oracle_sql(
     same weighting, same tie-break)."""
     return f"""
     WITH w AS (
-      SELECT unnest({_WORDS_DUCK.format(col=text_col)}) AS word FROM {table}
+      SELECT unnest({norm_words_duck(text_col)}) AS word FROM {table}
     ),
     wc AS (SELECT word, CAST(count(*) AS BIGINT) AS cnt FROM w GROUP BY word),
     p AS (

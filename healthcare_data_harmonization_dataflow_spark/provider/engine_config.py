@@ -198,7 +198,18 @@ def load_engine_config(
     the main config — each loaded through the provider layer (any scheme;
     Whistle ``import`` statements resolved against ``import_root``, which
     defaults to each file's own directory)."""
-    envelope = create_provider(path, spark)._read_main()
+    return _inline_engine_config(
+        create_provider(path, spark)._read_main(), spark, env, import_root
+    )
+
+
+def _inline_engine_config(
+    envelope: str,
+    spark=None,
+    env: dict | None = None,
+    import_root: str = "",
+) -> str:
+    """:func:`load_engine_config` over envelope text already read."""
     resolved = parse_engine_config(envelope, env)
     parts = []
     for p in resolved.library_paths + [resolved.mapping_path]:

@@ -155,8 +155,12 @@ def resolve_imports(text: str, import_root: str, read_file) -> str:
 
 
 def create_provider(path: str, spark=None) -> MappingConfigProvider:
-    """Scheme-based factory (MappingConfigProviderFactory.java:9-15)."""
-    if "://" in path:
+    """Scheme-based factory (MappingConfigProviderFactory.java:9-15): a
+    scheme-less path is a local file, any URI (``file:/x`` too) goes
+    through the Hadoop FileSystem — the sink's rule."""
+    from ..streaming.sink import _is_local
+
+    if not _is_local(path):
         if spark is None:
             raise ValueError(
                 f"a SparkSession is required to read {path!r} via the Hadoop filesystem"
@@ -178,8 +182,8 @@ def load_mapping_config(
     text = create_provider(path, spark).get_mapping_config(
         force=force, import_root=import_root
     )
-    from .engine_config import load_engine_config, looks_like_engine_config
+    from .engine_config import _inline_engine_config, looks_like_engine_config
 
     if looks_like_engine_config(text):
-        return load_engine_config(path, spark=spark, import_root=import_root)
+        return _inline_engine_config(text, spark=spark, import_root=import_root)
     return text

@@ -115,11 +115,3 @@ class MetricsListener(StreamingQueryListener):
 
     def onQueryIdle(self, event):
         pass
-
-    def total_input_rows(self, query_name: str | None = None) -> int:
-        with self._lock:
-            return sum(
-                p["num_input_rows"]
-                for p in self.progress
-                if query_name is None or p["query"] == query_name
-            )

@@ -1,8 +1,12 @@
 """Operator unit tests: plan-shape guardrails, multimodal plumbing,
 dedup/similarity invariants, as-of join edge cases."""
 
+import re
+
 import pyspark.sql.functions as F
 import pytest
+
+import __spark_entry__
 
 from healthcare_data_harmonization_dataflow_spark.operators import dedup as D
 from healthcare_data_harmonization_dataflow_spark.operators.joins import (
@@ -1322,6 +1326,75 @@ def test_dedup_incremental_degenerate_inputs_match_oracle(spark, fixture, query)
     assert sorted(tuple(r) for r in got) == sorted(oracle) == want
 
 
+# The text-family registry entries: every operator over `documents`.
+_TEXT_FAMILY = re.compile(
+    r"^(text_|dedup_|corpus_|quality_|bpe_)|^(span_dedup|lsh_fp_rate|c4_filters|"
+    r"doc_chunks|pack_sequences|contamination_ngram|lm_quality_filter|"
+    r"dsir_sample|stratified_sample|mixture_sample|source_cap|budget_select)$"
+)
+_TEXT_QUERIES = sorted(
+    name
+    for name in __spark_entry__.queries()
+    if _TEXT_FAMILY.search(name)
+    and name not in ("dedup_semantic", "dedup_embedding_cosine")  # embeddings
+)
+# NULL, empty, whitespace-only, punctuation-only and one-word texts
+_DEGENERATE_TEXTS = [
+    None, "", "   ", "!!! ... ???", "word", "The", None, "  two  words ",
+]
+
+
+@pytest.fixture(scope="module")
+def degenerate_documents(tmp_path_factory, sf_dir):
+    """A documents parquet of 40 ordinary docs plus the degenerate texts,
+    and the registry's oracles generated against its directory."""
+    import os
+    import unittest.mock as mock
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as entry
+
+    rows = pq.read_table(f"{sf_dir}/documents.parquet").slice(0, 40).to_pylist()
+    for i, text in enumerate(_DEGENERATE_TEXTS):
+        rows.append({
+            "doc_id": 100 + i, "text": text, "lang": ("en", "es", "zh")[i % 3],
+            "source": f"src{i % 2}", "n_chars": len(text or ""),
+        })
+    d = tmp_path_factory.mktemp("degenerate_docs")
+    pq.write_table(pa.Table.from_pylist(rows), str(d / "documents.parquet"))
+    # the other tables' oracles read their parquet from the same directory
+    for name in os.listdir(sf_dir):
+        if name != "documents.parquet":
+            os.symlink(os.path.join(sf_dir, name), d / name)
+    with mock.patch.dict(os.environ, {"SPARK_GRAFT_ORACLE_SF_DIR": str(d)}):
+        return str(d / "documents.parquet"), entry.oracle_sql()
+
+
+@pytest.mark.parametrize("query", _TEXT_QUERIES)
+def test_text_operators_degenerate_texts_match_oracle(spark, degenerate_documents, query):
+    """Every text-family query against its DuckDB oracle on a corpus with
+    NULL, empty, whitespace-only, punctuation-only and one-word texts:
+    the same rows in both engines."""
+    import unittest.mock as mock
+
+    import duckdb
+
+    import __spark_entry__ as entry
+
+    path, oracles = degenerate_documents
+    docs = spark.read.parquet(path)
+    with mock.patch.object(entry, "_docs", lambda s, d: docs):
+        df = entry.queries()[query](spark, "unused")
+        got = [tuple(r) for r in df.collect()]
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}')")
+    cols = ", ".join(df.columns)
+    want = con.sql(f"SELECT {cols} FROM ({oracles[query]})").fetchall()
+    assert sorted(got, key=repr) == sorted(want, key=repr)
+
+
 def test_ngram_jaccard_profile_fallback_keeps_caller_settings(spark):
     """Falling back from the profile to the prefix strategy (more profiles
     than profile_cap) must keep the caller's salt_buckets/hot_df, and
@@ -2145,10 +2218,10 @@ def test_embedding_operators_degenerate_corpora_match_oracle(spark, tmp_path, n_
         assert engine == oracle, name
         got[name] = len(engine)
     # the two vectors are each other's neighbour and a near-duplicate pair;
-    # fewer rows leave nothing to pair. SemDeDup trains min(K, N) cells, so
-    # each vector is alone in its cell and survives.
+    # fewer rows leave nothing to pair. SemDeDup puts both vectors in its
+    # one cell and keeps one of the pair.
     pairs = 2 if n_rows == 2 else 0
     assert got == {
         "brute": pairs, "lsh": pairs, "ivf": pairs,
-        "cosine": pairs // 2, "semantic": n_rows,
+        "cosine": pairs // 2, "semantic": min(n_rows, 1),
     }

@@ -83,6 +83,33 @@ def test_hadoop_fs_provider_file_scheme(spark, config_tree):
         load_mapping_config("file:///nonexistent/cfg.wstl", spark=spark)
 
 
+def test_file_uri_without_authority(spark, config_tree):
+    """``file:/abs/x`` — the form Spark prints for local paths — is a URI
+    like ``file:///abs/x``: read through the Hadoop FileSystem, as the
+    sink classifies it. An engine-config envelope at such a URI is read
+    once, then its referenced configs."""
+    from unittest import mock
+
+    uri = "file:" + str(config_tree / "main.wstl")
+    assert isinstance(create_provider(uri, spark), HadoopFsMappingConfigProvider)
+    text = load_mapping_config(uri, import_root="file:" + str(config_tree), spark=spark)
+    assert "def Common" in text and "import" not in text
+
+    envelope = config_tree / "engine.textproto"
+    envelope.write_text(
+        "structure_mapping_config: { mapping_path_config: { mapping_config_path: "
+        f'{{ local_path: "{config_tree / "main.wstl"}" }} }} }}\n'
+    )
+    read_main = HadoopFsMappingConfigProvider._read_main
+    with mock.patch.object(
+        HadoopFsMappingConfigProvider, "_read_main", autospec=True,
+        side_effect=read_main,
+    ) as reads:
+        got = load_mapping_config("file:" + str(envelope), spark=spark)
+    assert "def Common" in got and "import" not in got
+    assert reads.call_count == 1
+
+
 def test_e2e_pipeline_from_config_file(spark, config_tree):
     """Drive the mapping operator end-to-end from a config FILE with an
     import-root tree, mirroring the reference's --mappingPath/--importRoot
