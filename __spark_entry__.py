@@ -33,7 +33,9 @@ from healthcare_data_harmonization_dataflow_spark.operators import multimodal as
 from healthcare_data_harmonization_dataflow_spark.operators import similarity as S
 from healthcare_data_harmonization_dataflow_spark.operators.bundles import (
     assemble_bundles,
+    bundle_json,
     to_transaction_bundle,
+    turns_struct,
 )
 from healthcare_data_harmonization_dataflow_spark.operators.joins import (
     asof_join,
@@ -900,17 +902,24 @@ def q_custom_to_fhir(spark, sf_dir):
 
 
 def q_session_assembly(spark, sf_dir):
-    """The pure-JVM streaming assembly plan (built-in session_window
-    aggregation, zero Python) in its batch shape: gap-split sessions per
-    conversation, sorted compact-JSON bundle, window bounds = [first ts,
-    last ts + gap]. Oracle reproduces the split with a lag/cumsum window
-    and the render with to_json(struct_pack(...))."""
-    from healthcare_data_harmonization_dataflow_spark.streaming.assembly import (
-        assemble_sessions_window,
+    """Conversation session assembly in batch: the generic session-window
+    operator with the bundle renderer as its aggregate. Gap-split sessions
+    per conversation, sorted compact-JSON bundle, window bounds = [first
+    ts, last ts + gap] — the rows the streaming ``state_v1`` assembly
+    emits on the same on-time input. Oracle reproduces the split with a
+    lag/cumsum window and the render with to_json(struct_pack(...))."""
+    s = session(
+        _transcripts(spark, sf_dir), "ts", "5 minutes", ["conv_id"],
+        aggs=[
+            F.count(F.lit(1)).alias("n_turns"),
+            bundle_json(F.collect_list(turns_struct())).alias("bundle"),
+        ],
     )
-
-    t = _transcripts(spark, sf_dir)
-    return assemble_sessions_window(t, gap="5 minutes")
+    return s.select(
+        "conv_id", "n_turns", "bundle",
+        F.col("win_start").alias("session_start"),
+        F.col("win_end").alias("session_end"),
+    )
 
 
 def q_dedup_embedding_cosine(spark, sf_dir):
@@ -948,8 +957,6 @@ def q_cep_error_burst(spark, sf_dir):
     """CEP error-burst detection: tumbling windows whose error rate crosses
     a threshold — the streaming alert the reference's windowed error sink +
     counters exist to feed. One shuffle; rate in exact ppm integer math."""
-    from healthcare_data_harmonization_dataflow_spark.operators.windows import tumbling
-
     ev = _events(spark, sf_dir)
     win = tumbling(
         ev,
@@ -1883,7 +1890,7 @@ def oracle_sql() -> dict[str, str]:
               SELECT conv_id, turn_idx, role, text, ts,
                      CASE WHEN ts - lag(ts) OVER (PARTITION BY conv_id
                                                   ORDER BY ts, turn_idx)
-                               >= INTERVAL 5 MINUTE THEN 1 ELSE 0 END AS brk
+                               > INTERVAL 5 MINUTE THEN 1 ELSE 0 END AS brk
               FROM t
             ),
             s AS (
@@ -1905,7 +1912,7 @@ def oracle_sql() -> dict[str, str]:
             WITH o AS (
               SELECT user_id, ts,
                      CASE WHEN lag(ts) OVER w IS NULL
-                          OR ts - lag(ts) OVER w >= INTERVAL '30 minutes'
+                          OR ts - lag(ts) OVER w > INTERVAL '30 minutes'
                      THEN 1 ELSE 0 END AS new_s
               FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)
             ), s AS (

@@ -5,12 +5,12 @@ The reference wraps each mapped resource in a FHIR transaction bundle
 assembles all turns of a conversation, **reordered by turn_idx regardless of
 arrival order**, into one harmonized bundle JSON.
 
-:func:`bundle_json` is the one bundle renderer: the batch plans here and
-both streaming assemblies (streaming/assembly.py: the ``session_window``
-aggregation and the ``state_v1`` handler, which only buffers turns) render
-through it, so their bundles are byte-identical by construction. The
-ordering is explicit (sort_array on the struct's leading turn_idx field),
-never shuffle order (SURVEY §7.4 risk 2).
+:func:`bundle_json` is the one bundle renderer: the batch plans here, the
+batch ``session_assembly`` composition over ``operators/windows.py:session``
+and the streaming ``state_v1`` assembly (streaming/assembly.py, whose
+handler only buffers turns) render through it, so their bundles are
+byte-identical by construction. The ordering is explicit (sort_array on the
+struct's leading turn_idx field), never shuffle order (SURVEY §7.4 risk 2).
 
 :func:`assemble_bundles` is pure Catalyst: groupBy + collect_list +
 bundle_json. One shuffle; codegen everywhere. At 10^12 turns the shuffle is

@@ -19,6 +19,10 @@ Implementation: ``applyInPandasWithState`` keyed by ``conv_id`` —
   ``assemble_bundles`` operator, which orders turns by (turn_idx, role,
   text) — NEVER by arrival/shuffle order (SURVEY §7.4 risk 2).
 
+This is the pipeline's only session assembly. Its batch analogue is
+``operators/windows.py:session`` with ``bundle_json`` as the aggregate (the
+``session_assembly`` query): on on-time input both emit the same rows.
+
 Skew: the shuffle into the stateful operator is keyed by conv_id only (state
 keys must stay unsalted — BASELINE north_rule). A hot conversation
 serializes one task but state updates are O(new turns) and ingestion is
@@ -52,7 +56,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..operators.bundles import bundle_json, turns_struct
+from ..operators.bundles import bundle_json
 
 BUNDLE_SCHEMA = StructType(
     [
@@ -108,12 +112,13 @@ def _unpack_turns(blob: bytes) -> list:
 
 def _split_sessions(turns: list, gap_us: int) -> list[list]:
     """Event-time session split: sort by (ts, turn_idx) and break where the
-    inter-turn gap reaches ``gap`` — the same semantics as
-    ``F.session_window`` (strict: diff >= gap starts a new session)."""
+    inter-turn gap exceeds ``gap`` — the semantics of ``F.session_window``,
+    whose [ts, ts + gap) windows merge when they touch: a turn exactly
+    ``gap`` after the previous one stays in the session."""
     turns = sorted(turns, key=lambda t: (t[3], t[0]))
     sessions, cur = [], [turns[0]]
     for t in turns[1:]:
-        if t[3] - cur[-1][3] >= gap_us:
+        if t[3] - cur[-1][3] > gap_us:
             sessions.append(cur)
             cur = [t]
         else:
@@ -135,12 +140,19 @@ def _session_row(key, session: list, gap_seconds: int) -> dict:
 
 
 def _chunks(session: list, max_turns: int | None) -> list[list]:
-    """Bundle-size cap (production knob, mirrors the batch operator's
-    max_turns_per_bundle): a giant session emits several bundles instead of
-    one enormous bundle in a single task."""
+    """Bundle-size cap: a giant session emits several bundles of at most
+    ``max_turns`` turns instead of one enormous bundle in a single task.
+    The cut is by position in the session's (turn_idx, role, text) order,
+    NULLs first as ``bundle_json`` sorts them, so a repeated turn_idx
+    with a NULL role or text chunks without comparing None to a string.
+    The batch operator's ``max_turns_per_bundle`` cuts by ``turn_idx div
+    max`` instead; the two agree when a session's turn_idx run 0..n-1."""
     if not max_turns or len(session) <= max_turns:
         return [session]
-    ordered = sorted(session, key=lambda t: (t[0], t[1], t[2]))
+    ordered = sorted(
+        session,
+        key=lambda t: (t[0], t[1] is not None, t[1] or "", t[2] is not None, t[2] or ""),
+    )
     return [ordered[i : i + max_turns] for i in range(0, len(ordered), max_turns)]
 
 
@@ -203,12 +215,13 @@ def _assemble(
             state.remove()
         return
 
-    # incremental emission: a session whose end+gap is below the watermark can
-    # never legally grow (later rows would be dropped as late), so emit it now
-    # and shrink state — this is what bounds state size on an endless stream.
+    # incremental emission: a session whose last turn + gap is below the
+    # watermark can never legally grow (a row that could join it, at most
+    # gap later, would be dropped as late), so emit it now and shrink
+    # state — this is what bounds state size on an endless stream.
     sessions = _split_sessions(turns, gap_us)
-    complete = [s for s in sessions if s[-1][3] + gap_us <= wm_us]
-    open_sessions = [s for s in sessions if s[-1][3] + gap_us > wm_us]
+    complete = [s for s in sessions if s[-1][3] + gap_us < wm_us]
+    open_sessions = [s for s in sessions if s[-1][3] + gap_us >= wm_us]
 
     if open_sessions:
         remaining = [t for s in open_sessions for t in s]
@@ -288,46 +301,3 @@ def _parse_seconds(s: str) -> int:
         "second(s), minute(s), hour(s) or day(s), e.g. '5 minutes'"
     )
 
-
-def assemble_sessions_window(
-    transcripts,
-    gap: str = "5 minutes",
-    watermark_delay: str = "10 minutes",
-):
-    """Pure-JVM streaming session assembly: the built-in ``session_window``
-    aggregation instead of Python state — ZERO Python in the hot path, the
-    whole operator lives in Tungsten's streaming session aggregation.
-
-    Output-identical to :func:`assemble_sessions_stateful` for the common
-    feature set (tests assert byte equality): session split where the
-    inter-turn gap reaches ``gap`` (session_window merges windows that
-    overlap, i.e. diff < gap), ``session_end`` = last ts + gap (the merged
-    window's end), bundle = ``bundle_json`` of the session's turns, the
-    renderer the stateful operator uses. Emission when the watermark passes
-    the session end (append mode), the same completion rule as the stateful
-    drain; rows behind the watermark are dropped (allowedLateness=ZERO).
-
-    Reach for the STATEFUL operator only when its extras are needed:
-    ``max_turns_per_bundle`` chunking of giant sessions, or custom per-drain
-    instrumentation. Everything else should prefer this plan — Catalyst
-    handles partial aggregation, state-store layout and skew, and the
-    per-batch Arrow round-trip disappears."""
-    from pyspark.sql import functions as F
-
-    t = transcripts.select("conv_id", "turn_idx", "role", "text", "ts")
-    if watermark_delay is not None:  # None = already watermarked upstream
-        t = t.withWatermark("ts", watermark_delay)
-    return (
-        t.groupBy("conv_id", F.session_window("ts", gap).alias("_w"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_turns"),
-            F.collect_list(turns_struct()).alias("_turns"),
-        )
-        .select(
-            "conv_id",
-            "n_turns",
-            bundle_json("_turns").alias("bundle"),
-            F.col("_w.start").alias("session_start"),
-            F.col("_w.end").alias("session_end"),
-        )
-    )

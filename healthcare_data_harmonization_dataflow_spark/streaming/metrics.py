@@ -24,6 +24,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.listener import StreamingQueryListener
 
+from .sink import fs_for
+
 
 def latency_distribution(col: str) -> list[Column]:
     """Per-batch Distribution of a per-element latency column (µs): min,
@@ -70,12 +72,16 @@ _STATE_FIELDS = (
 
 class MetricsListener(StreamingQueryListener):
     """Captures per-batch throughput, observed counters, state-store size
-    and the watermark to an in-memory list + optional JSONL file (the
-    engine's metrics table)."""
+    and the watermark to an in-memory list and, when ``path`` names a
+    directory (a local path or any URI the sinks accept), to one
+    ``<query>-<batchId>.json`` record per batch there — the engine's
+    metrics table. Each record is one whole-file write through the sinks'
+    FS facade: no append, and a replayed batch overwrites its own record."""
 
     def __init__(self, path: str | None = None):
         self.progress: list[dict] = []
         self.path = path
+        self._fs = None
         self._lock = threading.Lock()
 
     def onQueryStarted(self, event):
@@ -106,9 +112,13 @@ class MetricsListener(StreamingQueryListener):
         with self._lock:
             self.progress.append(row)
             if self.path:
-                os.makedirs(os.path.dirname(self.path), exist_ok=True)
-                with open(self.path, "a") as f:
-                    f.write(json.dumps(row, default=str) + "\n")
+                if self._fs is None:
+                    self._fs = fs_for(self.path)
+                    self._fs.mkdirs(self.path)
+                self._fs.write_text(
+                    os.path.join(self.path, f"{p.name or p.id}-{p.batchId}.json"),
+                    json.dumps(row, default=str),
+                )
 
     def onQueryTerminated(self, event):
         pass

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from ..model.errors import err_rows, io_error, ok_rows
 from ..operators.mapping_op import apply_mapping
 from ..sources.transcripts import TRANSCRIPT_SCHEMA
-from .assembly import assemble_sessions_stateful
+from .assembly import _parse_seconds, assemble_sessions_stateful
 from .metrics import observe_mapping
 from .sink import ExactlyOnceParquetSink
 
@@ -50,13 +50,8 @@ class HarmonizationPipeline:
     trigger: dict = field(default_factory=lambda: {"processingTime": "5 seconds"})
     error_shards: int = 10  # --errorLogShardNum default, Hl7v2ToFhirStreamingRunner.java:133-137
     max_files_per_trigger: int | None = None  # None = let availableNow take everything
-    # "state_v1" (applyInPandasWithState; drops rows behind the watermark
-    # exactly, the reference's allowedLateness=ZERO) | "window" (built-in
-    # session_window agg, pure JVM, 16-27x faster on large backfills). Keep
-    # "window" an explicit opt-in: it inherits Spark's lagged late-row filter
-    # (SPARK-24634: late input is checked against the PREVIOUS batch's
-    # watermark), so a row near the watermark is admitted where the reference
-    # drops it (test_late_rows_dropped fails under it).
+    # the one session assembly: applyInPandasWithState, dropping rows
+    # behind the watermark exactly (the reference's allowedLateness=ZERO)
     assembly: str = "state_v1"
     max_turns_per_bundle: int | None = None  # bundle-size cap (hot-conv chunking)
     # the reference's --enablePerformanceMetrics: per-element transform
@@ -70,10 +65,9 @@ class HarmonizationPipeline:
     dedup_turns: bool = False
 
     def __post_init__(self):
-        if self.assembly not in ("state_v1", "window"):
-            raise ValueError(
-                f"assembly must be 'state_v1' or 'window', got {self.assembly!r}"
-            )
+        if self.assembly != "state_v1":
+            raise ValueError(f"assembly must be 'state_v1', got {self.assembly!r}")
+        _parse_seconds(self.session_gap)  # a bad gap fails at construction
         # both sinks commit through the sink's one marker step on any
         # filesystem out_dir names; there is no commit option to set
         self.bundles_sink = ExactlyOnceParquetSink(
@@ -132,24 +126,12 @@ class HarmonizationPipeline:
         ok = ok_rows(m).select(
             "conv_id", "turn_idx", "role", F.col("ok").alias("text"), "ts"
         )
-        if self.assembly == "window":
-            from .assembly import assemble_sessions_window
-
-            if self.max_turns_per_bundle:
-                raise ValueError(
-                    "assembly='window' has no bundle chunking; use "
-                    "assembly='state_v1' with max_turns_per_bundle"
-                )
-            bundles = assemble_sessions_window(
-                ok, gap=self.session_gap, watermark_delay=self._assembly_delay()
-            )
-        else:
-            bundles = assemble_sessions_stateful(
-                ok,
-                gap=self.session_gap,
-                watermark_delay=self._assembly_delay(),
-                max_turns_per_bundle=self.max_turns_per_bundle,
-            )
+        bundles = assemble_sessions_stateful(
+            ok,
+            gap=self.session_gap,
+            watermark_delay=self._assembly_delay(),
+            max_turns_per_bundle=self.max_turns_per_bundle,
+        )
         return (
             bundles.writeStream.foreachBatch(self.bundles_sink.foreach_batch())
             .option("checkpointLocation", checkpoint)

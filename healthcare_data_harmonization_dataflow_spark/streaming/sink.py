@@ -189,6 +189,20 @@ def _is_local(path: str) -> bool:
     return urlparse(path).scheme == ""
 
 
+def fs_for(path: str, spark: SparkSession | None = None) -> "_LocalFs | _HadoopFs":
+    """The FS facade for ``path``'s scheme; a URI needs a session (``spark``
+    or the active one) for the Hadoop FileSystem API."""
+    if _is_local(path):
+        return _LocalFs()
+    spark = spark or SparkSession.getActiveSession()
+    if spark is None:
+        raise RuntimeError(
+            f"{path!r} needs a SparkSession for the Hadoop FileSystem API; "
+            "pass spark="
+        )
+    return _HadoopFs(spark, path)
+
+
 class ExactlyOnceParquetSink:
     def __init__(
         self,
@@ -197,6 +211,8 @@ class ExactlyOnceParquetSink:
         num_shards: int | None = None,
         spark: SparkSession | None = None,
     ):
+        if num_shards is not None and num_shards < 1:
+            raise ValueError(f"num_shards must be None or >= 1, got {num_shards}")
         self.base_dir = base_dir
         self.name = name
         self.num_shards = num_shards  # reference's --errorLogShardNum analogue
@@ -207,16 +223,7 @@ class ExactlyOnceParquetSink:
 
     def _fs(self):
         if self._fs_cache is None:
-            if _is_local(self.base_dir):
-                self._fs_cache = _LocalFs()
-            else:
-                spark = self._spark or SparkSession.getActiveSession()
-                if spark is None:
-                    raise RuntimeError(
-                        f"reading {self.base_dir!r} needs a SparkSession for the "
-                        "Hadoop FileSystem API; pass spark= to the sink"
-                    )
-                self._fs_cache = _HadoopFs(spark, self.base_dir)
+            self._fs_cache = fs_for(self.base_dir, self._spark)
         return self._fs_cache
 
     @property
@@ -290,11 +297,13 @@ class ExactlyOnceParquetSink:
             return  # replayed epoch — exactly-once guard
         out = df
         if self.num_shards:
-            # repartition, NOT coalesce: coalesce is a narrow dependency
+            # a rebalance, NOT coalesce: coalesce is a narrow dependency
             # that caps the parallelism of the ENTIRE upstream plan (scan +
-            # mapping) at num_shards; repartition shuffles only the output
-            # rows (error rows are few) and leaves upstream parallelism alone
-            out = out.repartition(self.num_shards)
+            # mapping) at num_shards; a rebalance shuffles only the output
+            # rows and leaves upstream parallelism alone. Unlike
+            # repartition(n), AQE coalesces its num_shards partitions by
+            # size, so a batch of a few error rows writes one file
+            out = out.hint("rebalance", self.num_shards)
         # exact row count rides the write itself via an Observation — no
         # second pass, no per-file I/O, fully distributed (the count is
         # aggregated executor-side during the one write job)
@@ -424,11 +433,7 @@ class FanOutSink:
             # the staging filesystem follows staging_dir's OWN scheme — a
             # sink-derived FS with a different scheme would make the
             # finally-delete a silent no-op and leak a staged batch copy
-            fs = (
-                _LocalFs()
-                if _is_local(self.staging_dir)
-                else _HadoopFs(df.sparkSession, self.staging_dir)
-            )
+            fs = fs_for(self.staging_dir, df.sparkSession)
             staged_path = os.path.join(self.staging_dir, f"batch={batch_id}")
             if all(sink.is_committed(batch_id) for sink, _ in self.routes):
                 # fully-committed replay: nothing to stage — but a crash

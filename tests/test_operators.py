@@ -1270,6 +1270,56 @@ def test_lsh_fp_rate_zero_candidates_matches_oracle(spark):
     assert [tuple(r) for r in got] == oracle == [(0, 0, 0)]
 
 
+def test_session_oracles_merge_turns_exactly_one_gap_apart(spark):
+    """Spark's session_window merges [ts, ts + gap) windows that touch, so
+    an event exactly one gap after the previous one stays in its session
+    and one a second later starts the next. The session_window and
+    session_assembly oracles must draw the same boundary."""
+    import datetime
+
+    import duckdb
+    import pandas as pd
+
+    import __spark_entry__ as entry
+
+    t0 = datetime.datetime(2024, 1, 1)
+    sec = datetime.timedelta(seconds=1)
+    ts = [t0, t0 + 1800 * sec, t0 + 3601 * sec, t0, t0 + 300 * sec, t0 + 601 * sec]
+    pdf = pd.DataFrame(
+        {
+            "event_id": range(6),
+            "ts": ts,
+            "user_id": [1, 1, 1, 2, 2, 2],
+            "event_type": ["click", "view", "error", "click", "view", "click"],
+            "value": [1.0] * 6,
+            "props": [f"p{i}" for i in range(6)],
+        }
+    )
+    con = duckdb.connect()
+    con.register("events", pdf)
+    sdf = spark.createDataFrame(
+        pdf,
+        "event_id long, ts timestamp_ntz, user_id long, event_type string, "
+        "value double, props string",
+    )
+
+    import unittest.mock as mock
+
+    want_sessions = {"session_window": 3, "session_assembly": 5}
+    for name, n_sessions in want_sessions.items():
+        with mock.patch.object(entry, "_events", lambda s, d: sdf):
+            got = entry.queries()[name](spark, "unused")
+        cols = sorted(got.columns)
+        spark_rows = sorted(tuple(r[c] for c in cols) for r in got.collect())
+        odf = con.sql(entry.oracle_sql()[name]).df()
+        duck_rows = sorted(
+            tuple(v.to_pydatetime() if isinstance(v, pd.Timestamp) else v for v in r)
+            for r in odf[cols].itertuples(index=False)
+        )
+        assert spark_rows == duck_rows, name
+        assert len(spark_rows) == n_sessions, name
+
+
 # Even doc_ids are history, odd doc_ids the arriving batch (the
 # dedup_incremental queries' default history_pred). Each fixture pins the
 # survivors (doc_id, n_band_matches, near_dup), the same with and without

@@ -137,12 +137,13 @@ def test_split_sessions_partitions_by_gap(turns):
     # partition: nothing lost, nothing invented
     assert sorted(flat) == sorted(turns)
     for s in sessions:
-        # within a session, consecutive (ts-sorted) turns are closer than gap
+        # within a session, consecutive (ts-sorted) turns are at most gap
+        # apart (session_window's touching windows merge)
         for a, b in zip(s, s[1:]):
-            assert b[3] - a[3] < gap_us
+            assert b[3] - a[3] <= gap_us
     # across boundaries, the gap criterion held
     for s1, s2 in zip(sessions, sessions[1:]):
-        assert s2[0][3] - s1[-1][3] >= gap_us
+        assert s2[0][3] - s1[-1][3] > gap_us
 
 
 # the full round-2 language surface in one config: nested targets, append

@@ -13,7 +13,14 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from healthcare_data_harmonization_dataflow_spark.operators.bundles import assemble_bundles
+from healthcare_data_harmonization_dataflow_spark.model.errors import ok_rows
+from healthcare_data_harmonization_dataflow_spark.operators.bundles import (
+    assemble_bundles,
+    bundle_json,
+    turns_struct,
+)
+from healthcare_data_harmonization_dataflow_spark.operators.mapping_op import apply_mapping
+from healthcare_data_harmonization_dataflow_spark.operators.windows import session
 from healthcare_data_harmonization_dataflow_spark.sources.transcripts import (
     append_flush_sentinel,
     generate_transcripts,
@@ -308,6 +315,36 @@ def test_sink_lineage(spark, tmp_path):
     assert sum(p["bytes"] for p in lin[0]["partitions"]) == _data_file_bytes(
         str(tmp_path / "s"), 0
     )
+
+
+def test_sink_shards_are_sized_from_the_rows(spark, tmp_path):
+    """num_shards caps the files of a batch; AQE sizes the shuffle from
+    the rows, so a small batch writes one file instead of num_shards
+    near-empty ones. None still writes the upstream partitions as they
+    are."""
+    df = spark.range(0, 200, numPartitions=3).select(
+        F.col("id").cast("string").alias("conv_id")
+    )
+    sharded = ExactlyOnceParquetSink(str(tmp_path / "sharded"), "s", num_shards=10)
+    sharded.write_batch(df, 0)
+    (lin,) = sharded.lineage()
+    assert lin["rows"] == 200 and len(lin["partitions"]) == 1
+    assert sharded.read_committed(spark).count() == 200
+    plain = ExactlyOnceParquetSink(str(tmp_path / "plain"), "p")
+    plain.write_batch(df, 0)
+    assert len(plain.lineage()[0]["partitions"]) == 3
+
+
+@pytest.mark.parametrize("shards", [0, -1])
+def test_sink_rejects_shard_count_below_one(tmp_path, shards):
+    """--error-shards below 1 fails at construction instead of silently
+    writing unsharded (0) or failing inside a batch (negative)."""
+    with pytest.raises(ValueError, match="num_shards"):
+        ExactlyOnceParquetSink(str(tmp_path / "s"), "s", num_shards=shards)
+    with pytest.raises(ValueError, match="num_shards"):
+        HarmonizationPipeline(
+            mapping_config=CFG, out_dir=str(tmp_path / "o"), error_shards=shards
+        )
 
 
 def test_session_gap_splits_conversation(spark, tmp_path):
@@ -764,7 +801,7 @@ def test_fanout_sink_stages_once_without_cache(spark, tmp_path):
 def test_transform_latency_distribution_in_metrics(spark, tmp_path):
     """enable_performance_metrics must surface the per-element transform
     latency Distribution (min/avg/max + p50/p95/p99) in every batch's
-    observed metrics, visible in the listener's JSONL — the MappingFn
+    observed metrics, visible in the listener's records — the MappingFn
     Distribution analogue (MappingFn.java:53-54, 205-210) — without leaking
     the _lat_us column into sinks."""
     from healthcare_data_harmonization_dataflow_spark.streaming.metrics import (
@@ -774,8 +811,8 @@ def test_transform_latency_distribution_in_metrics(spark, tmp_path):
     tmp = str(tmp_path)
     inp = os.path.join(tmp, "transcripts")
     _write_input(spark, inp, total_turns=200)
-    jsonl = os.path.join(tmp, "metrics.jsonl")
-    listener = MetricsListener(jsonl)
+    metrics_dir = os.path.join(tmp, "metrics")
+    listener = MetricsListener(metrics_dir)
     spark.streams.addListener(listener)
     try:
         pipe = HarmonizationPipeline(
@@ -791,8 +828,10 @@ def test_transform_latency_distribution_in_metrics(spark, tmp_path):
         spark.streams.removeListener(listener)
 
     assert "_lat_us" not in pipe.bundles(spark).columns
-    with open(jsonl) as f:
-        rows = [json.loads(line) for line in f]
+    rows = []
+    for name in sorted(os.listdir(metrics_dir)):
+        with open(os.path.join(metrics_dir, name)) as f:
+            rows.append(json.load(f))
     observed = [
         r["observed"]["mapping_metrics"]
         for r in rows
@@ -860,6 +899,61 @@ def test_metrics_listener_reports_state_operators(spark, tmp_path):
     assert rows[-1]["watermark"] is not None
 
 
+def test_metrics_listener_writes_records_under_a_uri(spark, tmp_path):
+    """A metrics path given as a URI (the CLI's ``--out`` on a cluster)
+    lands on that filesystem, one JSON record per (query, batch), not in a
+    local directory named after the scheme."""
+    import time as _t
+
+    from healthcare_data_harmonization_dataflow_spark.streaming.metrics import (
+        MetricsListener,
+    )
+
+    inp = str(tmp_path / "in")
+    spark.range(6).selectExpr("cast(id as string) as conv_id").write.parquet(inp)
+    listener = MetricsListener(f"file://{tmp_path}/metrics")
+    spark.streams.addListener(listener)
+    try:
+        q = (
+            spark.readStream.schema("conv_id string")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(inp)
+            .writeStream.format("noop")
+            .queryName("uri_metrics")
+            .trigger(availableNow=True)
+            .option("checkpointLocation", str(tmp_path / "ck"))
+            .start()
+        )
+        q.awaitTermination(300)
+        n_batches = len(q.recentProgress)
+        want = sorted(f"uri_metrics-{b}.json" for b in range(n_batches))
+
+        def records():
+            """Every whole record written so far (the Hadoop FS makes a
+            file visible at create, before its bytes are closed in)."""
+            d = tmp_path / "metrics"
+            out = {}
+            for n in os.listdir(d) if d.exists() else []:
+                if not n.startswith("."):
+                    try:
+                        out[n] = json.loads((d / n).read_text())
+                    except ValueError:
+                        pass
+            return out
+
+        # listener events arrive asynchronously; wait for every batch's record
+        deadline = _t.time() + 60
+        while _t.time() < deadline and sorted(records()) != want:
+            _t.sleep(0.2)
+    finally:
+        spark.streams.removeListener(listener)
+
+    got = records()
+    assert n_batches >= 2 and sorted(got) == want
+    assert all(got[f"uri_metrics-{b}.json"]["batch_id"] == b for b in range(n_batches))
+    assert not os.path.exists("file:")
+
+
 def test_state_blob_version_tag():
     """Session-state blobs carry a version byte: a blob from a different
     format fails with an explicit incompatibility error, not inside
@@ -877,6 +971,65 @@ def test_state_blob_version_tag():
         _unpack_turns(pickle.dumps(turns))  # un-versioned legacy blob
     with pytest.raises(ValueError, match="incompatible"):
         _unpack_turns(b"")
+
+
+def test_state_v1_chunks_repeated_turn_with_null_fields(spark):
+    """A chunked session holding one turn_idx several times (an
+    at-least-once redelivery without dedup_turns), with a NULL role or
+    text on some copies, is cut in bundle_json's order, NULLs first,
+    instead of failing to compare None with a string."""
+    import pandas as pd
+
+    from healthcare_data_harmonization_dataflow_spark.streaming.assembly import (
+        _assemble,
+    )
+
+    class _State:
+        """The GroupState surface the handler uses."""
+
+        hasTimedOut = False
+        value = None
+        exists = property(lambda self: self.value is not None)
+        get = property(lambda self: self.value)
+
+        def update(self, v):
+            self.value = v
+
+        def remove(self):
+            self.value = None
+
+        def setTimeoutTimestamp(self, ms):
+            pass
+
+        def getCurrentWatermarkMs(self):
+            return 0
+
+    pdf = pd.DataFrame(
+        {
+            "turn_idx": [2, 1, 1, 1],
+            "role": ["user", "user", None, "user"],
+            "text": ["c", "a", "b", None],
+            "ts": pd.to_datetime(["2024-01-01 00:00:0%d" % i for i in range(4)]),
+        }
+    )
+    state = _State()
+    assert list(_assemble(("A",), iter([pdf]), state, 60, 2)) == []  # still open
+    state.hasTimedOut = True
+    (out,) = _assemble(("A",), iter([]), state, 60, 2)
+    chunks = [list(map(tuple, t)) for t in out["turns"]]
+    assert chunks == [
+        [(1, None, "b"), (1, "user", None)],
+        [(1, "user", "a"), (2, "user", "c")],
+    ]
+    assert list(out["n_turns"]) == [2, 2]
+    assert state.value is None
+    # the chunks, concatenated, are the order bundle_json renders
+    whole = spark.createDataFrame(
+        [([t for c in chunks for t in c],)],
+        "t array<struct<turn_idx:int,role:string,text:string>>",
+    )
+    rendered = json.loads(whole.select(bundle_json("t")).first()[0])
+    assert [tuple(t.values()) for t in rendered] == [t for c in chunks for t in c]
 
 
 def test_state_handler_freezes_worker_heap_once(spark, tmp_path):
@@ -1004,69 +1157,48 @@ def test_sink_lineage_has_bytes_and_observed_rows(spark, tmp_path):
         assert sum(p["bytes"] for p in parts) == _data_file_bytes(disk, 0)
 
 
-def test_window_assembly_matches_v1(spark, tmp_path):
-    """The pure-JVM session_window assembly must produce byte-identical
-    bundles (and identical session bounds) to the stateful reference path,
-    including session-gap splits — and its streaming plan must contain NO
-    Python stage."""
+def _batch_sessions(turns, gap):
+    """The batch session assembly (the registry's ``session_assembly``
+    query): the generic session-window operator with the bundle renderer
+    as its aggregate."""
+    s = session(
+        turns, "ts", gap, ["conv_id"],
+        aggs=[
+            F.count(F.lit(1)).alias("n_turns"),
+            bundle_json(F.collect_list(turns_struct())).alias("bundle"),
+        ],
+    )
+    return s.select(
+        "conv_id", "n_turns", "bundle",
+        F.col("win_start").alias("session_start"),
+        F.col("win_end").alias("session_end"),
+    )
+
+
+def test_state_v1_matches_batch_session_window(spark, tmp_path):
+    """On on-time input the streaming state_v1 pipeline emits exactly the
+    sessions of the batch session_window composition over the same mapped
+    turns: the same gap splits, bundles byte for byte and session bounds
+    [first ts, last ts + gap]."""
     tmp = str(tmp_path)
     inp = os.path.join(tmp, "transcripts")
-    _write_input(spark, inp, total_turns=300)
+    src = _write_input(spark, inp, total_turns=300)
+    # turns are 10 s +/- 3 s apart, so a 10 s gap splits many conversations
+    pipe = _run_pipeline(spark, tmp, inp, gap="10 seconds")
 
-    outs = {}
-    for mode in ("state_v1", "window"):
-        pipe = HarmonizationPipeline(
-            mapping_config=CFG,
-            out_dir=os.path.join(tmp, f"out_{mode}"),
-            session_gap="2 minutes",
-            watermark_delay="36 hours",
-            trigger={"availableNow": True},
-            max_files_per_trigger=4,
-            assembly=mode,
-        )
-        q = pipe.run_harmonization(spark, inp, os.path.join(tmp, f"ck_{mode}"))
-        q.awaitTermination(300)
-        outs[mode] = {
-            (
-                r["conv_id"],
-                r["n_turns"],
-                r["bundle"],
-                r["session_start"],
-                r["session_end"],
-            )
-            for r in pipe.bundles(spark)
-            .filter(F.col("conv_id") != "conv-sentinel")
-            .collect()
+    def keyed(df):
+        return {
+            (r["conv_id"], r["n_turns"], r["bundle"], r["session_start"], r["session_end"])
+            for r in df.collect()
         }
-    assert outs["window"] == outs["state_v1"]
-    assert len(outs["window"]) > 0
 
-    # zero Python in the hot path: the batch shape of the same plan
-    from healthcare_data_harmonization_dataflow_spark.streaming.assembly import (
-        assemble_sessions_window,
+    got = keyed(pipe.bundles(spark).filter(F.col("conv_id") != "conv-sentinel"))
+    ok = ok_rows(apply_mapping(src, CFG, id_col="conv_id", data_col="text")).select(
+        "conv_id", "turn_idx", "role", F.col("ok").alias("text"), "ts"
     )
-
-    batch_plan = (
-        assemble_sessions_window(
-            spark.createDataFrame(
-                [("c", 0, "user", "t", __import__("datetime").datetime(2024, 1, 1))],
-                "conv_id string, turn_idx int, role string, text string, ts timestamp",
-            )
-        )
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "EvalPython" not in batch_plan
-
-    # chunking is a stateful-only feature: asking for both fails fast
-    with pytest.raises(ValueError, match="chunking"):
-        HarmonizationPipeline(
-            mapping_config=CFG,
-            out_dir=os.path.join(tmp, "out_bad"),
-            assembly="window",
-            max_turns_per_bundle=10,
-        ).run_harmonization(spark, inp, os.path.join(tmp, "ck_bad"))
+    want = keyed(_batch_sessions(ok, "10 seconds"))
+    assert got == want
+    assert len(want) > len({k[0] for k in want})  # some conversation gap-split
 
 
 def test_dedup_turns_absorbs_at_least_once_redelivery(spark, tmp_path):
@@ -1116,34 +1248,6 @@ def test_dedup_turns_absorbs_at_least_once_redelivery(spark, tmp_path):
     assert pipe.deadletter(spark).count() == want_dl
 
 
-def test_dedup_turns_with_window_assembly(spark, tmp_path):
-    """dedup_turns sets the watermark at the source; the pure-JVM
-    session_window assembly must then skip its own (re-definition is
-    rejected) and still produce redelivery-clean bundles."""
-    tmp = str(tmp_path)
-    inp = os.path.join(tmp, "in")
-    src = _write_input(spark, inp, total_turns=120, with_sentinel=False)
-    src.write.mode("append").parquet(inp)  # everything twice
-    append_flush_sentinel(spark, inp)
-
-    pipe = HarmonizationPipeline(
-        mapping_config=CFG,
-        out_dir=os.path.join(tmp, "out"),
-        session_gap="2 minutes",
-        watermark_delay="36 hours",
-        trigger={"availableNow": True},
-        assembly="window",
-        dedup_turns=True,
-    )
-    q = pipe.run_harmonization(spark, inp, os.path.join(tmp, "ck"))
-    q.awaitTermination(300)
-    total = pipe.bundles(spark).agg(F.sum("n_turns")).collect()[0][0]
-    # 120 unique turns delivered twice; only the ok-branch unique ones land
-    assert total is not None and total <= 120
-    dup_check = pipe.bundles(spark).groupBy("conv_id").count()
-    assert dup_check.count() > 0
-
-
 def test_read_committed_empty_recovers_schema(spark, tmp_path):
     """Review fix: reading a sink whose data dirs are gone (or a fresh one
     with commit history) must yield an EMPTY frame with the REAL schema
@@ -1184,11 +1288,11 @@ def test_fanout_cleans_orphaned_staging_on_replay(spark, tmp_path):
 
 
 def test_all_assembly_paths_render_identical_bundles(spark, tmp_path):
-    """Streaming state_v1, the session_window assembly and both batch
-    plans (salted and unsalted) render bundles through one expression, so
-    control characters in role or text and a NULL text come out
-    byte-identical on all four: ESC as Jackson's \\u001B, a NULL field
-    as null."""
+    """Streaming state_v1, the batch session_window composition and both
+    batch plans (salted and unsalted) render bundles through one
+    expression, so control characters in role or text and a NULL text
+    come out byte-identical on all four: ESC as Jackson's \\u001B, a
+    NULL field as null."""
     import time
 
     from healthcare_data_harmonization_dataflow_spark.sources.transcripts import (
@@ -1196,7 +1300,6 @@ def test_all_assembly_paths_render_identical_bundles(spark, tmp_path):
     )
     from healthcare_data_harmonization_dataflow_spark.streaming.assembly import (
         assemble_sessions_stateful,
-        assemble_sessions_window,
     )
 
     rows = [
@@ -1211,31 +1314,31 @@ def test_all_assembly_paths_render_identical_bundles(spark, tmp_path):
     _append_one_file(df, inp, time.time() - 100)
     append_flush_sentinel(spark, inp)
 
-    outs = {}
-    for name, assemble in (
-        ("state_v1", assemble_sessions_stateful),
-        ("window", assemble_sessions_window),
-    ):
-        src = (
-            spark.readStream.schema(TRANSCRIPT_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(inp)
-        )
-        q = (
-            assemble(src, gap="2 minutes", watermark_delay="1 hour")
-            .writeStream.format("memory")
-            .queryName(f"paths_{name}")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", str(tmp_path / f"ck_{name}"))
-            .start()
-        )
-        q.awaitTermination(300)
-        outs[name] = {
+    src = (
+        spark.readStream.schema(TRANSCRIPT_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(inp)
+    )
+    q = (
+        assemble_sessions_stateful(src, gap="2 minutes", watermark_delay="1 hour")
+        .writeStream.format("memory")
+        .queryName("paths_state_v1")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .option("checkpointLocation", str(tmp_path / "ck_state_v1"))
+        .start()
+    )
+    q.awaitTermination(300)
+    outs = {
+        "state_v1": {
             r["conv_id"]: r["bundle"]
-            for r in spark.table(f"paths_{name}").collect()
+            for r in spark.table("paths_state_v1").collect()
             if r["conv_id"] != "conv-sentinel"
-        }
+        },
+        "batch_session_window": {
+            r["conv_id"]: r["bundle"] for r in _batch_sessions(df, "2 minutes").collect()
+        },
+    }
     batch = df.select("conv_id", "turn_idx", "role", "text")
     for salt in (None, 16):
         outs[f"batch_salt_{salt}"] = {
@@ -1311,21 +1414,12 @@ def test_sink_scalar_json_marker_counts_as_uncommitted(spark, tmp_path):
 
 
 def test_assembly_default_is_state_v1(tmp_path):
-    """The default must be state_v1: the pure-JVM window variant inherits
-    Spark's lagged two-watermark late-row filtering (late events checked
-    against the PREVIOUS batch's watermark), so a row arriving within one
-    batch of the watermark passing it is admitted, diverging from the
-    reference's allowedLateness=ZERO, which test_late_rows_dropped pins.
-    An explicit choice always wins (the backfill opt-in)."""
+    """state_v1 is the one session assembly and the default."""
     pipe = HarmonizationPipeline(mapping_config=CFG, out_dir=str(tmp_path / "o"))
     assert pipe.assembly == "state_v1"
-    window = HarmonizationPipeline(
-        mapping_config=CFG, out_dir=str(tmp_path / "w"), assembly="window"
-    )
-    assert window.assembly == "window"
 
 
-@pytest.mark.parametrize("assembly", ["tws", "auto", "state-v1"])
+@pytest.mark.parametrize("assembly", ["tws", "auto", "state-v1", "window"])
 def test_unknown_assembly_rejected(tmp_path, assembly):
     """An unknown backend name (a removed backend, a removed alias or a
     typo) must fail at construction, not silently run state_v1."""
@@ -1335,59 +1429,14 @@ def test_unknown_assembly_rejected(tmp_path, assembly):
         )
 
 
-def test_window_assembly_admits_boundary_late_row_documented(spark, tmp_path):
-    """Pin the DOCUMENTED divergence that keeps 'window' an explicit
-    opt-in: under the built-in session_window agg, a row behind the
-    current watermark but ahead of the PREVIOUS batch's watermark is
-    admitted and merged (Spark's two-watermark rule for built-in
-    stateful operators), where state_v1 drops it (allowedLateness=ZERO).
-    If a Spark upgrade ever makes the built-in agg strict, this test
-    fails and the auto selector can be revisited."""
-    import time as _t
-
-    tmp = str(tmp_path)
-    inp = os.path.join(tmp, "in")
-    os.makedirs(inp)
-    t0 = _t.time()
-    early = [
-        ("A", i, "user", '{"bar":%d}' % i, None, f"2024-01-01 00:00:{i:02d}")
-        for i in range(3)
-    ]
-    _append_one_file(_turns_df(spark, early), inp, t0)
-    _append_one_file(
-        _turns_df(
-            spark, [("conv-sentinel", 0, "user", "{}", None, "2024-01-02 00:00:00")]
-        ),
-        inp,
-        t0 + 100,
-    )
-    _append_one_file(
-        _turns_df(spark, [("A", 9, "user", '{"bar":9}', None, "2024-01-01 00:00:05")]),
-        inp,
-        t0 + 200,
-    )
-    _append_one_file(
-        _turns_df(
-            spark, [("conv-sentinel", 1, "user", "{}", None, "2024-01-03 00:00:00")]
-        ),
-        inp,
-        t0 + 300,
-    )
-    pipe = HarmonizationPipeline(
-        mapping_config=CFG,
-        out_dir=os.path.join(tmp, "out"),
-        session_gap="2 minutes",
-        watermark_delay="1 minutes",
-        trigger={"availableNow": True},
-        max_files_per_trigger=1,
-        assembly="window",
-    )
-    q = pipe.run_harmonization(spark, inp, os.path.join(tmp, "ckpt_h"))
-    q.awaitTermination(300)
-    bundles = pipe.bundles(spark).filter(F.col("conv_id") == "A").collect()
-    assert len(bundles) == 1
-    idxs = [t["turn_idx"] for t in json.loads(bundles[0]["bundle"])]
-    assert idxs == [0, 1, 2, 9]  # the boundary-late row IS admitted here
+@pytest.mark.parametrize("gap", ["1 minute 30 seconds", "5 fortnights"])
+def test_bad_session_gap_rejected_at_construction(tmp_path, gap):
+    """A session gap state_v1 cannot parse fails when the pipeline is
+    built, not when its first query starts."""
+    with pytest.raises(ValueError, match="expected '<integer> <unit>'"):
+        HarmonizationPipeline(
+            mapping_config=CFG, out_dir=str(tmp_path / "o"), session_gap=gap
+        )
 
 
 def test_sink_transient_read_failure_raises_for_readers(spark, tmp_path):

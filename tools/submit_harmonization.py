@@ -70,14 +70,9 @@ def main() -> None:
                     help="absorb at-least-once source redelivery: drop "
                          "duplicate (conv_id, turn_idx) within the watermark "
                          "before mapping (Pub/Sub semantics)")
-    ap.add_argument("--assembly", default="state_v1",
-                    choices=["state_v1", "window"],
-                    help="session assembly: applyInPandasWithState (default;"
-                    " supports --max-turns-per-bundle) or built-in"
-                    " session_window aggregation (pure JVM)")
     ap.add_argument("--max-turns-per-bundle", type=int, default=None,
                     help="chunk giant sessions into bundles of at most N"
-                    " turns (state_v1 only)")
+                    " turns")
     args = ap.parse_args()
 
     # imports deferred so --help works without a JVM
@@ -110,12 +105,12 @@ def main() -> None:
         watermark_delay=args.watermark_delay,
         trigger=trigger,
         error_shards=args.error_shards,
-        assembly=args.assembly,
         dedup_turns=args.dedup_turns,
         max_turns_per_bundle=args.max_turns_per_bundle,
         enable_performance_metrics=args.enable_performance_metrics,
     )
-    listener = MetricsListener(path=f"{args.out}/metrics/progress.jsonl")
+    # one JSON record per (query, batch), on any filesystem --out names
+    listener = MetricsListener(path=f"{args.out}/metrics")
     spark.streams.addListener(listener)
 
     qh = pipe.run_harmonization(spark, args.input, f"{args.checkpoint}/harmonization")
