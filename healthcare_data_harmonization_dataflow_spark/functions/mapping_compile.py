@@ -60,6 +60,11 @@ from .mapping_lang import (
 )
 
 
+# the column apply_mapping binds the parsed input VARIANT to; the column
+# backend's expressions read it
+PARSED_COL = "_parsed"
+
+
 class CompiledMapping:
     """A mapping config compiled for both execution backends."""
 
@@ -68,11 +73,15 @@ class CompiledMapping:
         self.config: MappingConfig = parse_mapping_config(config_text)
         _validate_literal_builtin_args(self.config)
         self._py = _compile_python(self.config)
+        # clock -> variant_columns() result, or the error that build raised
+        self._columns: "dict[str | None, tuple[Column, Column] | Exception]" = {}
 
     # ---------------------------------------------------------- column backend
-    def supports_columns(self) -> bool:
+    def supports_columns(self, clock: str | None = None) -> bool:
+        """Whether the config compiles to Catalyst expressions — the one
+        :meth:`variant_columns` build for ``clock``, kept for reuse."""
         try:
-            self.output_column(F.lit("{}"))
+            self.variant_columns(clock)
             return True
         except (MappingConfigError, RecursionError):
             # RecursionError: a recursive projector cannot unroll into a
@@ -80,26 +89,36 @@ class CompiledMapping:
             # the pandas backend
             return False
 
-    def output_column(self, data_col: Column | str, clock: str | None = None) -> Column:
-        """Compile to a single Column: data JSON string -> output JSON string.
-        ``clock`` is the injected processing-time instant $CurrentTime
-        renders (ISO-8601 string); None = Spark's query-constant now.
+    def variant_columns(self, clock: str | None = None) -> "tuple[Column, Column]":
+        """(output JSON Column, required-miss Column) over the parsed-input
+        VARIANT column ``PARSED_COL``, built at most once per ``clock`` and
+        only on first use: pandas workers compile configs with no
+        SparkContext to build Columns in. ``clock`` is the injected
+        processing-time instant $CurrentTime renders (ISO-8601 string);
+        None = Spark's query-constant now.
 
-        Raises MappingConfigError if the config is outside the projective
-        subset (caller falls back to the pandas backend).
-        """
-        data_col = F.col(data_col) if isinstance(data_col, str) else data_col
-        return self.output_with_required_from_variant(F.try_parse_json(data_col), clock)[0]
+        The second column is the dotted path of the FIRST
+        declaration-ordered ``required`` field whose value is nil for the
+        row (NULL when all present) — the caller routes such rows to the
+        dead-letter branch instead of emitting the output. Both columns are
+        plain expressions over the same root; the whole check stays inside
+        whole-stage codegen.
 
-    def output_with_required_from_variant(
-        self, root: Column, clock: str | None = None
-    ) -> "tuple[Column, Column]":
-        """(output JSON Column, required-miss Column). The second column is
-        the dotted path of the FIRST declaration-ordered ``required`` field
-        whose value is nil for the row (NULL when all present) — the caller
-        routes such rows to the dead-letter branch instead of emitting the
-        output. Both columns are plain expressions over the same root; the
-        whole check stays inside whole-stage codegen."""
+        Raises MappingConfigError (or RecursionError) if the config is
+        outside the projective subset; the failure is kept too, so a
+        second call does not rebuild."""
+        if clock not in self._columns:
+            try:
+                self._columns[clock] = self._build_columns(clock)
+            except (MappingConfigError, RecursionError) as e:
+                self._columns[clock] = e.with_traceback(None)
+        got = self._columns[clock]
+        if isinstance(got, Exception):
+            raise got
+        return got
+
+    def _build_columns(self, clock: str | None) -> "tuple[Column, Column]":
+        root = F.col(PARSED_COL)
         reg = _HoistRegistry()
         out, miss = self._compile_targets(root, clock, reg)
         hoists = reg.repeated()

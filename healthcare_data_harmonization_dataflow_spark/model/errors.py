@@ -33,9 +33,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-STEP_READ = "read"
 STEP_MAPPING = "mapping"
-STEP_WRITE = "write"
 
 
 class RecoverableMappingError(RuntimeError):

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from ..functions.mapping_compile import CompiledMapping, compile_mapping
+from ..functions.mapping_compile import PARSED_COL, CompiledMapping, compile_mapping
 from ..model.errors import (
     ERROR_ENTRY_SCHEMA,
     STEP_MAPPING,
@@ -55,7 +55,6 @@ def apply_mapping(
     id_col: str = "id",
     data_col: str = "data",
     backend: str = "auto",
-    step: str = STEP_MAPPING,
     clock: str | None = None,
     report_only: Callable[[Exception], bool] | None = None,
     measure_latency: bool = False,
@@ -83,36 +82,33 @@ def apply_mapping(
 
     mapping = compile_mapping(config_text)  # fail-fast on bad config
 
-    if backend == "auto":
-        backend = "columns" if mapping.supports_columns() else "pandas"
-    if custom_report_only:
+    if custom_report_only or measure_latency:
         # a caller-supplied classification needs the per-element try/except,
         # which only the pandas path has — silently ignoring it on the
         # columns path would drop user-requested fatal semantics (the exact
-        # silent-dead-letter failure the parameter exists to prevent)
+        # silent-dead-letter failure the parameter exists to prevent).
+        # Likewise the per-element transform Distribution
+        # (MappingFn.java:53-54, 203-209) needs a per-element clock, which
+        # only the Arrow/pandas path has — inside whole-stage codegen there
+        # is no per-row timer. Callers opting into the reference's
+        # enablePerformanceMetrics trade the codegen fast path for
+        # per-element observability. No column plan is built for either.
         backend = "pandas"
-    if measure_latency:
-        # the per-element transform Distribution (MappingFn.java:53-54,
-        # 203-209) needs a per-element clock, which only the Arrow/pandas
-        # path has — inside whole-stage codegen there is no per-row timer.
-        # Callers opting into the reference's enablePerformanceMetrics
-        # trade the codegen fast path for per-element observability.
-        backend = "pandas"
+    elif backend == "auto":
+        # the probe IS the build: variant_columns() below reuses it
+        backend = "columns" if mapping.supports_columns(clock) else "pandas"
 
     if backend == "columns":
         # parse ONCE into a materialized variant column; ok/err both read it.
         # (Without this, the ok-condition, ok-output and err-condition each
         # re-parsed the JSON — 3x the dominant per-row cost.)
-        parsed = F.try_parse_json(F.col(data_col))
-        out_col, req_miss = mapping.output_with_required_from_variant(
-            F.col("_parsed"), clock
-        )
+        out_col, req_miss = mapping.variant_columns(clock)
         out = (
-            df.withColumn("_parsed", parsed)
+            df.withColumn(PARSED_COL, F.try_parse_json(F.col(data_col)))
             .withColumn(
                 "ok",
                 F.when(
-                    F.col("_parsed").isNotNull() & req_miss.isNull(), out_col
+                    F.col(PARSED_COL).isNotNull() & req_miss.isNull(), out_col
                 ),
             )
             .withColumn(
@@ -121,9 +117,9 @@ def apply_mapping(
                 # condition); then required-miss — same dead-letter shape,
                 # message matches the python backend's RecoverableMappingError
                 F.when(
-                    F.col("_parsed").isNull() | F.col(data_col).isNull(),
+                    F.col(PARSED_COL).isNull() | F.col(data_col).isNull(),
                     error_entry(
-                        step=step,
+                        step=STEP_MAPPING,
                         message=F.concat(
                             F.lit("invalid input JSON: "),
                             F.coalesce(F.col(data_col), F.lit("<null>")),
@@ -134,7 +130,7 @@ def apply_mapping(
                 ).when(
                     req_miss.isNotNull(),
                     error_entry(
-                        step=step,
+                        step=STEP_MAPPING,
                         message=F.concat(
                             F.lit("required field '"),
                             req_miss,
@@ -146,7 +142,7 @@ def apply_mapping(
                 ),
             )
         )
-        return out.drop("_parsed")
+        return out.drop(PARSED_COL)
 
     if backend != "pandas":
         raise ValueError(f"unknown backend {backend!r}")
@@ -198,7 +194,7 @@ def apply_mapping(
                         "stacktrace": traceback.format_exc(),
                         "error_message": msg,
                         "timestamp": ts,
-                        "step": step,
+                        "step": STEP_MAPPING,
                         "sources": [i],
                     }
                 )

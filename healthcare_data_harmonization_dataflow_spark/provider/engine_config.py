@@ -20,10 +20,13 @@ The Whistle engine loads every user library plus the main config into one
 namespace. This module re-expresses that: parse the envelope (tolerant
 textproto subset: ``key: value``, ``key { ... }``, ``key: { ... }``,
 repeated keys), substitute ``$VARS`` in the referenced paths, load each
-file through the provider layer (any scheme, Whistle ``import`` statements
-resolved), and concatenate libraries + main into ONE self-contained config
-string ready for ``compile_mapping`` — shipped to executors in the task
-closure like every other config.
+file with ``load_mapping_config`` (any scheme through the sinks' filesystem
+layer, Whistle ``import`` statements resolved), and concatenate libraries +
+main into ONE self-contained config string ready for ``compile_mapping`` —
+shipped to executors in the task closure like every other config.
+
+There is no separate entry point: ``load_mapping_config(path, env=...)``
+sniffs an envelope and hands its text here.
 """
 
 from __future__ import annotations
@@ -33,7 +36,7 @@ import re
 from dataclasses import dataclass, field
 
 from ..functions.mapping_lang import MappingConfigError
-from .mapping import create_provider, load_mapping_config
+from .mapping import load_mapping_config
 
 _TOKEN = re.compile(
     r"""
@@ -187,32 +190,17 @@ def looks_like_engine_config(text: str) -> bool:
     return "structure_mapping_config" in text
 
 
-def load_engine_config(
-    path: str,
-    spark=None,
-    env: dict | None = None,
-    import_root: str = "",
+def _inline_engine_config(
+    envelope: str, spark, env: dict | None, import_root: str
 ) -> str:
-    """Load an engine-config envelope and return ONE self-contained Whistle
-    config string: every user library first (engine namespace order), then
-    the main config — each loaded through the provider layer (any scheme;
+    """Envelope text -> ONE self-contained Whistle config string: every user
+    library first (engine namespace order), then the main config — each
+    loaded through :func:`.mapping.load_mapping_config` (any scheme;
     Whistle ``import`` statements resolved against ``import_root``, which
     defaults to each file's own directory)."""
-    return _inline_engine_config(
-        create_provider(path, spark)._read_main(), spark, env, import_root
-    )
-
-
-def _inline_engine_config(
-    envelope: str,
-    spark=None,
-    env: dict | None = None,
-    import_root: str = "",
-) -> str:
-    """:func:`load_engine_config` over envelope text already read."""
     resolved = parse_engine_config(envelope, env)
     parts = []
     for p in resolved.library_paths + [resolved.mapping_path]:
         root = import_root or os.path.dirname(p)
-        parts.append(load_mapping_config(p, import_root=root, spark=spark))
+        parts.append(load_mapping_config(p, import_root=root, spark=spark, env=env))
     return "\n".join(parts)

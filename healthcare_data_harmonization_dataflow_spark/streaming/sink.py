@@ -91,7 +91,8 @@ class _LocalFs:
         )
 
     def read_text(self, path: str) -> str:
-        with open(path, encoding="utf-8") as f:
+        # newline="": the file's exact text, like _HadoopFs.read_text
+        with open(path, encoding="utf-8", newline="") as f:
             return f.read()
 
     def write_text(self, path: str, text: str) -> None:
@@ -155,17 +156,16 @@ class _HadoopFs:
         return sorted((s.getPath().getName(), s.getLen()) for s in statuses)
 
     def read_text(self, path: str) -> str:
-        stream = self._fs.open(self._path(path))
+        """The file's exact text; a missing file raises FileNotFoundError,
+        as ``open`` does for _LocalFs."""
         try:
-            reader = self._jvm.java.io.BufferedReader(
-                self._jvm.java.io.InputStreamReader(stream, "UTF-8")
-            )
-            lines = []
-            line = reader.readLine()
-            while line is not None:
-                lines.append(line)
-                line = reader.readLine()
-            return "\n".join(lines)
+            stream = self._fs.open(self._path(path))
+        except Exception as exc:
+            if not self.exists(path):
+                raise FileNotFoundError(path) from exc
+            raise
+        try:
+            return stream.readAllBytes().decode("utf-8")
         finally:
             stream.close()
 

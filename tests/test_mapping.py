@@ -1777,16 +1777,13 @@ def P(input) {
   due: $TimeAdd(input.ts_s, "yyyy-MM-dd'T'HH:mm:ss", 3, "months");
 }
 """
-    from pyspark.sql import functions as F
-
-    eng = compile_mapping(cfg)
-    col = eng.output_column(F.lit('{"ts_s":"2024-02-29T12:34:56"}'))
-    n_parses = col._jc.toString().count("try_to_timestamp")
-    assert n_parses == 1, f"expected the repeated parse hoisted, saw {n_parses}"
-    # and the hoisted plan still evaluates correctly on both backends
     df = spark.createDataFrame(
         [("a", '{"ts_s":"2024-02-29T12:34:56"}')], "id string, data string"
     )
+    plan = apply_mapping(df, cfg, backend="columns")._jdf.queryExecution().logical()
+    n_parses = plan.toString().count("try_to_timestamp")
+    assert n_parses == 1, f"expected the repeated parse hoisted, saw {n_parses}"
+    # and the hoisted plan still evaluates correctly on both backends
     want = (
         '{"O":[{"stamp":"2024-02-29T12:34:56",'
         '"parts":["2024","02","29","12","34","56"],'
@@ -1795,6 +1792,29 @@ def P(input) {
     for backend in ("columns", "pandas"):
         got = ok_rows(apply_mapping(df, cfg, backend=backend, clock=CLOCK))
         assert got.collect()[0]["ok"] == want
+
+
+def test_apply_mapping_builds_its_column_plan_once(spark):
+    """``auto`` picks the backend with the same build it then plans with;
+    forcing pandas (per-element latency) builds no column plan at all."""
+    from unittest import mock
+
+    from healthcare_data_harmonization_dataflow_spark.functions.mapping_compile import (
+        CompiledMapping,
+    )
+    from perfbench.workloads import CONFIG
+
+    df = spark.createDataFrame(
+        [("a", '{"bar":50,"role":"user","note":"n"}')], "id string, data string"
+    )
+    build = CompiledMapping._compile_targets
+    for kwargs, want in (({}, 1), ({"measure_latency": True}, 0)):
+        with mock.patch.object(
+            CompiledMapping, "_compile_targets", autospec=True, side_effect=build
+        ) as builds:
+            res = apply_mapping(df, CONFIG, **kwargs)
+        assert builds.call_count == want, kwargs
+        assert ok_rows(res).count() == 1
 
 
 def test_uuid_pandas_only_random_v4(spark):

@@ -1,7 +1,8 @@
-"""Mapping-config provider tests: factory, caching, import resolution,
-fail-fast, and an e2e pipeline drive from a config file on disk — the
-contract of MappingConfigProviderFactory.java / GcsMappingConfigProvider.java
-/ LocalMappingConfigProvider.java and MappingFn.java:194-202 (fail fast)."""
+"""Mapping-config loading tests: scheme rule, exact file text, import
+resolution, fail-fast, and an e2e pipeline drive from a config file on disk
+— the contract of MappingConfigProviderFactory.java /
+GcsMappingConfigProvider.java / LocalMappingConfigProvider.java and
+MappingFn.java:194-202 (fail fast)."""
 
 import os
 
@@ -15,10 +16,12 @@ from healthcare_data_harmonization_dataflow_spark.operators.mapping_op import (
     apply_mapping,
 )
 from healthcare_data_harmonization_dataflow_spark.provider.mapping import (
-    HadoopFsMappingConfigProvider,
-    LocalMappingConfigProvider,
-    create_provider,
     load_mapping_config,
+)
+from healthcare_data_harmonization_dataflow_spark.streaming.sink import (
+    _HadoopFs,
+    _LocalFs,
+    fs_for,
 )
 
 MAIN = 'import "lib/common.wstl";\nout Output: Common(root);\n'
@@ -33,13 +36,24 @@ def config_tree(tmp_path):
     return tmp_path
 
 
-def test_factory_picks_by_scheme(spark):
-    assert isinstance(create_provider("/x/y.wstl"), LocalMappingConfigProvider)
-    assert isinstance(
-        create_provider("file:///x/y.wstl", spark), HadoopFsMappingConfigProvider
-    )
-    with pytest.raises(ValueError):
-        create_provider("hdfs://nn/x.wstl")  # URI without a session
+def test_fs_for_picks_by_scheme(spark):
+    """The one scheme rule configs and sinks share: a plain path is a local
+    file, any URI (``file:/x`` too) goes through the Hadoop FileSystem."""
+    assert isinstance(fs_for("/x/y.wstl"), _LocalFs)
+    assert isinstance(fs_for("file:/x/y.wstl", spark), _HadoopFs)
+    assert isinstance(fs_for("file:///x/y.wstl", spark), _HadoopFs)
+
+
+def test_both_filesystems_read_exact_text(spark, tmp_path):
+    """A plain path and a ``file:`` URI return the same, exact text: CRLF
+    and a bare CR inside a string literal survive, and so does the final
+    newline."""
+    text = 'a\r\nb "x\ry"\n'
+    f = tmp_path / "cfg.wstl"
+    f.write_bytes(text.encode("utf-8"))
+    assert fs_for(str(f)).read_text(str(f)) == text
+    uri = "file:" + str(f)
+    assert fs_for(uri, spark).read_text(uri) == text
 
 
 def test_missing_config_fails_fast():
@@ -47,14 +61,11 @@ def test_missing_config_fails_fast():
         load_mapping_config("/nonexistent/cfg.wstl")
 
 
-def test_import_resolution_and_caching(config_tree):
-    prov = create_provider(str(config_tree / "main.wstl"))
-    text = prov.get_mapping_config(import_root=str(config_tree))
+def test_import_resolution(config_tree):
+    text = load_mapping_config(
+        str(config_tree / "main.wstl"), import_root=str(config_tree)
+    )
     assert "def Common" in text and "import" not in text
-    # cached: mutate the file, same text until force
-    (config_tree / "main.wstl").write_text("out Output: Common(root);\n" + LIB)
-    assert prov.get_mapping_config(import_root=str(config_tree)) == text
-    assert prov.get_mapping_config(force=True, import_root=str(config_tree)) != text
 
 
 def test_import_requires_root_and_rejects_escape(config_tree):
@@ -63,12 +74,34 @@ def test_import_requires_root_and_rejects_escape(config_tree):
     (config_tree / "evil.wstl").write_text('import "../secret";\nout O: P(root);\n')
     with pytest.raises(MappingConfigError, match="escapes"):
         load_mapping_config(str(config_tree / "evil.wstl"), import_root=str(config_tree))
+    (config_tree / "abs.wstl").write_text('import "/etc/passwd";\n')
+    with pytest.raises(MappingConfigError, match="escapes"):
+        load_mapping_config(str(config_tree / "abs.wstl"), import_root=str(config_tree))
     (config_tree / "cyc.wstl").write_text('import "cyc.wstl";\n')
     with pytest.raises(MappingConfigError, match="cyclic"):
         load_mapping_config(str(config_tree / "cyc.wstl"), import_root=str(config_tree))
     (config_tree / "gone.wstl").write_text('import "nope.wstl";\n')
     with pytest.raises(MappingConfigError, match="not found"):
         load_mapping_config(str(config_tree / "gone.wstl"), import_root=str(config_tree))
+
+
+def test_dotted_file_name_inside_root_splices(config_tree):
+    """``..common.wstl`` names a file INSIDE the root: only a leading ``..``
+    path component escapes it."""
+    (config_tree / "..common.wstl").write_text(LIB)
+    (config_tree / "dots.wstl").write_text(
+        'import "..common.wstl";\nout Output: Common(root);\n'
+    )
+    text = load_mapping_config(
+        str(config_tree / "dots.wstl"), import_root=str(config_tree)
+    )
+    assert "def Common" in text and "import" not in text
+    for rel in ("../x", "lib/../../x"):
+        (config_tree / "up.wstl").write_text(f'import "{rel}";\n')
+        with pytest.raises(MappingConfigError, match="escapes"):
+            load_mapping_config(
+                str(config_tree / "up.wstl"), import_root=str(config_tree)
+            )
 
 
 def test_hadoop_fs_provider_file_scheme(spark, config_tree):
@@ -91,7 +124,6 @@ def test_file_uri_without_authority(spark, config_tree):
     from unittest import mock
 
     uri = "file:" + str(config_tree / "main.wstl")
-    assert isinstance(create_provider(uri, spark), HadoopFsMappingConfigProvider)
     text = load_mapping_config(uri, import_root="file:" + str(config_tree), spark=spark)
     assert "def Common" in text and "import" not in text
 
@@ -100,10 +132,9 @@ def test_file_uri_without_authority(spark, config_tree):
         "structure_mapping_config: { mapping_path_config: { mapping_config_path: "
         f'{{ local_path: "{config_tree / "main.wstl"}" }} }} }}\n'
     )
-    read_main = HadoopFsMappingConfigProvider._read_main
+    read_text = _HadoopFs.read_text
     with mock.patch.object(
-        HadoopFsMappingConfigProvider, "_read_main", autospec=True,
-        side_effect=read_main,
+        _HadoopFs, "read_text", autospec=True, side_effect=read_text,
     ) as reads:
         got = load_mapping_config("file:" + str(envelope), spark=spark)
     assert "def Common" in got and "import" not in got
@@ -123,16 +154,16 @@ def test_e2e_pipeline_from_config_file(spark, config_tree):
 
 
 def test_cache_keys_on_import_root(tmp_path):
-    """Review regression: a second call with a DIFFERENT import_root must
-    re-resolve, not return the first root's splice."""
+    """A second call with a DIFFERENT import_root resolves against that
+    root, not the first root's splice."""
     (tmp_path / "r1").mkdir()
     (tmp_path / "r2").mkdir()
     (tmp_path / "main.wstl").write_text('import "lib.wstl";\nout O: P(root);\n')
     (tmp_path / "r1" / "lib.wstl").write_text("def P(i) { a: i.x; }\n")
     (tmp_path / "r2" / "lib.wstl").write_text("def P(i) { b: i.y; }\n")
-    prov = create_provider(str(tmp_path / "main.wstl"))
-    t1 = prov.get_mapping_config(import_root=str(tmp_path / "r1"))
-    t2 = prov.get_mapping_config(import_root=str(tmp_path / "r2"))
+    main = str(tmp_path / "main.wstl")
+    t1 = load_mapping_config(main, import_root=str(tmp_path / "r1"))
+    t2 = load_mapping_config(main, import_root=str(tmp_path / "r2"))
     assert "a: i.x" in t1 and "b: i.y" in t2 and t1 != t2
 
 
@@ -187,7 +218,6 @@ def test_engine_config_envelope(tmp_path):
         compile_mapping,
     )
     from healthcare_data_harmonization_dataflow_spark.provider.engine_config import (
-        load_engine_config,
         parse_engine_config,
     )
 
@@ -228,13 +258,13 @@ structure_mapping_config: {
     assert parsed.library_paths == [str(home / "projector_library" / "lib.wstl")]
     assert parsed.mapping_path == str(home / "configurations" / "main.wstl")
 
-    combined = load_engine_config(str(envelope), env=env)
+    combined = load_mapping_config(str(envelope), env=env)
     assert "def Lib" in combined and "def Extra" in combined
     assert "import" not in combined
     got = compile_mapping(combined).transform('{"x":"ab","y":3}')
     assert got == '{"Output":[{"v":"AB"},{"e":3}]}'
 
-    # auto-detection through the ordinary load path
+    # $VARS default to os.environ
     import os as _os
 
     _os.environ["MAPPING_ENGINE_HOME"] = str(home)
