@@ -20,6 +20,14 @@ Scale design notes (the part that matters at 100 TB):
   distance <= 3 shares a chunk, so candidates + exact bit_count filter ==
   brute force. The DuckDB oracles verify this.
 
+Each primitive has one spelling here: ``_band_slice`` is a MinHash band's
+slice of the signature (the batch band join, the index's ``band_hash``
+and the oracles), ``_expand_group_pairs`` turns qualifying signature-group
+pairs back into document pairs for MinHash, SimHash and the n-gram
+profile path, ``document_index_rows`` is one projection over its input,
+and ``ngram_jaccard_pairs`` chooses its strategy by one estimate against
+``NGRAM_PROFILE_CAP``.
+
 Cross-engine determinism: token hash = first 15 hex digits of md5 as int64
 (``functions.text.md5_int_spark(15)``, identical to DuckDB's
 ``md5_int_duck(15)``), so every signature matches the oracle bit-for-bit.
@@ -27,13 +35,15 @@ Cross-engine determinism: token hash = first 15 hex digits of md5 as int64
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from healthcare_data_harmonization_dataflow_spark.functions.text import (
     md5_int_duck,
     md5_int_spark,
+    ppm_duck,
+    ppm_spark,
     safe_words_duck,
     safe_words_spark,
     window_hashes_duck,
@@ -45,7 +55,10 @@ from healthcare_data_harmonization_dataflow_spark.functions.text import (
 # MinHash parameters (shared with the oracle SQL generators)
 MINHASH_P = 2147483647  # 2^31 - 1, Mersenne prime
 MINHASH_K = 8
-MINHASH_BANDS = 4  # bands of 2 rows each
+MINHASH_BANDS = 4
+MINHASH_ROWS_PER_BAND = MINHASH_K // MINHASH_BANDS
+# a band's slice of the signature, renamed v0.. (the band-join keys)
+_BAND_VALS = [f"v{r}" for r in range(MINHASH_ROWS_PER_BAND)]
 _RNG_A = [1103515245, 1299709, 15485863, 32452843, 49979687, 67867967, 86028121, 104395301]
 _RNG_B = [12345, 67891, 24680, 13579, 11111, 22222, 33333, 44444]
 
@@ -55,7 +68,10 @@ SIMHASH_CHUNKS = SIMHASH_HAM + 1  # pigeonhole: exact candidate generation
 
 
 # the distinct word set every signature hashes (NULL text -> NULL)
-_WORDSET_SPARK = f"array_distinct({words_spark('lower(text)')})"
+def _wordset_spark(text_col: str = "text") -> str:
+    return f"array_distinct({words_spark(f'lower({text_col})')})"
+
+
 _WORDSET_DUCK = f"list_distinct({words_duck('lower(text)')})"
 
 
@@ -81,32 +97,73 @@ def exact_dedup_oracle_sql() -> str:
 
 # ------------------------------------------------------------------ minhash
 def minhash_signature(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Per-doc MinHash signature, computed per-row (no token shuffle).
+    """Per-doc MinHash signature, computed per-row (no token shuffle)."""
+    return _with_minhash(docs, text_col, F.col(id_col))
+
+
+def _with_minhash(docs: DataFrame, text_col: str, *keep: Column) -> DataFrame:
+    """The ``keep`` columns plus the signature mh0.. of ``text_col``, in
+    one projection chain over ``docs``.
 
     Token hashes (md5 -> int64) are materialized ONCE into an array column;
     the K permutations are then cheap integer transforms over it — K times
     less hashing than recomputing md5 per hash function."""
     wh = md5_int_spark(15).format(e="w")
     with_hashes = docs.select(
-        F.col(id_col),
-        F.expr(f"transform({_WORDSET_SPARK}, w -> {wh} % {MINHASH_P})").alias("_hs"),
+        *keep,
+        F.expr(f"transform({_wordset_spark(text_col)}, w -> {wh} % {MINHASH_P})").alias("_hs"),
     )
-    cols = [F.col(id_col)]
-    for i in range(MINHASH_K):
-        a, b = _RNG_A[i], _RNG_B[i]
-        cols.append(
-            F.expr(f"array_min(transform(_hs, h -> ({a}L * h + {b}L) % {MINHASH_P}))").alias(
-                f"mh{i}"
-            )
+    return with_hashes.select(
+        *with_hashes.columns[:-1],
+        *[
+            F.expr(
+                f"array_min(transform(_hs, h -> ({_RNG_A[i]}L * h + {_RNG_B[i]}L) % {MINHASH_P}))"
+            ).alias(f"mh{i}")
+            for i in range(MINHASH_K)
+        ],
+    )
+
+
+def _band_slice(b: int) -> "list[str]":
+    """The signature columns of MinHash band ``b`` (``_BAND_VALS`` order)."""
+    return [f"mh{b * MINHASH_ROWS_PER_BAND + r}" for r in range(MINHASH_ROWS_PER_BAND)]
+
+
+def _expand_group_pairs(
+    pairs: DataFrame,
+    groups: DataFrame,
+    score: "str | None" = None,
+    identity: "Column | None" = None,
+) -> DataFrame:
+    """Signature groups back to document pairs ``(doc1 < doc2[, score])``:
+    every member pair across each qualifying group pair of ``pairs``
+    ``(m1, m2[, score])``, plus every member pair inside one group of
+    ``groups`` (a ``members`` column) at the ``identity`` score. Groups
+    partition the documents, so each doc pair comes out once."""
+    s = [score] if score else []
+    cross = (
+        pairs.select(F.explode("m1").alias("d1"), "m2", *s)
+        .select("d1", F.explode("m2").alias("d2"), *s)
+        .select(F.least("d1", "d2").alias("doc1"), F.greatest("d1", "d2").alias("doc2"), *s)
+    )
+    intra = (
+        groups.filter(F.size("members") >= 2)
+        .select(F.explode("members").alias("d1"), "members")
+        .select("d1", F.explode("members").alias("d2"))
+        .filter(F.col("d1") < F.col("d2"))
+        .select(
+            F.col("d1").alias("doc1"),
+            F.col("d2").alias("doc2"),
+            *([identity.alias(score)] if score else []),
         )
-    return with_hashes.select(*cols)
+    )
+    return cross.unionByName(intra)
 
 
 def _lsh_groups_bands(docs: DataFrame, id_col: str) -> "tuple[DataFrame, DataFrame]":
     """Shared LSH scaffolding: signature-collapsed groups (one row per
     distinct signature, members collected, gid = min member) and the
     per-band banding of those groups (one row per group × band)."""
-    rows_per_band = MINHASH_K // MINHASH_BANDS
     mh_cols = [f"mh{i}" for i in range(MINHASH_K)]
     groups = (
         minhash_signature(docs, id_col=id_col)
@@ -121,12 +178,7 @@ def _lsh_groups_bands(docs: DataFrame, id_col: str) -> "tuple[DataFrame, DataFra
         F.posexplode(
             F.array(
                 *[
-                    F.struct(
-                        *[
-                            F.col(f"mh{b * rows_per_band + r}").alias(f"v{r}")
-                            for r in range(rows_per_band)
-                        ]
-                    )
+                    F.struct(*[F.col(c).alias(v) for c, v in zip(_band_slice(b), _BAND_VALS)])
                     for b in range(MINHASH_BANDS)
                 ]
             )
@@ -187,7 +239,7 @@ def minhash_lsh_pairs(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """
     groups, bands = _lsh_groups_bands(docs, id_col)
     a, b = bands.alias("a"), bands.alias("b")
-    cross = (
+    pairs = (
         a.join(
             b,
             (F.col("a.band") == F.col("b.band"))
@@ -196,34 +248,22 @@ def minhash_lsh_pairs(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
         )
         .select(F.col("a.members").alias("m1"), F.col("b.members").alias("m2"))
         .distinct()
-        .select(F.explode("m1").alias("d1"), "m2")
-        .select("d1", F.explode("m2").alias("d2"))
-        .select(F.least("d1", "d2").alias("doc1"), F.greatest("d1", "d2").alias("doc2"))
     )
-    intra = (
-        groups.filter(F.size("members") >= 2)
-        .select(F.explode("members").alias("d1"), "members")
-        .select("d1", F.explode("members").alias("d2"))
-        .filter(F.col("d1") < F.col("d2"))
-        .select(F.col("d1").alias("doc1"), F.col("d2").alias("doc2"))
-    )
-    return cross.unionByName(intra)
+    return _expand_group_pairs(pairs, groups)
 
 
 def _band_rows_duck(src: str, id_col: str, where: str = "") -> str:
     """One (id_col, band, v0..) row per MinHash band of each ``src`` row."""
-    rows_per_band = MINHASH_K // MINHASH_BANDS
     return " UNION ALL ".join(
         f"SELECT {id_col}, {b} AS band, "
-        + ", ".join(f"mh{b * rows_per_band + r} AS v{r}" for r in range(rows_per_band))
+        + ", ".join(f"{c} AS {v}" for c, v in zip(_band_slice(b), _BAND_VALS))
         + f" FROM {src}{where}"
         for b in range(MINHASH_BANDS)
     )
 
 
 def minhash_lsh_pairs_oracle_sql() -> str:
-    rows_per_band = MINHASH_K // MINHASH_BANDS
-    val_eq = " AND ".join(f"a.v{r} = b.v{r}" for r in range(rows_per_band))
+    val_eq = " AND ".join(f"a.{v} = b.{v}" for v in _BAND_VALS)
     return f"""
     WITH sig AS ({minhash_signature_oracle_sql()}),
     bands AS ({_band_rows_duck("sig", "doc_id")})
@@ -242,9 +282,8 @@ def minhash_lsh_cluster_edges_oracle_sql() -> str:
     closure intractable on template-heavy corpora (sf0.1: 9.7M pairs
     over ~5k docs ≈ 78% of all possible pairs; the semi-naive join
     explodes), while the star subgraph closes in seconds."""
-    rows_per_band = MINHASH_K // MINHASH_BANDS
     mh_cols = ", ".join(f"mh{i}" for i in range(MINHASH_K))
-    val_keys = ", ".join(f"v{r}" for r in range(rows_per_band))
+    val_keys = ", ".join(_BAND_VALS)
     return f"""
     WITH sig AS ({minhash_signature_oracle_sql()}),
     grp AS (
@@ -330,48 +369,29 @@ def document_index_rows(
     one band=-1 anchor row per doc (carries the exact-dedup hash even for
     docs with no tokens) plus one row per MinHash band. band_hash is
     xxhash64 over the band's signature slice — fixed-seed, deterministic
-    across runs, 8 bytes on the wire."""
-    rows_per_band = MINHASH_K // MINHASH_BANDS
-    sig = minhash_signature(docs, text_col=text_col, id_col=id_col)
-    bands = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.xxhash64(
-                F.lit(b),
-                *[
-                    F.col(f"mh{b * rows_per_band + r}")
-                    for r in range(rows_per_band)
-                ],
-            ).alias("band_hash"),
-        )
-        for b in range(MINHASH_BANDS)
-    ]
-    hashed = docs.select(
+    across runs, 8 bytes on the wire. One projection over ``docs``: each
+    row's hash and bands come from its own text, even when an id repeats."""
+    sig = _with_minhash(
+        docs,
+        text_col,
         F.col(id_col).alias("doc_id"),
         F.md5(F.coalesce(F.col(text_col), F.lit(""))).alias("content_hash"),
     )
-    anchor = hashed.select(
+    anchor = F.struct(F.lit(-1).alias("band"), F.lit(0).cast("bigint").alias("band_hash"))
+    bands = [
+        F.struct(
+            F.lit(b).alias("band"),
+            F.xxhash64(F.lit(b), *[F.col(c) for c in _band_slice(b)]).alias("band_hash"),
+        )
+        for b in range(MINHASH_BANDS)
+    ]
+    return sig.select(
         "doc_id",
         "content_hash",
-        F.lit(-1).cast("int").alias("band"),
-        F.lit(0).cast("bigint").alias("band_hash"),
-    )
-    banded = (
-        hashed.join(
-            sig.withColumnRenamed(id_col, "_sig_id"),
-            hashed.doc_id == F.col("_sig_id"),
-        )
-        .filter(F.col("mh0").isNotNull())
-        .select(
-            "doc_id",
-            "content_hash",
-            F.explode(F.array(*bands)).alias("bh"),
-        )
-        .select(
-            "doc_id", "content_hash", "bh.band", "bh.band_hash"
-        )
-    )
-    return anchor.unionByName(banded)
+        F.explode(
+            F.when(F.col("mh0").isNull(), F.array(anchor)).otherwise(F.array(anchor, *bands))
+        ).alias("bh"),
+    ).select("doc_id", "content_hash", "bh.band", "bh.band_hash")
 
 
 def dedup_against_index(
@@ -476,8 +496,7 @@ def incremental_dedup_oracle_sql(
     history_pred: str = "doc_id % 2 = 0",
     verify_threshold: "float | None" = None,
 ) -> str:
-    rows_per_band = MINHASH_K // MINHASH_BANDS
-    val_keys = ", ".join(["band"] + [f"v{r}" for r in range(rows_per_band)])
+    val_keys = ", ".join(["band"] + _BAND_VALS)
     ctes = f"""
     WITH sig AS ({minhash_signature_oracle_sql()}),
     inc AS (
@@ -573,7 +592,7 @@ def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
         for j in range(SIMHASH_BITS)
     )
     with_hashes = docs.select(
-        F.col(id_col), F.expr(f"transform({_WORDSET_SPARK}, w -> {wh})").alias("_hs")
+        F.col(id_col), F.expr(f"transform({_wordset_spark(text_col)}, w -> {wh})").alias("_hs")
     )
     return with_hashes.select(
         F.col(id_col),
@@ -612,7 +631,7 @@ def simhash_pairs(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
         ).alias("chunk", "chunk_val"),
     )
     a, b = chunks.alias("a"), chunks.alias("b")
-    cross = (
+    pairs = (
         a.join(
             b,
             (F.col("a.chunk") == F.col("b.chunk"))
@@ -626,26 +645,8 @@ def simhash_pairs(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
         )
         .filter(F.col("hamming") <= SIMHASH_HAM)
         .distinct()
-        .select(F.explode("m1").alias("d1"), "m2", "hamming")
-        .select("d1", F.explode("m2").alias("d2"), "hamming")
-        .select(
-            F.least("d1", "d2").alias("doc1"),
-            F.greatest("d1", "d2").alias("doc2"),
-            "hamming",
-        )
     )
-    intra = (
-        groups.filter(F.size("members") >= 2)
-        .select(F.explode("members").alias("d1"), "members")
-        .select("d1", F.explode("members").alias("d2"))
-        .filter(F.col("d1") < F.col("d2"))
-        .select(
-            F.col("d1").alias("doc1"),
-            F.col("d2").alias("doc2"),
-            F.lit(0).cast("integer").alias("hamming"),
-        )
-    )
-    return cross.unionByName(intra)
+    return _expand_group_pairs(pairs, groups, "hamming", F.lit(0).cast("integer"))
 
 
 def simhash_oracle_sql() -> str:
@@ -674,16 +675,28 @@ def simhash_pairs_oracle_sql() -> str:
 
 
 # ------------------------------------------------------------ n-gram jaccard
+# The one profile-vs-prefix decision: the profile path's all-pairs
+# comparison is an O(P^2) broadcast nested-loop over P distinct token-set
+# profiles, so it runs only when an HLL estimate of P is at most this cap.
+NGRAM_PROFILE_CAP = 10_000
+# prefix path: postings of tokens with document frequency >= NGRAM_HOT_DF
+# are split NGRAM_SALT_BUCKETS ways (see _ngram_jaccard_prefix)
+NGRAM_SALT_BUCKETS = 32
+NGRAM_HOT_DF = 8192
+
+
+def _ngram_wordsets(docs: DataFrame, id_col: str) -> DataFrame:
+    """(id_col, ws): each doc's distinct words; docs with none never pair."""
+    return docs.select(F.col(id_col), F.expr(_wordset_spark()).alias("ws")).filter(
+        F.size("ws") > 0
+    )
+
+
 def ngram_jaccard_pairs(
-    docs: DataFrame,
-    threshold: float = 0.5,
-    id_col: str = "doc_id",
-    strategy: str = "auto",
-    profile_cap: int = 10_000,
-    salt_buckets: int = 32,
-    hot_df: int = 8192,
+    docs: DataFrame, threshold: float = 0.5, id_col: str = "doc_id"
 ) -> DataFrame:
-    """Exact Jaccard-similar pairs over distinct-token sets.
+    """Exact Jaccard-similar pairs over distinct-token sets:
+    ``(doc1 < doc2, jaccard_ppm)`` for every pair at ``threshold`` or above.
 
     Scale note (shared by every pair-emitting dedup operator here): a
     group of n mutual duplicates yields C(n,2) intra pairs — the OUTPUT is
@@ -694,25 +707,24 @@ def ngram_jaccard_pairs(
     instead of the raw pair list; the pair form exists because the oracle
     contract verifies exact pairwise similarity values.
 
-    Two exact strategies (identical output — both are exact):
+    Two exact strategies with identical output:
 
-    * ``"profile"``: collapse documents to distinct token-SET profiles
-      first, compare profiles all-pairs, expand back to doc pairs. See
-      :func:`_ngram_jaccard_profile`. Wins when duplicates/templates are
-      common (real crawl corpora: exact-dup collapse is the single biggest
-      reducer) — but its profile comparison is an O(P^2) broadcast
-      nested-loop, a scale hazard when profiles don't collapse (diverse
-      corpus: P ~ N).
-    * ``"prefix"``: PPJoin-style prefix-filtered inverted index — scales on
-      diverse corpora with large vocabularies where few docs share rare
-      tokens. See :func:`_ngram_jaccard_prefix`.
+    * profile (:func:`_ngram_jaccard_profile`): collapse documents to
+      distinct token-SET profiles first, compare profiles all-pairs, expand
+      back to doc pairs. Wins when duplicates/templates are common (real
+      crawl corpora: exact-dup collapse is the single biggest reducer) —
+      but its profile comparison is an O(P^2) broadcast nested-loop, a
+      scale hazard when profiles don't collapse (diverse corpus: P ~ N).
+    * prefix (:func:`_ngram_jaccard_prefix`): PPJoin-style prefix-filtered
+      inverted index — scales on diverse corpora with large vocabularies
+      where few docs share rare tokens.
 
-    ``"auto"`` (default) probes the collapse factor with one cheap
-    map-side-partial pass (HLL over a hash of each doc's sorted token set —
-    the profile identity, computable without the top-64 dictionary) and
-    picks ``profile`` only when the estimated distinct-profile count fits
-    ``profile_cap`` — bounding both the broadcast size and the P^2 work.
-    One extra O(N) pass to dodge an O(N^2) mistake.
+    One decision picks between them: one cheap map-side-partial pass (HLL
+    over a hash of each doc's sorted token set — the profile identity,
+    computable without the top-64 dictionary) estimates the profile count,
+    and the profile path runs only when it is at most
+    ``NGRAM_PROFILE_CAP``, bounding both the broadcast size and the P^2
+    work. One extra O(N) pass to dodge an O(N^2) mistake.
 
     DENSE-CORPUS regime (measured, round 4): when the vocabulary is tiny
     relative to the corpus (every token is common), no exact strategy can
@@ -723,9 +735,9 @@ def ngram_jaccard_pairs(
     own scaling on k disjoint replicas of such a corpus is ~linear in k
     (each replica's quadratic core is constant-size), but its absolute
     cost is ~quadratic in the replica. Benchmarks that sweep corpus size
-    must pin ONE strategy — auto's profile->prefix boundary otherwise
-    compares two different algorithms and fits a meaningless exponent.
-    For corpora like this, the scale path is MinHash-LSH
+    must call ONE strategy directly — the profile->prefix boundary
+    otherwise compares two different algorithms and fits a meaningless
+    exponent. For corpora like this, the scale path is MinHash-LSH
     (:func:`minhash_lsh_pairs`, measured exponent ~0.5) or cluster labels
     (operators/graph.py), both of which avoid exact pair enumeration.
 
@@ -735,43 +747,17 @@ def ngram_jaccard_pairs(
     """
     if not 0 < threshold <= 1:
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    if salt_buckets < 1 or hot_df < 1:
-        # pmod(x, 0) is NULL: a zero bucket count would silently drop every
-        # hot-token candidate pair instead of erroring
-        raise ValueError(
-            f"salt_buckets/hot_df must be >= 1, got {salt_buckets}/{hot_df}"
-        )
-    if strategy == "auto":
-        wordsets = docs.select(F.col(id_col), F.expr(_WORDSET_SPARK).alias("ws")).filter(
-            F.size("ws") > 0
-        )
-        # sort before hashing: the profile identity is the token SET (mask +
-        # sorted rare), so docs differing only in word order must collapse
-        p_est = wordsets.agg(
-            F.approx_count_distinct(
-                F.md5(F.concat_ws("\x1f", F.array_sort("ws")))
-            ).alias("p")
-        ).first()["p"]
-        strategy = "profile" if p_est <= profile_cap else "prefix"
-    if strategy == "profile":
-        return _ngram_jaccard_profile(
-            docs, threshold, id_col, profile_cap, salt_buckets, hot_df
-        )
-    if strategy != "prefix":
-        raise ValueError(f"unknown ngram-jaccard strategy {strategy!r}")
-    return _ngram_jaccard_prefix(
-        docs, threshold, id_col, salt_buckets=salt_buckets, hot_df=hot_df
-    )
+    # sort before hashing: the profile identity is the token SET (mask +
+    # sorted rare), so docs differing only in word order must collapse
+    p_est = _ngram_wordsets(docs, id_col).agg(
+        F.approx_count_distinct(F.md5(F.concat_ws("\x1f", F.array_sort("ws")))).alias("p")
+    ).first()["p"]
+    if p_est <= NGRAM_PROFILE_CAP:
+        return _ngram_jaccard_profile(docs, threshold, id_col)
+    return _ngram_jaccard_prefix(docs, threshold, id_col)
 
 
-def _ngram_jaccard_profile(
-    docs: DataFrame,
-    threshold: float,
-    id_col: str,
-    profile_cap: int | None,
-    salt_buckets: int,
-    hot_df: int,
-) -> DataFrame:
+def _ngram_jaccard_profile(docs: DataFrame, threshold: float, id_col: str) -> DataFrame:
     """Profile-collapsed exact Jaccard pairs.
 
     1. Token sets are dictionary-encoded: the 64 highest-document-frequency
@@ -790,13 +776,11 @@ def _ngram_jaccard_profile(
     Scale: the top-64 dictionary is a 64-row aggregate collected to the
     driver (constant size at any corpus scale) and shipped as a literal map
     expression — never a shuffle. Profile comparison is a broadcast
-    nested-loop join, right when profile count << doc count; for corpora
-    where profiles stay huge AND diverse, use ``strategy="prefix"``.
+    nested-loop join, right when profile count << doc count, which is what
+    ``ngram_jaccard_pairs`` checks before it calls this path.
     """
     threshold_ppm = round(threshold * 1_000_000)
-    wordsets = docs.select(F.col(id_col), F.expr(_WORDSET_SPARK).alias("ws")).filter(
-        F.size("ws") > 0
-    )
+    wordsets = _ngram_wordsets(docs, id_col)
     top = (
         wordsets.select(F.explode("ws").alias("tok"))
         .groupBy("tok")
@@ -832,32 +816,8 @@ def _ngram_jaccard_profile(
             "members",
         )
     )
-    if profile_cap is not None:
-        # safety rail INSIDE the profile path (review W3): the caller (or
-        # the auto probe's HLL estimate) may be wrong about collapse — an
-        # exact count here costs one extra job but prevents an O(P^2)
-        # broadcast nested-loop over a no-collapse corpus. Both strategies
-        # are exact, so falling back changes nothing but the plan.
-        # persist() so the count does not recompute the whole encode
-        # lineage a second time when the pair query executes
-        profiles = profiles.persist()
-        n_profiles = profiles.count()
-        if n_profiles > profile_cap:
-            import warnings
-
-            warnings.warn(
-                f"ngram_jaccard: {n_profiles} distinct profiles exceed "
-                f"profile_cap={profile_cap}; falling back to the "
-                "prefix-filter strategy (identical output)",
-                stacklevel=2,
-            )
-            profiles.unpersist()
-            return _ngram_jaccard_prefix(
-                docs, threshold, id_col, salt_buckets=salt_buckets,
-                hot_df=hot_df,
-            )
     # broadcast the SLIM profile table only: members arrays collectively
-    # hold every doc id (O(corpus), not O(profile_cap)) and must never
+    # hold every doc id (O(corpus), not O(profile count)) and must never
     # ride a broadcast; the few qualifying profile PAIRS join members
     # back afterwards
     slim = profiles.select("pid", "mask", "rare", "sz")
@@ -872,53 +832,20 @@ def _ngram_jaccard_profile(
         (F.col("p1.sz") + F.col("p2.sz")).alias("szsum"),
     )
     qual = cross.withColumn(
-        "jaccard_ppm",
-        F.floor(F.col("common") * 1000000.0 / (F.col("szsum") - F.col("common"))).cast(
-            "long"
-        ),
+        "jaccard_ppm", F.expr(ppm_spark("common", "szsum - common"))
     ).filter(F.col("jaccard_ppm") >= threshold_ppm)
     mem = profiles.select("pid", "members")
-    inter = (
+    pairs = (
         qual.join(mem.select(F.col("pid").alias("pid1"), F.col("members").alias("m1")), "pid1")
         .join(mem.select(F.col("pid").alias("pid2"), F.col("members").alias("m2")), "pid2")
-        .select(
-            F.explode("m1").alias("d1"),
-            F.col("m2"),
-            "jaccard_ppm",
-        )
-        .select(
-            "d1", F.explode("m2").alias("d2"), "jaccard_ppm"
-        )
-        .select(
-            F.least("d1", "d2").alias("doc1"),
-            F.greatest("d1", "d2").alias("doc2"),
-            "jaccard_ppm",
-        )
+        .select("m1", "m2", "jaccard_ppm")
     )
-    intra = (
-        profiles.filter(F.size("members") >= 2)
-        .select(F.col("members").alias("m"))
-        .select(F.explode("m").alias("d1"), "m")
-        .select("d1", F.explode("m").alias("d2"))
-        .filter(F.col("d1") < F.col("d2"))
-        .select(
-            F.col("d1").alias("doc1"),
-            F.col("d2").alias("doc2"),
-            F.lit(1_000_000).cast("long").alias("jaccard_ppm"),
-        )
+    return _expand_group_pairs(
+        pairs, profiles, "jaccard_ppm", F.lit(1_000_000).cast("long")
     )
-    if threshold_ppm > 1_000_000:
-        return inter.filter(F.lit(False))
-    return inter.unionByName(intra)
 
 
-def _ngram_jaccard_prefix(
-    docs: DataFrame,
-    threshold: float,
-    id_col: str,
-    salt_buckets: int = 32,
-    hot_df: int = 8192,
-) -> DataFrame:
+def _ngram_jaccard_prefix(docs: DataFrame, threshold: float, id_col: str) -> DataFrame:
     """Prefix-filtered (PPJoin-style, exact) inverted-index strategy:
 
     A pair at Jaccard >= t must share a token among each doc's first
@@ -934,16 +861,16 @@ def _ngram_jaccard_prefix(
     SINGLE task — observed serializing whole stages on a dense corpus
     (jstack: one runnable executor thread for minutes). AQE's skew join
     cannot help: the skew is in join OUTPUT, not input partition bytes.
-    Fix: postings of tokens with df >= ``hot_df`` are split
-    ``salt_buckets`` ways by a hash of the left doc id, and the right
-    side is replicated across the salts for those tokens only — each
-    pair is still generated exactly once (at the left row's salt), and
-    the hot token's quadratic expansion spreads over ``salt_buckets``
-    tasks. Self-gating at scale: prefixes hold each doc's RAREST tokens,
-    so on a large-vocabulary corpus almost nothing crosses ``hot_df``
-    and the replication cost is ~zero.
+    Fix: postings of tokens with df >= ``NGRAM_HOT_DF`` are split
+    ``NGRAM_SALT_BUCKETS`` ways by a hash of the left doc id, and the
+    right side is replicated across the salts for those tokens only —
+    each pair is still generated exactly once (at the left row's salt),
+    and the hot token's quadratic expansion spreads over the salt
+    buckets' tasks. Self-gating at scale: prefixes hold each doc's RAREST
+    tokens, so on a large-vocabulary corpus almost nothing crosses the
+    cutoff and the replication cost is ~zero.
 
-    ``hot_df`` is deliberately HIGH (8192 ~ C(df,2) = 33M pairs from one
+    The cutoff is deliberately HIGH (8192 ~ C(df,2) = 33M pairs from one
     task, the point where one key's expansion rivals a whole stage):
     measured on a dense 5k-doc corpus whose ~40 hot tokens already
     saturate 32 cores, salting at df>=1024 was 26% SLOWER (x1 216 s ->
@@ -952,7 +879,7 @@ def _ngram_jaccard_prefix(
     the few-ultra-hot-tokens regime, not a default rewrite of the join.
     """
     threshold_ppm = round(threshold * 1_000_000)
-    wordsets = docs.select(F.col(id_col), F.expr(_WORDSET_SPARK).alias("ws"))
+    wordsets = _ngram_wordsets(docs, id_col)
     toks = wordsets.select(id_col, F.size("ws").alias("sz"), F.explode("ws").alias("tok"))
     dfreq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     w = Window.partitionBy(id_col).orderBy("df", "tok")
@@ -967,32 +894,24 @@ def _ngram_jaccard_prefix(
         toks.join(dfreq, "tok")
         .withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= plen)
-        .select(id_col, "tok", "df")
+        .select(id_col, "tok", (F.col("df") >= NGRAM_HOT_DF).alias("hot"))
     )
-    hot = F.col("df") >= hot_df
-    a = (
-        prefix.withColumn(
-            "s",
-            F.when(hot, F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt_buckets)))
-            .otherwise(F.lit(0))
-            .cast("int"),
-        )
-        .drop("df")  # salt computed; df must not ride the join shuffle
-        .alias("a")
-    )
-    b = (
-        prefix.withColumn(
-            "s",
-            F.explode(
-                F.sequence(
-                    F.lit(0),
-                    F.when(hot, F.lit(salt_buckets - 1)).otherwise(F.lit(0)),
-                )
-            ),
-        )
-        .drop("df")
-        .alias("b")
-    )
+    # (id_col, tok, s) on both sides: only the salt rides the join shuffle
+    a = prefix.select(
+        id_col,
+        "tok",
+        F.when(F.col("hot"), F.pmod(F.xxhash64(F.col(id_col)), F.lit(NGRAM_SALT_BUCKETS)))
+        .otherwise(F.lit(0))
+        .cast("int")
+        .alias("s"),
+    ).alias("a")
+    b = prefix.select(
+        id_col,
+        "tok",
+        F.explode(
+            F.sequence(F.lit(0), F.when(F.col("hot"), NGRAM_SALT_BUCKETS - 1).otherwise(0))
+        ).alias("s"),
+    ).alias("b")
     cand = (
         a.join(
             b,
@@ -1005,18 +924,16 @@ def _ngram_jaccard_prefix(
     )
     ws1 = wordsets.select(F.col(id_col).alias("doc1"), F.col("ws").alias("ws1"))
     ws2 = wordsets.select(F.col(id_col).alias("doc2"), F.col("ws").alias("ws2"))
-    # fixed-point ppm: one IEEE-754 division + floor is bit-identical across
-    # engines (unlike round-to-decimals, whose algorithms differ)
+    # fixed-point ppm: a floored quotient is the same value in DuckDB
+    # (unlike round-to-decimals, whose algorithms differ)
     verified = (
         cand.join(ws1, "doc1")
         .join(ws2, "doc2")
         .withColumn(
             "jaccard_ppm",
-            F.floor(
-                F.size(F.array_intersect("ws1", "ws2"))
-                * 1000000.0
-                / F.size(F.array_union("ws1", "ws2"))
-            ).cast("long"),
+            F.expr(
+                ppm_spark("size(array_intersect(ws1, ws2))", "size(array_union(ws1, ws2))")
+            ),
         )
     )
     return verified.filter(F.col("jaccard_ppm") >= threshold_ppm).select(
@@ -1036,12 +953,12 @@ def ngram_jaccard_oracle_sql(threshold: float = 0.5) -> str:
       FROM toks a JOIN toks b ON a.tok = b.tok AND a.doc_id < b.doc_id
       GROUP BY 1, 2
     )
-    SELECT doc1, doc2,
-           CAST(floor(common * 1000000.0 / (s1.sz + s2.sz - common)) AS BIGINT) AS jaccard_ppm
-    FROM common
-    JOIN sizes s1 ON s1.doc_id = doc1
-    JOIN sizes s2 ON s2.doc_id = doc2
-    WHERE floor(common * 1000000.0 / (s1.sz + s2.sz - common)) >= {threshold_ppm}
+    SELECT * FROM (
+      SELECT doc1, doc2, {ppm_duck("common", "s1.sz + s2.sz - common")} AS jaccard_ppm
+      FROM common
+      JOIN sizes s1 ON s1.doc_id = doc1
+      JOIN sizes s2 ON s2.doc_id = doc2
+    ) WHERE jaccard_ppm >= {threshold_ppm}
     """
 
 

@@ -233,15 +233,16 @@ class ExactlyOnceParquetSink:
     def _commit_path(self, batch_id: int) -> str:
         return os.path.join(self._commits_dir, f"{batch_id}.json")
 
-    def _parse_marker(
-        self, batch_id: int, *, check_exists: bool = True, strict: bool = False
-    ) -> "dict | None":
+    def _parse_marker(self, batch_id: int, *, strict: bool = False) -> "dict | None":
         """The single validity rule every reader shares: a marker counts
         only if its bytes read, parse as a JSON OBJECT, and carry the
-        matching batch_id. A torn copy, scalar JSON like '5' (which would
-        raise AttributeError on .get), or a file that vanished between
-        list and read is UNCOMMITTED: the data directory is
-        overwrite-idempotent, so the worst case is a safe replay.
+        matching batch_id. A missing file (never written, or vanished
+        between list and read — both filesystem layers raise
+        FileNotFoundError), a torn copy, or scalar JSON like '5' (which
+        would raise AttributeError on .get) is UNCOMMITTED: the data
+        directory is overwrite-idempotent, so the worst case is a safe
+        replay. The read itself tells a missing marker apart, with no
+        exists() probe before it.
 
         A TRANSIENT read failure on a file that still exists is treated
         differently per caller. The write path (``strict=False``,
@@ -249,23 +250,20 @@ class ExactlyOnceParquetSink:
         Reader-facing paths (``strict=True``: read_committed / lineage /
         committed_batches) retry once and then RAISE: a committed batch
         must never silently vanish from a downstream consumer's dataset
-        because of one flaky FS read.
-
-        ``check_exists=False`` skips the exists() probe for callers that
-        just listed the file (one FS round trip per marker, not three)."""
+        because of one flaky FS read."""
         fs = self._fs()  # outside the try: config errors must still raise
         path = self._commit_path(batch_id)
-        if check_exists and not fs.exists(path):
-            return None
         try:
             text = fs.read_text(path)
+        except FileNotFoundError:
+            return None
         except Exception as exc:
-            if not fs.exists(path):
-                return None  # vanished between list and read: uncommitted
             if not strict:
                 return None  # write path: replay is safe and self-healing
             try:
                 text = fs.read_text(path)  # one retry for transient blips
+            except FileNotFoundError:
+                return None
             except Exception:
                 raise IOError(
                     f"committed marker unreadable (batch {batch_id}): {path}"
@@ -360,7 +358,7 @@ class ExactlyOnceParquetSink:
         for f in fs.listdir(self._commits_dir):
             if f.endswith(".json") and f[:-5].isdigit():
                 b = int(f[:-5])
-                doc = self._parse_marker(b, check_exists=False, strict=True)
+                doc = self._parse_marker(b, strict=True)
                 if doc is not None:
                     pairs.append((b, doc))
         pairs.sort(key=lambda p: p[0])

@@ -72,6 +72,27 @@ def test_document_index_rows_anchor_and_bands(spark):
     assert all(r["content_hash"] for r in rows)
 
 
+def test_document_index_rows_repeated_doc_id_keeps_each_text(spark):
+    """Two texts under one doc_id: 5 rows each (anchor + 4 bands), and
+    every row's content_hash and band_hash come from its own text, the
+    same rows each text gives on its own, under any text column name."""
+    texts = ["alpha beta gamma delta", "one two three four five"]
+    both = spark.createDataFrame([(7, t) for t in texts], "doc_id long, text string")
+    rows = document_index_rows(both).collect()
+    assert len(rows) == 10
+    alone = set()
+    for t in texts:
+        one = spark.createDataFrame([(7, t)], "doc_id long, text string")
+        got = [tuple(r) for r in document_index_rows(one).collect()]
+        assert len(got) == 5
+        alone.update(got)
+    assert sorted(tuple(r) for r in rows) == sorted(alone)
+    # the signature hashes the named text column, like content_hash
+    body = both.withColumnRenamed("text", "body")
+    got = document_index_rows(body, text_col="body").collect()
+    assert sorted(tuple(r) for r in got) == sorted(alone)
+
+
 def test_streaming_dedup_e2e(spark, tmp_path):
     inp = _write_batches(spark, str(tmp_path))
     pipe = StreamingDedupPipeline(

@@ -143,8 +143,8 @@ def test_ngram_jaccard_strategies_agree(spark, sf_dir):
     """The profile-collapsed path (mask+rare encoding, signature collapse,
     expansion) must return the exact multiset the PPJoin prefix path does."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    prof = D.ngram_jaccard_pairs(docs, 0.5, strategy="profile")
-    pref = D.ngram_jaccard_pairs(docs, 0.5, strategy="prefix")
+    prof = D._ngram_jaccard_profile(docs, 0.5, "doc_id")
+    pref = D._ngram_jaccard_prefix(docs, 0.5, "doc_id")
     assert prof.exceptAll(pref).count() == 0
     assert pref.exceptAll(prof).count() == 0
 
@@ -164,7 +164,7 @@ def test_ngram_jaccard_profile_edges(spark):
     )
     rows = {
         (r["doc1"], r["doc2"]): r["jaccard_ppm"]
-        for r in D.ngram_jaccard_pairs(docs, 0.5, strategy="profile").collect()
+        for r in D._ngram_jaccard_profile(docs, 0.5, "doc_id").collect()
     }
     assert rows[(1, 2)] == 1_000_000
     assert rows[(1, 5)] == 750_000 and rows[(2, 5)] == 750_000
@@ -336,29 +336,27 @@ def test_lsh_rejects_wrong_dimension(spark):
     assert "dimension" in str(ei.value)
 
 
-def test_ngram_jaccard_auto_selects_by_collapse(spark, sf_dir):
-    """auto must choose the O(P^2) broadcast profile path only when profiles
-    collapse under the cap, and fall back to the PPJoin prefix path on a
-    diverse corpus — observable in the physical plan (the profile path ends
-    in a BroadcastNestedLoopJoin; prefix does not)."""
+def test_ngram_jaccard_auto_selects_by_collapse(spark, sf_dir, monkeypatch):
+    """ngram_jaccard_pairs must choose the O(P^2) broadcast profile path
+    only when profiles collapse under NGRAM_PROFILE_CAP, and take the
+    PPJoin prefix path otherwise — observable in the physical plan (the
+    profile path ends in a BroadcastNestedLoopJoin; prefix does not)."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
 
     def plan_of(df):
         return df._jdf.queryExecution().executedPlan().toString()
 
-    collapsing = plan_of(D.ngram_jaccard_pairs(docs, 0.5, strategy="auto"))
+    collapsing = plan_of(D.ngram_jaccard_pairs(docs, 0.5))
     assert "BroadcastNestedLoopJoin" in collapsing
 
-    forced_diverse = plan_of(
-        D.ngram_jaccard_pairs(docs, 0.5, strategy="auto", profile_cap=1)
-    )
-    assert "BroadcastNestedLoopJoin" not in forced_diverse
+    monkeypatch.setattr(D, "NGRAM_PROFILE_CAP", 1)
+    diverse = D.ngram_jaccard_pairs(docs, 0.5)
+    assert "BroadcastNestedLoopJoin" not in plan_of(diverse)
 
     # both strategies must return the same exact result regardless of choice
-    auto = D.ngram_jaccard_pairs(docs, 0.5, strategy="auto", profile_cap=1)
-    pref = D.ngram_jaccard_pairs(docs, 0.5, strategy="prefix")
-    assert auto.exceptAll(pref).count() == 0
-    assert pref.exceptAll(auto).count() == 0
+    pref = D._ngram_jaccard_prefix(docs, 0.5, "doc_id")
+    assert diverse.exceptAll(pref).count() == 0
+    assert pref.exceptAll(diverse).count() == 0
 
 
 def test_ivf_trained_centroids_recall_on_clustered_corpus(spark):
@@ -479,43 +477,6 @@ def test_real_decoders_parse_actual_containers(spark):
     assert got["w1"]["frames_sampled"] == nframes
     assert got["p1"]["feat_width"] == w and got["p1"]["feat_height"] == h
     assert got["b1"]["feat_width"] == 640
-
-
-def test_ngram_profile_cap_enforced_inside_profile_path(spark):
-    """Review W3 closure: strategy='profile' FORCED on a no-collapse corpus
-    must not run the O(P^2) broadcast nested-loop — the in-path exact count
-    falls back to the prefix strategy with identical output."""
-    import warnings as W
-
-    from healthcare_data_harmonization_dataflow_spark.operators.dedup import (
-        ngram_jaccard_pairs,
-    )
-
-    # every doc a distinct token set: zero collapse, P == N
-    docs = spark.range(60).selectExpr(
-        "id AS doc_id",
-        "concat('alpha beta w', id, ' w', id + 1000) AS text",
-    )
-    with W.catch_warnings(record=True) as got:
-        W.simplefilter("always")
-        forced = ngram_jaccard_pairs(
-            docs, threshold=0.5, strategy="profile", profile_cap=10
-        )
-        rows_forced = {tuple(r) for r in forced.collect()}
-    assert any("profile_cap" in str(w.message) for w in got)
-    rows_prefix = {
-        tuple(r)
-        for r in ngram_jaccard_pairs(docs, threshold=0.5, strategy="prefix").collect()
-    }
-    assert rows_forced == rows_prefix
-    # and a collapsing corpus under the cap still takes the profile path
-    dups = spark.range(60).selectExpr(
-        "id AS doc_id", "concat('same text ', id % 3) AS text"
-    )
-    with W.catch_warnings(record=True) as got2:
-        W.simplefilter("always")
-        ngram_jaccard_pairs(dups, strategy="profile", profile_cap=10).collect()
-    assert not any("profile_cap" in str(w.message) for w in got2)
 
 
 # ------------------------------------------------------- connected components
@@ -983,6 +944,8 @@ def test_ngram_jaccard_prefix_length_integer_exact(spark):
     prefix length 2 instead of 3, silently dropping a pair at EXACTLY the
     threshold. Both strategies must find it and agree."""
     from healthcare_data_harmonization_dataflow_spark.operators.dedup import (
+        _ngram_jaccard_prefix,
+        _ngram_jaccard_profile,
         ngram_jaccard_pairs,
     )
 
@@ -993,9 +956,9 @@ def test_ngram_jaccard_prefix_length_integer_exact(spark):
         ],
         "doc_id long, text string",
     )
-    for strat in ("prefix", "profile"):
-        got = ngram_jaccard_pairs(docs, threshold=0.8, strategy=strat).collect()
-        assert len(got) == 1, f"{strat} missed the threshold-exact pair"
+    for strat in (_ngram_jaccard_prefix, _ngram_jaccard_profile):
+        got = strat(docs, 0.8, "doc_id").collect()
+        assert len(got) == 1, f"{strat.__name__} missed the threshold-exact pair"
         assert got[0]["jaccard_ppm"] == 800_000
     import pytest as _pytest
 
@@ -1162,13 +1125,8 @@ def test_mixture_sample_sqrt_temperature_rates(spark):
     assert "BroadcastHashJoin" in plan  # rates broadcast: corpus unshuffled
 
 
-def test_ngram_jaccard_prefix_hot_token_salt_exact(spark):
-    from healthcare_data_harmonization_dataflow_spark.operators.dedup import (
-        _ngram_jaccard_prefix,
-        ngram_jaccard_pairs,
-    )
-
-    # dense corpus: every doc shares token 'hot' (df = n >> hot_df), plus
+def test_ngram_jaccard_prefix_hot_token_salt_exact(spark, monkeypatch):
+    # dense corpus: every doc shares token 'hot' (df = n >> the cutoff), plus
     # three identical docs and one near-dup pair that must survive
     rows = [(i, f"hot u{i}a u{i}b u{i}c") for i in range(40)]
     rows += [(100, "hot same same2 same3"), (101, "hot same same2 same3"),
@@ -1177,10 +1135,10 @@ def test_ngram_jaccard_prefix_hot_token_salt_exact(spark):
              (201, "hot near near2 near3 other")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
-    salted = _ngram_jaccard_prefix(
-        docs, 0.5, "doc_id", salt_buckets=4, hot_df=10
-    )
-    unsalted = ngram_jaccard_pairs(docs, 0.5, strategy="profile")
+    monkeypatch.setattr(D, "NGRAM_SALT_BUCKETS", 4)
+    monkeypatch.setattr(D, "NGRAM_HOT_DF", 10)
+    salted = D._ngram_jaccard_prefix(docs, 0.5, "doc_id")
+    unsalted = D._ngram_jaccard_profile(docs, 0.5, "doc_id")
     key = lambda r: (r["doc1"], r["doc2"], r["jaccard_ppm"])  # noqa: E731
     got = sorted(key(r) for r in salted.collect())
     want = sorted(key(r) for r in unsalted.collect())
@@ -1376,6 +1334,64 @@ def test_dedup_incremental_degenerate_inputs_match_oracle(spark, fixture, query)
     assert sorted(tuple(r) for r in got) == sorted(oracle) == want
 
 
+# Degenerate corpora for the pair operators: no doc, one doc, 30 identical
+# docs (every pair is inside one signature group) and two groups of
+# identical docs whose word sets overlap (pairs inside and across groups).
+_PAIR_DEGENERATE = {
+    "empty": [],
+    "one_doc": [(1, "alpha beta gamma delta")],
+    "thirty_identical": [(i, "the same words in every doc") for i in range(30)],
+    "two_groups": [(i, "alpha beta gamma delta epsilon") for i in range(10)]
+    + [(i, "alpha beta gamma delta zeta") for i in range(10, 20)],
+}
+_PAIR_QUERIES = [
+    "dedup_minhash_lsh_pairs", "dedup_simhash_pairs", "dedup_ngram_jaccard",
+    "dedup_clusters", "dedup_cluster_sizes", "lsh_fp_rate",
+]
+
+
+@pytest.mark.parametrize("fixture", sorted(_PAIR_DEGENERATE))
+def test_dedup_pair_operators_degenerate_corpora_match_oracle(spark, fixture):
+    """Every pair-emitting dedup query, and both n-gram strategies called
+    directly, against its DuckDB oracle on an empty corpus, one doc, one
+    group of identical docs and two overlapping groups: the same rows in
+    both engines."""
+    import unittest.mock as mock
+
+    import duckdb
+
+    import __spark_entry__ as entry
+
+    rows = _PAIR_DEGENERATE[fixture]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    if rows:
+        con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    sdf = spark.createDataFrame(rows, "doc_id long, text string")
+    oracles = entry.oracle_sql()
+    cases = {
+        q: (lambda q=q: entry.queries()[q](spark, "unused"), oracles[q])
+        for q in _PAIR_QUERIES
+    }
+    for strat in (D._ngram_jaccard_profile, D._ngram_jaccard_prefix):
+        cases[strat.__name__] = (
+            lambda strat=strat: strat(sdf, 0.5, "doc_id"),
+            D.ngram_jaccard_oracle_sql(0.5),
+        )
+    counts = {}
+    with mock.patch.object(entry, "_docs", lambda s, d: sdf):
+        for name, (build, sql) in cases.items():
+            df = build()
+            got = sorted(tuple(r) for r in df.collect())
+            want = sorted(con.sql(f"SELECT {', '.join(df.columns)} FROM ({sql})").fetchall())
+            assert got == want, name
+            counts[name] = len(got)
+    if fixture == "thirty_identical":
+        assert counts["dedup_ngram_jaccard"] == 30 * 29 // 2
+    if fixture == "two_groups":  # 2 x C(10,2) inside + 100 across (J = 4/6)
+        assert counts["dedup_ngram_jaccard"] == 2 * 45 + 100
+
+
 # The text-family registry entries: every operator over `documents`.
 _TEXT_FAMILY = re.compile(
     r"^(text_|dedup_|corpus_|quality_|bpe_)|^(span_dedup|lsh_fp_rate|c4_filters|"
@@ -1443,32 +1459,6 @@ def test_text_operators_degenerate_texts_match_oracle(spark, degenerate_document
     cols = ", ".join(df.columns)
     want = con.sql(f"SELECT {cols} FROM ({oracles[query]})").fetchall()
     assert sorted(got, key=repr) == sorted(want, key=repr)
-
-
-def test_ngram_jaccard_profile_fallback_keeps_caller_settings(spark):
-    """Falling back from the profile to the prefix strategy (more profiles
-    than profile_cap) must keep the caller's salt_buckets/hot_df, and
-    invalid values fail up front whichever strategy runs."""
-    import unittest.mock as mock
-
-    docs = spark.createDataFrame(
-        [(1, "alpha beta"), (2, "gamma delta"), (3, "alpha beta")],
-        "doc_id long, text string",
-    )
-    with pytest.raises(ValueError, match="salt_buckets/hot_df"):
-        D.ngram_jaccard_pairs(docs, strategy="profile", profile_cap=1, hot_df=0)
-    with pytest.raises(ValueError, match="salt_buckets/hot_df"):
-        D.ngram_jaccard_pairs(docs, strategy="prefix", salt_buckets=0)
-
-    with mock.patch.object(
-        D, "_ngram_jaccard_prefix", wraps=D._ngram_jaccard_prefix
-    ) as prefix, pytest.warns(UserWarning, match="profile_cap=1"):
-        got = D.ngram_jaccard_pairs(
-            docs, 0.5, strategy="profile", profile_cap=1, salt_buckets=4,
-            hot_df=10,
-        ).collect()
-    assert prefix.call_args.kwargs == {"salt_buckets": 4, "hot_df": 10}
-    assert [tuple(r) for r in got] == [(1, 3, 1_000_000)]
 
 
 def test_round5_closeout_queries_lead_the_registry():

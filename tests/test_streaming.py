@@ -1439,6 +1439,31 @@ def test_bad_session_gap_rejected_at_construction(tmp_path, gap):
         )
 
 
+def test_sink_marker_check_is_one_fs_call(spark, tmp_path):
+    """Deciding whether a batch is committed reads the marker once and
+    probes nothing else: one call for a fresh batch (the read raises
+    FileNotFoundError) and one for a committed one (a replay)."""
+    sink = ExactlyOnceParquetSink(str(tmp_path / "s"), "t")
+    sink.write_batch(spark.range(3).select(F.col("id").cast("string").alias("conv_id")), 0)
+    calls = []
+
+    class _CountingFs(type(sink._fs())):
+        def exists(self, path):
+            calls.append("exists")
+            return super().exists(path)
+
+        def read_text(self, path):
+            calls.append("read_text")
+            return super().read_text(path)
+
+    sink._fs_cache = _CountingFs()
+    assert sink.is_committed(1) is False
+    assert calls == ["read_text"]
+    calls.clear()
+    assert sink.is_committed(0) is True
+    assert calls == ["read_text"]
+
+
 def test_sink_transient_read_failure_raises_for_readers(spark, tmp_path):
     """A transient FS read failure on a marker that EXISTS must not make
     the committed batch silently vanish from reader-facing output

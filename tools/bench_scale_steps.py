@@ -56,20 +56,21 @@ _OFF = 1_000_000  # id offset per replica (>> any base id)
 def _extra_queries():
     """Strategy-pinned variants, so a slope measures ONE algorithm.
 
-    The registered dedup_ngram_jaccard uses strategy='auto', which
-    crosses the profile->prefix boundary between x1 (5k profiles) and
-    x3 (15k > profile_cap): the x1/x3 times then compare two different
-    algorithms and the fitted exponent is meaningless (measured 2.5 s ->
-    457 s, a fake slope of ~4.7). Pinning 'prefix' at every point
-    isolates the PPJoin path's own scaling.
+    The registered dedup_ngram_jaccard picks its strategy from an estimate
+    of the distinct token-set profiles, which crosses the profile->prefix
+    boundary between x1 (5k profiles) and x3 (15k > NGRAM_PROFILE_CAP):
+    the x1/x3 times then compare two different algorithms and the fitted
+    exponent is meaningless (measured 2.5 s -> 457 s, a fake slope of
+    ~4.7). Calling the prefix path at every point isolates the PPJoin
+    path's own scaling.
     """
     from healthcare_data_harmonization_dataflow_spark.operators.dedup import (
-        ngram_jaccard_pairs,
+        _ngram_jaccard_prefix,
     )
 
     def prefix_q(spark, d):
         docs = spark.read.parquet(os.path.join(d, "documents.parquet"))
-        return ngram_jaccard_pairs(docs, strategy="prefix")
+        return _ngram_jaccard_prefix(docs, 0.5, "doc_id")
 
     return {"dedup_ngram_jaccard_prefix": prefix_q}
 
