@@ -1660,6 +1660,13 @@ _ATTACH_WIN = (
 )
 
 
+def _oracle_sf_file(name: str) -> str:
+    """A parquet file of the scale factor the data-derived oracle literals
+    (trained centroids, merges, weights) are computed from."""
+    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
+    return f"{sf_dir}/{name}"
+
+
 def oracle_sql() -> dict[str, str]:
     return {
         "mapping_transform": f"""
@@ -2011,18 +2018,12 @@ def oracle_sql() -> dict[str, str]:
         # identically via DuckDB), so both engines use identical centroids.
         # The driver's correctness gate runs at sf0.01 (TESTDATA.md).
         "ann_ivf_topk": S.ivf_topk_oracle_sql(
-            S.ivf_oracle_centroids(
-                os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-                + "/embeddings.parquet"
-            ),
+            S.ivf_oracle_centroids(_oracle_sf_file("embeddings.parquet")),
             k=5,
             n_queries=10,
         ),
         "dedup_semantic": S.semantic_dedup_oracle_sql(
-            S.ivf_oracle_centroids(
-                os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-                + "/embeddings.parquet"
-            ),
+            S.ivf_oracle_centroids(_oracle_sf_file("embeddings.parquet")),
             threshold_ppm=400_000,
         ),
         "dicom_harmonize": f"""
@@ -2245,20 +2246,12 @@ def oracle_sql() -> dict[str, str]:
         # same data, and pytest pins the two trainers equal.
         "bpe_encode": _tokenize.bpe_encode_oracle_sql(
             _tokenize.bpe_oracle_merges(
-                os.environ.get(
-                    "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-                )
-                + "/documents.parquet",
-                n_merges=20,
+                _oracle_sf_file("documents.parquet"), n_merges=20
             )
         ),
         "dsir_sample": _curation.dsir_select_oracle_sql(
             _curation.dsir_oracle_weights(
-                os.environ.get(
-                    "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-                )
-                + "/documents.parquet",
-                _DSIR_TARGET_DUCK,
+                _oracle_sf_file("documents.parquet"), _DSIR_TARGET_DUCK
             )
         ),
     }

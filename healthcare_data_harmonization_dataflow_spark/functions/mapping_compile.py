@@ -44,7 +44,7 @@ class _ProjDict(dict):
     (mirroring the runtime variant merge, whose binary form sorts keys)."""
 from .mapping_lang import (
     _FULL_DATE,
-    _TIME_TOKENS,
+    _TIMEADD_UNITS,
     Arr,
     Builtin,
     Call,
@@ -54,6 +54,9 @@ from .mapping_lang import (
     MappingConfigError,
     Path,
     Where,
+    _is_int,
+    _regex,
+    _strfmt_segments,
     _time_translate,
     nest_fields,
     parse_mapping_config,
@@ -71,7 +74,6 @@ class CompiledMapping:
     def __init__(self, config_text: str):
         self.config_text = config_text
         self.config: MappingConfig = parse_mapping_config(config_text)
-        _validate_literal_builtin_args(self.config)
         self._py = _compile_python(self.config)
         # clock -> variant_columns() result, or the error that build raised
         self._columns: "dict[str | None, tuple[Column, Column] | Exception]" = {}
@@ -241,8 +243,9 @@ def _num_variant(col: Column) -> Column:
 
 def _lit_str(node, what: str) -> str:
     """Builtin arguments that must be compile-time string literals in the
-    column backend (delimiters, regex patterns — they parameterize the
-    EXPRESSION, not the data); non-literals fall back to pandas."""
+    column backend (delimiters, regex and time patterns — they parameterize
+    the EXPRESSION, not the data); non-literals fall back to pandas. A
+    literal has passed the parser's LITERAL_ARGS rules already."""
     if isinstance(node, Lit) and isinstance(node.value, str):
         return node.value
     raise MappingConfigError(
@@ -253,35 +256,11 @@ def _lit_str(node, what: str) -> str:
 def _lit_int(node, what: str) -> int:
     """Builtin arguments that must be compile-time integer literals in the
     column backend (substring bounds parameterize the expression)."""
-    if (
-        isinstance(node, Lit)
-        and isinstance(node.value, int)
-        and not isinstance(node.value, bool)
-    ):
+    if isinstance(node, Lit) and _is_int(node.value):
         return node.value
     raise MappingConfigError(
         f"column backend: {what} must be an integer literal"
     )
-
-
-def _time_fmt(node, what: str, need_full_date: bool = False) -> str:
-    """Compile-time validation of a $ReformatTime pattern literal: must be
-    inside the supported token subset, and an INPUT pattern must carry a
-    full date (yyyy+MM+dd) — otherwise the two backends would disagree on
-    defaulted fields (Spark defaults a missing date to 1970-01-01,
-    strptime to 1900-01-01)."""
-    s = _lit_str(node, what)
-    tr = _time_translate(s)
-    if tr is None:
-        raise MappingConfigError(
-            f"{what}: unsupported time pattern {s!r} "
-            f"(tokens: {sorted(_TIME_TOKENS)}, each at most once)"
-        )
-    if need_full_date and not _FULL_DATE <= tr[1]:
-        raise MappingConfigError(
-            f"{what}: input pattern {s!r} must include yyyy, MM and dd"
-        )
-    return s
 
 
 def _render_kind(v) -> str:
@@ -306,105 +285,6 @@ def _render_kind(v) -> str:
         return "array<string>"
     return "variant"
 
-
-def _check_regex_literal(pat: str) -> None:
-    """Compile-time gate for a literal regex: a pattern python's re rejects
-    would crash the pandas backend mid-job (re.error is not recoverable),
-    violating the fail-fast contract — and Java-only syntax (possessive
-    quantifiers etc.) would silently diverge between backends."""
-    import re as _re
-
-    try:
-        _re.compile(pat)
-    except _re.error as e:
-        raise MappingConfigError(f"$MatchesRegex: invalid pattern {pat!r}: {e}")
-
-
-def _walk_exprs(cfg: MappingConfig):
-    """Yield every expression node in the config (outs, vars, projector
-    fields and projector-local vars), depth-first."""
-    stack = [e for _, e in cfg.outs]
-    stack.extend(e for _, e in cfg.vars)
-    for proj in cfg.projectors.values():
-        stack.extend(f[1] for f in proj.fields)
-        stack.extend(e for _, e in proj.vars)
-    while stack:
-        e = stack.pop()
-        yield e
-        if isinstance(e, (Call, Builtin)):
-            stack.extend(e.args)
-        elif isinstance(e, Arr):
-            stack.extend(e.items)
-        elif isinstance(e, Iterate):
-            stack.append(e.path)
-        elif isinstance(e, Where):
-            stack.append(e.base)
-            stack.append(e.pred)
-
-
-def _validate_literal_builtin_args(cfg: MappingConfig) -> None:
-    """Fail-fast checks on LITERAL builtin arguments shared by BOTH
-    backends (the per-backend compiles re-check, but a pandas-only config
-    must also reject garbage before data flows)."""
-    for e in _walk_exprs(cfg):
-        if not isinstance(e, Builtin):
-            continue
-        if e.name == "$MatchesRegex" and len(e.args) == 2:
-            a = e.args[1]
-            if isinstance(a, Lit) and isinstance(a.value, str):
-                _check_regex_literal(a.value)
-        if e.name == "$StrSplit" and len(e.args) == 2:
-            a = e.args[1]
-            if isinstance(a, Lit) and a.value == "":
-                raise MappingConfigError(
-                    "$StrSplit delimiter must be non-empty"
-                )
-
-
-def _strfmt_segments(fmt: str) -> "tuple[list[str | None], int]":
-    """Split a $StrFmt pattern into literal segments and %s slots (None
-    entries); %% escapes a percent. Any other directive is outside the
-    supported subset (printf number formatting diverges between backends)."""
-    segs: list[str | None] = []
-    buf: list[str] = []
-    nslots = 0
-    i, n = 0, len(fmt)
-    while i < n:
-        c = fmt[i]
-        if c == "%":
-            if i + 1 >= n:
-                raise MappingConfigError("$StrFmt: dangling '%' in format")
-            nxt = fmt[i + 1]
-            if nxt == "%":
-                buf.append("%")
-            elif nxt == "s":
-                segs.append("".join(buf))
-                buf.clear()
-                segs.append(None)
-                nslots += 1
-            else:
-                raise MappingConfigError(
-                    f"$StrFmt: unsupported directive %{nxt} (only %s and %%)"
-                )
-            i += 2
-        else:
-            buf.append(c)
-            i += 1
-    segs.append("".join(buf))
-    return segs, nslots
-
-
-# $TimeAdd units -> position in make_interval(years, months, weeks, days,
-# hours, mins, secs); the python backend mirrors months/years with
-# clamp-at-month-end arithmetic and the rest with timedelta
-_TIMEADD_UNITS = {
-    "years": 0,
-    "months": 1,
-    "days": 3,
-    "hours": 4,
-    "minutes": 5,
-    "seconds": 6,
-}
 
 # epoch-seconds bound keeping results inside years 1970-9999, where the two
 # backends' renderings agree ($ParseUnixTime rejects values outside it)
@@ -1035,13 +915,7 @@ def _compile_expr(cfg: MappingConfig, expr, env: dict[str, Any]):
                 )
             return _StrCol(F.to_json(args[0]))
         if expr.name == "$StrFmt":
-            fmt = _lit_str(expr.args[0], "$StrFmt format")
-            segs, nslots = _strfmt_segments(fmt)
-            if nslots != len(args) - 1:
-                raise MappingConfigError(
-                    f"$StrFmt format has {nslots} %s slots for "
-                    f"{len(args) - 1} arguments"
-                )
+            segs, _ = _strfmt_segments(_lit_str(expr.args[0], "$StrFmt format"))
             cols: list[Column] = []
             ai = 1
             for seg in segs:
@@ -1097,15 +971,7 @@ def _compile_expr(cfg: MappingConfig, expr, env: dict[str, Any]):
             return _num_render(_str_form(args[0]).try_cast("double"))
         if expr.name == "$StrSplit":
             d = _lit_str(expr.args[1], "$StrSplit delimiter")
-            if d == "":
-                # python str.split('') raises; Java splits per character —
-                # neither is a sane contract, so fail fast at compile
-                raise MappingConfigError("$StrSplit delimiter must be non-empty")
-            import re as _re
-
-            return _ArrCol(
-                F.split(_str_form(args[0]), _re.escape(d), -1), "str"
-            )
+            return _ArrCol(F.split(_str_form(args[0]), re.escape(d), -1), "str")
         if expr.name == "$StrJoin":
             d = _lit_str(expr.args[0], "$StrJoin delimiter")
             arr = args[1]
@@ -1124,7 +990,6 @@ def _compile_expr(cfg: MappingConfig, expr, env: dict[str, Any]):
             )
         if expr.name == "$MatchesRegex":
             pat = _lit_str(expr.args[1], "$MatchesRegex pattern")
-            _check_regex_literal(pat)
             # full-match semantics (Whistle MatchesRegex); a missing subject
             # compares false. \z (absolute end), not $ — Java's $ also
             # matches before a trailing newline, where re.fullmatch does not
@@ -1181,42 +1046,27 @@ def _compile_expr(cfg: MappingConfig, expr, env: dict[str, Any]):
         if expr.name == "$SubStr":
             start = _lit_int(expr.args[1], "$SubStr start")
             end = _lit_int(expr.args[2], "$SubStr end")
-            if start < 0 or end < start:
-                raise MappingConfigError(
-                    "$SubStr needs literal bounds with 0 <= start <= end"
-                )
             # python-slice clamping: substring's pos/len form clamps at the
             # string end the same way s[start:end] does
             return _StrCol(
                 F.substring(_str_form(args[0]), start + 1, end - start)
             )
         if expr.name == "$ReformatTime":
-            in_fmt = _time_fmt(
-                expr.args[1], "$ReformatTime input format", need_full_date=True
-            )
-            out_fmt = _time_fmt(expr.args[2], "$ReformatTime output format")
+            in_fmt = _lit_str(expr.args[1], "$ReformatTime input format")
+            out_fmt = _lit_str(expr.args[2], "$ReformatTime output format")
             ts = _hoist(env, _year_guard(F.try_to_timestamp(_str_form(args[0]), F.lit(in_fmt))))
             # unparseable/missing -> NULL timestamp -> NULL string -> field
             # omitted, matching the pandas backend's _MISSING
             return _StrCol(F.date_format(ts, out_fmt))
         if expr.name == "$ParseTime":
-            in_fmt = _time_fmt(
-                expr.args[0], "$ParseTime format", need_full_date=True
-            )
+            in_fmt = _lit_str(expr.args[0], "$ParseTime format")
             ts = _hoist(env, _year_guard(F.try_to_timestamp(_str_form(args[1]), F.lit(in_fmt))))
             return _StrCol(F.date_format(ts, "yyyy-MM-dd'T'HH:mm:ss"))
         if expr.name == "$ParseUnixTime":
             unit = _lit_str(expr.args[0], "$ParseUnixTime unit")
-            if unit not in ("s", "ms"):
-                raise MappingConfigError(
-                    f"$ParseUnixTime unit must be 's' or 'ms', got {unit!r}"
-                )
-            out_fmt = _time_fmt(expr.args[2], "$ParseUnixTime format")
-            tz = _lit_str(expr.args[3], "$ParseUnixTime timezone")
-            if tz != "UTC":
-                raise MappingConfigError(
-                    "$ParseUnixTime supports the 'UTC' timezone only"
-                )
+            out_fmt = _lit_str(expr.args[2], "$ParseUnixTime format")
+            # the zone must be a literal too; the parser has made it "UTC"
+            _lit_str(expr.args[3], "$ParseUnixTime timezone")
             lim = _EPOCH_SECS_MAX * 1000 + 999 if unit == "ms" else _EPOCH_SECS_MAX
             d = _hoist(env, _num_form(args[1]))
             # integral, in-range epochs only: fractional values and years
@@ -1232,9 +1082,7 @@ def _compile_expr(cfg: MappingConfig, expr, env: dict[str, Any]):
             ts = F.timestamp_millis(iv) if unit == "ms" else F.timestamp_seconds(iv)
             return _StrCol(F.date_format(ts, out_fmt))
         if expr.name == "$SplitTime":
-            in_fmt = _time_fmt(
-                expr.args[0], "$SplitTime format", need_full_date=True
-            )
+            in_fmt = _lit_str(expr.args[0], "$SplitTime format")
             ts = _hoist(env, _year_guard(F.try_to_timestamp(_str_form(args[1]), F.lit(in_fmt))))
             # bind ts once for its 7 references; unparseable -> nil (not an
             # array of nulls)
@@ -1254,15 +1102,9 @@ def _compile_expr(cfg: MappingConfig, expr, env: dict[str, Any]):
                 "str",
             )
         if expr.name == "$TimeAdd":
-            in_fmt = _time_fmt(
-                expr.args[1], "$TimeAdd format", need_full_date=True
-            )
+            in_fmt = _lit_str(expr.args[1], "$TimeAdd format")
             n = _lit_int(expr.args[2], "$TimeAdd quantity")
             unit = _lit_str(expr.args[3], "$TimeAdd unit")
-            if unit not in _TIMEADD_UNITS:
-                raise MappingConfigError(
-                    f"$TimeAdd unit must be one of {sorted(_TIMEADD_UNITS)}"
-                )
             ts = _hoist(env, _year_guard(F.try_to_timestamp(_str_form(args[0]), F.lit(in_fmt))))
             iargs = [F.lit(0)] * 7
             iargs[_TIMEADD_UNITS[unit]] = F.lit(n)
@@ -1408,10 +1250,6 @@ def _compile_expr(cfg: MappingConfig, expr, env: dict[str, Any]):
             ]
             if expr.name == "$SortAndTakeTop":
                 key, desc = keys  # (key, "true"/"false")
-                if desc not in ("true", "false"):
-                    raise MappingConfigError(
-                        '$SortAndTakeTop descending must be "true" or "false"'
-                    )
 
                 def kf(x):
                     return F.coalesce(
@@ -1491,7 +1329,7 @@ def _compile_expr(cfg: MappingConfig, expr, env: dict[str, Any]):
             # a nil side compares false (not nil), matching $Eq
             return _BoolCol(F.coalesce(cmp, F.lit(False)))
         if expr.name == "$CurrentTime":
-            out_fmt = _time_fmt(expr.args[0], "$CurrentTime format")
+            out_fmt = _lit_str(expr.args[0], "$CurrentTime format")
             clock = env.get("__clock__")
             # injected clock -> a literal timestamp (deterministic, oracle-
             # checkable); no clock -> Spark's query-constant now()
@@ -1989,12 +1827,13 @@ def _compile_python(cfg: MappingConfig) -> Callable[[Any], dict]:
                 # array_join drops null elements (no delimiter for them)
                 return d.join(p for p in parts if p is not _MISSING)
             if expr.name == "$MatchesRegex":
-                import re as _re
-
                 s, pat = _scalar_str(vals[0]), vals[1]
-                if s is _MISSING or not isinstance(pat, str):
+                # a missing subject or a data-derived pattern re rejects
+                # compares false
+                rx = _regex(pat) if isinstance(pat, str) else None
+                if s is _MISSING or rx is None:
                     return False
-                return _re.fullmatch(pat, s) is not None
+                return rx.fullmatch(s) is not None
             if expr.name == "$MergeJSON":
 
                 def _mj(a, b, sa=None):
@@ -2132,13 +1971,8 @@ def _compile_python(cfg: MappingConfig) -> Callable[[Any], dict]:
             if expr.name == "$SubStr":
                 s = _scalar_str(vals[0])
                 start, end = vals[1], vals[2]
-                if (
-                    s is _MISSING
-                    or not isinstance(start, int)
-                    or not isinstance(end, int)
-                    or isinstance(start, bool)
-                    or isinstance(end, bool)
-                    or not 0 <= start <= end
+                if s is _MISSING or not (
+                    _is_int(start) and _is_int(end) and 0 <= start <= end
                 ):
                     return _MISSING
                 return s[start:end]
@@ -2196,11 +2030,7 @@ def _compile_python(cfg: MappingConfig) -> Callable[[Any], dict]:
                     ]
                 # $TimeAdd
                 n, unit = vals[2], vals[3]
-                if (
-                    not isinstance(n, int)
-                    or isinstance(n, bool)
-                    or unit not in _TIMEADD_UNITS
-                ):
+                if not _is_int(n) or unit not in _TIMEADD_UNITS:
                     return _MISSING
                 if unit in ("years", "months"):
                     import calendar as _cal
@@ -2384,18 +2214,14 @@ def _compile_python(cfg: MappingConfig) -> Callable[[Any], dict]:
                     return _MISSING
                 return json_canon.dumps(json_canon.canon_sort(v))
             if expr.name == "$StrFmt":
-                # runtime-tolerant like the other pattern builtins: a bad or
-                # data-derived format is nil here; the column backend
-                # enforces a LITERAL format at compile time
+                # runtime-tolerant like the other pattern builtins: a bad
+                # data-derived format is nil (a literal one was checked at
+                # parse)
                 fmt = vals[0]
-                if not isinstance(fmt, str):
+                parsed = _strfmt_segments(fmt) if isinstance(fmt, str) else None
+                if parsed is None or parsed[1] != len(vals) - 1:
                     return _MISSING
-                try:
-                    segs, nslots = _strfmt_segments(fmt)
-                except MappingConfigError:
-                    return _MISSING
-                if nslots != len(vals) - 1:
-                    return _MISSING
+                segs = parsed[0]
                 forms = [_scalar_str(v) for v in vals[1:]]
                 if any(s is _MISSING for s in forms):
                     return _MISSING  # concat null-propagation

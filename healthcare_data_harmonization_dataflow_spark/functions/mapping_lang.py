@@ -64,7 +64,9 @@ We implement the subset those tests + the e2e corpus exercise, from scratch:
   meaning output[t] = [ value at from_source ] ('.' = entire input).
 
 Parsing/validation errors raise :class:`MappingConfigError` at compile time —
-the fail-fast contract of MappingFnTest.java:66-75.
+the fail-fast contract of MappingFnTest.java:66-75. That includes every
+builtin's literal arguments: ``LITERAL_ARGS`` is the one table of those
+rules, checked once by ``MappingConfig._check`` for both backends.
 """
 
 from __future__ import annotations
@@ -128,7 +130,8 @@ class Where:
     pred: object
 
 
-# builtin name -> (min_arity, max_arity or None = unbounded)
+# builtin name -> (min_arity, max_arity or None = unbounded); the rules for
+# literal arguments (patterns, delimiters, bounds, units) are LITERAL_ARGS
 BUILTINS: dict[str, tuple[int, int | None]] = {
     "$ToUpper": (1, 1),
     "$ToLower": (1, 1),
@@ -160,11 +163,10 @@ BUILTINS: dict[str, tuple[int, int | None]] = {
     "$IsNil": (1, 1),
     "$ListLen": (1, 1),
     # round-3 second wave: whitespace trim, python-slice substring
-    # ($SubStr(v, start, end) with literal 0 <= start <= end), timestamp
-    # reformatting ($ReformatTime(v, in_fmt, out_fmt) with Java-style
-    # patterns restricted to yyyy/MM/dd/HH/mm/ss runs + separators; in_fmt
-    # must carry a full date so both backends agree on defaulted fields),
-    # and array concatenation ($ListCat(a, b, ...) over data arrays)
+    # ($SubStr(v, start, end)), timestamp reformatting ($ReformatTime(v,
+    # in_fmt, out_fmt) with Java-style patterns restricted to
+    # yyyy/MM/dd/HH/mm/ss runs + separators), and array concatenation
+    # ($ListCat(a, b, ...) over data arrays)
     "$Trim": (1, 1),
     "$SubStr": (3, 3),
     "$ReformatTime": (3, 3),
@@ -180,7 +182,7 @@ BUILTINS: dict[str, tuple[int, int | None]] = {
     # array/container, nil for missing); $SortAndTakeTop(arr, key, desc)
     # returns the single top element after a TOTAL order by the canonical
     # rendering of element[key] (ties broken by the whole element's
-    # rendering; desc is the literal "true"/"false"); $UnionBy(arr, k...)
+    # rendering; desc is "true"/"false"); $UnionBy(arr, k...)
     # dedups objects by the rendering tuple of one or more key fields,
     # keeping first occurrences
     # deep merge, left to right: object ∧ object merges recursively (left's
@@ -196,8 +198,8 @@ BUILTINS: dict[str, tuple[int, int | None]] = {
     "$Type": (1, 1),
     "$SortAndTakeTop": (3, 3),
     "$UnionBy": (2, None),
-    # processing-time stamp rendered with a literal pattern from the same
-    # subset; reads the engine's injected clock (apply_mapping(clock=...))
+    # processing-time stamp rendered with a pattern from the same subset;
+    # reads the engine's injected clock (apply_mapping(clock=...))
     # for determinism — without an injected clock each backend uses its own
     # query/batch "now", which is processing time and inherently non-
     # reproducible
@@ -238,13 +240,13 @@ BUILTINS: dict[str, tuple[int, int | None]] = {
     #   argument nils the whole result (concat null-propagation).
     "$StrFmt": (2, None),
     # time library, all over the $ReformatTime pattern subset:
-    # $ParseTime(fmt, t) parses t (fmt must carry a full date) and renders
-    #   the ISO form yyyy-MM-dd'T'HH:mm:ss; $ParseUnixTime(unit, ts, fmt,
-    #   tz) renders an integral epoch value (unit "s"|"ms", tz "UTC" only)
-    #   with fmt; $SplitTime(fmt, t) yields the six zero-padded components
+    # $ParseTime(fmt, t) parses t and renders the ISO form
+    #   yyyy-MM-dd'T'HH:mm:ss; $ParseUnixTime(unit, ts, fmt, tz) renders an
+    #   integral epoch value (unit "s"|"ms", tz "UTC" only) with fmt;
+    #   $SplitTime(fmt, t) yields the six zero-padded components
     #   [yyyy, MM, dd, HH, mm, ss] as strings; $TimeAdd(t, fmt, n, unit)
-    #   adds literal n units (years/months/days/hours/minutes/seconds,
-    #   month arithmetic clamps at month end like SQL intervals) and
+    #   adds n units (years/months/days/hours/minutes/seconds, month
+    #   arithmetic clamps at month end like SQL intervals) and
     #   renders back through fmt. Results landing outside years 1000-9999
     #   are nil (the backends' year renderings stop agreeing there).
     "$ParseTime": (2, 2),
@@ -315,6 +317,153 @@ def _time_translate(fmt) -> "tuple[str, frozenset] | None":
             out.append("%%" if c == "%" else c)
             i += 1
     return "".join(out), frozenset(seen)
+
+
+# $TimeAdd units -> position in make_interval(years, months, weeks, days,
+# hours, mins, secs); the python backend mirrors months/years with
+# clamp-at-month-end arithmetic and the rest with timedelta
+_TIMEADD_UNITS = {
+    "years": 0,
+    "months": 1,
+    "days": 3,
+    "hours": 4,
+    "minutes": 5,
+    "seconds": 6,
+}
+
+
+def _strfmt_segments(fmt: str) -> "tuple[list[str | None], int] | None":
+    """Split a $StrFmt pattern into literal segments and %s slots (None
+    entries), with the slot count; %% escapes a percent. None for any other
+    directive or a dangling '%': printf number formatting diverges between
+    backends."""
+    segs: list[str | None] = []
+    buf: list[str] = []
+    nslots = 0
+    i, n = 0, len(fmt)
+    while i < n:
+        c = fmt[i]
+        if c == "%":
+            nxt = fmt[i + 1 : i + 2]
+            if nxt == "%":
+                buf.append("%")
+            elif nxt == "s":
+                segs.append("".join(buf))
+                buf.clear()
+                segs.append(None)
+                nslots += 1
+            else:
+                return None
+            i += 2
+        else:
+            buf.append(c)
+            i += 1
+    segs.append("".join(buf))
+    return segs, nslots
+
+
+def _regex(pat: str) -> "re.Pattern | None":
+    """The compiled $MatchesRegex pattern; None when Python's re rejects it
+    (the pandas backend could not run it, and Java-only syntax would
+    diverge between backends)."""
+    try:
+        return re.compile(pat)
+    except re.error:
+        return None
+
+
+# Literal-argument rules: each takes a literal argument's value and the
+# call's whole argument tuple, and says what is wrong with the value (None
+# when it is valid).
+def _is_int(v) -> bool:
+    return isinstance(v, int) and not isinstance(v, bool)
+
+
+def _string(v, args):
+    return None if isinstance(v, str) else "must be a string"
+
+
+def _nonempty_string(v, args):
+    return None if isinstance(v, str) and v else "must be a non-empty string"
+
+
+def _integer(v, args):
+    return None if _is_int(v) else "must be an integer"
+
+
+def _one_of(*choices):
+    def rule(v, args):
+        return None if v in choices else f"must be one of {list(choices)}"
+
+    return rule
+
+
+def _out_pattern(v, args):
+    if _time_translate(v) is None:
+        return (
+            f"must be a time pattern over the tokens {sorted(_TIME_TOKENS)}, "
+            "each at most once"
+        )
+    return None
+
+
+def _in_pattern(v, args):
+    # an input pattern without a full date would let the backends disagree
+    # on defaulted fields (Spark defaults a missing date to 1970-01-01,
+    # strptime to 1900-01-01)
+    why = _out_pattern(v, args)
+    if why is None and not _FULL_DATE <= _time_translate(v)[1]:
+        return "is an input time pattern and must include yyyy, MM and dd"
+    return why
+
+
+def _substr_start(v, args):
+    return None if _is_int(v) and v >= 0 else "must be an integer >= 0"
+
+
+def _substr_end(v, args):
+    # a literal start has passed _substr_start by now
+    start = args[1].value if isinstance(args[1], Lit) else 0
+    return None if _is_int(v) and v >= start else "must be an integer >= start >= 0"
+
+
+def _strfmt_format(v, args):
+    parsed = _strfmt_segments(v) if isinstance(v, str) else None
+    if parsed is None:
+        return "must be a string using only the %s and %% directives"
+    if parsed[1] != len(args) - 1:
+        return f"has {parsed[1]} %s slots for {len(args) - 1} arguments"
+    return None
+
+
+def _regex_pattern(v, args):
+    if isinstance(v, str) and _regex(v) is not None:
+        return None
+    return "is an invalid pattern (Python's re must compile it)"
+
+
+# The one table of literal-argument rules: builtin name -> one rule per
+# argument position (None = any value; on a builtin of unbounded arity the
+# last rule covers every further argument). MappingConfig._check applies it
+# to every LITERAL argument, so both backends take a literal as valid. A
+# data-derived argument is not checked: the column backend declines the
+# call and the pandas backend evaluates a bad value to nil (false for
+# $MatchesRegex).
+LITERAL_ARGS: dict[str, tuple] = {
+    "$SubStr": (None, _substr_start, _substr_end),
+    "$ReformatTime": (None, _in_pattern, _out_pattern),
+    "$ParseTime": (_in_pattern, None),
+    "$SplitTime": (_in_pattern, None),
+    "$TimeAdd": (None, _in_pattern, _integer, _one_of(*_TIMEADD_UNITS)),
+    "$ParseUnixTime": (_one_of("s", "ms"), None, _out_pattern, _one_of("UTC")),
+    "$CurrentTime": (_out_pattern,),
+    "$StrFmt": (_strfmt_format, None),
+    "$MatchesRegex": (None, _regex_pattern),
+    "$StrSplit": (None, _nonempty_string),
+    "$StrJoin": (_string, None),
+    "$SortAndTakeTop": (None, _string, _one_of("true", "false")),
+    "$UnionBy": (None, _string),
+}
 
 
 @dataclass(frozen=True)
@@ -489,42 +638,16 @@ class MappingConfig:
             # fail-fast on literal arguments that can never be valid — the
             # MappingFn contract rejects a broken config at load, before
             # any data flows (MappingFn.java:156-192)
-            if expr.name == "$SubStr":
-                bounds = [
-                    a.value
-                    for a in expr.args[1:]
-                    if isinstance(a, Lit)
-                    and isinstance(a.value, int)
-                    and not isinstance(a.value, bool)
-                ]
-                if len(bounds) == 2 and not 0 <= bounds[0] <= bounds[1]:
+            rules = LITERAL_ARGS.get(expr.name, ())
+            for pos, a in enumerate(expr.args):
+                # arity is checked: only an unbounded builtin runs past its
+                # rules, and there the last rule covers the rest
+                rule = rules[min(pos, len(rules) - 1)] if rules else None
+                why = rule(a.value, expr.args) if rule and isinstance(a, Lit) else None
+                if why:
                     raise MappingConfigError(
-                        "$SubStr literal bounds need 0 <= start <= end"
+                        f"{expr.name} argument {pos + 1} ({a.value!r}) {why}"
                     )
-            if expr.name == "$ReformatTime":
-                for pos, a in enumerate(expr.args[1:], start=1):
-                    if not (isinstance(a, Lit) and isinstance(a.value, str)):
-                        continue  # dynamic pattern: pandas backend, runtime nil
-                    tr = _time_translate(a.value)
-                    if tr is None or (pos == 1 and not _FULL_DATE <= tr[1]):
-                        raise MappingConfigError(
-                            f"$ReformatTime literal pattern {a.value!r} is "
-                            "outside the supported subset (tokens "
-                            f"{sorted(_TIME_TOKENS)} each at most once; the "
-                            "input pattern must include yyyy, MM and dd)"
-                        )
-            if expr.name == "$CurrentTime":
-                a = expr.args[0]
-                if (
-                    isinstance(a, Lit)
-                    and isinstance(a.value, str)
-                    and _time_translate(a.value) is None
-                ):
-                    raise MappingConfigError(
-                        f"$CurrentTime literal pattern {a.value!r} is outside "
-                        f"the supported subset (tokens {sorted(_TIME_TOKENS)})"
-                    )
-            for a in expr.args:
                 self._check(a, bound, _stack)
             return
         if isinstance(expr, Arr):

@@ -187,8 +187,8 @@ def hl7v2_transform(
 
     ``store`` schema: (msg_name string, data string). Returns one row per
     notification with disjoint branch columns bundle / read_err / map_err /
-    write_err — all four sink under ONE batchId via FanOutSink in
-    streaming use."""
+    write_err. Its caller is the batch ``hl7v2_harmonize`` query; no
+    streaming query runs this chain or sinks its branches."""
     from ..functions.reformat import extract_webpath_from_pubsub
     from ..operators.bundles import to_transaction_bundle
 

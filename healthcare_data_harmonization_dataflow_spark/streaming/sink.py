@@ -54,6 +54,7 @@ import re
 import time
 from urllib.parse import urlparse
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -157,17 +158,22 @@ class _HadoopFs:
 
     def read_text(self, path: str) -> str:
         """The file's exact text; a missing file raises FileNotFoundError,
-        as ``open`` does for _LocalFs."""
+        as ``open`` does for _LocalFs — told apart by the JVM's
+        ``java.io.FileNotFoundException`` (or a subclass), with no second
+        filesystem call."""
         try:
             stream = self._fs.open(self._path(path))
-        except Exception as exc:
-            if not self.exists(path):
+            try:
+                return stream.readAllBytes().decode("utf-8")
+            finally:
+                stream.close()
+        except Py4JJavaError as exc:
+            missing = self._jvm.java.lang.Class.forName(
+                "java.io.FileNotFoundException"
+            )
+            if missing.isInstance(exc.java_exception):
                 raise FileNotFoundError(path) from exc
             raise
-        try:
-            return stream.readAllBytes().decode("utf-8")
-        finally:
-            stream.close()
 
     def write_text(self, path: str, text: str) -> None:
         out = self._fs.create(self._path(path), True)

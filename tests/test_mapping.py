@@ -10,6 +10,7 @@ must produce byte-identical output.
 """
 
 import json
+import re
 
 import pytest
 
@@ -17,6 +18,7 @@ from healthcare_data_harmonization_dataflow_spark.functions.mapping_compile impo
     compile_mapping,
 )
 from healthcare_data_harmonization_dataflow_spark.functions.mapping_lang import (
+    LITERAL_ARGS,
     MappingConfigError,
 )
 from healthcare_data_harmonization_dataflow_spark.model.errors import err_rows, ok_rows
@@ -834,24 +836,6 @@ def test_second_wave_builtins_golden(spark, backend):
     assert oks["b"] == '{"Output":[{"sub":"b","over":"ab"}]}'
     # the whole second wave stays in codegen
     assert compile_mapping(LIB2_CONFIG).supports_columns() is True
-
-
-def test_second_wave_fail_fast_on_bad_literals():
-    """Invalid literal arguments reject at config load (MappingFn.java
-    fail-fast contract), on BOTH backends, before any data flows."""
-    with pytest.raises(MappingConfigError):
-        compile_mapping("out O: P(root);\ndef P(i) { x: $SubStr(i.s, 3, 1); }")
-    with pytest.raises(MappingConfigError):
-        # unknown pattern letter run
-        compile_mapping(
-            'out O: P(root);\ndef P(i) { x: $ReformatTime(i.s, "qqq", "yyyy"); }'
-        )
-    with pytest.raises(MappingConfigError):
-        # input pattern without a full date: backends would disagree on
-        # defaulted fields, so the subset rejects it up front
-        compile_mapping(
-            'out O: P(root);\ndef P(i) { x: $ReformatTime(i.s, "HH:mm", "HH"); }'
-        )
 
 
 def test_listcat_literal_arrays_fall_back(spark):
@@ -1874,18 +1858,119 @@ def P(i) {
     assert got.collect()[0]["ok"] == '{"O":[{"c":12,"m":false}]}'
 
 
-def test_review_fixes_compile_time_rejects(spark):
-    """Garbage literals fail at compile on BOTH backends (fail-fast
-    contract): an invalid regex would crash pandas mid-job; an empty
-    $StrSplit delimiter raises in python and splits-per-char in Java."""
-    with pytest.raises(MappingConfigError, match="invalid pattern"):
-        compile_mapping(
-            'out O: P(root);\ndef P(i) { x: $MatchesRegex(i.s, "("); }'
-        )
-    with pytest.raises(MappingConfigError, match="non-empty"):
-        compile_mapping(
-            'out O: P(root);\ndef P(i) { x: $StrSplit(i.s, ""); }'
-        )
+# Builtin calls whose literal arguments can never be valid: each must fail
+# at config load on both backends (MappingFn.java fail-fast contract), never
+# compile and then emit {} for every record. (call, what the error says)
+BAD_LITERAL_CALLS = [
+    pytest.param("$SubStr(i.s, 3, 1)", "integer >= start", id="substr-end-before-start"),
+    pytest.param('$SubStr(i.s, "1", 3)', "integer >= 0", id="substr-string-start"),
+    pytest.param("$SubStr(i.s, i.a, -1)", "integer >= start", id="substr-negative-end"),
+    # unknown pattern letter run
+    pytest.param('$ReformatTime(i.s, "qqq", "yyyy")', "time pattern", id="reformat-bad-token"),
+    # an input pattern without a full date: the backends would disagree on
+    # defaulted fields
+    pytest.param('$ReformatTime(i.s, "HH:mm", "HH")', "must include yyyy", id="reformat-no-date"),
+    pytest.param('$ReformatTime(i.s, "yyyy-MM-dd", true)', "time pattern", id="reformat-bool-out"),
+    pytest.param('$ParseTime("qq", i.t)', "time pattern", id="parsetime-bad-token"),
+    pytest.param("$ParseTime(null, i.t)", "time pattern", id="parsetime-null"),
+    pytest.param('$SplitTime("HH:mm", i.t)', "must include yyyy", id="splittime-no-date"),
+    pytest.param('$TimeAdd(i.t, "HH:mm", 1, "hours")', "must include yyyy", id="timeadd-no-date"),
+    pytest.param('$TimeAdd(i.t, "yyyy-MM-dd", 1.5, "days")', "an integer", id="timeadd-float-n"),
+    pytest.param('$TimeAdd(i.t, "yyyy-MM-dd", "1", "days")', "an integer", id="timeadd-string-n"),
+    pytest.param('$TimeAdd(i.t, "yyyy-MM-dd", 1, "fortnight")', "one of", id="timeadd-unit"),
+    pytest.param('$ParseUnixTime("us", i.e, "yyyy", "UTC")', "one of", id="unixtime-unit"),
+    pytest.param('$ParseUnixTime("s", i.e, "yyyy-qq", "UTC")', "time pattern", id="unixtime-pattern"),
+    pytest.param('$ParseUnixTime("s", i.e, "yyyy", "PST")', "one of", id="unixtime-zone"),
+    pytest.param("$CurrentTime(5)", "time pattern", id="currenttime-int"),
+    pytest.param('$StrFmt("%s-%s", i.a)', "2 %s slots for 1", id="strfmt-slot-count"),
+    pytest.param('$StrFmt("%d", i.a)', "only the %s and %%", id="strfmt-directive"),
+    pytest.param('$StrFmt("%s%", i.a)', "only the %s and %%", id="strfmt-dangling"),
+    # an invalid regex would crash pandas mid-job
+    pytest.param('$MatchesRegex(i.s, "(")', "invalid pattern", id="regex-invalid"),
+    pytest.param("$MatchesRegex(i.s, 5)", "invalid pattern", id="regex-int"),
+    # an empty delimiter raises in python and splits per character in Java
+    pytest.param('$StrSplit(i.s, "")', "non-empty", id="split-empty"),
+    pytest.param("$StrSplit(i.s, 5)", "non-empty", id="split-int"),
+    pytest.param("$StrJoin(5, i.xs)", "a string", id="join-int"),
+    pytest.param('$SortAndTakeTop(i.xs, "k", "yes")', "one of", id="top-flag"),
+    pytest.param('$SortAndTakeTop(i.xs, 7, "true")', "a string", id="top-key"),
+    pytest.param('$UnionBy(i.xs, "k", 5)', "a string", id="unionby-key"),
+]
+
+
+@pytest.mark.parametrize("call,why", BAD_LITERAL_CALLS)
+def test_bad_builtin_literal_fails_fast(call, why):
+    """Every rule of mapping_lang.LITERAL_ARGS rejects a bad literal at
+    compile time, before any data flows, for both backends."""
+    with pytest.raises(MappingConfigError, match=re.escape(why)):
+        compile_mapping(f"out O: P(root);\ndef P(i) {{ x: {call}; }}")
+
+
+@pytest.mark.parametrize("cfg", ["LIB2_CONFIG", "CLOSEOUT_CFG"])
+def test_valid_builtin_literals_stay_in_columns(spark, cfg):
+    """The literal rules accept every valid literal: configs using each
+    ruled builtin still compile to the column backend."""
+    assert compile_mapping(globals()[cfg]).supports_columns() is True
+
+
+# One call per LITERAL_ARGS rule with a bad DATA-derived value in the ruled
+# slot: (builtin, argument position, call)
+BAD_DATA_CALLS = [
+    ("$SubStr", 1, "$SubStr(i.s, i.neg, 3)"),
+    ("$SubStr", 2, "$SubStr(i.s, 1, i.neg)"),
+    ("$ReformatTime", 1, '$ReformatTime(i.day, i.hhmm, "yyyy")'),
+    ("$ReformatTime", 2, '$ReformatTime(i.day, "yyyy-MM-dd", i.qq)'),
+    ("$ParseTime", 0, "$ParseTime(i.qq, i.day)"),
+    ("$SplitTime", 0, "$SplitTime(i.hhmm, i.day)"),
+    ("$TimeAdd", 1, '$TimeAdd(i.day, i.hhmm, 1, "days")'),
+    ("$TimeAdd", 2, '$TimeAdd(i.day, "yyyy-MM-dd", i.half, "days")'),
+    ("$TimeAdd", 3, '$TimeAdd(i.day, "yyyy-MM-dd", 1, i.fortnight)'),
+    ("$ParseUnixTime", 0, '$ParseUnixTime(i.us, i.epoch, "yyyy", "UTC")'),
+    ("$ParseUnixTime", 2, '$ParseUnixTime("s", i.epoch, i.qq, "UTC")'),
+    ("$ParseUnixTime", 3, '$ParseUnixTime("s", i.epoch, "yyyy", i.pst)'),
+    ("$CurrentTime", 0, "$CurrentTime(i.qq)"),
+    ("$StrFmt", 0, "$StrFmt(i.pctd, i.s)"),
+    ("$StrFmt", 0, "$StrFmt(i.two, i.s)"),
+    ("$MatchesRegex", 1, "$MatchesRegex(i.s, i.paren)"),
+    ("$StrSplit", 1, "$StrSplit(i.s, i.empty)"),
+    ("$StrJoin", 0, "$StrJoin(i.five, i.xs)"),
+    ("$SortAndTakeTop", 1, '$SortAndTakeTop(i.objs, i.five, "true")'),
+    ("$SortAndTakeTop", 2, '$SortAndTakeTop(i.objs, "k", i.yes)'),
+    ("$UnionBy", 1, "$UnionBy(i.objs, i.five)"),
+]
+
+
+def test_bad_data_in_literal_slots_is_nil_on_pandas(spark):
+    """A data-derived argument escapes the compile-time rules: the column
+    backend declines it, and the pandas backend evaluates a bad value to
+    nil ($MatchesRegex to false) — one record never kills the job (an
+    invalid data-derived regex used to raise re.error out of the UDF)."""
+    ruled = {
+        (name, pos)
+        for name, rules in LITERAL_ARGS.items()
+        for pos, rule in enumerate(rules)
+        if rule is not None
+    }
+    assert {(name, pos) for name, pos, _ in BAD_DATA_CALLS} == ruled
+    fields = "".join(f"  f{k}: {call};\n" for k, (_, _, call) in enumerate(BAD_DATA_CALLS))
+    cfg = f"out O: P(root);\ndef P(i) {{\n{fields}}}"
+    assert compile_mapping(cfg).supports_columns() is False
+    data = {
+        "s": "ab", "neg": -1, "day": "2024-01-31", "hhmm": "HH:mm",
+        "qq": "qq", "half": 1.5, "fortnight": "fortnight", "us": "us",
+        "epoch": 1700000000, "pst": "PST", "pctd": "%d", "two": "%s-%s",
+        "paren": "(", "empty": "", "five": 5, "xs": ["a", "b"],
+        "objs": [{"k": 1}], "yes": "yes",
+    }
+    df = spark.createDataFrame([("r", json.dumps(data))], "id string, data string")
+    res = apply_mapping(df, cfg, backend="pandas", clock=CLOCK)
+    assert err_rows(res).count() == 0
+    want = {
+        f"f{k}": False
+        for k, (name, _, _) in enumerate(BAD_DATA_CALLS)
+        if name == "$MatchesRegex"
+    }
+    assert json.loads(ok_rows(res).collect()[0]["ok"]) == {"O": [want]}
 
 
 def test_review_fix_mixed_out_target_falls_back(spark):

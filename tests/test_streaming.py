@@ -1439,11 +1439,14 @@ def test_bad_session_gap_rejected_at_construction(tmp_path, gap):
         )
 
 
-def test_sink_marker_check_is_one_fs_call(spark, tmp_path):
+@pytest.mark.parametrize("scheme", ["", "file://"], ids=["path", "uri"])
+def test_sink_marker_check_is_one_fs_call(spark, tmp_path, scheme):
     """Deciding whether a batch is committed reads the marker once and
     probes nothing else: one call for a fresh batch (the read raises
-    FileNotFoundError) and one for a committed one (a replay)."""
-    sink = ExactlyOnceParquetSink(str(tmp_path / "s"), "t")
+    FileNotFoundError — on a URI sink, mapped from the JVM's
+    FileNotFoundException) and one for a committed one (a replay)."""
+    base = scheme + str(tmp_path / "s")
+    sink = ExactlyOnceParquetSink(base, "t", spark=spark)
     sink.write_batch(spark.range(3).select(F.col("id").cast("string").alias("conv_id")), 0)
     calls = []
 
@@ -1456,7 +1459,7 @@ def test_sink_marker_check_is_one_fs_call(spark, tmp_path):
             calls.append("read_text")
             return super().read_text(path)
 
-    sink._fs_cache = _CountingFs()
+    sink._fs_cache = _CountingFs(spark, base) if scheme else _CountingFs()
     assert sink.is_committed(1) is False
     assert calls == ["read_text"]
     calls.clear()
